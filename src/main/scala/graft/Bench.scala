@@ -112,20 +112,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     val nExtra = sys.env.getOrElse("SPARK_GRAFT_BENCH_EXTRA", "2").toInt.max(0)
     val lineBudget = sys.env.getOrElse("SPARK_GRAFT_BENCH_LINE_BUDGET", "1800").toInt
     val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BASELINE", "BASELINE_LOCAL.md")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(graft.functions.GraftFunctions.register)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get()
     // untimed warmup: JIT/codegen/scheduler and file-footer reads
     // (best-effort — a missing table must not kill the bench run)
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -38,6 +38,9 @@ import graft.spatial.DWithinJoin
   */
 object ChangegenPipeline {
 
+  /** Junction radius among the new features themselves (`--self`). */
+  private val SelfRadius = 0.5
+
   /** Every intermediate the pipeline writes or counts — returned so the
     * registered `cg_pipeline_counts` query oracle-checks the SAME
     * dataflow the main() serializes (not a re-derivation). */
@@ -86,12 +89,6 @@ object ChangegenPipeline {
         .filter(f => f.getName.endsWith(s"$suffix.parquet"))
         .map(_.getAbsolutePath).sorted
     }
-
-  /** Deletion-table discovery (kept as the deletion-specific name the
-    * deletion path and its specs use): discovered tables contribute
-    * `<delete>` entries via their `osm_id` column. */
-  def discoverDeletionTables(dir: String, suffix: String): Seq[String] =
-    discoverTables(dir, suffix)
 
   /** Read a feature table RAW (all columns, geometry undecoded):
     * jdbc mode via the partition-ranged PostGIS reader, directory
@@ -354,7 +351,7 @@ object ChangegenPipeline {
           all.reduceOption(_ unionByName _)
         }
         // point-class tables: v1 <create> nodes (reference
-        // generator.py:622-631) — reprojected coords + full
+        // generator.py:622-631) — WGS84 coords + full
         // table-derived tags, one node per feature
         val pointFrames = discoveredFrames.filter(_._3 == 1)
         val pointWkb =
@@ -531,7 +528,7 @@ object ChangegenPipeline {
     * reference's deletion pass is independent of `--existing`. */
   /** `pointWkb`: optional POINT feature source — `(pgrp: long
     * injective feature key, ptags: map<string,string>, wkb)` rows.
-    * Each feature becomes ONE v1 `<create>` node at its (reprojected)
+    * Each feature becomes ONE v1 `<create>` node at its (WGS84)
     * coordinates carrying its table-derived tags — the reference's
     * Point create branch (generator.py:622-631: `Node(id=next(ids),
     * version=1, lat, lon, tags=feat_tags)`). Points join no ways, no
@@ -541,7 +538,7 @@ object ChangegenPipeline {
     * handled here as one-node-per-feature instead of silent loss). */
   /** `selfIntersect`: the reference's `--self` / `-si` flag
     * (__main__.py:131-140): junctions AMONG the new features
-    * themselves. Closest points of feature pairs within `selfRadius`
+    * themselves. Closest points of feature pairs within [[SelfRadius]]
     * (`db.intersections(table, table)`, `not st_equals` excluded)
     * dedup at 6 decimals (COORDINATE_PRECISION,
     * _generate_intersection_db generator.py:136-143) into ONE
@@ -560,9 +557,7 @@ object ChangegenPipeline {
             lineWkb: Option[DataFrame] = None,
             existingWkb: Option[DataFrame] = None,
             pointWkb: Option[DataFrame] = None,
-            pointSrcEpsg: Int = 4326,
             selfIntersect: Boolean = false,
-            selfRadius: Double = 0.5,
             debug: Boolean = false): Frames = {
     require(existingWkb.isEmpty || osmSrc.isDefined,
       "existingWkb needs osmSrc: vertex node ids resolve positionally against the extract")
@@ -690,7 +685,7 @@ object ChangegenPipeline {
         val pairs = DWithinJoin.lineLine(
           lines.select(col("feat").as("lfeat"), col("line")), "lfeat", "line",
           lines.select(col("feat").as("rfeat"), col("line")), "rfeat", "line",
-          selfRadius, excludeEqual = true, keepLines = true)
+          SelfRadius, excludeEqual = true, keepLines = true)
           .filter(col("lfeat") =!= col("rfeat"))
         // closest point ON the left feature to the right; both ordered
         // pairs flow, so a non-crossing pair yields one point per side
@@ -1000,7 +995,7 @@ object ChangegenPipeline {
     dbg(debug, s"stage 4b (polygons): ${polyNodes.count()} ring nodes")
     // 4c. point features (reference generator.py:622-631, the
     // non-modify Point branch): one v1 <create> node per feature at
-    // its reprojected coordinates, carrying the table-derived tags
+    // its WGS84 coordinates, carrying the table-derived tags
     // (tags=feat_tags, UNFILTERED — unlike the modify branch, osm_id
     // stays a tag). No ways, no junctions, no relations.
     val pointNodes = pointWkb match {
@@ -1009,19 +1004,13 @@ object ChangegenPipeline {
           lit(0.0).as("x"), lit(0.0).as("y"),
           map().cast("map<string,string>").as("ptags"))
       case Some(src) =>
-        val dec0 = src.select(col("pgrp").cast("long").as("pgrp"), col("ptags"),
+        val dec = src.select(col("pgrp").cast("long").as("pgrp"), col("ptags"),
             element_at(call_function("graft_geom_parts", col("wkb")), 1).as("_v"))
           // malformed WKB decodes to NULL — DROP the feature (the same
           // drop-don't-throw contract as the exploding line/poly seams,
           // where posexplode(null) yields zero rows)
           .filter(col("_v").isNotNull)
           .select(col("pgrp"), col("ptags"), col("_v.x").as("x"), col("_v.y").as("y"))
-        val dec =
-          if (pointSrcEpsg == 4326) dec0
-          else dec0
-            .withColumn("_ll", graft.spatial.Geo.reproject(col("x"), col("y"), pointSrcEpsg))
-            .withColumn("x", col("_ll.lon")).withColumn("y", col("_ll.lat"))
-            .drop("_ll")
         // assign materializes its frame internally (ONE read of a live
         // JDBC source) — no second persist layer needed
         SequentialIds.assign(dec, "pgrp", "node_id", pointNodeOffset, negIds)

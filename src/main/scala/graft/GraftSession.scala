@@ -2,30 +2,31 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session factory with scale-oriented defaults.
+/** Session factory — the one config every main (Verify, Bench, the
+  * changegen CLI, SqlRunner, ExplainAudit) runs under.
   *
-  * Tuned for local[32] testing but documented for cluster use: shuffle
-  * partition count should track cluster cores (AQE coalesces down),
-  * adaptive execution handles skew at runtime.
+  * Shuffle partition count should track cluster cores (AQE, on by
+  * default in Spark 4, coalesces down and splits skewed joins at
+  * runtime).
   */
 object GraftSession {
-  def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession
       .builder()
       .master(master)
       .withExtensions(graft.functions.GraftFunctions.register)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
+  /** Local session on `SPARK_GRAFT_CPUS` cores (default: all of them),
+    * with as many shuffle partitions. */
   def get(): SparkSession = {
-    val s = builder().getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val s = builder(s"local[$cpus]", cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

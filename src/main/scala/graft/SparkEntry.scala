@@ -1,13 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries.{Changegen, Pipeline, Query, Relational}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * `queries` is the union of every operator family's verified query
-  * set; `oracleSql` carries the DuckDB-equivalent SQL for each (except
-  * rows-only entries). Column names are aligned between both sides —
-  * the driver sorts columns by name before hashing.
+  * Every registered query is one [[graft.queries.Query]] record in its
+  * family file; `queries` and `oracleSql` are projections of the one
+  * name-keyed index over all three families. Column names are aligned
+  * between both sides — the driver sorts columns by name before
+  * hashing.
   */
 object SparkEntry {
 
@@ -15,12 +17,14 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q3_join_agg")(spark, "/root/testdata/sf0.001")
 
+  private lazy val registry: Map[String, Query] =
+    Query.index(Relational.queries ++ Changegen.queries ++ Pipeline.queries)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.defs ++ graft.queries.Changegen.defs ++ graft.queries.Pipeline.defs
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.view.mapValues(_.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracles ++ graft.queries.Changegen.oracles ++ graft.queries.Pipeline.oracles
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] = registry.view.mapValues(_.oracle).toMap
 }

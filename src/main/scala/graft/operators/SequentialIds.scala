@@ -40,14 +40,18 @@ object SequentialIds {
     * way-id base). */
   def assignCounted(df: DataFrame, orderCol: String, idCol: String, offset: Long, negative: Boolean = false): (DataFrame, Long) = {
     val parts = math.max(df.rdd.getNumPartitions, 1)
+    // helper column name the caller's frame does not already use
+    // (Spark resolves names case-insensitively)
+    val mono = Iterator.iterate("_mono")(_ + "_")
+      .find(c => !df.columns.exists(_.equalsIgnoreCase(c))).get
     val sorted = df.repartitionByRange(parts, col(orderCol))
       .sortWithinPartitions(orderCol)
-      .withColumn("_mono", monotonically_increasing_id())
+      .withColumn(mono, monotonically_increasing_id())
       .localCheckpoint()
     // rank offset of each partition = rows in partitions before it;
     // partition id and in-partition index unpack from the mono id
-    val pid = shiftright(col("_mono"), 33)
-    val localIdx = col("_mono").bitwiseAND(lit((1L << 33) - 1))
+    val pid = shiftright(col(mono), 33)
+    val localIdx = col(mono).bitwiseAND(lit((1L << 33) - 1))
     val counts = sorted.groupBy(pid.as("_pid")).agg(count(lit(1)).as("_n"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     val offsets: Map[Long, Long] = counts
@@ -55,6 +59,6 @@ object SequentialIds {
       .drop(1).map { case (p, before, _) => p -> before }.toMap
     val rank = coalesce(element_at(typedLit(offsets), pid), lit(0L)) + localIdx
     val id = if (negative) lit(offset) - rank else lit(offset) + rank
-    (sorted.withColumn(idCol, id.cast("long")).drop("_mono"), counts.map(_._2).sum)
+    (sorted.withColumn(idCol, id.cast("long")).drop(mono), counts.map(_._2).sum)
   }
 }

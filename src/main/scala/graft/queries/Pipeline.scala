@@ -65,45 +65,71 @@ object Pipeline {
   private def adaptiveCells(n: Long): Int =
     math.max(16L, n / 125L).toInt
 
-  val defs: Map[String, Q] = Map(
+  lazy val queries: Seq[Query] = Seq(
     // 31 — exact dedup by content hash, keep min id
-    "dd_exact" -> ((s, dir) => {
+    Query("dd_exact", (s, dir) => {
       Dedup.exact(t(s, dir, "documents"), "doc_id", "text")
-    }),
+    }, oracle =
+      """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS dup_count
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
     // 32 — MinHash+LSH near-dup candidate pairs (banded bucket join)
-    "dd_minhash_pairs" -> ((s, dir) => {
+    Query("dd_minhash_pairs", (s, dir) => {
       Dedup.lshCandidatePairs(t(s, dir, "documents"), "doc_id", "text",
         shingleSize = 3, numPerm = 8, rowsPerBand = 2)
-        
-    }),
+    }, oracle = minhashPairsSql),
     // 33 — 32-bit SimHash signatures (native one-pass expr; the HOF
     // twin Dedup.simhash32 is bit-equality spec-tested against it)
-    "dd_simhash" -> ((s, dir) => {
+    Query("dd_simhash", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"), Dedup.simhash32Native(col("text")).as("simhash"))
-        
-    }),
+    }, oracle = simhashSql),
     // 32c — dedup CLUSTERS: connected components over the MinHash
     // candidate pair graph (component = min doc id; the survivor set
     // is one doc per component)
-    "dd_components" -> ((s, dir) => {
+    Query("dd_components", (s, dir) => {
       val docs = t(s, dir, "documents")
       val pairs = Dedup.lshCandidatePairs(docs, "doc_id", "text",
         shingleSize = 3, numPerm = 8, rowsPerBand = 2)
       Dedup.connectedComponents(docs, "doc_id", pairs, "doc_a", "doc_b")
-        
-    }),
+    }, oracle =
+      // transitive min-label closure via a recursive CTE over the same
+      // candidate edges; UNION dedup terminates the recursion
+      s"""WITH RECURSIVE ${minhashCtes()},
+         |sym AS (SELECT doc_a AS src, doc_b AS dst FROM cand
+         |        UNION ALL SELECT doc_b, doc_a FROM cand),
+         |lbl(node, label) AS (
+         |  SELECT doc_id, doc_id FROM documents
+         |  UNION
+         |  SELECT s.dst, l.label FROM lbl l JOIN sym s ON s.src = l.node)
+         |SELECT node AS doc_id, min(label) AS component
+         |FROM lbl GROUP BY node ORDER BY doc_id""".stripMargin),
     // 32e — dedup-cluster RESOLUTION: per near-dup cluster keep the
     // best doc (longest, ties to smallest id) — the step that turns
     // pairs+components into a cleaned corpus. Partial-agg argmax, no
     // per-cluster sort.
-    "dd_keep_best" -> ((s, dir) => {
+    Query("dd_keep_best", (s, dir) => {
       val docs = t(s, dir, "documents")
       val pairs = Dedup.lshCandidatePairs(docs, "doc_id", "text",
         shingleSize = 3, numPerm = 8, rowsPerBand = 2)
       Dedup.keepBest(docs, "doc_id", "n_chars", pairs, "doc_a", "doc_b")
-        
-    }),
+    }, oracle =
+      // same recursive closure as dd_components, then a deterministic
+      // per-cluster argmax (n_chars DESC, doc_id ASC) + cluster size
+      s"""WITH RECURSIVE ${minhashCtes()},
+         |sym AS (SELECT doc_a AS src, doc_b AS dst FROM cand
+         |        UNION ALL SELECT doc_b, doc_a FROM cand),
+         |lbl(node, label) AS (
+         |  SELECT doc_id, doc_id FROM documents
+         |  UNION
+         |  SELECT s.dst, l.label FROM lbl l JOIN sym s ON s.src = l.node),
+         |comp AS (SELECT node, min(label) AS component FROM lbl GROUP BY node),
+         |ranked AS (
+         |  SELECT c.component AS cluster, d.doc_id, d.n_chars,
+         |    row_number() OVER (PARTITION BY c.component ORDER BY d.n_chars DESC, d.doc_id ASC) AS rn,
+         |    count(*) OVER (PARTITION BY c.component) AS n_docs
+         |  FROM comp c JOIN documents d ON d.doc_id = c.node)
+         |SELECT cluster, doc_id AS keep_id, n_chars AS keep_score, n_docs
+         |FROM ranked WHERE rn = 1 ORDER BY cluster""".stripMargin),
     // 32f — SOFT dedup (duplication-aware loss weighting): instead of
     // dropping near-dups, every doc carries weight 1/|near-dup
     // cluster| (singletons keep 1.0) — the corpus stays intact and
@@ -111,7 +137,7 @@ object Pipeline {
     // alternative the mixture papers reach for). Cluster = MinHash
     // connected component; one count agg + a component-keyed join
     // back, no per-cluster sort — weights ship at corpus scale
-    "smp_soft_dedup" -> ((s, dir) => {
+    Query("smp_soft_dedup", (s, dir) => {
       val docs = t(s, dir, "documents")
       val pairs = Dedup.lshCandidatePairs(docs, "doc_id", "text",
         shingleSize = 3, numPerm = 8, rowsPerBand = 2)
@@ -120,8 +146,21 @@ object Pipeline {
       comp.join(sz, "component")
         .select(col("doc_id"), col("component"), col("cluster_n"),
           fp(lit(1.0) / col("cluster_n").cast("double"), 6).as("weight_fp6"))
-        
-    }),
+    }, oracle =
+      // same recursive closure as dd_components, then cluster sizes →
+      // per-doc 1/n loss weight
+      s"""WITH RECURSIVE ${minhashCtes()},
+         |sym AS (SELECT doc_a AS src, doc_b AS dst FROM cand
+         |        UNION ALL SELECT doc_b, doc_a FROM cand),
+         |lbl(node, label) AS (
+         |  SELECT doc_id, doc_id FROM documents
+         |  UNION
+         |  SELECT s.dst, l.label FROM lbl l JOIN sym s ON s.src = l.node),
+         |comp AS (SELECT node AS doc_id, min(label) AS component FROM lbl GROUP BY node),
+         |sz AS (SELECT component, count(*) AS cluster_n FROM comp GROUP BY 1)
+         |SELECT comp.doc_id, comp.component, sz.cluster_n,
+         |  ${sqlFp("1.0 / CAST(sz.cluster_n AS DOUBLE)", 6)} AS weight_fp6
+         |FROM comp JOIN sz USING (component) ORDER BY comp.doc_id""".stripMargin),
     // 46l — DSIR importance resampling weights (Xie et al. 2023): the
     // domain-targeting selection pass — score every doc by how much
     // more TARGET-like (here: the English slice) than corpus-like its
@@ -132,100 +171,173 @@ object Pipeline {
     // up-weights. Shape: see TextAnalysis.dsirWeightsDf — two
     // broadcast-model scoring passes over one shared tri projection,
     // charset²-bounded models, corpus shuffles only at the per-doc agg
-    "smp_dsir" -> ((s, dir) => {
+    Query("smp_dsir", (s, dir) => {
       TextAnalysis.dsirWeightsDf(t(s, dir, "documents"), "doc_id", "text",
         col("lang") === "en")
-        
-    }),
+    }, oracle =
+      // the txt_charlm model CTEs trained TWICE (target slice + full
+      // corpus); score = exact fp6 probability difference per position
+      s"""WITH norm AS (SELECT doc_id, lang = 'en' AS is_t,
+        |  trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]+', ' ', 'g'), '\\s+', ' ', 'g')) AS t
+        |  FROM documents),
+        |pos AS (SELECT doc_id, is_t, t, unnest(range(1, greatest(length(t) - 1, 1))) AS i FROM norm),
+        |tri AS (SELECT doc_id, is_t, substr(t, CAST(i AS INT), 2) AS ctx, substr(t, CAST(i AS INT) + 2, 1) AS c FROM pos),
+        |mc AS (SELECT ctx, c, count(*) AS cnt_c FROM tri GROUP BY 1, 2),
+        |mt AS (SELECT ctx, c, count(*) AS cnt_t FROM tri WHERE is_t GROUP BY 1, 2),
+        |cc AS (SELECT ctx, CAST(sum(cnt_c) AS BIGINT) AS tot_c FROM mc GROUP BY 1),
+        |ct AS (SELECT ctx, CAST(sum(cnt_t) AS BIGINT) AS tot_t FROM mt GROUP BY 1),
+        |vocab AS (SELECT count(DISTINCT c) AS v FROM mc),
+        |scd AS (SELECT tri.doc_id,
+        |    ${sqlFp("CAST(coalesce(cnt_t, 0) + 1 AS DOUBLE) / CAST(coalesce(tot_t, 0) + v AS DOUBLE)", 6)} AS pt6,
+        |    ${sqlFp("CAST(cnt_c + 1 AS DOUBLE) / CAST(tot_c + v AS DOUBLE)", 6)} AS pc6
+        |  FROM tri JOIN mc USING (ctx, c) JOIN cc USING (ctx)
+        |    LEFT JOIN mt USING (ctx, c) LEFT JOIN ct USING (ctx) CROSS JOIN vocab)
+        |SELECT doc_id, count(*) AS n_tri, CAST(sum(pt6 - pc6) AS BIGINT) AS dsir_fp6,
+        |  CAST(CASE WHEN CAST(sum(pt6 - pc6) AS BIGINT) > 0 THEN 1 ELSE 0 END AS BIGINT) AS keep_flag
+        |FROM scd GROUP BY 1 ORDER BY doc_id""".stripMargin),
     // 31b — incremental snapshot dedup: today's batch anti-joined on
     // content hash against yesterday's corpus (distinct 16-byte hash
     // set, not documents, rides the shuffle)
-    "dd_incremental" -> ((s, dir) => {
+    Query("dd_incremental", (s, dir) => {
       val docs = t(s, dir, "documents")
       val reference = docs.filter(col("doc_id") % 5 =!= 0)
       val incoming = docs.filter(col("doc_id") % 3 === 0)
       Dedup.dedupAgainst(incoming, reference, "doc_id", "text")
         .select("doc_id", "source", "n_chars")
-        
-    }),
+    }, oracle =
+      """WITH ref AS (SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 5 <> 0),
+        |inc AS (SELECT doc_id, source, n_chars, md5(text) AS h FROM documents WHERE doc_id % 3 = 0)
+        |SELECT doc_id, source, n_chars FROM inc
+        |WHERE h NOT IN (SELECT h FROM ref) ORDER BY doc_id""".stripMargin),
     // 31d — the same incremental dedup behind the broadcast Bloom
     // pre-filter (no false negatives ⇒ bit-identical result, same
     // oracle shape): only might-contain rows ride the anti-join
     // shuffle — the 100 TB cost shape for snapshot-vs-corpus dedup
-    "dd_incremental_bloom" -> ((s, dir) => {
+    Query("dd_incremental_bloom", (s, dir) => {
       val docs = t(s, dir, "documents")
       val reference = docs.filter(col("doc_id") % 5 =!= 0)
       val incoming = docs.filter(col("doc_id") % 3 === 0)
       Dedup.dedupAgainstBloom(incoming, reference, "doc_id", "text")
         .select("doc_id", "source", "n_chars")
-        
-    }),
+    }, oracle =
+      // Bloom pre-filter is value-invisible (no false negatives) — the
+      // oracle is the exact anti-join
+      """WITH ref AS (SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 5 <> 0),
+        |inc AS (SELECT doc_id, source, n_chars, md5(text) AS h FROM documents WHERE doc_id % 3 = 0)
+        |SELECT doc_id, source, n_chars FROM inc
+        |WHERE h NOT IN (SELECT h FROM ref) ORDER BY doc_id""".stripMargin),
     // 31e — eval-set decontamination (GPT-3/PaLM n-gram overlap rule):
     // training docs sharing any 4-gram with the held-out eval slice
     // (doc_id % 97 = 0) are dropped; eval grams reduce to a broadcast
     // distinct set, the train side is scanned once
-    "dd_decontaminate" -> ((s, dir) => {
+    Query("dd_decontaminate", (s, dir) => {
       val docs = t(s, dir, "documents")
       Dedup.decontaminate(
         docs.filter(col("doc_id") % 97 =!= 0), "doc_id", "text",
         docs.filter(col("doc_id") % 97 === 0), "text", n = 4)
         .select("doc_id", "source", "n_chars")
-        
-    }),
+    }, oracle =
+      s"""WITH ev0 AS (SELECT DISTINCT unnest(${shinglesSql(4)}) AS g0
+        |            FROM documents WHERE doc_id % 97 = 0),
+        |ev AS (SELECT DISTINCT ${shingleKeySql("g0")} AS g FROM ev0),
+        |tg0 AS (SELECT doc_id, unnest(${shinglesSql(4)}) AS g0
+        |       FROM documents WHERE doc_id % 97 <> 0),
+        |tg AS (SELECT doc_id, ${shingleKeySql("g0")} AS g FROM tg0),
+        |bad AS (SELECT DISTINCT tg.doc_id FROM tg JOIN ev USING (g))
+        |SELECT doc_id, source, n_chars FROM documents
+        |WHERE doc_id % 97 <> 0 AND doc_id NOT IN (SELECT doc_id FROM bad)
+        |ORDER BY doc_id""".stripMargin),
     // 32b — MinHash Jaccard estimates over the LSH candidates (the
     // classic signature-agreement estimator)
-    "dd_minhash_est" -> ((s, dir) => {
+    Query("dd_minhash_est", (s, dir) => {
       Dedup.minhashEstPairs(t(s, dir, "documents"), "doc_id", "text",
         shingleSize = 3, numPerm = 8, rowsPerBand = 2)
-        
-    }),
+    }, oracle = minhashEstSql),
     // 32m — b-bit minwise hashing (Li & König 2010): 2-bit truncated
     // signatures + the collision-corrected Jaccard estimate next to
     // the full-width estimator — the storage layout that shrinks a
     // corpus signature table 32× (what makes it broadcastable at
     // 100 TB). Same one-scan LSH candidate machinery as 32b.
-    "dd_bbit_minhash" -> ((s, dir) => {
+    Query("dd_bbit_minhash", (s, dir) => {
       Dedup.bbitMinhashEstPairs(t(s, dir, "documents"), "doc_id", "text",
         shingleSize = 3, numPerm = 8, rowsPerBand = 2, bBits = 2)
-        
+    }, oracle = {
+      // b=2 truncation: slot match on sig mod 4; Ĵ=(Â−1/4)/(3/4) clamped
+      val a2 = "CAST(len(list_filter(range(1, 9), i -> sa.sig[i] % 4 = sb.sig[i] % 4)) AS DOUBLE) / 8.0"
+      s"""WITH ${minhashCtes()}
+         |SELECT doc_a, doc_b,
+         |  ${sqlFp(a2, 4)} AS agree_b2_fp4,
+         |  ${sqlFp(s"greatest(0.0, ($a2 - 0.25) / 0.75)", 4)} AS est_b2_fp4,
+         |  ${sqlFp("CAST(len(list_filter(range(1, 9), i -> sa.sig[i] = sb.sig[i])) AS DOUBLE) / 8.0", 4)} AS est_full_fp4
+         |FROM cand JOIN sigs sa ON sa.doc = doc_a JOIN sigs sb ON sb.doc = doc_b
+         |ORDER BY doc_a, doc_b""".stripMargin
     }),
     // 33b — SimHash Hamming-neighbor pairs (pigeonhole band join)
-    "dd_simhash_pairs" -> ((s, dir) => {
+    Query("dd_simhash_pairs", (s, dir) => {
       Dedup.simhashPairs(t(s, dir, "documents"), "doc_id", "text",
         maxHamming = 3)
-        
-    }),
+    }, oracle = simhashPairsSql),
     // 33c — 64-bit SimHash signatures (native one-pass expr; HOF twin
     // bit-equality spec-tested). 64 bits are the corpus-scale shape:
     // 16-bit bands under maxHamming=3 banding
-    "dd_simhash64" -> ((s, dir) => {
+    Query("dd_simhash64", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"), Dedup.simhash64Native(col("text")).as("simhash"))
-        
-    }),
+    }, oracle = simhash64Sql),
     // 33d — 64-bit SimHash Hamming pairs (16-bit pigeonhole bands —
     // 65,536 buckets/band vs the 32-bit signature's 256)
-    "dd_simhash64_pairs" -> ((s, dir) => {
+    Query("dd_simhash64_pairs", (s, dir) => {
       Dedup.simhashPairs64(t(s, dir, "documents"), "doc_id", "text",
         maxHamming = 3)
-        
-    }),
+    }, oracle = simhash64PairsSql),
     // 34b — the SAME set-similarity join via PREFIX FILTERING
     // (AllPairs/PPJoin): rarest-first prefixes generate candidates,
     // lossless at J ≥ 0.5 (spec proves output == brute all-pairs);
     // hot boilerplate shingles never reach the self-join by
     // construction — the df cap 34 needs is the ordering here
-    "dd_prefix_join" -> ((s, dir) => {
+    Query("dd_prefix_join", (s, dir) => {
       Dedup.prefixJaccardPairs(t(s, dir, "documents"), "doc_id", "text",
         n = 3, threshold = 0.5)
-        
-    }),
+    }, oracle =
+      s"""WITH sh0 AS (SELECT doc_id AS doc, unnest(${shinglesSql(3)}) AS s0 FROM documents),
+        |ex AS (SELECT doc, ${shingleKeySql("s0")} AS s FROM sh0),
+        |sets AS (SELECT doc, list_sort(list(s)) AS st, count(*) AS n FROM ex GROUP BY doc),
+        |dfs AS (SELECT s, count(*) AS df FROM ex GROUP BY 1),
+        |rk AS (SELECT ex.doc, ex.s,
+        |    count(*) OVER (PARTITION BY ex.doc) AS n,
+        |    row_number() OVER (PARTITION BY ex.doc ORDER BY dfs.df, ex.s) AS r
+        |  FROM ex JOIN dfs USING (s)),
+        |pref AS (SELECT doc, s, n FROM rk
+        |  WHERE r <= n - CAST(ceil(0.5 * n) AS BIGINT) + 1),
+        |cand AS (SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
+        |  FROM pref a JOIN pref b ON a.s = b.s AND a.doc < b.doc
+        |    AND CAST(b.n AS DOUBLE) >= a.n * 0.5 AND CAST(a.n AS DOUBLE) >= b.n * 0.5),
+        |ver AS (SELECT doc_a, doc_b,
+        |    CAST(len(list_intersect(x.st, y.st)) AS BIGINT) AS inter,
+        |    x.n + y.n - len(list_intersect(x.st, y.st)) AS union_
+        |  FROM cand JOIN sets x ON x.doc = doc_a JOIN sets y ON y.doc = doc_b)
+        |SELECT doc_a, doc_b, inter, CAST(union_ AS BIGINT) AS union_,
+        |  ${sqlFp("CAST(inter AS DOUBLE) / CAST(union_ AS DOUBLE)", 4)} AS jaccard_fp4
+        |FROM ver
+        |WHERE ${sqlFp("CAST(inter AS DOUBLE) / CAST(union_ AS DOUBLE)", 4)} >= 5000
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // 34 — n-gram Jaccard similarity pairs via shingle co-group
-    "dd_ngram_jaccard" -> ((s, dir) => {
+    Query("dd_ngram_jaccard", (s, dir) => {
       Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text",
         n = 3, threshold = 0.05, maxShingleDf = 1000)
-        
-    }),
+    }, oracle =
+      s"""WITH sh0 AS (SELECT doc_id AS doc, unnest(${shinglesSql(3)}) AS s0 FROM documents),
+        |sh AS (SELECT doc, ${shingleKeySql("s0")} AS s FROM sh0),
+        |sizes AS (SELECT doc, count(*) AS sz FROM sh GROUP BY doc),
+        |rare AS (SELECT s FROM sh GROUP BY s HAVING count(*) <= 1000),
+        |sh2 AS (SELECT sh.doc, sh.s FROM sh JOIN rare USING (s)),
+        |inter AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS inter
+        |          FROM sh2 a JOIN sh2 b ON a.s = b.s AND a.doc < b.doc GROUP BY 1, 2)
+        |SELECT doc_a, doc_b, inter, sa.sz + sb.sz - inter AS union_,
+        |  ${sqlFp("CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)", 4)} AS jaccard_fp4
+        |FROM inter JOIN sizes sa ON sa.doc = doc_a JOIN sizes sb ON sb.doc = doc_b
+        |WHERE ${sqlFp("CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)", 4)} >= 500
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // 31f — cross-source duplicate matrix: for every (canonically
     // ordered) source pair, the number of exact-duplicate document
     // pairs spanning them — the corpus-composition contamination
@@ -236,7 +348,7 @@ object Pipeline {
     // each cell is count arithmetic (C(n,2) same-source, n_a*n_b
     // cross). A 10^7-doc boilerplate cluster (empty pages, 404 bodies)
     // contributes ONE row per source to the join — never 10^14 pairs
-    "dd_cross_matrix" -> ((s, dir) => {
+    Query("dd_cross_matrix", (s, dir) => {
       val d0 = t(s, dir, "documents")
       val base = d0.select((col("doc_id") + 1).as("doc_id"), col("text").as("_bt"))
       val d = d0.join(base, Seq("doc_id"), "left")
@@ -245,14 +357,28 @@ object Pipeline {
             .otherwise(col("text")))
         .select(col("source"), md5(col("aug")).as("h"))
       Dedup.crossSourceMatrix(d, "h", "source")
-        
-    }),
+    }, oracle =
+      // count-arithmetic cells (C(n,2) same-source, n_a*n_b cross) over
+      // per-(hash, source) counts — mirrors the pair-free Spark plan
+      """WITH aug AS (SELECT d.doc_id, d.source,
+        |    md5(CASE WHEN d.doc_id % 10 = 1 AND b.text IS NOT NULL
+        |      THEN b.text ELSE d.text END) AS h
+        |  FROM documents d LEFT JOIN documents b ON b.doc_id = d.doc_id - 1),
+        |cnt AS (SELECT h, source, count(*) AS n FROM aug GROUP BY 1, 2)
+        |SELECT a.source AS source_a, b.source AS source_b,
+        |  CAST(sum(CASE WHEN a.source = b.source THEN a.n * (a.n - 1) // 2
+        |    ELSE a.n * b.n END) AS BIGINT) AS n_dup_pairs
+        |FROM cnt a JOIN cnt b ON a.h = b.h AND a.source <= b.source
+        |GROUP BY 1, 2
+        |HAVING sum(CASE WHEN a.source = b.source THEN a.n * (a.n - 1) // 2
+        |    ELSE a.n * b.n END) > 0
+        |ORDER BY 1, 2""".stripMargin),
     // 34b — asymmetric containment near-dup: C(A→B) = |A∩B|/|A| over
     // shingles catches a doc embedded in a longer one where Jaccard
     // dilutes below any bar. Every doc_id ≡ 1 (mod 4) gets its
     // predecessor's full text appended, so (id−1, id) pairs provably
     // sit at containment 1.0 at every SF while Jaccard stays low
-    "dd_containment" -> ((s, dir) => {
+    Query("dd_containment", (s, dir) => {
       val d = t(s, dir, "documents")
       val base = d.select((col("doc_id") + 1).as("doc_id"), col("text").as("_base_text"))
       val aug = d.join(base, Seq("doc_id"), "left")
@@ -261,27 +387,70 @@ object Pipeline {
             concat(col("text"), lit(" "), col("_base_text")))
             .otherwise(col("text")))
       Dedup.containmentPairs(aug, "doc_id", "aug", n = 3, threshold = 0.5, maxShingleDf = 1000)
-        
-    }),
+    }, oracle =
+      // aug corpus + rare-shingle guard mirror the Spark side; the
+      // containment formulas divide by each side's own set size
+      s"""WITH aug0 AS (SELECT d.doc_id,
+        |    CASE WHEN d.doc_id % 4 = 1 AND b.text IS NOT NULL
+        |      THEN d.text || ' ' || b.text ELSE d.text END AS text
+        |  FROM documents d LEFT JOIN documents b ON b.doc_id = d.doc_id - 1),
+        |shx0 AS (SELECT doc, len(shs) AS sz, unnest(shs) AS sh0
+        |  FROM (SELECT doc_id AS doc, ${shinglesSql(3)} AS shs FROM aug0)),
+        |shx AS (SELECT doc, sz, ${shingleKeySql("sh0")} AS sh FROM shx0),
+        |rare AS (SELECT sh FROM shx GROUP BY sh HAVING count(*) <= 1000),
+        |filt AS (SELECT shx.doc, shx.sz, shx.sh FROM shx JOIN rare USING (sh)),
+        |pairs AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS inter,
+        |    min(a.sz) AS sz_a, min(b.sz) AS sz_b
+        |  FROM filt a JOIN filt b ON a.sh = b.sh AND a.doc < b.doc GROUP BY 1, 2)
+        |SELECT doc_a, doc_b, inter, sz_a, sz_b,
+        |  ${sqlFp("CAST(inter AS DOUBLE) / CAST(sz_a AS DOUBLE)", 4)} AS cont_ab_fp4,
+        |  ${sqlFp("CAST(inter AS DOUBLE) / CAST(sz_b AS DOUBLE)", 4)} AS cont_ba_fp4
+        |FROM pairs
+        |WHERE greatest(${sqlFp("CAST(inter AS DOUBLE) / CAST(sz_a AS DOUBLE)", 4)},
+        |  ${sqlFp("CAST(inter AS DOUBLE) / CAST(sz_b AS DOUBLE)", 4)}) >= 5000
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // 32e — substring-level duplication sweep (Lee et al. 2022): every
     // positional token 8-gram counted corpus-wide; per doc, the
     // fraction of its spans that occur more than once anywhere. The
     // per-doc signal that drives span-level strip decisions at scale
-    "dd_dup_ngrams" -> ((s, dir) => {
+    Query("dd_dup_ngrams", (s, dir) => {
       Dedup.dupNgramStats(t(s, dir, "documents"), "doc_id", "text", n = 8)
-}),
+    }, oracle =
+      // positional 8-grams (NOT distinct — every span counts); docs
+      // shorter than 8 tokens surface with zeros via the left join
+      s"""WITH toks AS (SELECT doc_id, $toksSql AS tk FROM documents),
+        |pos AS (SELECT doc_id, tk, unnest(range(1, len(tk) - 6)) AS i
+        |  FROM toks WHERE len(tk) >= 8),
+        |grams AS (SELECT doc_id,
+        |    ${shingleKeySql("array_to_string(tk[CAST(i AS INT):CAST(i AS INT) + 7], ' ')")} AS gram FROM pos),
+        |pg AS (SELECT doc_id, gram, count(*) AS k FROM grams GROUP BY 1, 2),
+        |tot AS (SELECT gram, sum(k) AS tot FROM pg GROUP BY 1),
+        |agg AS (SELECT doc_id, sum(k) AS n_grams,
+        |    sum(CASE WHEN tot > 1 THEN k ELSE 0 END) AS n_dup
+        |  FROM pg JOIN tot USING (gram) GROUP BY 1)
+        |SELECT d.doc_id,
+        |  CAST(coalesce(n_grams, 0) AS BIGINT) AS n_grams,
+        |  CAST(coalesce(n_dup, 0) AS BIGINT) AS n_dup_grams,
+        |  CASE WHEN coalesce(n_grams, 0) = 0 THEN CAST(0 AS BIGINT)
+        |    ELSE ${sqlFp("CAST(n_dup AS DOUBLE) / CAST(n_grams AS DOUBLE)", 4)}
+        |  END AS dup_frac_fp4
+        |FROM documents d LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin),
     // 35 — embedding cosine near-dup within label buckets
-    "dd_embed_neardup" -> ((s, dir) => {
+    Query("dd_embed_neardup", (s, dir) => {
       Similarity.nearDupPairs(t(s, dir, "embeddings"), "vec_id", "embedding", "label", 200000L)
-        
-    }),
+    }, oracle =
+      s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |  ${sqlFp(cosSql("a.embedding", "b.embedding"), 6)} AS cos_fp6
+        |FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
+        |WHERE ${sqlFp(cosSql("a.embedding", "b.embedding"), 6)} >= 200000
+        |ORDER BY id_a, id_b""".stripMargin),
     // 35d — SemDeDup-style semantic dedup (embedding-cluster based):
     // IVF cells bound the candidate set (never all-pairs), cosine-
     // threshold pairs within a cell, connected components, keep the
     // min-id representative per cluster with the cluster size. The
     // deterministic stride centroids make the whole chain (assign →
     // pairs → transitive closure) SQL-replicable
-    "dd_semantic" -> ((s, dir) => {
+    Query("dd_semantic", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val cents = Similarity.ivfCentroids(e, "vec_id", "embedding", 16)
       val assigned = Similarity.ivfAssign(e, "vec_id", "embedding", cents)
@@ -291,10 +460,33 @@ object Pipeline {
       Dedup.connectedComponents(e.select("vec_id"), "vec_id", pairs, "id_a", "id_b")
         .groupBy("component").agg(count(lit(1)).as("n_members"))
         .select(col("component").as("keep_id"), col("n_members"))
-        
-    }),
+    }, oracle =
+      // SemDeDup mirror: stride centroids + argmax-cosine assignment
+      // (as sim_ann_ivf), within-cell cosine pairs, recursive closure
+      // (as dd_components), min-id representative + cluster size
+      s"""WITH RECURSIVE cnt AS (SELECT count(*) AS c FROM embeddings),
+        |icents AS (SELECT vec_id AS centroid_id, embedding AS icvec
+        |           FROM embeddings, cnt WHERE vec_id % greatest(1, (c + 15) // 16) = 0),
+        |ac AS (SELECT e.vec_id, e.embedding, c.centroid_id,
+        |         ${cosSql("e.embedding", "c.icvec")} AS cosv
+        |       FROM embeddings e CROSS JOIN icents c),
+        |asg AS (SELECT vec_id, embedding, centroid_id AS cell FROM (
+        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
+        |         FROM ac) WHERE rn = 1),
+        |prs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
+        |        FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id
+        |        WHERE ${sqlFp(cosSql("a.embedding", "b.embedding"), 6)} >= 300000),
+        |sym AS (SELECT id_a AS src, id_b AS dst FROM prs
+        |        UNION ALL SELECT id_b, id_a FROM prs),
+        |lbl(node, label) AS (
+        |  SELECT vec_id, vec_id FROM embeddings
+        |  UNION
+        |  SELECT s.dst, l.label FROM lbl l JOIN sym s ON s.src = l.node),
+        |comp AS (SELECT node, min(label) AS component FROM lbl GROUP BY node)
+        |SELECT component AS keep_id, CAST(count(*) AS BIGINT) AS n_members
+        |FROM comp GROUP BY 1 ORDER BY 1""".stripMargin),
     // 36 — brute-force cosine top-k against the min-id query vector
-    "sim_topk" -> ((s, dir) => {
+    Query("sim_topk", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val q = e.orderBy("vec_id").limit(1)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -303,7 +495,11 @@ object Pipeline {
         .select(col("vec_id"), fp(Similarity.cosine(col("embedding"), col("qvec")), 6).as("cos_fp6"))
         .orderBy(col("cos_fp6").desc, col("vec_id"))
         .limit(10)
-    }),
+    }, oracle =
+      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings ORDER BY vec_id LIMIT 1)
+        |SELECT vec_id, ${sqlFp(cosSql("embedding", "qvec"), 6)} AS cos_fp6
+        |FROM embeddings, q WHERE vec_id != qid
+        |ORDER BY 2 DESC, vec_id LIMIT 10""".stripMargin),
     // 37g — multi-vector MaxSim retrieval (ColBERT late interaction,
     // Khattab & Zaharia 2020): docs are GROUPS of vectors (vec_id
     // DIV 4 — 4 token vectors each), queries the first two groups;
@@ -313,7 +509,7 @@ object Pipeline {
     // the corpus scan (queries are human-sized); two hash aggs (max
     // per (q,token,doc), sum per (q,doc)) — map-side partials, never
     // a per-doc sort; top-5 rank runs per query group only.
-    "sim_maxsim" -> ((s, dir) => {
+    Query("sim_maxsim", (s, dir) => {
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), expr("vec_id DIV 4").as("grp"))
       val q = e.filter(col("grp") < 2)
@@ -325,35 +521,40 @@ object Pipeline {
         .groupBy("qgrp", "grp").agg(sum("mx").as("maxsim_fp6"))
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= 5)
-        
-    }),
+    }, oracle =
+      s"""WITH e AS (SELECT vec_id, embedding, vec_id // 4 AS grp FROM embeddings),
+        |q AS (SELECT grp AS qgrp, vec_id AS qtok, embedding AS qvec FROM e WHERE grp < 2),
+        |tok AS (SELECT qgrp, qtok, e.grp, max(${sqlFp(cosSql("embedding", "qvec"), 6)}) AS mx
+        |        FROM e, q WHERE e.grp != qgrp GROUP BY 1, 2, 3),
+        |d AS (SELECT qgrp, grp, CAST(sum(mx) AS BIGINT) AS maxsim_fp6 FROM tok GROUP BY 1, 2),
+        |r AS (SELECT qgrp, grp, maxsim_fp6,
+        |        CAST(row_number() OVER (PARTITION BY qgrp ORDER BY maxsim_fp6 DESC, grp) AS INT) AS rnk
+        |      FROM d)
+        |SELECT qgrp, grp, maxsim_fp6, rnk FROM r WHERE rnk <= 5 ORDER BY qgrp, rnk""".stripMargin),
     // 37 — LSH-bucketed ANN (rows-only; recall spec-tested vs brute
     // force). Runs with the scale guards on: degenerate buckets capped,
     // 2 extra multi-probe buckets per query to recover recall.
-    "sim_ann_lsh" -> ((s, dir) => {
+    Query("sim_ann_lsh", (s, dir) => {
       val e = t(s, dir, "embeddings")
       Similarity.annLsh(e, e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
         numPlanes = 8, dim = 64, k = 5, maxBucket = 1000L, nprobe = 2)
-        
-    }),
+    }, oracle = annLshGuardedSql),
     // 37a — the SAME LSH ANN with guards off, fully ORACLE-CHECKED:
     // the hyperplanes are md5-derived, so DuckDB recomputes buckets,
     // fold-order dot products and the top-k bit-exactly
-    "sim_ann_lsh_exact" -> ((s, dir) => {
+    Query("sim_ann_lsh_exact", (s, dir) => {
       val e = t(s, dir, "embeddings")
       Similarity.annLsh(e, e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
         numPlanes = 8, dim = 64, k = 5)
-        
-    }),
+    }, oracle = annLshExactSql),
     // 37b — IVF ANN: inverted-list probe search (rows-only; the
     // probed-cells-exact contract is spec-tested like sim_ann_lsh)
-    "sim_ann_ivf" -> ((s, dir) => {
+    Query("sim_ann_ivf", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val cents = Similarity.ivfCentroids(e, "vec_id", "embedding", 16)
       val assigned = Similarity.ivfAssign(e, "vec_id", "embedding", cents)
       Similarity.ivfSearch(assigned, e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", cents, nprobe = 2, k = 5)
-        
-    }),
+    }, oracle = annIvfSql),
     // 37b2 — the SERVING shape of 37b: the same IVF probe search over
     // the PERSISTED index (IvfIndex parquet layout: one directory per
     // inverted list, probes prune at file-listing time). The index is
@@ -364,15 +565,17 @@ object Pipeline {
     // matters for an ANN serving deployment. Same oracle as
     // sim_ann_ivf: ivfCentroids is deterministic, so the persisted
     // index yields identical candidates and arithmetic.
-    "sim_ann_ivf_disk" -> ((s, dir) => {
+    Query("sim_ann_ivf_disk", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val path = ivfDiskPath(dir)
       if (!graft.similarity.IvfIndex.isComplete(s, path))
         graft.similarity.IvfIndex.build(e, "vec_id", "embedding", kCells = 16, path)
       graft.similarity.IvfIndex.search(s, path,
         e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", nprobe = 2, k = 5)
-        
-    }),
+    }, oracle =
+      // the persisted-index probe is bit-identical to the in-memory IVF
+      // search (deterministic centroids, shared cosine/tie arithmetic)
+annIvfSql),
     // 37d2 — the SERVING shape of 37d: IVF-PQ AT REST. The persisted
     // layout adds `codes/` (4-byte-scale PQ codes, partitioned by the
     // SAME IVF cell directories) and `codebook/` to the 37b2 index, so
@@ -382,7 +585,7 @@ object Pipeline {
     // to the cached index the first time this query runs against a
     // snapshot); spec-asserted bit-identical to the in-memory
     // pqIvfSearch composition, so it shares sim_ann_ivfpq's oracle.
-    "sim_ann_ivfpq_disk" -> ((s, dir) => {
+    Query("sim_ann_ivfpq_disk", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val path = ivfDiskPath(dir)
       if (!graft.similarity.IvfIndex.isComplete(s, path))
@@ -392,8 +595,7 @@ object Pipeline {
           dim = 64, m = 4, kCodes = 16, path = path)
       graft.similarity.IvfIndex.searchPq(s, path,
         e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", nprobe = 2, k = 5)
-        
-    }),
+    }, oracle = annIvfpqSql),
     // 37e2 — the SERVING shape of 37e: retrieve→rerank over the
     // PERSISTED IVF-PQ index. The ADC retrieval reads nprobe cell
     // directories of codes and the exact rescore reads true vectors
@@ -403,7 +605,7 @@ object Pipeline {
     // sim_ann_rerank's cost. Same build-once / probe-many cache key as
     // 37b2/37d2; spec-asserted bit-identical to the in-memory
     // pqIvfRerank composition, so it shares sim_ann_rerank's oracle.
-    "sim_ann_rerank_disk" -> ((s, dir) => {
+    Query("sim_ann_rerank_disk", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val path = ivfDiskPath(dir)
       if (!graft.similarity.IvfIndex.isComplete(s, path))
@@ -414,18 +616,25 @@ object Pipeline {
       graft.similarity.IvfIndex.searchRerank(s, path,
         e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
         nprobe = 2, kCand = 20, k = 5)
-        
-    }),
+    }, oracle = annRerankSql),
     // 38 — stopword-scoring language ID (staged: tokens project once)
-    "txt_langid" -> ((s, dir) => {
+    Query("txt_langid", (s, dir) => {
       TextAnalysis.langIdDf(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
+    }, oracle = s"SELECT doc_id, $langIdSql AS lang_pred FROM documents ORDER BY doc_id"),
     // 38b — char-trigram (Cavnar–Trenkle-style) language ID (staged:
     // the gram array projects once — the inline form was 8× slower)
-    "txt_langid_ngram" -> ((s, dir) => {
+    Query("txt_langid_ngram", (s, dir) => {
       TextAnalysis.langIdNgramDf(t(s, dir, "documents"), "doc_id", "text")
-        
+    }, oracle = {
+      val scores = TextAnalysis.DefaultTrigramProfiles.map { case (lang, grams) =>
+        val inList = grams.map(g => s"'${g.replace("'", "''")}'").mkString(", ")
+        lang -> (s"len(list_filter(CASE WHEN length(lower(text)) < 3 THEN [] " +
+          s"ELSE list_transform(range(1, length(lower(text)) - 1), i -> substr(lower(text), CAST(i AS INT), 3)) END, " +
+          s"g -> g IN ($inList)))")
+      }
+      val best = s"greatest(${scores.map(_._2).mkString(", ")})"
+      val cases = scores.map { case (lang, e) => s"WHEN $e = $best THEN '$lang'" }.mkString(" ")
+      s"SELECT doc_id, CASE $cases END AS lang_pred FROM documents ORDER BY doc_id"
     }),
     // 38l — classifier EVALUATION report (the eval harness every
     // pipeline classifier ships with): both language-ID
@@ -435,7 +644,7 @@ object Pipeline {
     // single-pass prediction frames equi-joined back on doc_id, then
     // a languages-bounded rollup; rates are exact small-int
     // divisions fp4-quantized.
-    "txt_langid_eval" -> ((s, dir) => {
+    Query("txt_langid_eval", (s, dir) => {
       val docs = t(s, dir, "documents")
       val a = TextAnalysis.langIdDf(docs, "doc_id", "text", out = "pred_stop")
       val b = TextAnalysis.langIdNgramDf(docs, "doc_id", "text", out = "pred_gram")
@@ -450,20 +659,47 @@ object Pipeline {
           fp(col("n_stop_ok").cast("double") / col("n_docs").cast("double"), 4).as("acc_stop_fp4"),
           fp(col("n_gram_ok").cast("double") / col("n_docs").cast("double"), 4).as("acc_gram_fp4"),
           fp(col("n_agree").cast("double") / col("n_docs").cast("double"), 4).as("agree_fp4"))
-        
+    }, oracle = {
+      val scores = TextAnalysis.DefaultTrigramProfiles.map { case (lang, grams) =>
+        val inList = grams.map(g => s"'${g.replace("'", "''")}'").mkString(", ")
+        lang -> (s"len(list_filter(CASE WHEN length(lower(text)) < 3 THEN [] " +
+          s"ELSE list_transform(range(1, length(lower(text)) - 1), i -> substr(lower(text), CAST(i AS INT), 3)) END, " +
+          s"g -> g IN ($inList)))")
+      }
+      val best = s"greatest(${scores.map(_._2).mkString(", ")})"
+      val cases = scores.map { case (lang, e) => s"WHEN $e = $best THEN '$lang'" }.mkString(" ")
+      s"""WITH p AS (SELECT lang, $langIdSql AS ps, CASE $cases END AS pg FROM documents),
+        |a AS (SELECT lang, count(*) AS n_docs,
+        |  CAST(sum(CASE WHEN ps = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_stop_ok,
+        |  CAST(sum(CASE WHEN pg = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_gram_ok,
+        |  CAST(sum(CASE WHEN ps = pg THEN 1 ELSE 0 END) AS BIGINT) AS n_agree
+        |FROM p GROUP BY 1)
+        |SELECT lang, n_docs, n_stop_ok, n_gram_ok, n_agree,
+        |  ${sqlFp("CAST(n_stop_ok AS DOUBLE) / CAST(n_docs AS DOUBLE)", 4)} AS acc_stop_fp4,
+        |  ${sqlFp("CAST(n_gram_ok AS DOUBLE) / CAST(n_docs AS DOUBLE)", 4)} AS acc_gram_fp4,
+        |  ${sqlFp("CAST(n_agree AS DOUBLE) / CAST(n_docs AS DOUBLE)", 4)} AS agree_fp4
+        |FROM a ORDER BY 1""".stripMargin
     }),
     // 39 — quality scoring (length/punct/stopword ratios; staged tokens)
-    "txt_quality" -> ((s, dir) => {
+    Query("txt_quality", (s, dir) => {
       TextAnalysis.qualityDf(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
+    }, oracle =
+      s"""SELECT doc_id, CAST(length(text) AS INT) AS n_chars,
+        | CAST(len($toksSql) AS BIGINT) AS n_words,
+        | ${sqlFp("CAST(length(text) AS DOUBLE) / CAST(CASE WHEN len(" + toksSql + ") = 0 THEN 1 ELSE len(" + toksSql + ") END AS DOUBLE)", 2)} AS mean_word_len_fp2,
+        | ${sqlFp("CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS DOUBLE) / CAST(CASE WHEN length(text) = 0 THEN 1 ELSE length(text) END AS DOUBLE)", 4)} AS punct_ratio_fp4,
+        | ${sqlFp("CAST(len(list_filter(" + toksSql + ", t -> t IN ('the','a','of','and','fast','slow'))) AS DOUBLE) / CAST(CASE WHEN len(" + toksSql + ") = 0 THEN 1 ELSE len(" + toksSql + ") END AS DOUBLE)", 4)} AS stopword_ratio_fp4
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // 40 — token counting (whitespace + BPE-ish regex pre-tokenizer)
-    "txt_tokens" -> ((s, dir) => {
+    Query("txt_tokens", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"),
           size(TextAnalysis.tokens(col("text"))).cast("long").as("n_ws_tokens"),
           TextAnalysis.tokenCount(col("text")).cast("long").as("n_word_tokens"))
-}),
+    }, oracle =
+      s"""SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS n_ws_tokens,
+        | CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_word_tokens
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // 40b — vocab-table-driven BPE tokenization: the REAL tokenizer
     // walk (canonical greedy merge loop over a ranked merges table —
     // Sennrich et al. 2016 / the GPT-2 reference encoder), not the
@@ -475,20 +711,77 @@ object Pipeline {
     // divergence in pair choice, tie-break, or merge order
     // hash-mismatches. `size(bpe)` is the drop-in real-token counter
     // for smp_pack / smp_budget / smp_mix (they take any count col).
-    "txt_bpe_tokens" -> ((s, dir) => {
+    Query("txt_bpe_tokens", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"), TextAnalysis.bpeTokens(col("text")).as("bpe"))
         .select(col("doc_id"),
           size(col("bpe")).cast("long").as("n_bpe_tokens"),
           array_join(col("bpe"), " ").as("bpe_text"))
-        
-    }),
+    }, oracle =
+      // the identical BPE walk as a recursive CTE over a bracketed
+      // string form (token t ↦ \x01 t \x02, concatenated): a pair
+      // merge is then exactly `replace(s, \x01a\x02\x01b\x02,
+      // \x01ab\x02)` — string replace IS left-to-right non-overlapping,
+      // and the brackets make containment ⇔ whole-token adjacency.
+      // Each recursion step picks the lowest-rank pattern PRESENT
+      // (correlated scalar subquery over the rank table) and applies
+      // one merge pass; rows exit when no pattern applies. The state
+      // string strictly shrinks per step, so termination is structural.
+      // PRECONDITION (shared by both engines): document text contains
+      // none of U+0000/U+0001/U+0002 — the Spark expression keys merge
+      // pairs with a \u0000 separator and this oracle brackets tokens
+      // with chr(1)/chr(2), so a control char reaching the tokenizer
+      // (each would become a single-char token under WordPattern)
+      // corrupts the bracketed form / rank keys and the two engines
+      // diverge as an opaque hash mismatch. Real corpora satisfy this
+      // after txt_normalize-style ingest cleanup; synthetic testdata
+      // is ASCII printable by construction.
+      s"""WITH RECURSIVE
+        |merges AS (
+        |  SELECT rank, chr(1) || a || chr(2) || chr(1) || b || chr(2) AS pat,
+        |    chr(1) || a || b || chr(2) AS rep
+        |  FROM (VALUES $bpeMergesValues) m(rank, a, b)),
+        |words AS (
+        |  SELECT doc_id, unnest(range(len(ws))) AS wi, ws
+        |  FROM (SELECT doc_id,
+        |      regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]') AS ws
+        |    FROM documents)),
+        |init AS (
+        |  SELECT doc_id, wi,
+        |    regexp_replace(ws[wi + 1], '(.)', chr(1) || '\\1' || chr(2), 'g') AS s
+        |  FROM words),
+        |steps AS (
+        |  SELECT doc_id, wi, s FROM init
+        |  UNION ALL
+        |  SELECT doc_id, wi,
+        |    replace(s,
+        |      (SELECT pat FROM merges WHERE contains(s, pat) ORDER BY rank LIMIT 1),
+        |      (SELECT rep FROM merges WHERE contains(s, pat) ORDER BY rank LIMIT 1)) AS s
+        |  FROM steps
+        |  WHERE EXISTS (SELECT 1 FROM merges WHERE contains(s, pat))),
+        |fin AS (
+        |  SELECT doc_id, wi, s FROM steps
+        |  WHERE NOT EXISTS (SELECT 1 FROM merges WHERE contains(s, pat))),
+        |per_doc AS (
+        |  SELECT doc_id,
+        |    CAST(sum(len(s) - len(replace(s, chr(2), ''))) AS BIGINT) AS n_bpe_tokens,
+        |    string_agg(trim(replace(s, chr(2) || chr(1), ' '), chr(1) || chr(2)),
+        |      ' ' ORDER BY wi) AS bpe_text
+        |  FROM fin GROUP BY doc_id)
+        |SELECT d.doc_id, coalesce(p.n_bpe_tokens, 0) AS n_bpe_tokens,
+        |  coalesce(p.bpe_text, '') AS bpe_text
+        |FROM documents d LEFT JOIN per_doc p USING (doc_id)
+        |ORDER BY d.doc_id""".stripMargin),
     // 41 — polynomial rolling-hash document fingerprint
-    "txt_fingerprint" -> ((s, dir) => {
+    Query("txt_fingerprint", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"), TextAnalysis.fingerprint(col("text"), 64).as("fp_hash"))
-        
-    }),
+    }, oracle =
+      """SELECT doc_id, list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |  list_transform(range(1, least(length(text), 64) + 1),
+        |    i -> CAST(ascii(substr(text, CAST(i AS INT), 1)) AS BIGINT))),
+        |  (a, x) -> (a*31 + x) % 2147483647) AS fp_hash
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // 41i — winnowing fingerprints (Schleimer et al. 2003 / MOSS):
     // word-3-gram hash stream, sliding 4-window minimum with
     // rightmost tie-break — a fingerprint lands in EVERY window, so
@@ -496,13 +789,19 @@ object Pipeline {
     // while only ~2/(w+1) of grams are kept. Native one-pass deque
     // (graft_winnow); narrow, zero shuffle; short docs (<3 tokens)
     // emit nothing, mirrored by the oracle's hs-nonempty guard
-    "txt_winnow" -> ((s, dir) => {
+    Query("txt_winnow", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"),
           explode(TextAnalysis.winnow(TextAnalysis.tokens(col("text")), 3, 4)).as("e"))
         .select(col("doc_id"), col("e.pos").as("pos"), col("e.fp").as("fp"))
-        
-    }),
+    }, oracle =
+      // winnowing: per-window min via list_min over the hash slice,
+      // rightmost position = list_max over index-or-null, DISTINCT
+      // collapses a selection persisting across consecutive windows —
+      // the same three rules the native deque implements
+      s"""WITH ${winnowCoreSql("documents")}
+        |SELECT DISTINCT doc_id, CAST(pos AS INT) AS pos, fp FROM wsel
+        |ORDER BY doc_id, pos""".stripMargin),
     // 34c — winnow-pair matching (the MOSS match step): docs sharing
     // >= 2 winnow fingerprints pair up. The self-join runs over the
     // WINNOWED stream (~2/(w+1) of the gram universe) — the shingle
@@ -510,7 +809,7 @@ object Pipeline {
     // the every-window guarantee bounding what sampling can miss.
     // Same planted aug as dd_containment (doc_id % 4 == 1 appends its
     // predecessor's text) so matching pairs exist at every SF
-    "dd_winnow_pairs" -> ((s, dir) => {
+    Query("dd_winnow_pairs", (s, dir) => {
       val d = t(s, dir, "documents")
       val base = d.select((col("doc_id") + 1).as("doc_id"), col("text").as("_base_text"))
       val aug = d.join(base, Seq("doc_id"), "left")
@@ -519,8 +818,23 @@ object Pipeline {
             concat(col("text"), lit(" "), col("_base_text")))
             .otherwise(col("text")))
       Dedup.winnowPairs(aug, "doc_id", "aug", n = 3, w = 4, minShared = 2)
-        
-    }),
+    }, oracle =
+      // winnow-pair matching (the MOSS step): distinct doc fingerprints,
+      // boilerplate-fp guard, self-join, >= minShared threshold — the
+      // aug corpus mirrors dd_containment's planted embeddings so pairs
+      // provably exist at every SF (shared run >= n+w-1 tokens)
+      s"""WITH aug1 AS (SELECT d.doc_id,
+        |    CASE WHEN d.doc_id % 4 = 1 AND b.text IS NOT NULL
+        |      THEN d.text || ' ' || b.text ELSE d.text END AS text
+        |  FROM documents d LEFT JOIN documents b ON b.doc_id = d.doc_id - 1),
+        |${winnowCoreSql("aug1")},
+        |fps AS (SELECT DISTINCT doc_id AS doc, fp FROM wsel),
+        |rare AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) <= 1000),
+        |f2 AS (SELECT fps.doc, fps.fp FROM fps JOIN rare USING (fp))
+        |SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS n_shared
+        |FROM f2 a JOIN f2 b ON a.fp = b.fp AND a.doc < b.doc
+        |GROUP BY 1, 2 HAVING count(*) >= 2
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // 32i — dedup-recall EVAL harness (the emb_mrl_recall argument
     // applied to dedup: before a near-dup config ships against a
     // corpus, measure what it actually catches): plant ground-truth
@@ -533,7 +847,7 @@ object Pipeline {
     // pipeline, so the metrics — not just the pairs — are verified.
     // Shapes: the LSH pipeline's own banded shuffles + three 1-row
     // aggs; truth is an id-arithmetic self-join, keyed.
-    "dd_eval_recall" -> ((s, dir) => {
+    Query("dd_eval_recall", (s, dir) => {
       val docs = t(s, dir, "documents")
       val base = docs.select((col("doc_id") + 1).as("doc_id"), col("text").as("_base_text"))
       val aug = docs.join(base, Seq("doc_id"), "left")
@@ -561,7 +875,27 @@ object Pipeline {
             .otherwise(fp(col("tp").cast("double") / col("n_pred").cast("double"), 4)).as("precision_fp4"),
           when(col("n_truth") === 0, lit(0L))
             .otherwise(fp(col("tp").cast("double") / col("n_truth").cast("double"), 4)).as("recall_fp4"))
-    }),
+    }, oracle =
+      // the full LSH pipeline re-run over the planted corpus, metrics
+      // in exact integers + guarded fp4 divides
+      s"""WITH aug0 AS (SELECT d.doc_id,
+        |    CASE WHEN d.doc_id % 4 = 1 AND b.text IS NOT NULL
+        |      THEN b.text || ' planteddup' ELSE d.text END AS text
+        |  FROM documents d LEFT JOIN documents b ON b.doc_id = d.doc_id - 1),
+        |${minhashCtes("aug0")},
+        |truth AS (SELECT b.doc_id AS doc_a, d.doc_id AS doc_b
+        |  FROM documents d JOIN documents b ON b.doc_id = d.doc_id - 1
+        |  WHERE d.doc_id % 4 = 1),
+        |tp AS (SELECT count(*) AS tp FROM cand JOIN truth USING (doc_a, doc_b)),
+        |np AS (SELECT count(*) AS n_pred FROM cand),
+        |nt AS (SELECT count(*) AS n_truth FROM truth)
+        |SELECT CAST(n_truth AS BIGINT) AS n_truth, CAST(n_pred AS BIGINT) AS n_pred,
+        |  CAST(tp AS BIGINT) AS tp,
+        |  CASE WHEN n_pred = 0 THEN CAST(0 AS BIGINT)
+        |    ELSE ${sqlFp("CAST(tp AS DOUBLE) / CAST(n_pred AS DOUBLE)", 4)} END AS precision_fp4,
+        |  CASE WHEN n_truth = 0 THEN CAST(0 AS BIGINT)
+        |    ELSE ${sqlFp("CAST(tp AS DOUBLE) / CAST(n_truth AS DOUBLE)", 4)} END AS recall_fp4
+        |FROM tp, np, nt""".stripMargin),
     // 48 — the WET ingestion loop END-TO-END, oracle-gated (the
     // cg_pipeline_counts argument applied to the web-corpus ingress):
     // documents → distributed sharded .warc.wet.gz export (every
@@ -572,7 +906,7 @@ object Pipeline {
     // rendering, the split-scan member ownership, or the payload
     // decode hash-mismatches. Tiny rangeBytes forces members across
     // split boundaries on every run
-    "src_wet_roundtrip" -> ((s, dir) => {
+    Query("src_wet_roundtrip", (s, dir) => {
       val tmp = scratchDir("wet")
       val docs = t(s, dir, "documents")
         .select(concat(lit("doc://"), col("doc_id")).as("url"),
@@ -582,8 +916,13 @@ object Pipeline {
       graft.web.WarcWet.read(s, tmp, rangeBytes = 4096L)
         .select(substring(col("url"), 7, 30).cast("long").as("doc_id"),
           col("length").as("n_bytes"), md5(col("text")).as("h"))
-        
-    }),
+    }, oracle =
+      // the oracle never sees the WET bytes: it recomputes the expected
+      // output straight from documents, so the whole write→read loop
+      // must reproduce every payload byte to hash-match
+      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+        |  md5(text) AS h
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // 48b — the JSONL corpus interchange loop END-TO-END (JSONL is
     // THE LLM-corpus wire format — Pile/RedPajama/Dolma all ship
     // it): documents → distributed gzip JSON-lines export through
@@ -595,7 +934,7 @@ object Pipeline {
     // framing, or shard ownership hash-mismatches. Gzip shards are
     // not splittable — at 100 TB parallelism = shard count, which
     // the export side controls by partition count.
-    "src_jsonl_roundtrip" -> ((s, dir) => {
+    Query("src_jsonl_roundtrip", (s, dir) => {
       val tmp = scratchDir("jsonl")
       t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("text"))
@@ -604,8 +943,13 @@ object Pipeline {
         .select(col("doc_id"), col("lang"), col("source"),
           length(col("text")).cast("long").as("n_chars_rt"),
           md5(col("text")).as("h"))
-        
-    }),
+    }, oracle =
+      // same discipline for the JSONL loop: the oracle reads documents
+      // directly — the export/read-back must round-trip every code
+      // point for the md5 to land
+      """SELECT doc_id, lang, source,
+        |  CAST(length(text) AS BIGINT) AS n_chars_rt, md5(text) AS h
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // 48i — corrupt-record tolerant JSON ingest (the PERMISSIVE
     // schema-on-read discipline a crawl/vendor feed needs): every
     // 7th synthesized record is truncated mid-token, the parse must
@@ -615,7 +959,7 @@ object Pipeline {
     // per-row codegen'd parse, zero shuffles before the tiny rollup;
     // at 100 TB the same plan quarantines bad rows to a side output
     // instead of killing a 10⁵-task ingest for one byte flip.
-    "src_jsonl_corrupt" -> ((s, dir) => {
+    Query("src_jsonl_corrupt", (s, dir) => {
       val synth = t(s, dir, "documents").select(
         when(pmod(col("doc_id"), lit(7)) === 0,
           concat(lit("{\"id\": "), col("doc_id"), lit(", \"lang\": ")))
@@ -630,8 +974,20 @@ object Pipeline {
         .groupBy("lang_parsed")
         .agg(count(lit(1)).as("n"), count(col("id")).as("n_ids"),
           sum(coalesce(col("id"), lit(0L))).as("sum_id"))
-        
-    }),
+    }, oracle =
+      """WITH js AS (
+        |  SELECT CASE WHEN doc_id % 7 = 0
+        |      THEN '{"id": ' || doc_id || ', "lang": '
+        |      ELSE '{"id": ' || doc_id || ', "lang": "' || lang || '"}'
+        |    END AS s
+        |  FROM documents),
+        |p AS (SELECT
+        |    CASE WHEN json_valid(s) THEN json_extract_string(s, '$.lang') END AS lang_p,
+        |    CASE WHEN json_valid(s) THEN CAST(json_extract(s, '$.id') AS BIGINT) END AS id
+        |  FROM js)
+        |SELECT coalesce(lang_p, 'CORRUPT') AS lang_parsed, count(*) AS n,
+        |  count(id) AS n_ids, CAST(sum(coalesce(id, 0)) AS BIGINT) AS sum_id
+        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin),
     // 48d — partitioned-parquet write + partition-PRUNED read (the
     // other half of the 100 TB storage-layout discipline next to
     // src_bucketed_join's bucketing): events written partitioned by
@@ -641,7 +997,7 @@ object Pipeline {
     // reads that type's bytes and nothing else. The daily rollup on
     // the re-read frame goes through the dataType-branched tsMs (the
     // roundtrip preserves the timestamp type).
-    "src_partitioned_scan" -> ((s, dir) => {
+    Query("src_partitioned_scan", (s, dir) => {
       val tmp = scratchDir("part")
       t(s, dir, "events")
         .write.mode("overwrite").partitionBy("event_type").parquet(tmp)
@@ -649,8 +1005,11 @@ object Pipeline {
       rd.select(tsMs(rd).as("ms"), fp(col("value"), 4).as("v4"))
         .groupBy(expr("ms DIV 86400000").as("day"))
         .agg(count(lit(1)).as("n"), sum("v4").as("sum_v4"))
-        
-    }),
+    }, oracle =
+      s"""SELECT epoch_ms(ts) // 86400000 AS day, count(*) AS n,
+        |  CAST(sum(${sqlFp("\"value\"", 4)}) AS BIGINT) AS sum_v4
+        |FROM events WHERE event_type = 'purchase'
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // 44h — SCHEMA-EVOLUTION read (the lakehouse reality that a
     // 100 TB table accumulates files from many writer versions):
     // batch v1 predates the `source`/`n_chars` columns, batch v2
@@ -660,7 +1019,7 @@ object Pipeline {
     // cannot rewrite history; the merge cost is footer-sized, not
     // data-sized). The profile splits legacy (null-source) rows from
     // evolved rows per lang, proving the back-fill is observable.
-    "src_schema_evolution" -> ((s, dir) => {
+    Query("src_schema_evolution", (s, dir) => {
       val tmp = scratchDir("evo")
       val docs = t(s, dir, "documents")
       docs.filter(col("doc_id") % 2 === 0).select("doc_id", "lang")
@@ -673,8 +1032,12 @@ object Pipeline {
           count(lit(1)).as("n"),
           sum(when(col("source").isNull, 1L).otherwise(0L)).as("n_legacy"),
           sum(coalesce(col("n_chars"), lit(0L))).as("sum_chars_v2"))
-        
-    }),
+    }, oracle =
+      // legacy batch = even doc_ids (written without source/n_chars)
+      """SELECT lang, count(*) AS n,
+        |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_legacy,
+        |  CAST(sum(CASE WHEN doc_id % 2 = 1 THEN n_chars ELSE 0 END) AS BIGINT) AS sum_chars_v2
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
     // 44g — DYNAMIC partition pruning (the join-driven half of the
     // pruning story next to src_partitioned_scan's static filter):
     // the fact is partitioned by event_type, and the dim's filter —
@@ -686,7 +1049,7 @@ object Pipeline {
     // date-dim → fact-partition pattern: the fact never scans
     // partitions the dim filter excludes, without hand-written
     // static predicates.
-    "src_dpp" -> ((s, dir) => {
+    Query("src_dpp", (s, dir) => {
       val tmp = scratchDir("dpp")
       t(s, dir, "events")
         .write.mode("overwrite").partitionBy("event_type").parquet(tmp)
@@ -697,20 +1060,30 @@ object Pipeline {
         .select(col("event_type"), tsMs(fact).as("ms"), fp(col("value"), 4).as("v4"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("v4").as("sum_v4"))
-        
-    }),
+    }, oracle =
+      """WITH d AS (
+        |  SELECT DISTINCT event_type FROM events
+        |  WHERE substr(md5(event_type), 1, 1) < 'a')
+        |SELECT e.event_type, count(*) AS n,
+        |  CAST(sum(CAST(floor(value*1e4+0.5) AS BIGINT)) AS BIGINT) AS sum_v4
+        |FROM events e JOIN d ON d.event_type = e.event_type
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // 41b — text normalization (canonical form for dedup)
-    "txt_normalize" -> ((s, dir) => {
+    Query("txt_normalize", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"), TextAnalysis.normalize(col("text")).as("norm_text"))
-        
-    }),
+    }, oracle =
+      """SELECT doc_id,
+        | trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]+', ' ', 'g'), '\s+', ' ', 'g')) AS norm_text
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // 41c — stopword removal
-    "txt_stopword_remove" -> ((s, dir) => {
+    Query("txt_stopword_remove", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"), TextAnalysis.removeStopwords(col("text")).as("clean_text"))
-        
-    }),
+    }, oracle =
+      s"""SELECT doc_id,
+        | array_to_string(list_filter($toksSql, t -> t NOT IN ('the','a','of','and','fast','slow')), ' ') AS clean_text
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // 39b — repetition ratio: 1 - distinct/total tokens (fp4), the
     // C4-style repetitiveness quality signal
     // 41r — sentence SEGMENTATION stats (the unit every
@@ -724,7 +1097,7 @@ object Pipeline {
     // precedent; replace() is engine-identical left-to-right
     // non-overlapping). Pure narrow map — zero shuffles; the per-doc
     // fold is sentence-count-bounded.
-    "txt_sentencize" -> ((s, dir) => {
+    Query("txt_sentencize", (s, dir) => {
       val punct = expr("replace(replace(text, ' merge ', '. '), ' batch ', '! ')")
       val segs = filter(
         transform(split(punct, "[.!?]+"),
@@ -736,23 +1109,37 @@ object Pipeline {
           size(col("segs")).as("n_sent"),
           aggregate(col("segs"), lit(0L), (a, x) => a + length(x)).as("sum_len"),
           aggregate(col("segs"), lit(0), (a, x) => greatest(a, length(x))).as("max_len"))
-        
-    }),
-    "txt_repetition" -> ((s, dir) => {
+    }, oracle =
+      // list lambdas replicate the Spark HOF folds; edge whitespace
+      // stripped by regex on both engines (trim() semantics differ)
+      """WITH d AS (SELECT doc_id,
+        |  list_filter(list_transform(string_split_regex(
+        |                replace(replace(text, ' merge ', '. '), ' batch ', '! '),
+        |                '[.!?]+'),
+        |              x -> regexp_replace(x, '^\s+|\s+$', '', 'g')),
+        |              x -> length(x) > 0) AS segs FROM documents)
+        |SELECT doc_id, CAST(len(segs) AS INT) AS n_sent,
+        |  CAST(coalesce(list_sum(list_transform(segs, x -> length(x))), 0) AS BIGINT) AS sum_len,
+        |  CAST(coalesce(list_max(list_transform(segs, x -> length(x))), 0) AS INT) AS max_len
+        |FROM d ORDER BY doc_id""".stripMargin),
+    Query("txt_repetition", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("_toks"))
         .select(col("doc_id"),
           when(size(col("_toks")) === 0, lit(0L))
             .otherwise(fp(lit(1.0) - size(array_distinct(col("_toks"))).cast("double") / size(col("_toks")).cast("double"), 4))
             .as("repetition_fp4"))
-        
-    }),
+    }, oracle =
+      s"""SELECT doc_id, CASE WHEN len($toksSql) = 0 THEN 0
+        | ELSE ${sqlFp("1.0 - CAST(len(list_distinct(" + toksSql + ")) AS DOUBLE) / CAST(len(" + toksSql + ") AS DOUBLE)", 4)}
+        | END AS repetition_fp4
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // 39c — vocabulary-growth stats: per-doc type count and hapax
     // (once-only) fraction, the Zipf-tail quality signal that
     // repetition/TTR miss. Explode + two-level partial agg — the
     // (doc, token) combine collapses repeats map-side, so the shuffle
     // carries per-doc vocabularies, not token streams
-    "txt_hapax" -> ((s, dir) => {
+    Query("txt_hapax", (s, dir) => {
       val tokCounts = t(s, dir, "documents")
         .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("tok"))
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
@@ -769,63 +1156,150 @@ object Pipeline {
         .withColumn("hapax_frac_fp4",
           when(col("n_types") === 0, lit(0L))
             .otherwise(fp(col("n_hapax").cast("double") / col("n_types").cast("double"), 4)))
-        
-    }),
+    }, oracle =
+      s"""WITH tc AS (SELECT doc_id, tok, count(*) AS c
+        |  FROM (SELECT doc_id, unnest($toksSql) AS tok FROM documents) GROUP BY 1, 2),
+        |agg AS (SELECT doc_id, sum(c) AS n_tokens, count(*) AS n_types,
+        |    sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS n_hapax
+        |  FROM tc GROUP BY 1)
+        |SELECT d.doc_id,
+        |  CAST(coalesce(n_tokens, 0) AS BIGINT) AS n_tokens,
+        |  CAST(coalesce(n_types, 0) AS BIGINT) AS n_types,
+        |  CAST(coalesce(n_hapax, 0) AS BIGINT) AS n_hapax,
+        |  CASE WHEN coalesce(n_types, 0) = 0 THEN CAST(0 AS BIGINT)
+        |    ELSE ${sqlFp("CAST(n_hapax AS DOUBLE) / CAST(n_types AS DOUBLE)", 4)}
+        |  END AS hapax_frac_fp4
+        |FROM documents d LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin),
     // 39g — per-source χ² divergence from the corpus unigram
     // distribution (domain-shift profiling). χ², not KL: KL needs
     // log(), whose last ulp differs across libm builds (the charlm
     // lesson); χ² is pure rational arithmetic — exact decimal ratios
     // per term, fp9-quantized, integer-summed, absent-token mass
     // folded in from one exact integer sum
-    "txt_domain_div" -> ((s, dir) => {
+    Query("txt_domain_div", (s, dir) => {
       TextAnalysis.domainDivergenceDf(t(s, dir, "documents"), "source", "text")
-        
-    }),
+    }, oracle =
+      // exact HUGEINT term ratios mirror Spark's DECIMAL(38,0): each
+      // factor casts to HUGEINT BEFORE its multiply, diff drops to
+      // double, and n_s² folds into the double divide — the same
+      // overflow-free staging as the Spark side; one double drop per
+      // term in the same expression shape, fp9, integer sums —
+      // accumulation order cannot move the result
+      s"""WITH toks AS (SELECT source, unnest($toksSql) AS tok FROM documents),
+        |st AS (SELECT source, tok, count(*) AS c_st FROM toks GROUP BY 1, 2),
+        |tt AS (SELECT tok, sum(c_st) AS c_t FROM st GROUP BY 1),
+        |ns AS (SELECT source, sum(c_st) AS n_s FROM st GROUP BY 1),
+        |n1 AS (SELECT sum(c_t) AS n FROM tt),
+        |terms AS (SELECT st.source, tt.c_t, n1.n,
+        |    CAST(floor(
+        |      (CAST(CAST(st.c_st AS HUGEINT) * CAST(n1.n AS HUGEINT)
+        |          - CAST(tt.c_t AS HUGEINT) * CAST(ns.n_s AS HUGEINT) AS DOUBLE)
+        |        / CAST(ns.n_s AS DOUBLE))
+        |      * (CAST(CAST(st.c_st AS HUGEINT) * CAST(n1.n AS HUGEINT)
+        |          - CAST(tt.c_t AS HUGEINT) * CAST(ns.n_s AS HUGEINT) AS DOUBLE)
+        |        / CAST(ns.n_s AS DOUBLE))
+        |      / CAST(CAST(tt.c_t AS HUGEINT) * CAST(n1.n AS HUGEINT) AS DOUBLE)
+        |      * 1e9 + 0.5) AS BIGINT) AS term
+        |  FROM st JOIN tt USING (tok) JOIN ns USING (source) CROSS JOIN n1)
+        |SELECT source, count(*) AS n_terms,
+        |  CAST(sum(term)
+        |    + floor((1.0 - CAST(sum(c_t) AS DOUBLE) / CAST(max(n) AS DOUBLE)) * 1e9 + 0.5)
+        |    AS BIGINT) AS chi2_fp9
+        |FROM terms GROUP BY source ORDER BY source""".stripMargin),
     // 39e — Gopher-style quality-rule ensemble (Rae et al. §A1.1):
     // word-count bounds, mean-word-length bounds, symbol ratio,
     // alpha-word fraction, stopword presence — signals quantized
     // BEFORE thresholding so the keep flag itself is engine-exact.
     // Narrow, zero shuffle
-    "txt_gopher" -> ((s, dir) => {
+    Query("txt_gopher", (s, dir) => {
       TextAnalysis.gopherRulesDf(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
+    }, oracle =
+      s"""WITH t AS (SELECT doc_id, text, $toksSql AS toks FROM documents),
+        |s AS (SELECT doc_id,
+        |    CAST(len(toks) AS BIGINT) AS n_words,
+        |    CASE WHEN len(toks) = 0 THEN 1 ELSE len(toks) END AS nw,
+        |    coalesce(list_sum(list_transform(toks, x -> length(x))), 0) AS sumlen,
+        |    len(list_filter(toks, x -> regexp_matches(x, '[a-z]'))) AS alpha_cnt,
+        |    len(regexp_extract_all(text, '#|\\.\\.\\.')) AS sym_cnt,
+        |    CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','fast','slow'))) AS BIGINT) AS stop_hits
+        |  FROM t),
+        |q AS (SELECT doc_id, n_words,
+        |    ${sqlFp("CAST(sumlen AS DOUBLE) / CAST(nw AS DOUBLE)", 2)} AS mean_wlen_fp2,
+        |    ${sqlFp("CAST(alpha_cnt AS DOUBLE) / CAST(nw AS DOUBLE)", 4)} AS alpha_frac_fp4,
+        |    ${sqlFp("CAST(sym_cnt AS DOUBLE) / CAST(nw AS DOUBLE)", 4)} AS sym_ratio_fp4,
+        |    stop_hits
+        |  FROM s)
+        |SELECT *, CAST(CASE WHEN n_words >= 50 AND n_words <= 100000
+        |    AND mean_wlen_fp2 >= 300 AND mean_wlen_fp2 <= 1000
+        |    AND alpha_frac_fp4 >= 8000 AND sym_ratio_fp4 <= 1000
+        |    AND stop_hits >= 2 THEN 1 ELSE 0 END AS BIGINT) AS keep_flag
+        |FROM q ORDER BY doc_id""".stripMargin),
     // 39d — corpus-trained char-trigram LM quality score (CCNet-style
     // perplexity filtering, engine-portable: per-position Laplace
     // probabilities fp6-quantized and integer-summed — no log(),
     // whose last ulp differs across libm implementations). Model =
     // the corpus's own trigram stats: two charset²-bounded partial
     // aggs broadcast back; the corpus side never shuffles by gram
-    "txt_charlm" -> ((s, dir) => {
+    Query("txt_charlm", (s, dir) => {
       TextAnalysis.charLmScoreDf(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
+    }, oracle =
+      s"""WITH norm AS (SELECT doc_id,
+        |  trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]+', ' ', 'g'), '\\s+', ' ', 'g')) AS t
+        |  FROM documents),
+        |pos AS (SELECT doc_id, t, unnest(range(1, greatest(length(t) - 1, 1))) AS i FROM norm),
+        |tri AS (SELECT doc_id, substr(t, CAST(i AS INT), 2) AS ctx, substr(t, CAST(i AS INT) + 2, 1) AS c FROM pos),
+        |model AS (SELECT ctx, c, count(*) AS cnt FROM tri GROUP BY 1, 2),
+        |ctxt AS (SELECT ctx, count(*) AS tot FROM tri GROUP BY 1),
+        |vocab AS (SELECT count(DISTINCT c) AS v FROM tri)
+        |SELECT tri.doc_id, count(*) AS n_tri,
+        |  CAST(sum(${sqlFp("CAST(cnt + 1 AS DOUBLE) / CAST(tot + v AS DOUBLE)", 6)}) AS BIGINT) AS sum_p_fp6
+        |FROM tri JOIN model USING (ctx, c) JOIN ctxt USING (ctx) CROSS JOIN vocab
+        |GROUP BY tri.doc_id ORDER BY doc_id""".stripMargin),
     // 41d — PII masking (emails + phone numbers; PII is synthesized
     // into the text so the patterns actually fire at every SF)
-    "txt_pii_mask" -> ((s, dir) => {
+    Query("txt_pii_mask", (s, dir) => {
       t(s, dir, "documents")
         .withColumn("aug", concat(col("text"),
           lit(" contact user"), col("doc_id").cast("string"), lit("@example.com or 555-"),
           lpad((col("doc_id") % 1000).cast("string"), 3, "0"), lit("-4567 now")))
         .select(col("doc_id"), TextAnalysis.maskPii(col("aug")).as("masked"))
-        
-    }),
+    }, oracle =
+      """SELECT doc_id, regexp_replace(regexp_replace(
+        |    text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com or 555-'
+        |      || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-4567 now',
+        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+        |    '[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g') AS masked
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // 41e — consecutive-duplicate-token cleanup (stutter removal;
     // synthetic stutter appended so the filter provably fires)
-    "txt_dedup_tokens" -> ((s, dir) => {
+    Query("txt_dedup_tokens", (s, dir) => {
       t(s, dir, "documents")
         .withColumn("aug", concat(col("text"), lit(" go go stop stop stop end")))
         .select(col("doc_id"), TextAnalysis.dedupConsecutiveTokens(col("aug")).as("clean_text"))
-        
+    }, oracle = {
+      val augToks = toksSql.replace("lower(text)", "lower(text || ' go go stop stop stop end')")
+      s"""SELECT doc_id, array_to_string(
+        |  list_filter($augToks, (t, i) -> i = 1 OR t != ($augToks)[i - 1]), ' ') AS clean_text
+        |FROM documents ORDER BY doc_id""".stripMargin
     }),
     // 35b — int8 embedding quantization (the storage layout ANN
     // indexes ship at scale), exploded for verification
-    "emb_quantize" -> ((s, dir) => {
+    Query("emb_quantize", (s, dir) => {
       t(s, dir, "embeddings")
         .select(col("vec_id"), Similarity.quantizeInt8(col("embedding")).as("qz"))
         .select(col("vec_id"), fp(col("qz.scale"), 6).as("scale_fp6"),
           posexplode(col("qz.q")).as(Seq("pos", "q")))
-    }), // row-per-dim output — no presentation sort (checker row-sorts)
+    }, // row-per-dim output — no presentation sort (checker row-sorts)
+    oracle =
+      s"""WITH sc AS (
+        |  SELECT vec_id,
+        |    CASE WHEN mx = 0 THEN 1.0 ELSE 127.0 / mx END AS scale
+        |  FROM (SELECT vec_id, list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS mx
+        |        FROM embeddings) m)
+        |SELECT e.vec_id, ${sqlFp("scale", 6)} AS scale_fp6, CAST(i - 1 AS INT) AS pos,
+        |  CAST(floor(CAST(e.embedding[i] AS DOUBLE) * scale + 0.5) AS INT) AS q
+        |FROM embeddings e JOIN sc ON sc.vec_id = e.vec_id CROSS JOIN range(1, 65) t(i)
+        |ORDER BY e.vec_id, pos""".stripMargin),
     // 35m — PROTOTYPE (coreset exemplar) selection per label: the
     // vector nearest its class centroid — the classic class-prototype
     // / dataset-distillation pick (and the few-shot support-set
@@ -837,7 +1311,7 @@ object Pipeline {
     // one (label,dim)-keyed hash agg (≤ labels×64 rows, broadcast
     // back); argmin is the keepBest min-dist + join-back idiom —
     // struct-min would plan a SortAggregate.
-    "emb_prototypes" -> ((s, dir) => {
+    Query("emb_prototypes", (s, dir) => {
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           transform(col("embedding"), v => fp(v.cast("double"), 3)).as("q"))
@@ -857,8 +1331,23 @@ object Pipeline {
       dist.join(best, Seq("label", "dist"))
         .groupBy("label", "dist", "n").agg(min("vec_id").as("proto_id"))
         .select(col("label"), col("proto_id"), col("dist").as("min_dist"), col("n"))
-        
-    }),
+    }, oracle =
+      // argmin Σ(q_d·n − s_d)² — the per-class mean cleared of /n;
+      // everything integer after the shared fp3 quantization
+      """WITH q AS (SELECT vec_id, label,
+        |    list_transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE)*1e3+0.5) AS BIGINT)) AS qv
+        |  FROM embeddings),
+        |cn AS (SELECT label, count(*) AS n FROM q GROUP BY 1),
+        |cd AS (SELECT label, i AS d, CAST(sum(qv[i]) AS BIGINT) AS sd
+        |       FROM q CROSS JOIN range(1, 65) t(i) GROUP BY 1, 2),
+        |dist AS (SELECT q.vec_id, q.label, cn.n,
+        |    CAST(sum((qv[d] * n - sd) * (qv[d] * n - sd)) AS BIGINT) AS dist
+        |  FROM q JOIN cn USING (label) JOIN cd ON cd.label = q.label
+        |  GROUP BY 1, 2, 3),
+        |m AS (SELECT label, min(dist) AS min_dist FROM dist GROUP BY 1)
+        |SELECT dist.label AS label, min(vec_id) AS proto_id, min_dist, n
+        |FROM dist JOIN m ON m.label = dist.label AND dist.dist = m.min_dist
+        |GROUP BY dist.label, min_dist, n ORDER BY dist.label""".stripMargin),
     // 35f — embedding QA outlier gate (the vector-hygiene pass run
     // before an ANN build or a contrastive train: truncated/blown-up
     // vectors poison both): squared norm per vector via the strict
@@ -867,7 +1356,7 @@ object Pipeline {
     // fences (Q1/Q3 ± 1.5·IQR) from the ev_percentile rank scan, in
     // ALL-INTEGER form (2·v < 2·q1 − 3·(q3−q1) — no /2 rounding
     // drift); the 1-row fence frame broadcasts back over the corpus.
-    "emb_outliers" -> ((s, dir) => {
+    Query("emb_outliers", (s, dir) => {
       val sq = t(s, dir, "embeddings")
         .select(col("vec_id"),
           fp(Similarity.dot(col("embedding"), col("embedding")), 2).as("sqn_c2"))
@@ -883,19 +1372,36 @@ object Pipeline {
           (col("sqn_c2") * 2 < col("q1") * 2 - (col("q3") - col("q1")) * 3 ||
            col("sqn_c2") * 2 > col("q3") * 2 + (col("q3") - col("q1")) * 3)
             .cast("long").as("is_outlier"))
-        
-    }),
+    }, oracle =
+      // squared norm via the strict left-fold dot, fp2 histogram,
+      // all-integer Tukey fences — mirrors the Spark expression exactly
+      s"""WITH sq AS (SELECT vec_id,
+        |    ${sqlFp(dotSql("embedding", "embedding"), 2)} AS sqn_c2 FROM embeddings),
+        |h AS (SELECT sqn_c2 AS v, count(*) AS k FROM sq GROUP BY 1),
+        |h2 AS (SELECT v, sum(k) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+        |    sum(k) OVER () AS n FROM h),
+        |f AS (SELECT min(CASE WHEN cum >= (n + 3) // 4 THEN v END) AS q1,
+        |    min(CASE WHEN cum >= (3 * n + 3) // 4 THEN v END) AS q3 FROM h2)
+        |SELECT vec_id, sqn_c2, q1, q3,
+        |  CAST(CASE WHEN sqn_c2 * 2 < q1 * 2 - (q3 - q1) * 3
+        |    OR sqn_c2 * 2 > q3 * 2 + (q3 - q1) * 3 THEN 1 ELSE 0 END AS BIGINT) AS is_outlier
+        |FROM sq CROSS JOIN f ORDER BY vec_id""".stripMargin),
     // 35c — product quantization: 64-dim vectors → 4 subspaces × 16
     // codes (deterministic stride codebook, same seeding as IVF so the
     // whole build-and-encode path replicates in SQL). Encode is a
     // zero-shuffle literal-argmin projection — the 4-8× ANN storage
     // compression pass
-    "emb_pq" -> ((s, dir) => {
+    Query("emb_pq", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val cb = Similarity.pqCodebook(e, "vec_id", "embedding", dim = 64, m = 4, k = 16)
       Similarity.pqEncode(e, "vec_id", "embedding", cb)
-        
-    }),
+    }, oracle =
+      // PQ mirror: stride codebook (rank = code), subspace slices,
+      // d2 = x·x − 2·x·c + c·c with the same fold-order dots, argmin =
+      // windowed first by (d2, code)
+      s"""WITH $pqCtes
+        |SELECT id, sub, code, ${sqlFp("d2", 6)} AS d2_fp6
+        |FROM best WHERE rn = 1 ORDER BY id, sub""".stripMargin),
     // 35k — PQ DISTORTION profile (the compression-quality report
     // that gates an ANN deployment: how much squared error does each
     // subquantizer introduce?): per subspace, count / exact integer
@@ -904,32 +1410,60 @@ object Pipeline {
     // exact and order-free, so the corpus-wide distortion total is
     // bit-stable across partitionings — the number you trend across
     // codebook retrainings. One corpus encode pass + a 4-key rollup.
-    "emb_pq_distortion" -> ((s, dir) => {
+    Query("emb_pq_distortion", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val cb = Similarity.pqCodebook(e, "vec_id", "embedding", dim = 64, m = 4, k = 16)
       Similarity.pqEncode(e, "vec_id", "embedding", cb)
         .groupBy("sub")
         .agg(count(lit(1)).as("n"), sum("d2_fp6").cast("long").as("sum_d2_fp6"),
           max("d2_fp6").as("max_d2_fp6"))
-        
-    }),
+    }, oracle =
+      s"""WITH $pqCtes,
+        |enc AS (SELECT id, sub, ${sqlFp("d2", 6)} AS d6 FROM best WHERE rn = 1)
+        |SELECT sub, count(*) AS n, CAST(sum(d6) AS BIGINT) AS sum_d2_fp6,
+        |  CAST(max(d6) AS BIGINT) AS max_d2_fp6
+        |FROM enc GROUP BY 1 ORDER BY 1""".stripMargin),
     // 35e — Matryoshka-truncation recall (Kusupati et al. 2022): per
     // truncation dim, brute cosine top-k over the first d components
     // vs full-dim top-k — the eval harness run before serving
     // truncated vectors. Broadcast queries, salted two-stage ranking,
     // overlap join k rows/query
-    "emb_mrl_recall" -> ((s, dir) => {
+    Query("emb_mrl_recall", (s, dir) => {
       val e = t(s, dir, "embeddings")
       Similarity.mrlRecall(e, "vec_id", "embedding",
         e.filter(col("vec_id") % 50 === 0), dims = Seq(16, 32), fullDim = 64, k = 5)
-        
+    }, oracle = {
+      // MRL recall mirror: per-dim rank windows over the same cross
+      // join, overlap counted against the full-dim top-5
+      def topkCte(name: String, d: Int): String =
+        s"""$name AS (SELECT query_id, id FROM (
+           |  SELECT query_id, id, row_number() OVER (PARTITION BY query_id
+           |    ORDER BY ${sqlFp(cosSqlD("vec", "qvec", d), 6)} DESC, id) AS rk FROM sc)
+           |  WHERE rk <= 5)""".stripMargin
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id % 50 = 0),
+        |sc AS (SELECT q.query_id, e.vec_id AS id, e.embedding AS vec, q.qvec
+        |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id),
+        |${topkCte("fullk", 64)},
+        |${topkCte("t16", 16)},
+        |${topkCte("t32", 32)},
+        |h16 AS (SELECT t16.query_id, count(*) AS n_hit FROM t16 JOIN fullk USING (query_id, id) GROUP BY 1),
+        |h32 AS (SELECT t32.query_id, count(*) AS n_hit FROM t32 JOIN fullk USING (query_id, id) GROUP BY 1),
+        |u AS (
+        |  SELECT CAST(16 AS INT) AS dim, q.query_id, CAST(coalesce(h16.n_hit, 0) AS BIGINT) AS n_hit
+        |    FROM q LEFT JOIN h16 USING (query_id)
+        |  UNION ALL
+        |  SELECT CAST(32 AS INT) AS dim, q.query_id, CAST(coalesce(h32.n_hit, 0) AS BIGINT) AS n_hit
+        |    FROM q LEFT JOIN h32 USING (query_id))
+        |SELECT dim, query_id, n_hit,
+        |  ${sqlFp("CAST(n_hit AS DOUBLE) / 5.0", 4)} AS recall_fp4
+        |FROM u ORDER BY dim, query_id""".stripMargin
     }),
     // 37c — PQ-ADC probe search (Jégou et al.): per-query LUT of
     // subvector-to-codebook distances, corpus rows cost one LUT probe
     // per subspace — distance against the whole corpus without
     // touching a corpus float. fp6-quantized per-subspace so the
     // m-way sum is integer-exact; fully oracle-checked
-    "sim_ann_pq" -> ((s, dir) => {
+    Query("sim_ann_pq", (s, dir) => {
       val e = t(s, dir, "embeddings")
       // collect the m×k codebook ONCE (driver-sized); encode and the
       // ADC LUT used to re-collect it — one codebook job each
@@ -939,7 +1473,24 @@ object Pipeline {
       Similarity.pqSearch(enc, cb, e.filter(col("vec_id") % 50 === 0),
         "vec_id", "embedding", k = 5)
 
-    }),
+    }, oracle =
+      // ADC mirror: per-query LUT from the same codebook, fp6 per
+      // subspace, integer sum, windowed top-k ascending
+      s"""WITH $pqCtes,
+        |enc AS (SELECT id, sub, code FROM best WHERE rn = 1),
+        |qsl AS (SELECT q.vec_id AS query_id, s.sub,
+        |          list_slice(q.embedding, s.sub*16 + 1, s.sub*16 + 16) AS qx
+        |        FROM embeddings q, subs s WHERE q.vec_id % 50 = 0),
+        |lut AS (SELECT q.query_id, q.sub, cb.code,
+        |          ${sqlFp(s"${dot16("qx", "qx")} - 2.0*${dot16("qx", "cvec")} + ${dot16("cvec", "cvec")}", 6)} AS pd6
+        |        FROM qsl q JOIN cb ON cb.sub = q.sub),
+        |sc AS (SELECT l.query_id, e.id, CAST(sum(l.pd6) AS BIGINT) AS approx_d2_fp6
+        |       FROM enc e JOIN lut l ON l.sub = e.sub AND l.code = e.code
+        |       WHERE e.id <> l.query_id GROUP BY 1, 2),
+        |topk AS (SELECT *, row_number() OVER (PARTITION BY query_id
+        |           ORDER BY approx_d2_fp6, id) AS rk FROM sc)
+        |SELECT query_id, id, approx_d2_fp6 FROM topk WHERE rk <= 5
+        |ORDER BY query_id, approx_d2_fp6, id""".stripMargin),
     // 37d — IVF-pruned PQ-ADC probe search (IVF-PQ): the IVF inverted
     // lists prune the corpus to nprobe cells per query before the ADC
     // LUT probe, so a query touches ~nprobe/k_cells of the encoded
@@ -951,7 +1502,7 @@ object Pipeline {
     // id-joined corpus-wide. Same deterministic stride seeding as
     // sim_ann_ivf/emb_pq, so the whole composition replicates in SQL;
     // fully oracle-checked
-    "sim_ann_ivfpq" -> ((s, dir) => {
+    Query("sim_ann_ivfpq", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val nE = e.count() // ONE corpus count serves centroid + codebook strides
       val cents = Similarity.ivfCentroids(e, "vec_id", "embedding", 16, nE)
@@ -965,13 +1516,13 @@ object Pipeline {
         e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", nprobe = 2, k = 5,
         maxLutBroadcastBytes = 64L << 20)
 
-    }),
+    }, oracle = annIvfpqSql),
     // 37e — retrieve→rerank (the production serving composition):
     // IVF-PQ retrieves 20 approximate candidates per query without
     // touching corpus floats, exact cosine re-scores ONLY those 20 —
     // the true-distance work is queries·kCand regardless of corpus
     // size, and the returned order is exact
-    "sim_ann_rerank" -> ((s, dir) => {
+    Query("sim_ann_rerank", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val nE = e.count() // ONE corpus count serves centroid + codebook strides
       val cents = Similarity.ivfCentroids(e, "vec_id", "embedding", 16, nE)
@@ -985,7 +1536,7 @@ object Pipeline {
         e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", e,
         nprobe = 2, kCand = 20, k = 5)
 
-    }),
+    }, oracle = annRerankSql),
     // 37g — mutual k-NN GRAPH construction (the batch input every
     // graph-based ANN index — HNSW/NSG — and SemDeDup-style cluster
     // pass starts from): candidates are CELL-BOUNDED (the same
@@ -1004,7 +1555,7 @@ object Pipeline {
     // this is the number you re-train centroids over): cell-size
     // min/max/total + the max/avg skew factor, exactly. One assign
     // pass + a cells-bounded rollup into a 1-row report.
-    "emb_cell_balance" -> ((s, dir) => {
+    Query("emb_cell_balance", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val cents = Similarity.ivfCentroids(e, "vec_id", "embedding", 16)
       Similarity.ivfAssign(e, "vec_id", "embedding", cents)
@@ -1013,7 +1564,22 @@ object Pipeline {
           max("sz").as("max_sz"), sum("sz").as("total"))
         .withColumn("skew_fp4",
           expr("(max_sz * n_cells * 20000 + total) DIV (2 * total)"))
-    }),
+    }, oracle =
+      s"""WITH cnt AS (SELECT count(*) AS c FROM embeddings),
+        |cents AS (SELECT vec_id AS centroid_id, embedding AS cvec
+        |          FROM embeddings, cnt WHERE vec_id % greatest(1, (c + 15) // 16) = 0),
+        |ac AS (SELECT e.vec_id, c.centroid_id,
+        |         ${cosSql("e.embedding", "c.cvec")} AS cosv
+        |       FROM embeddings e CROSS JOIN cents c),
+        |asg AS (SELECT vec_id, centroid_id AS cell FROM (
+        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
+        |         FROM ac) WHERE rn = 1),
+        |cs AS (SELECT cell, count(*) AS sz FROM asg GROUP BY 1),
+        |r AS (SELECT count(*) AS n_cells, min(sz) AS min_sz, max(sz) AS max_sz,
+        |        CAST(sum(sz) AS BIGINT) AS total FROM cs)
+        |SELECT n_cells, min_sz, max_sz, total,
+        |  CAST((max_sz * n_cells * 20000 + total) // (2 * total) AS BIGINT) AS skew_fp4
+        |FROM r""".stripMargin),
     // 32n — dedup-THRESHOLD calibration sweep (every near-dup pass
     // has a τ; this is the curve you pick it from): within-cell pair
     // similarities histogrammed at fp2 granularity over cos ≥ 0.1 —
@@ -1021,7 +1587,7 @@ object Pipeline {
     // sim_knn_graph (the IVF assignment bounds the self-join to
     // cell-sized blocks — never corpus-quadratic); the histogram is
     // value-domain-bounded (≤ 91 buckets).
-    "dd_threshold_sweep" -> ((s, dir) => {
+    Query("dd_threshold_sweep", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val nE = e.count() // one corpus count serves kCells AND the stride pick
       val cents = Similarity.ivfCentroids(e, "vec_id", "embedding", adaptiveCells(nE), nE)
@@ -1034,9 +1600,21 @@ object Pipeline {
         .filter(col("cos_fp6") >= 100000L)
         .select(expr("cos_fp6 DIV 10000").as("bucket"))
         .groupBy("bucket").agg(count(lit(1)).as("n_pairs"))
-        
-    }),
-    "sim_knn_graph" -> ((s, dir) => {
+    }, oracle =
+      s"""WITH cnt AS (SELECT count(*) AS c, greatest(16, count(*) // 125) AS kc FROM embeddings),
+        |cents AS (SELECT vec_id AS centroid_id, embedding AS cvec
+        |          FROM embeddings, cnt WHERE vec_id % greatest(1, (c + kc - 1) // kc) = 0),
+        |ac AS (SELECT e.vec_id, e.embedding, c.centroid_id,
+        |         ${cosSql("e.embedding", "c.cvec")} AS cosv
+        |       FROM embeddings e CROSS JOIN cents c),
+        |asg AS (SELECT vec_id, embedding, centroid_id AS cell FROM (
+        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
+        |         FROM ac) WHERE rn = 1),
+        |sc AS (SELECT ${sqlFp(cosSql("a.embedding", "b.embedding"), 6)} AS cos_fp6
+        |       FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id)
+        |SELECT cos_fp6 // 10000 AS bucket, count(*) AS n_pairs
+        |FROM sc WHERE cos_fp6 >= 100000 GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("sim_knn_graph", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val nE = e.count() // one corpus count serves kCells AND the stride pick
       val cents = Similarity.ivfCentroids(e, "vec_id", "embedding", adaptiveCells(nE), nE)
@@ -1058,8 +1636,25 @@ object Pipeline {
           Seq("id_a", "id_b"))
         .filter(col("id_a") < col("id_b"))
         .select(col("id_a"), col("id_b"), col("cos_fp6"))
-        
-    }),
+    }, oracle =
+      s"""WITH cnt AS (SELECT count(*) AS c, greatest(16, count(*) // 125) AS kc FROM embeddings),
+        |cents AS (SELECT vec_id AS centroid_id, embedding AS cvec
+        |          FROM embeddings, cnt WHERE vec_id % greatest(1, (c + kc - 1) // kc) = 0),
+        |ac AS (SELECT e.vec_id, e.embedding, c.centroid_id,
+        |         ${cosSql("e.embedding", "c.cvec")} AS cosv
+        |       FROM embeddings e CROSS JOIN cents c),
+        |asg AS (SELECT vec_id, embedding, centroid_id AS cell FROM (
+        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
+        |         FROM ac) WHERE rn = 1),
+        |sc AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |         ${sqlFp(cosSql("a.embedding", "b.embedding"), 6)} AS cos_fp6
+        |       FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id != b.vec_id),
+        |knn AS (SELECT id_a, id_b, cos_fp6 FROM (
+        |         SELECT *, row_number() OVER (PARTITION BY id_a ORDER BY cos_fp6 DESC, id_b) AS rk
+        |         FROM sc) WHERE rk <= 3)
+        |SELECT k1.id_a, k1.id_b, k1.cos_fp6 FROM knn k1
+        |JOIN knn k2 ON k1.id_a = k2.id_b AND k1.id_b = k2.id_a
+        |WHERE k1.id_a < k1.id_b ORDER BY k1.id_a, k1.id_b""".stripMargin),
     // 35l — HARD-NEGATIVE mining over the labeled embeddings (the
     // contrastive-training data op: per anchor, the most-similar
     // DIFFERENT-label vector = hardest negative, the most-similar
@@ -1074,7 +1669,7 @@ object Pipeline {
     // max = best cosine, ties to smallest id; ids must fit 2^40 —
     // document-scale, and the pack overflows loudly, not silently)
     // — no per-anchor window, no SortAggregate.
-    "emb_hard_negatives" -> ((s, dir) => {
+    Query("emb_hard_negatives", (s, dir) => {
       val P = 1L << 40
       val e = t(s, dir, "embeddings")
       val nE = e.count() // one corpus count serves kCells AND the stride pick
@@ -1098,8 +1693,34 @@ object Pipeline {
           (lit(P - 1) - pmod(col("pp"), lit(P))).as("pos_id"),
           (expr(s"pp DIV ${P}") - lit(1000000L)).as("cos_pos_fp6"),
           (expr(s"pp DIV ${P}") - expr(s"pn DIV ${P}")).as("margin_fp6"))
-        
-    }),
+    }, oracle =
+      // same IVF assignment CTEs, labels carried; both argmaxes via the
+      // identical packed-long max ((cos_fp6+1e6)·2^40 + (2^40−1−id))
+      s"""WITH cnt AS (SELECT count(*) AS c, greatest(16, count(*) // 125) AS kc FROM embeddings),
+        |cents AS (SELECT vec_id AS centroid_id, embedding AS cvec
+        |          FROM embeddings, cnt WHERE vec_id % greatest(1, (c + kc - 1) // kc) = 0),
+        |ac AS (SELECT e.vec_id, e.embedding, e.label, c.centroid_id,
+        |         ${cosSql("e.embedding", "c.cvec")} AS cosv
+        |       FROM embeddings e CROSS JOIN cents c),
+        |asg AS (SELECT vec_id, embedding, label, centroid_id AS cell FROM (
+        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
+        |         FROM ac) WHERE rn = 1),
+        |sc AS (SELECT a.vec_id AS id_a, a.label AS lab_a, b.vec_id AS id_b, b.label AS lab_b,
+        |         ${sqlFp(cosSql("a.embedding", "b.embedding"), 6)} AS cos_fp6
+        |       FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id != b.vec_id),
+        |pk AS (SELECT id_a,
+        |         max(CASE WHEN lab_b != lab_a
+        |             THEN (cos_fp6 + 1000000) * 1099511627776 + (1099511627775 - id_b) END) AS pn,
+        |         max(CASE WHEN lab_b = lab_a
+        |             THEN (cos_fp6 + 1000000) * 1099511627776 + (1099511627775 - id_b) END) AS pp
+        |       FROM sc GROUP BY 1)
+        |SELECT id_a AS vec_id,
+        |  1099511627775 - (pn % 1099511627776) AS neg_id,
+        |  pn // 1099511627776 - 1000000 AS cos_neg_fp6,
+        |  1099511627775 - (pp % 1099511627776) AS pos_id,
+        |  pp // 1099511627776 - 1000000 AS cos_pos_fp6,
+        |  pp // 1099511627776 - pn // 1099511627776 AS margin_fp6
+        |FROM pk ORDER BY vec_id""".stripMargin),
     // 41f — TF-IDF term weights: explode tokens → (doc, term) tf
     // counts → document frequencies via groupBy(term) + broadcast
     // join-back. The df agg does map-side partial aggregation, so a
@@ -1112,7 +1733,7 @@ object Pipeline {
     // broadcast(dfTab) for a shuffle join (salted if skewed) once the
     // vocabulary outgrows the broadcast limit; the tf side still
     // never re-shuffles by term.
-    "txt_tfidf" -> ((s, dir) => {
+    Query("txt_tfidf", (s, dir) => {
       val docs = t(s, dir, "documents")
       val n1 = docs.agg(count(lit(1)).cast("double").as("_n"))
       val tf = docs
@@ -1124,7 +1745,13 @@ object Pipeline {
         .withColumn("tfidf_fp4",
           fp(col("tf").cast("double") * log(col("_n") / col("df").cast("double")), 4))
         .select("doc_id", "term", "tf", "df", "tfidf_fp4")
-}),
+    }, oracle =
+      s"""WITH toks AS (SELECT doc_id, unnest($toksSql) AS term FROM documents),
+        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
+        |n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents)
+        |SELECT doc_id, term, tf, count(*) OVER (PARTITION BY term) AS df,
+        |  ${sqlFp("CAST(tf AS DOUBLE) * ln(n / CAST(count(*) OVER (PARTITION BY term) AS DOUBLE))", 4)} AS tfidf_fp4
+        |FROM tf, n ORDER BY doc_id, term""".stripMargin),
     // 41j — PMI-style collocation mining (the phrase-discovery pass a
     // tokenizer-vocabulary build runs over a corpus): score every
     // bigram by LIFT = P(w1,w2) / (P_left(w1)·P_right(w2)) =
@@ -1138,7 +1765,7 @@ object Pipeline {
     // pass — and join back broadcast (vocab-sized; swap for shuffle
     // joins past the broadcast limit, the txt_tfidf note). min-count
     // ≥ 5 is the standard collocation support floor.
-    "txt_collocations" -> ((s, dir) => {
+    Query("txt_collocations", (s, dir) => {
       val big = t(s, dir, "documents")
         .select(explode(call_function("graft_word_ngrams",
           TextAnalysis.tokens(col("text")), lit(2), lit(1), lit(0))).as("_g"))
@@ -1156,8 +1783,18 @@ object Pipeline {
         .select(col("w1"), col("w2"), col("n_xy"),
           fp((col("n_xy").cast("double") * col("n_tot").cast("double")) /
             (col("n_x").cast("double") * col("n_y").cast("double")), 4).as("lift_fp4"))
-        
-    }),
+    }, oracle =
+      s"""WITH toks0 AS (SELECT doc_id, $toksSql AS tk FROM documents),
+        |pos AS (SELECT doc_id, tk, unnest(range(1, len(tk))) AS i FROM toks0),
+        |big AS (SELECT tk[CAST(i AS INT)] AS w1, tk[CAST(i AS INT) + 1] AS w2 FROM pos),
+        |cnt AS (SELECT w1, w2, count(*) AS n_xy FROM big GROUP BY 1, 2),
+        |lm AS (SELECT w1, CAST(sum(n_xy) AS BIGINT) AS n_x FROM cnt GROUP BY 1),
+        |rm AS (SELECT w2, CAST(sum(n_xy) AS BIGINT) AS n_y FROM cnt GROUP BY 1),
+        |tot AS (SELECT CAST(sum(n_xy) AS BIGINT) AS n_tot FROM cnt)
+        |SELECT w1, w2, n_xy,
+        |  ${sqlFp("(CAST(n_xy AS DOUBLE) * CAST(n_tot AS DOUBLE)) / (CAST(n_x AS DOUBLE) * CAST(n_y AS DOUBLE))", 4)} AS lift_fp4
+        |FROM cnt JOIN lm USING (w1) JOIN rm USING (w2) CROSS JOIN tot
+        |WHERE n_xy >= 5 ORDER BY w1, w2""".stripMargin),
     // 41k — HTML main-text extraction (the web-ingestion stage between
     // a raw crawl and the WET-style plain text everything downstream
     // consumes): strip script/style blocks, then tags, decode the
@@ -1170,7 +1807,7 @@ object Pipeline {
     // byte-for-byte; boilerplate_ratio is one correctly-rounded
     // divide over exact lengths. Pure narrow map — zero shuffles
     // beyond the presentation sort, trivially 100 TB-shaped.
-    "txt_html_extract" -> ((s, dir) => {
+    Query("txt_html_extract", (s, dir) => {
       val html = concat(
         lit("<html><head><title>Doc "), col("doc_id").cast("string"),
         lit("</title><script type=\"text/javascript\">var x = 1 < 2;</script>"),
@@ -1190,8 +1827,28 @@ object Pipeline {
           length(col("extracted")).cast("long").as("n_chars_text"),
           fp(lit(1.0) - length(col("extracted")).cast("double") /
             length(col("_h")).cast("double"), 4).as("boilerplate_ratio_fp4"))
-        
-    }),
+    }, oracle =
+      s"""WITH h AS (SELECT doc_id,
+        |  '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR) ||
+        |  '</title><script type="text/javascript">var x = 1 < 2;</script>' ||
+        |  '<style>.nav{color:red}</style></head><body><nav>home &amp; links</nav><p>' ||
+        |  text ||
+        |  '</p><div class="footer">&copy; 2024 &lt;Example&gt;&nbsp;Corp</div></body></html>' AS html
+        |  FROM documents),
+        |c AS (SELECT doc_id, html,
+        |  trim(regexp_replace(
+        |    regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
+        |      regexp_replace(
+        |        regexp_replace(
+        |          regexp_replace(html, '<script[^>]*>[\\s\\S]*?</script>', ' ', 'g'),
+        |          '<style[^>]*>[\\s\\S]*?</style>', ' ', 'g'),
+        |        '<[^>]*>', ' ', 'g'),
+        |      '&amp;', '&', 'g'), '&lt;', '<', 'g'), '&gt;', '>', 'g'), '&nbsp;', ' ', 'g'), '&copy;', '(c)', 'g'),
+        |    '\\s+', ' ', 'g')) AS extracted FROM h)
+        |SELECT doc_id, extracted, CAST(length(html) AS BIGINT) AS n_chars_raw,
+        |  CAST(length(extracted) AS BIGINT) AS n_chars_text,
+        |  ${sqlFp("CAST(1.0 AS DOUBLE) - CAST(length(extracted) AS DOUBLE) / CAST(length(html) AS DOUBLE)", 4)} AS boilerplate_ratio_fp4
+        |FROM c ORDER BY doc_id""".stripMargin),
     // 41l — Flesch–Kincaid readability grade (the classic surface
     // readability signal quality dashboards carry next to the Gopher
     // rules): words = whitespace tokens, sentences = [.!?]+ runs
@@ -1204,7 +1861,7 @@ object Pipeline {
     // alongside so the score is auditable. Pure narrow map — zero
     // data shuffles beyond the presentation sort, trivially
     // 100 TB-shaped.
-    "txt_readability" -> ((s, dir) => {
+    Query("txt_readability", (s, dir) => {
       val w = size(TextAnalysis.tokens(col("text"))).cast("long")
       val snt = greatest(lit(1L), regexp_count(col("text"), lit("[.!?]+")).cast("long"))
       val syl = regexp_count(lower(col("text")), lit("[aeiouy]+")).cast("long")
@@ -1215,8 +1872,21 @@ object Pipeline {
             fp(lit(0.39) * (col("n_words").cast("double") / col("n_sentences").cast("double")) +
                lit(11.8) * (col("n_syllables").cast("double") / col("n_words").cast("double")) -
                lit(15.59), 4)).as("fk_grade_fp4"))
-        
-    }),
+    }, oracle =
+      // Flesch–Kincaid: exact integer counts (whitespace tokens, [.!?]+
+      // runs floored at 1, [aeiouy]+ vowel groups), then the grade in
+      // the same double op order as the Spark side
+      s"""WITH c AS (SELECT doc_id,
+        |  CAST(len($toksSql) AS BIGINT) AS n_words,
+        |  CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+'))) AS BIGINT) AS n_sentences,
+        |  CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT) AS n_syllables
+        |  FROM documents)
+        |SELECT doc_id, n_words, n_sentences, n_syllables,
+        |  CASE WHEN n_words = 0 THEN CAST(0 AS BIGINT)
+        |    ELSE ${sqlFp("0.39 * (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE)) + " +
+             "11.8 * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE)) - 15.59", 4)}
+        |  END AS fk_grade_fp4
+        |FROM c ORDER BY doc_id""".stripMargin),
     // 41m — BM25 ranked retrieval (Robertson–Spärck Jones, k1=1.2
     // b=0.75): the classic retrieval scorer run over the corpus's own
     // 20 highest-df terms as the query workload — per query term,
@@ -1231,7 +1901,7 @@ object Pipeline {
     // reducer window would not survive that at 100 TB. ln() rides
     // the txt_tfidf precedent (identical libm calls both engines,
     // fp4 absorbs the ulp).
-    "txt_bm25" -> ((s, dir) => {
+    Query("txt_bm25", (s, dir) => {
       val docs = t(s, dir, "documents")
       // per-doc length rides THROUGH the (doc, term) aggregation
       // (max of a per-doc constant) — no separate dl table, so no
@@ -1259,8 +1929,26 @@ object Pipeline {
           fp(idf * tfNorm, 4).as("bm25_fp4"))
       Similarity.topKPerQuery(scored, 10, Seq(col("bm25_fp4").desc, col("id")))
         .select(col("query_id").as("term"), col("id").as("doc_id"), col("tf"), col("bm25_fp4"))
-        
-    }),
+    }, oracle =
+      // BM25 over the top-20-df query terms: tf/df/dl from the shared
+      // token table, score in the identical double op order (ln both
+      // engines — the txt_tfidf precedent), rank on the fp4 score +
+      // doc_id so ties cut identically
+      s"""WITH toks AS (SELECT doc_id, unnest($toksSql) AS term FROM documents),
+        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
+        |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
+        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+        |q AS (SELECT term, df FROM df ORDER BY df DESC, term LIMIT 20),
+        |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs,
+        |            (SELECT CAST(sum(dl) AS DOUBLE) FROM dl) AS tot),
+        |scored AS (SELECT tf.term, tf.doc_id, tf.tf,
+        |  ${sqlFp("ln((CAST(n_docs AS DOUBLE) - CAST(q.df AS DOUBLE) + 0.5) / (CAST(q.df AS DOUBLE) + 0.5) + 1.0) * " +
+             "(CAST(tf.tf AS DOUBLE) * 2.2 / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(dl.dl AS DOUBLE) / (tot / CAST(n_docs AS DOUBLE)))))) ", 4)} AS bm25_fp4
+        |  FROM tf JOIN q USING (term) JOIN dl USING (doc_id) CROSS JOIN st),
+        |rk AS (SELECT *, row_number() OVER (PARTITION BY term ORDER BY bm25_fp4 DESC, doc_id) AS r
+        |  FROM scored)
+        |SELECT term, doc_id, tf, bm25_fp4 FROM rk WHERE r <= 10
+        |ORDER BY term, bm25_fp4 DESC, doc_id""".stripMargin),
     // 41n — positional phrase search (the inverted-index lookup shape:
     // boolean AND + adjacency over positional postings). The query
     // phrase is the corpus's own most frequent bigram (count desc,
@@ -1272,7 +1960,7 @@ object Pipeline {
     // stats collapse map-side. At 100 TB this is the standard
     // term-partitioned posting intersection — no corpus-sized
     // window, no cartesian.
-    "txt_phrase_search" -> ((s, dir) => {
+    Query("txt_phrase_search", (s, dir) => {
       val docs = t(s, dir, "documents")
       val phrase = docs
         .select(explode(call_function("graft_word_ngrams",
@@ -1292,8 +1980,22 @@ object Pipeline {
       m1.join(m2, m1("doc_id") === m2("doc_id") && col("p2") === col("p1") + 1L)
         .groupBy(m1("doc_id").as("doc_id"), col("w1"), col("w2"))
         .agg(count(lit(1)).as("n_matches"), min("p1").as("first_pos"))
-        
-    }),
+    }, oracle =
+      // phrase = globally most frequent bigram (count desc, bigram asc);
+      // postings pruned to the two phrase terms, adjacency on pos+1
+      s"""WITH tk0 AS (SELECT doc_id, $toksSql AS tk FROM documents),
+        |bpos AS (SELECT doc_id, tk, unnest(range(1, len(tk))) AS i FROM tk0),
+        |big AS (SELECT tk[CAST(i AS INT)] || ' ' || tk[CAST(i AS INT) + 1] AS g FROM bpos),
+        |cnt AS (SELECT g, count(*) AS c FROM big GROUP BY 1),
+        |top AS (SELECT string_split(g, ' ')[1] AS w1, string_split(g, ' ')[2] AS w2
+        |  FROM cnt ORDER BY c DESC, g LIMIT 1),
+        |pos AS (SELECT doc_id, CAST(i AS BIGINT) - 1 AS pos, tk[CAST(i AS INT)] AS tok
+        |  FROM tk0, unnest(range(1, len(tk) + 1)) t(i)),
+        |m1 AS (SELECT doc_id, pos AS p1, w1, w2 FROM pos, top WHERE tok = w1),
+        |m2 AS (SELECT doc_id, pos AS p2 FROM pos, top WHERE tok = w2)
+        |SELECT m1.doc_id, w1, w2, count(*) AS n_matches, min(p1) AS first_pos
+        |FROM m1 JOIN m2 ON m1.doc_id = m2.doc_id AND m2.p2 = m1.p1 + 1
+        |GROUP BY 1, 2, 3 ORDER BY m1.doc_id""".stripMargin),
     // 41p — BPE merge LEARNING (Sennrich et al. 2016 — the tokenizer
     // TRAINING pass; 41d/txt_bpe_tokens applies a merge table, this
     // derives one): 3 unrolled merge iterations (the ev_markov_rank
@@ -1307,7 +2009,7 @@ object Pipeline {
     // the one corpus token rollup is VOCAB-bounded (the classic BPE
     // learner shape — real trainers also run on (word, count), not
     // the token stream); per-step totals prove application fired.
-    "txt_bpe_learn" -> ((s, dir) => {
+    Query("txt_bpe_learn", (s, dir) => {
       val vocab0 = t(s, dir, "documents")
         .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("c"))
@@ -1344,7 +2046,50 @@ object Pipeline {
             expr("replace(m_g, ' ', '')").as("merged"),
             col("m_cnt").as("cnt_w"), col("tot_syms"))
       row(1, t1, v1).unionByName(row(2, t2, v2)).unionByName(row(3, t3, v3))
-        
+    }, oracle = {
+      // BPE learn: 3 unrolled merge iterations; the greedy
+      // left-to-right application is the same tail-token fold as the
+      // Spark side, the chars come from the charlm substr convention
+      val bgFrom = (v: String) =>
+        s"""(SELECT c, unnest(list_transform(range(1, len(string_split(sym, ' '))),
+           | i -> string_split(sym, ' ')[CAST(i AS INT)] || ' ' ||
+           |      string_split(sym, ' ')[CAST(i AS INT) + 1])) AS g FROM $v)"""
+          .stripMargin.replace("\n", " ")
+      val mergeFold =
+        """list_reduce(list_prepend('', string_split(sym, ' ')), (acc, cur) ->
+          | CASE WHEN cur = mb AND acc = ma THEN mm
+          |      WHEN cur = mb AND length(acc) > length(ma)
+          |           AND substr(acc, length(acc) - length(ma), length(ma) + 1) = ' ' || ma
+          |        THEN substr(acc, 1, length(acc) - length(ma) - 1) || ' ' || mm
+          |      WHEN acc = '' THEN cur
+          |      ELSE acc || ' ' || cur END)""".stripMargin.replace("\n", " ")
+      s"""WITH toks AS (SELECT unnest($toksSql) AS w FROM documents),
+        |v0 AS (SELECT w, count(*) AS c,
+        |    array_to_string(list_transform(range(1, length(w) + 1),
+        |      i -> substr(w, CAST(i AS INT), 1)), ' ') AS sym
+        |  FROM toks GROUP BY w),
+        |p1 AS (SELECT g, CAST(sum(c) AS BIGINT) AS cnt FROM ${bgFrom("v0")} GROUP BY 1),
+        |t1 AS (SELECT g AS m_g, cnt FROM p1 ORDER BY cnt DESC, g LIMIT 1),
+        |m1 AS (SELECT m_g, cnt, split_part(m_g, ' ', 1) AS ma,
+        |    split_part(m_g, ' ', 2) AS mb, replace(m_g, ' ', '') AS mm FROM t1),
+        |v1 AS (SELECT w, c, $mergeFold AS sym FROM v0 CROSS JOIN m1),
+        |p2 AS (SELECT g, CAST(sum(c) AS BIGINT) AS cnt FROM ${bgFrom("v1")} GROUP BY 1),
+        |t2 AS (SELECT g AS m_g, cnt FROM p2 ORDER BY cnt DESC, g LIMIT 1),
+        |m2 AS (SELECT m_g, cnt, split_part(m_g, ' ', 1) AS ma,
+        |    split_part(m_g, ' ', 2) AS mb, replace(m_g, ' ', '') AS mm FROM t2),
+        |v2 AS (SELECT w, c, $mergeFold AS sym FROM v1 CROSS JOIN m2),
+        |p3 AS (SELECT g, CAST(sum(c) AS BIGINT) AS cnt FROM ${bgFrom("v2")} GROUP BY 1),
+        |t3 AS (SELECT g AS m_g, cnt FROM p3 ORDER BY cnt DESC, g LIMIT 1),
+        |m3 AS (SELECT m_g, cnt, split_part(m_g, ' ', 1) AS ma,
+        |    split_part(m_g, ' ', 2) AS mb, replace(m_g, ' ', '') AS mm FROM t3),
+        |v3 AS (SELECT w, c, $mergeFold AS sym FROM v2 CROSS JOIN m3),
+        |tt1 AS (SELECT CAST(sum(c * len(string_split(sym, ' '))) AS BIGINT) AS tot_syms FROM v1),
+        |tt2 AS (SELECT CAST(sum(c * len(string_split(sym, ' '))) AS BIGINT) AS tot_syms FROM v2),
+        |tt3 AS (SELECT CAST(sum(c * len(string_split(sym, ' '))) AS BIGINT) AS tot_syms FROM v3)
+        |SELECT CAST(1 AS BIGINT) AS step, m_g AS pair, mm AS merged, cnt AS cnt_w, tot_syms FROM m1, tt1
+        |UNION ALL SELECT CAST(2 AS BIGINT), m_g, mm, cnt, tot_syms FROM m2, tt2
+        |UNION ALL SELECT CAST(3 AS BIGINT), m_g, mm, cnt, tot_syms FROM m3, tt3
+        |ORDER BY step""".stripMargin
     }),
     // 41o — RAKE keyword extraction (Rose et al. 2010 — the
     // phrase-level keyword signal tag/topic pipelines cut): candidate
@@ -1360,7 +2105,7 @@ object Pipeline {
     // (map-side combined, vocab-sized result broadcast back — swap
     // for a shuffle join past the limit), one distinct + one scoring
     // agg, all keyed.
-    "txt_keywords" -> ((s, dir) => {
+    Query("txt_keywords", (s, dir) => {
       val stops = TextAnalysis.DefaultStopwords.head._2
       val occ = t(s, dir, "documents")
         .select(col("doc_id"),
@@ -1381,8 +2126,26 @@ object Pipeline {
         .join(broadcast(wscore), "w")
         .groupBy("doc_id", "phrase")
         .agg(max("plen").as("n_words"), sum("wscore").as("score_i"))
-        
-    }),
+    }, oracle =
+      // RAKE: the fold→delimiter→split phrase extraction replicated
+      // with list_reduce, integer word/phrase scores
+      s"""WITH tk AS (SELECT doc_id, $toksSql AS tk FROM documents),
+        |m AS (SELECT doc_id, list_reduce(list_prepend('', list_transform(tk,
+        |    t -> CASE WHEN t IN ('the','a','of','and','fast','slow') THEN '|'
+        |         ELSE ' ' || t END)), (acc, x) -> acc || x) AS mm FROM tk),
+        |occ AS (SELECT doc_id, trim(p) AS phrase
+        |  FROM m, unnest(string_split(mm, '|')) u(p) WHERE length(trim(p)) > 0),
+        |pw AS (SELECT doc_id, phrase, len(string_split(phrase, ' ')) AS plen,
+        |    unnest(string_split(phrase, ' ')) AS w FROM occ),
+        |ws AS (SELECT w, (1000 * CAST(sum(plen) AS BIGINT)) // count(*) AS wscore
+        |  FROM pw GROUP BY 1),
+        |dp AS (SELECT DISTINCT doc_id, phrase FROM occ),
+        |dpw AS (SELECT doc_id, phrase, len(string_split(phrase, ' ')) AS plen,
+        |    unnest(string_split(phrase, ' ')) AS w FROM dp)
+        |SELECT doc_id, phrase, CAST(max(plen) AS BIGINT) AS n_words,
+        |  CAST(sum(wscore) AS BIGINT) AS score_i
+        |FROM dpw JOIN ws USING (w) GROUP BY 1, 2
+        |ORDER BY doc_id, score_i DESC, phrase""".stripMargin),
     // 43m — A/B experiment readout (the conversion-rate gate an event
     // corpus answers before any behavioral decision ships): exposure
     // unit = user-day (the cookie-day grain experiment frameworks
@@ -1396,7 +2159,7 @@ object Pipeline {
     // map-side-combinable per-unit rollup (the only corpus-sized
     // shuffle), a 2-row arm agg, then two 1-row frames broadcast
     // into the single readout row.
-    "ev_ab_test" -> ((s, dir) => {
+    Query("ev_ab_test", (s, dir) => {
       val units = ev(s, dir)
         .groupBy(col("user_id"), expr("ms DIV 86400000").as("day"))
         .agg(max((col("event_type") === "purchase").cast("long")).as("conv"))
@@ -1422,17 +2185,48 @@ object Pipeline {
           when((a1 + b1) === 0.0 || (a0 + b0) === 0.0, lit(0L))
             .otherwise(fp(nD * diff * diff / ((ua * ub) * ((a1 + b1) * (a0 + b0))), 4))
             .as("chi2_fp4"))
-    }),
+    }, oracle =
+      // 2×2 χ² on exact per-arm integers; the double expression mirrors
+      // the Spark op order term for term
+      s"""WITH u AS (SELECT user_id, epoch_ms(ts) // 86400000 AS day,
+        |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
+        |  FROM events GROUP BY 1, 2),
+        |arms AS (SELECT (user_id + day) % 2 AS arm, count(*) AS n, CAST(sum(conv) AS BIGINT) AS k
+        |  FROM u GROUP BY 1),
+        |a AS (SELECT n AS units_a, k AS conv_a FROM arms WHERE arm = 0),
+        |b AS (SELECT n AS units_b, k AS conv_b FROM arms WHERE arm = 1)
+        |SELECT units_a, conv_a, units_b, conv_b,
+        |  ${sqlFp("CAST(conv_a AS DOUBLE) / CAST(units_a AS DOUBLE)", 6)} AS rate_a_fp6,
+        |  ${sqlFp("CAST(conv_b AS DOUBLE) / CAST(units_b AS DOUBLE)", 6)} AS rate_b_fp6,
+        |  CASE WHEN conv_a + conv_b = 0 OR (units_a - conv_a) + (units_b - conv_b) = 0
+        |    THEN CAST(0 AS BIGINT)
+        |    ELSE ${sqlFp("CAST(units_a + units_b AS DOUBLE) * " +
+             "(CAST(conv_a AS DOUBLE) * CAST(units_b - conv_b AS DOUBLE) - CAST(units_a - conv_a AS DOUBLE) * CAST(conv_b AS DOUBLE)) * " +
+             "(CAST(conv_a AS DOUBLE) * CAST(units_b - conv_b AS DOUBLE) - CAST(units_a - conv_a AS DOUBLE) * CAST(conv_b AS DOUBLE)) / " +
+             "((CAST(units_a AS DOUBLE) * CAST(units_b AS DOUBLE)) * " +
+             "((CAST(conv_a AS DOUBLE) + CAST(conv_b AS DOUBLE)) * (CAST(units_a - conv_a AS DOUBLE) + CAST(units_b - conv_b AS DOUBLE))))", 4)}
+        |  END AS chi2_fp4
+        |FROM a CROSS JOIN b""".stripMargin),
     // 43d — KMV (bottom-k) distinct-count sketch: deterministic
     // md5-uniform hashing makes the sketch AND its estimate
     // bit-reproducible across engines/retries — the verifiable cousin
     // of approx_count_distinct for 100 TB cardinality profiling.
     // Groups under k distinct report exact counts
-    "ev_kmv_distinct" -> ((s, dir) => {
+    Query("ev_kmv_distinct", (s, dir) => {
       graft.sketch.Sketches.kmvDistinct(
         t(s, dir, "events").select("event_type", "user_id"),
         Seq("event_type"), "user_id", k = 64)
-        
+    }, oracle = {
+      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
+        | list_transform(range(1, 9),
+        |   i -> CAST(strpos('0123456789abcdef',
+        |          substr(md5('kmv:' || CAST(user_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
+        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      s"""WITH h AS (SELECT DISTINCT event_type, CAST($u32 AS DOUBLE) / 4294967296.0 AS u FROM events),
+        |r AS (SELECT event_type, u, row_number() OVER (PARTITION BY event_type ORDER BY u) AS rk FROM h)
+        |SELECT event_type, count(*) AS n_kept,
+        |  ${sqlFp("CASE WHEN count(*) < 64 THEN CAST(count(*) AS DOUBLE) ELSE 63.0 / max(u) END", 2)} AS est_distinct_fp2
+        |FROM r WHERE rk <= 64 GROUP BY event_type ORDER BY event_type""".stripMargin
     }),
     // 43h — HyperLogLog distinct-count profile (Flajolet et al.): the
     // FIXED-WIDTH mergeable cousin of 43d — m=256 registers per group
@@ -1442,7 +2236,7 @@ object Pipeline {
     // register state (Σ 2^(ρmax−M_b)), so the sketch ITSELF — not just
     // its fp2 estimate — is verified cross-engine; exact_nd alongside
     // exposes the ~1.04/√m error
-    "ev_hll_distinct" -> ((s, dir) => {
+    Query("ev_hll_distinct", (s, dir) => {
       val ex = t(s, dir, "events").groupBy("event_type")
         .agg(countDistinct(col("user_id")).as("exact_nd"))
       graft.sketch.Sketches.hllDistinct(
@@ -1450,7 +2244,39 @@ object Pipeline {
         Seq("event_type"), "user_id", p = 8)
         .join(ex, "event_type")
         .select("event_type", "exact_nd", "v_zero", "reg_sum", "hll_est_fp2")
-        
+    }, oracle = {
+      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
+        | list_transform(range(1, 9),
+        |   i -> CAST(strpos('0123456789abcdef',
+        |          substr(md5('hll:' || CAST(user_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
+        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      // the SAME α_m·m²·2^ρmax double literal the Spark plan folds in
+      // (m=256, ρmax=25): 17 sig digits round-trips the IEEE double
+      val numerator = (0.7213 / (1.0 + 1.079 / 256)) * 256.0 * 256.0 * math.pow(2.0, 25)
+      val numLit = "%.17e".formatLocal(java.util.Locale.ROOT, numerator)
+      s"""WITH h AS (SELECT event_type, $u32 AS u FROM events),
+        |b AS (SELECT event_type, u // 16777216 AS bkt, u % 16777216 AS w FROM h),
+        |r AS (SELECT event_type, bkt,
+        |    max(CASE WHEN w = 0 THEN 25 ELSE 25 - length(bin(w)) END) AS mb
+        |  FROM b GROUP BY 1, 2),
+        |grid AS (SELECT g.event_type, gs.bkt
+        |  FROM (SELECT DISTINCT event_type FROM events) g
+        |  CROSS JOIN (SELECT unnest(range(0, 256)) AS bkt) gs),
+        |f AS (SELECT grid.event_type, coalesce(r.mb, 0) AS mb
+        |  FROM grid LEFT JOIN r ON r.event_type = grid.event_type AND r.bkt = grid.bkt),
+        |agg AS (SELECT event_type,
+        |    CAST(sum(CASE WHEN mb = 0 THEN 1 ELSE 0 END) AS BIGINT) AS v_zero,
+        |    CAST(sum(CAST(1 AS BIGINT) << (25 - mb)) AS BIGINT) AS reg_sum
+        |  FROM f GROUP BY event_type),
+        |x AS (SELECT event_type, v_zero, reg_sum,
+        |    CASE WHEN $numLit / CAST(reg_sum AS DOUBLE) <= 640.0 AND v_zero > 0
+        |      THEN ln(256.0 / CAST(v_zero AS DOUBLE)) * 256
+        |      ELSE $numLit / CAST(reg_sum AS DOUBLE) END AS est
+        |  FROM agg),
+        |ex AS (SELECT event_type, count(DISTINCT user_id) AS exact_nd FROM events GROUP BY 1)
+        |SELECT x.event_type, ex.exact_nd, x.v_zero, x.reg_sum,
+        |  ${sqlFp("est", 2)} AS hll_est_fp2
+        |FROM x JOIN ex ON ex.event_type = x.event_type ORDER BY x.event_type""".stripMargin
     }),
     // 32j — verifiable Bloom-filter state + OR-merge law: the third
     // mergeable-sketch family next to HLL (max-merge, 43t) and
@@ -1463,7 +2289,7 @@ object Pipeline {
     // (bits_set, pos_sum) state is emitted — the oracle computes the
     // bit set once, so any divergence hash-mismatches. k=4 md5 hash
     // rows over the content hash, m=1024 bits.
-    "dd_bloom_state" -> ((s, dir) => {
+    Query("dd_bloom_state", (s, dir) => {
       def bitsOf(df: DataFrame): DataFrame =
         df.select(col("source"), col("doc_id"),
           explode(array((0 until 4).map(j =>
@@ -1484,7 +2310,26 @@ object Pipeline {
         .select(col("source"), col("bits_set"), col("pos_sum"),
           fp(col("bits_set").cast("double") / 1024.0, 4).as("fill_fp4"),
           col("bits_set_merged"), col("pos_sum_merged"))
-        
+    }, oracle = {
+      // bit set computed ONCE (OR-merge = direct by set-union
+      // associativity); emitted under both column pairs so either
+      // Spark path diverging hash-mismatches
+      def u32(j: Int): String =
+        s"""(list_reduce(list_prepend(CAST(0 AS BIGINT),
+          | list_transform(range(1, 9),
+          |   i -> CAST(strpos('0123456789abcdef',
+          |          substr(md5('bf$j:' || md5(text)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
+          | (a, v) -> a*16 + v) % 1024)""".stripMargin.replace("\n", " ")
+      val arms = (0 until 4).map(j =>
+        s"SELECT source, ${u32(j)} AS bit FROM documents").mkString("\n  UNION ALL\n  ")
+      s"""WITH b AS (SELECT DISTINCT source, bit FROM (
+        |  $arms)),
+        |a AS (SELECT source, count(*) AS bits_set, CAST(sum(bit) AS BIGINT) AS pos_sum
+        |  FROM b GROUP BY 1)
+        |SELECT source, bits_set, pos_sum,
+        |  ${sqlFp("CAST(bits_set AS DOUBLE) / 1024.0", 4)} AS fill_fp4,
+        |  bits_set AS bits_set_merged, pos_sum AS pos_sum_merged
+        |FROM a ORDER BY source""".stripMargin
     }),
     // 43t — HLL partition-then-merge: the 100 TB sketch DISCIPLINE
     // made visible in one query — registers built per (type, DAY)
@@ -1496,7 +2341,7 @@ object Pipeline {
     // INDEPENDENTLY and emitted side by side; the oracle computes
     // the registers once, so any divergence between the paths
     // hash-mismatches.
-    "ev_hll_merge" -> ((s, dir) => {
+    Query("ev_hll_merge", (s, dir) => {
       val e = ev(s, dir).withColumn("day", expr("ms DIV 86400000"))
       val dayRegs = graft.sketch.Sketches.hllRegisters(
         e, Seq("event_type", "day"), "user_id", p = 8)
@@ -1513,16 +2358,65 @@ object Pipeline {
         .select(col("event_type"), col("n_days"), col("v_zero"), col("reg_sum"),
           col("hll_est_fp2").as("est_merged_fp2"),
           col("reg_sum_direct"), col("est_direct_fp2"))
-        
+    }, oracle = {
+      // registers computed ONCE (merge = direct by max-associativity);
+      // emitted under both column pairs so either Spark path diverging
+      // hash-mismatches
+      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
+        | list_transform(range(1, 9),
+        |   i -> CAST(strpos('0123456789abcdef',
+        |          substr(md5('hll:' || CAST(user_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
+        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      val numerator = (0.7213 / (1.0 + 1.079 / 256)) * 256.0 * 256.0 * math.pow(2.0, 25)
+      val numLit = "%.17e".formatLocal(java.util.Locale.ROOT, numerator)
+      s"""WITH h AS (SELECT event_type, $u32 AS u FROM events),
+        |b AS (SELECT event_type, u // 16777216 AS bkt, u % 16777216 AS w FROM h),
+        |r AS (SELECT event_type, bkt,
+        |    max(CASE WHEN w = 0 THEN 25 ELSE 25 - length(bin(w)) END) AS mb
+        |  FROM b GROUP BY 1, 2),
+        |agg AS (SELECT event_type,
+        |    CAST(256 - count(*) AS BIGINT) AS v_zero,
+        |    CAST(sum(CAST(1 AS BIGINT) << (25 - mb))
+        |      + (256 - count(*)) * (CAST(1 AS BIGINT) << 25) AS BIGINT) AS reg_sum
+        |  FROM r GROUP BY 1),
+        |x AS (SELECT event_type, v_zero, reg_sum,
+        |    CASE WHEN $numLit / CAST(reg_sum AS DOUBLE) <= 640.0 AND v_zero > 0
+        |      THEN ln(256.0 / CAST(v_zero AS DOUBLE)) * 256
+        |      ELSE $numLit / CAST(reg_sum AS DOUBLE) END AS est
+        |  FROM agg),
+        |d AS (SELECT event_type, count(DISTINCT epoch_ms(ts) // 86400000) AS n_days
+        |  FROM events GROUP BY 1)
+        |SELECT x.event_type, d.n_days, x.v_zero, x.reg_sum,
+        |  ${sqlFp("est", 2)} AS est_merged_fp2,
+        |  x.reg_sum AS reg_sum_direct, ${sqlFp("est", 2)} AS est_direct_fp2
+        |FROM x JOIN d ON d.event_type = x.event_type ORDER BY x.event_type""".stripMargin
     }),
     // 43e — count-min sketch frequency profile: deterministic d×w md5
     // sketch built with map-side combine (the shuffle carries ≤ d·w
     // cells per task, not events); estimate = min over d counters,
     // exact count carried alongside to expose the collision gap
-    "ev_cms_freq" -> ((s, dir) => {
+    Query("ev_cms_freq", (s, dir) => {
       graft.sketch.Sketches.cmsFreq(
         t(s, dir, "events").select("event_type"), "event_type", d = 4, w = 64)
-        
+    }, oracle = {
+      def bucket(j: Int): String =
+        s"""(list_reduce(list_prepend(CAST(0 AS BIGINT),
+          | list_transform(range(1, 9),
+          |   i -> CAST(strpos('0123456789abcdef',
+          |          substr(md5('cms$j:' || event_type), CAST(i AS INT), 1)) - 1 AS BIGINT))),
+          | (a, v) -> a*16 + v) % 64)""".stripMargin.replace("\n", " ")
+      val cells = (0 until 4).map(j =>
+        s"c$j AS (SELECT ${bucket(j)} AS b, count(*) AS cnt FROM events GROUP BY 1)").mkString(",\n")
+      s"""WITH $cells,
+        |keys AS (SELECT event_type, count(*) AS exact_n FROM events GROUP BY 1)
+        |SELECT k.event_type, k.exact_n,
+        |  least(c0.cnt, c1.cnt, c2.cnt, c3.cnt) AS cms_est
+        |FROM keys k
+        |JOIN c0 ON c0.b = ${bucket(0).replace("event_type", "k.event_type")}
+        |JOIN c1 ON c1.b = ${bucket(1).replace("event_type", "k.event_type")}
+        |JOIN c2 ON c2.b = ${bucket(2).replace("event_type", "k.event_type")}
+        |JOIN c3 ON c3.b = ${bucket(3).replace("event_type", "k.event_type")}
+        |ORDER BY k.event_type""".stripMargin
     }),
     // 43f — exact per-group percentiles WITHOUT a per-group row sort:
     // the corpus collapses map-side to a (group, quantized-value)
@@ -1531,7 +2425,7 @@ object Pipeline {
     // count), so the shape survives 100 TB where sorting each group's
     // rows cannot. p-th percentile = smallest value whose cumulative
     // count reaches ceil(p·n) — pure integer arithmetic on both engines
-    "ev_percentile" -> ((s, dir) => {
+    Query("ev_percentile", (s, dir) => {
       val h = ev(s, dir)
         .groupBy(col("event_type"), col("v4")).agg(count(lit(1)).as("k"))
       val wc = Window.partitionBy("event_type").orderBy("v4")
@@ -1544,8 +2438,19 @@ object Pipeline {
           min(when(col("cum") >= expr("(n + 1) DIV 2"), col("v4"))).as("p50_c4"),
           min(when(col("cum") >= expr("(9 * n + 9) DIV 10"), col("v4"))).as("p90_c4"),
           min(when(col("cum") >= expr("(99 * n + 99) DIV 100"), col("v4"))).as("p99_c4"))
-        
-    }),
+    }, oracle =
+      s"""WITH e AS (SELECT event_type, ${sqlFp("\"value\"", 4)} AS v4 FROM events),
+        |h AS (SELECT event_type, v4, count(*) AS k FROM e GROUP BY 1, 2),
+        |c AS (SELECT event_type, v4, k,
+        |    sum(k) OVER (PARTITION BY event_type ORDER BY v4
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+        |    sum(k) OVER (PARTITION BY event_type) AS n
+        |  FROM h)
+        |SELECT event_type, CAST(max(n) AS BIGINT) AS n_rows,
+        |  min(CASE WHEN cum >= (n + 1) // 2 THEN v4 END) AS p50_c4,
+        |  min(CASE WHEN cum >= (9 * n + 9) // 10 THEN v4 END) AS p90_c4,
+        |  min(CASE WHEN cum >= (99 * n + 99) // 100 THEN v4 END) AS p99_c4
+        |FROM c GROUP BY event_type ORDER BY event_type""".stripMargin),
     // 43ah — INTERPOLATED percentiles (SQL-standard percentile_cont;
     // 43f's rank pick is percentile_disc): h = 1 + (n−1)p lands
     // between two order statistics, result = lo·(100−frac) + hi·frac
@@ -1555,7 +2460,7 @@ object Pipeline {
     // float quantile_cont would drift. Same compressed-histogram rank
     // scan as ev_percentile — value-domain-bounded, never a per-group
     // row sort.
-    "ev_percentile_cont" -> ((s, dir) => {
+    Query("ev_percentile_cont", (s, dir) => {
       val h = ev(s, dir)
         .groupBy(col("event_type"), col("v4")).agg(count(lit(1)).as("k"))
       val wc = Window.partitionBy("event_type").orderBy("v4")
@@ -1578,8 +2483,24 @@ object Pipeline {
       picked.select(col("event_type"), col("n_rows"),
           blend(50, col("lo50"), col("hi50")).as("p50_fp6"),
           blend(90, col("lo90"), col("hi90")).as("p90_fp6"))
-        
-    }),
+    }, oracle =
+      s"""WITH e AS (SELECT event_type, ${sqlFp("\"value\"", 4)} AS v4 FROM events),
+        |h AS (SELECT event_type, v4, count(*) AS k FROM e GROUP BY 1, 2),
+        |c AS (SELECT event_type, v4,
+        |        sum(k) OVER (PARTITION BY event_type ORDER BY v4) AS cum,
+        |        sum(k) OVER (PARTITION BY event_type) AS n FROM h),
+        |p AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n_rows,
+        |  min(CASE WHEN cum >= (100 + (n - 1) * 50) // 100 THEN v4 END) AS lo50,
+        |  min(CASE WHEN cum >= least((100 + (n - 1) * 50) // 100 + 1, n) THEN v4 END) AS hi50,
+        |  min(CASE WHEN cum >= (100 + (n - 1) * 90) // 100 THEN v4 END) AS lo90,
+        |  min(CASE WHEN cum >= least((100 + (n - 1) * 90) // 100 + 1, n) THEN v4 END) AS hi90
+        |  FROM c GROUP BY 1)
+        |SELECT event_type, n_rows,
+        |  CAST(lo50 * (100 - (100 + (n_rows - 1) * 50) % 100)
+        |     + hi50 * ((100 + (n_rows - 1) * 50) % 100) AS BIGINT) AS p50_fp6,
+        |  CAST(lo90 * (100 - (100 + (n_rows - 1) * 90) % 100)
+        |     + hi90 * ((100 + (n_rows - 1) * 90) % 100) AS BIGINT) AS p90_fp6
+        |FROM p ORDER BY event_type""".stripMargin),
     // 43ai — time-series GAP FILL (LOCF — last observation carried
     // forward over a dense day grid; the step every daily-metric
     // dashboard and feature pipeline needs between sparse
@@ -1589,7 +2510,7 @@ object Pipeline {
     // day order — windows sliced per type over the DAY domain, never
     // raw events. Days before a type's first observation stay null
     // (flagged), the honest LOCF boundary.
-    "ev_gap_fill" -> ((s, dir) => {
+    Query("ev_gap_fill", (s, dir) => {
       val dayMs = 86400000L
       val daily = ev(s, dir)
         .filter(col("event_type") === "purchase" || col("event_type") === "signup")
@@ -1608,8 +2529,23 @@ object Pipeline {
         .select(col("event_type"), col("day"),
           col("filled_v"),
           col("v").isNull.cast("int").as("is_gap"))
-        
-    }),
+    }, oracle =
+      s"""WITH daily AS (SELECT event_type,
+        |    (ms - ((ms % 86400000 + 86400000) % 86400000)) // 86400000 AS day,
+        |    CAST(sum(v4) AS BIGINT) AS v
+        |  FROM (SELECT event_type, event_id, epoch_ms(ts) AS ms, ${sqlFp("\"value\"", 4)} AS v4 FROM events)
+        |  WHERE event_type IN ('purchase', 'signup') AND ((event_id % 97 + 97) % 97) = 0
+        |  GROUP BY 1, 2),
+        |span AS (SELECT min(day) AS d0, max(day) AS d1 FROM daily),
+        |g AS (SELECT t.event_type, unnest(range(span.d0, span.d1 + 1)) AS day
+        |      FROM (SELECT DISTINCT event_type FROM daily) t, span),
+        |j AS (SELECT g.event_type, g.day, daily.v
+        |      FROM g LEFT JOIN daily ON daily.event_type = g.event_type AND daily.day = g.day)
+        |SELECT event_type, day,
+        |  last_value(v IGNORE NULLS) OVER (PARTITION BY event_type ORDER BY day
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled_v,
+        |  CAST(v IS NULL AS INT) AS is_gap
+        |FROM j ORDER BY event_type, day""".stripMargin),
     // 43y — INTER-ARRIVAL time profile (the traffic-model histogram
     // behind session-gap and rate-limit tuning): per-user event gaps
     // in ms, bucketed by floor(log2) — computed as length(bin(gap))−1,
@@ -1618,7 +2554,7 @@ object Pipeline {
     // float binning edge cases. One user-keyed window for the lag,
     // then a ≤64-bucket rollup — the histogram is domain-bounded
     // regardless of corpus size.
-    "ev_interarrival" -> ((s, dir) => {
+    Query("ev_interarrival", (s, dir) => {
       val e = ev(s, dir)
       val w = Window.partitionBy("user_id").orderBy("ms", "event_id")
       e.withColumn("prev", lag("ms", 1).over(w))
@@ -1629,8 +2565,16 @@ object Pipeline {
             .otherwise(expr("CAST(length(bin(gap)) AS INT) - 1")))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n"), min("gap").as("min_gap"), max("gap").as("max_gap"))
-        
-    }),
+    }, oracle =
+      """WITH g AS (
+        |  SELECT ms - lag(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) AS gap
+        |  FROM (SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events)),
+        |b AS (SELECT gap,
+        |    CASE WHEN gap = 0 THEN -1
+        |         ELSE CAST(length(bin(gap)) AS INT) - 1 END AS bucket
+        |  FROM g WHERE gap IS NOT NULL)
+        |SELECT bucket, count(*) AS n, min(gap) AS min_gap, max(gap) AS max_gap
+        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin),
     // 43z — ROLLING-window distinct actives (trailing 7-day WAU per
     // day + DAU + rolling stickiness — the engagement trendline; the
     // calendar-week twin is 43j ev_stickiness). Rolling DISTINCT does
@@ -1644,7 +2588,7 @@ object Pipeline {
     // θ-join; the explode form is an equi-shuffle on day, and anchor
     // days outside the observed domain are clipped by a broadcast
     // semi-join against the (domain-bounded) day list.
-    "ev_rolling_distinct" -> ((s, dir) => {
+    Query("ev_rolling_distinct", (s, dir) => {
       val du = ev(s, dir)
         .select(expr("ms DIV 86400000").as("day"), col("user_id")).distinct()
       val days = du.select(col("day")).distinct()
@@ -1656,8 +2600,14 @@ object Pipeline {
       dau.join(wau, "day")
         .select(col("day"), col("dau"), col("wau7"),
           fp(col("dau").cast("double") / col("wau7").cast("double"), 4).as("stickiness_fp4"))
-        
-    }),
+    }, oracle =
+      s"""WITH du AS (SELECT DISTINCT epoch_ms(ts) // 86400000 AS day, user_id FROM events),
+        |dau AS (SELECT day, count(DISTINCT user_id) AS dau FROM du GROUP BY 1),
+        |wau AS (SELECT d.day, count(DISTINCT u.user_id) AS wau7
+        |  FROM dau d JOIN du u ON u.day BETWEEN d.day - 6 AND d.day GROUP BY 1)
+        |SELECT day, dau, wau7,
+        |  ${sqlFp("CAST(dau AS DOUBLE) / CAST(wau7 AS DOUBLE)", 4)} AS stickiness_fp4
+        |FROM dau JOIN wau USING (day) ORDER BY day""".stripMargin),
     // 43x — GAPS-AND-ISLANDS (the consecutive-run pattern behind
     // uptime/freshness monitoring, coverage audits, and island-based
     // sessionization): per event type, maximal runs of consecutive
@@ -1668,7 +2618,7 @@ object Pipeline {
     // log is ONE key shuffle: per-type sorts bounded by distinct
     // hours (domain-bounded, ≤ 8760/yr/type), both windows share the
     // partitioning, and the output is one row per type.
-    "ev_gaps_islands" -> ((s, dir) => {
+    Query("ev_gaps_islands", (s, dir) => {
       val h = ev(s, dir)
         .select(col("event_type"), expr("ms DIV 3600000").as("hr")).distinct()
       val w = Window.partitionBy("event_type").orderBy("hr")
@@ -1681,7 +2631,20 @@ object Pipeline {
       val gAgg = r.groupBy("event_type")
         .agg(max(coalesce(col("gap"), lit(0L))).as("max_gap"))
       iAgg.join(gAgg, "event_type")
-    }),
+    }, oracle =
+      """WITH h AS (
+        |  SELECT DISTINCT event_type, epoch_ms(ts) // 3600000 AS hr FROM events),
+        |r AS (SELECT event_type, hr,
+        |    hr - row_number() OVER (PARTITION BY event_type ORDER BY hr) AS grp,
+        |    hr - lag(hr) OVER (PARTITION BY event_type ORDER BY hr) - 1 AS gap
+        |  FROM h),
+        |i AS (SELECT event_type, grp, count(*) AS len FROM r GROUP BY 1, 2),
+        |ia AS (SELECT event_type, CAST(sum(len) AS BIGINT) AS n_hours,
+        |    count(*) AS n_islands, CAST(max(len) AS BIGINT) AS max_island
+        |  FROM i GROUP BY 1),
+        |ga AS (SELECT event_type, max(coalesce(gap, 0)) AS max_gap FROM r GROUP BY 1)
+        |SELECT ia.event_type, n_hours, n_islands, max_island, max_gap
+        |FROM ia JOIN ga USING (event_type) ORDER BY 1""".stripMargin),
     // 43w — KMV partition-then-merge: the FOURTH mergeable-sketch
     // law next to HLL max-merge (43t), Bloom OR-merge (32j), and the
     // histogram/CMS add-merge — bottom-k sets union-merge: per-(type,
@@ -1694,7 +2657,7 @@ object Pipeline {
     // the oracle computes the sketch once, so divergence
     // hash-mismatches. Day windows bound the per-key sort; merged
     // state is k rows per (type, day) — sketch-sized, checkpointed.
-    "ev_kmv_merge" -> ((s, dir) => {
+    Query("ev_kmv_merge", (s, dir) => {
       val e = ev(s, dir).withColumn("day", expr("ms DIV 86400000"))
       val hashed = e.select(col("event_type"), col("day"),
         graft.sample.Sampling.hashUniform(col("user_id"), "kmv").as("_u")).distinct()
@@ -1717,7 +2680,22 @@ object Pipeline {
           col("est_distinct_fp2"), col("n_kept_merged"),
           fp(when(col("n_kept_merged") < 64, col("n_kept_merged").cast("double"))
             .otherwise(lit(63.0) / col("_hkm")), 2).as("est_merged_fp2"))
-        
+    }, oracle = {
+      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
+        | list_transform(range(1, 9),
+        |   i -> CAST(strpos('0123456789abcdef',
+        |          substr(md5('kmv:' || CAST(user_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
+        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      s"""WITH h AS (SELECT DISTINCT event_type, CAST($u32 AS DOUBLE) / 4294967296.0 AS u FROM events),
+        |r AS (SELECT event_type, u, row_number() OVER (PARTITION BY event_type ORDER BY u) AS rk FROM h),
+        |d AS (SELECT event_type, count(*) AS n_kept,
+        |    ${sqlFp("CASE WHEN count(*) < 64 THEN CAST(count(*) AS DOUBLE) ELSE 63.0 / max(u) END", 2)} AS est
+        |  FROM r WHERE rk <= 64 GROUP BY 1),
+        |nd AS (SELECT event_type, count(DISTINCT epoch_ms(ts) // 86400000) AS n_days
+        |  FROM events GROUP BY 1)
+        |SELECT event_type, n_days, n_kept, est AS est_distinct_fp2,
+        |  n_kept AS n_kept_merged, est AS est_merged_fp2
+        |FROM d JOIN nd USING (event_type) ORDER BY event_type""".stripMargin
     }),
     // 43v — exponentially time-decayed engagement score (the
     // recency-weighted user feature every ranking/mixing pipeline
@@ -1732,7 +2710,7 @@ object Pipeline {
     // 8 bytes. Incremental refresh halves every stored score once a
     // week and adds the new week's partials — the same mergeable-
     // state shape as the sketches.
-    "ev_decay_score" -> ((s, dir) => {
+    Query("ev_decay_score", (s, dir) => {
       val e = ev(s, dir).withColumn("day", expr("ms DIV 86400000"))
       val mx = broadcast(e.agg(max("day").as("max_day")))
       e.crossJoin(mx)
@@ -1743,8 +2721,17 @@ object Pipeline {
             .as("c6"))
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_events"), sum("c6").as("score_fp6"))
-        
-    }),
+    }, oracle =
+      """WITH e AS (
+        |  SELECT user_id, epoch_ms(ts) // 86400000 AS day,
+        |    CAST(floor(value*1e4+0.5) AS BIGINT) AS v4
+        |  FROM events),
+        |mx AS (SELECT max(day) AS max_day FROM e)
+        |SELECT user_id, count(*) AS n_events,
+        |  CAST(sum(CAST(floor(CAST(v4 AS DOUBLE) / 1e4 /
+        |      CAST(1::BIGINT << CAST(least((max_day - day) // 7, 40) AS INT) AS DOUBLE)
+        |      * 1e6 + 0.5) AS BIGINT)) AS BIGINT) AS score_fp6
+        |FROM e, mx GROUP BY 1 ORDER BY 1""".stripMargin),
     // 43u — BITMAP-INDEX retention (the roaring-bitmap warehouse
     // discipline in exact integer arithmetic): each day's active-user
     // set becomes 63-bit bitmap WORDS — (day, user DIV 63) keyed,
@@ -1758,7 +2745,7 @@ object Pipeline {
     // frame IS the persisted index table (checkpointed here; written
     // once, probed by every cohort/retention/funnel query after);
     // intersections never touch raw events again.
-    "ev_bitmap_retention" -> ((s, dir) => {
+    Query("ev_bitmap_retention", (s, dir) => {
       val e = ev(s, dir).select(expr("ms DIV 86400000").as("day"),
         expr("user_id DIV 63").as("word"),
         expr("shiftleft(CAST(1 AS BIGINT), CAST(pmod(user_id, 63) AS INT))").as("bit"))
@@ -1770,8 +2757,16 @@ object Pipeline {
         .agg(sum(expr("CAST(bit_count(a.bm) AS BIGINT)")).as("n_active"),
           sum(coalesce(expr("CAST(bit_count(a.bm & b.bm) AS BIGINT)"), lit(0L)))
             .as("n_ret7"))
-        
-    }),
+    }, oracle =
+      """WITH e AS (
+        |  SELECT epoch_ms(ts) // 86400000 AS day, user_id // 63 AS word,
+        |    1::BIGINT << CAST(user_id % 63 AS INT) AS bit
+        |  FROM events),
+        |bm AS (SELECT day, word, bit_or(bit) AS bm FROM e GROUP BY 1, 2)
+        |SELECT a.day, CAST(sum(bit_count(a.bm)) AS BIGINT) AS n_active,
+        |  CAST(sum(coalesce(bit_count(a.bm & b.bm), 0)) AS BIGINT) AS n_ret7
+        |FROM bm a LEFT JOIN bm b ON b.word = a.word AND b.day = a.day + 7
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // 43i — RFM user segmentation (recency / frequency / monetary —
     // the classic activity-profile cut, here the user-level profile
     // pass an event corpus runs before per-cohort sampling): per-user
@@ -1781,7 +2776,7 @@ object Pipeline {
     // as ev_percentile (windows over DISTINCT quantized values — no
     // corpus-sized ntile window), score = 1 + #thresholds strictly
     // below; three 1-row threshold frames broadcast back
-    "ev_rfm" -> ((s, dir) => {
+    Query("ev_rfm", (s, dir) => {
       val u = ev(s, dir).groupBy(col("user_id"))
         .agg(max("ms").as("_rms"), count(lit(1)).as("f"), sum("v4").as("_m4"))
         .select(col("user_id"),
@@ -1809,7 +2804,34 @@ object Pipeline {
           score(col("f"), "_tf").as("f_score"),
           score(col("m_u"), "_tm").as("m_score"))
         .withColumn("rfm", col("r_score") * 100 + col("f_score") * 10 + col("m_score"))
-        
+    }, oracle = {
+      // same histogram rank-scan convention as ev_percentile, applied
+      // per RFM dimension over the user-aggregate table
+      def th(src: String, vcol: String, pfx: String): String =
+        s"""h$pfx AS (SELECT $vcol AS v, count(*) AS k FROM $src GROUP BY 1),
+           |c$pfx AS (SELECT v, k,
+           |    sum(k) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+           |    sum(k) OVER () AS n FROM h$pfx),
+           |t$pfx AS (SELECT
+           |    min(CASE WHEN cum >= (1 * n + 4) // 5 THEN v END) AS ${pfx}1,
+           |    min(CASE WHEN cum >= (2 * n + 4) // 5 THEN v END) AS ${pfx}2,
+           |    min(CASE WHEN cum >= (3 * n + 4) // 5 THEN v END) AS ${pfx}3,
+           |    min(CASE WHEN cum >= (4 * n + 4) // 5 THEN v END) AS ${pfx}4 FROM c$pfx)""".stripMargin
+      def sc(v: String, pfx: String): String =
+        s"CAST(1 + (CASE WHEN $v > ${pfx}1 THEN 1 ELSE 0 END) + (CASE WHEN $v > ${pfx}2 THEN 1 ELSE 0 END)" +
+          s" + (CASE WHEN $v > ${pfx}3 THEN 1 ELSE 0 END) + (CASE WHEN $v > ${pfx}4 THEN 1 ELSE 0 END) AS INT)"
+      s"""WITH e AS (SELECT user_id, epoch_ms(ts) AS ms, ${sqlFp("\"value\"", 4)} AS v4 FROM events),
+        |u AS (SELECT user_id, max(ms) // 3600000 AS r_hr, count(*) AS f,
+        |    CAST(sum(v4) AS BIGINT) // 10000 AS m_u FROM e GROUP BY 1),
+        |${th("u", "r_hr", "tr")},
+        |${th("u", "f", "tf")},
+        |${th("u", "m_u", "tm")}
+        |SELECT user_id, r_hr, f, m_u,
+        |  ${sc("r_hr", "tr")} AS r_score,
+        |  ${sc("f", "tf")} AS f_score,
+        |  ${sc("m_u", "tm")} AS m_score,
+        |  ${sc("r_hr", "tr")} * 100 + ${sc("f", "tf")} * 10 + ${sc("m_u", "tm")} AS rfm
+        |FROM u, ttr, ttf, ttm ORDER BY user_id""".stripMargin
     }),
     // 43j — DAU/WAU stickiness (the engagement-density profile an
     // event corpus is cut by before cohort work): two distinct-user
@@ -1819,7 +2841,7 @@ object Pipeline {
     // integer floor-divisions of epoch ms (events are post-1970, and
     // both engines truncate identically on non-negatives); the ratio
     // is one correctly-rounded double divide, fp4-quantized.
-    "ev_stickiness" -> ((s, dir) => {
+    Query("ev_stickiness", (s, dir) => {
       val d = ev(s, dir).select(col("user_id"),
           expr("ms DIV 86400000").as("day_id"))
         .withColumn("week_id", expr("day_id DIV 7"))
@@ -1830,8 +2852,14 @@ object Pipeline {
       dau.join(broadcast(wau), "week_id")
         .select(col("week_id"), col("day_id"), col("dau"), col("wau"),
           fp(col("dau").cast("double") / col("wau").cast("double"), 4).as("stickiness_fp4"))
-        
-    }),
+    }, oracle =
+      s"""WITH d AS (SELECT user_id, epoch_ms(ts) // 86400000 AS day_id FROM events),
+        |d2 AS (SELECT user_id, day_id, day_id // 7 AS week_id FROM d),
+        |dau AS (SELECT week_id, day_id, count(DISTINCT user_id) AS dau FROM d2 GROUP BY 1, 2),
+        |wau AS (SELECT week_id, count(DISTINCT user_id) AS wau FROM d2 GROUP BY 1)
+        |SELECT week_id, day_id, dau, wau,
+        |  ${sqlFp("CAST(dau AS DOUBLE) / CAST(wau AS DOUBLE)", 4)} AS stickiness_fp4
+        |FROM dau JOIN wau USING (week_id) ORDER BY day_id""".stripMargin),
     // 43k — bot/abuse rate filtering (the traffic-hygiene gate an
     // event corpus passes before it trains anything): flag users whose
     // peak per-minute event rate exceeds a human-plausible ceiling.
@@ -1845,7 +2873,7 @@ object Pipeline {
     // per-user max/sum rollup; the synthetic burst build is a
     // distinct-users projection exploded 120× (row count bounded by
     // 120·|users|, no shuffle of its own).
-    "ev_bot_users" -> ((s, dir) => {
+    Query("ev_bot_users", (s, dir) => {
       val organic = ev(s, dir).select(col("user_id"), col("ms"))
       val bursts = ev(s, dir).filter(col("user_id") % 37 === 0)
         .select(col("user_id")).distinct()
@@ -1861,8 +2889,17 @@ object Pipeline {
         .select(col("user_id"), col("peak_per_min"),
           col("n_events").cast("long").as("n_events"),
           (col("peak_per_min") >= 60).cast("long").as("is_bot"))
-        
-    }),
+    }, oracle =
+      """WITH organic AS (SELECT user_id, epoch_ms(ts) AS ms FROM events),
+        |bots AS (SELECT DISTINCT user_id FROM events WHERE user_id % 37 = 0),
+        |burst AS (SELECT b.user_id,
+        |    1704067200000 + (b.user_id % 1440) * 60000 + i * 400 AS ms
+        |  FROM bots b CROSS JOIN range(0, 120) t(i)),
+        |allev AS (SELECT * FROM organic UNION ALL SELECT * FROM burst),
+        |pm AS (SELECT user_id, ms // 60000 AS minute_id, count(*) AS n FROM allev GROUP BY 1, 2)
+        |SELECT user_id, max(n) AS peak_per_min, CAST(sum(n) AS BIGINT) AS n_events,
+        |  CAST(CASE WHEN max(n) >= 60 THEN 1 ELSE 0 END AS BIGINT) AS is_bot
+        |FROM pm GROUP BY 1 ORDER BY user_id""".stripMargin),
     // 43l — session co-visitation lift (the recommender/behavior-
     // mining building block: which event types co-occur in the same
     // session more than chance): sessions via the SAME gap rule as
@@ -1873,7 +2910,7 @@ object Pipeline {
     // by event count. Lift = n_ab·S/(n_a·n_b) over session
     // probabilities — the txt_collocations statistic on a different
     // universe, same log-free exact-integer convention.
-    "ev_covisit" -> ((s, dir) => {
+    Query("ev_covisit", (s, dir) => {
       val byUser = Window.partitionBy("user_id").orderBy("ms", "event_id")
       val st = ev(s, dir)
         .withColumn("new_sess",
@@ -1897,8 +2934,27 @@ object Pipeline {
         .select(col("type_a"), col("type_b"), col("n_ab"),
           fp((col("n_ab").cast("double") * col("s_tot").cast("double")) /
             (col("n_a").cast("double") * col("n_b").cast("double")), 4).as("lift_fp4"))
-        
-    }),
+    }, oracle =
+      // the ev_sessionize window CTEs reduced to DISTINCT (session,
+      // type), then the collocation lift over session probabilities
+      s"""WITH e AS (SELECT event_id, user_id, event_type, epoch_ms(ts) AS ms FROM events),
+        |flagged AS (SELECT *, CASE WHEN lag(ms) OVER w IS NULL OR ms - lag(ms) OVER w > $SessionGapMs
+        |    THEN 1 ELSE 0 END AS new_sess
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
+        |sess AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ms, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM flagged),
+        |st AS (SELECT DISTINCT user_id, session_idx, event_type FROM sess),
+        |pairs AS (SELECT a.event_type AS type_a, b.event_type AS type_b
+        |  FROM st a JOIN st b ON a.user_id = b.user_id AND a.session_idx = b.session_idx
+        |    AND a.event_type < b.event_type),
+        |nab AS (SELECT type_a, type_b, count(*) AS n_ab FROM pairs GROUP BY 1, 2),
+        |na AS (SELECT event_type, count(*) AS n FROM st GROUP BY 1),
+        |stot AS (SELECT count(*) AS s_tot FROM (SELECT DISTINCT user_id, session_idx FROM st))
+        |SELECT type_a, type_b, n_ab,
+        |  ${sqlFp("(CAST(n_ab AS DOUBLE) * CAST(s_tot AS DOUBLE)) / (CAST(na_a.n AS DOUBLE) * CAST(na_b.n AS DOUBLE))", 4)} AS lift_fp4
+        |FROM nab JOIN na na_a ON na_a.event_type = nab.type_a
+        |  JOIN na na_b ON na_b.event_type = nab.type_b CROSS JOIN stot
+        |ORDER BY type_a, type_b""".stripMargin),
     // 43o — time-to-convert profile (the latency half of ev_funnel:
     // not whether users convert but HOW FAST): per user, first view →
     // earliest purchase at-or-after it, latency quantized to minutes,
@@ -1907,7 +2963,7 @@ object Pipeline {
     // never by user count). Readout row: viewers, converters, p50/p90
     // minutes. Shapes: two filtered user rollups (map-side combined),
     // one user-keyed join, one domain-bounded histogram scan.
-    "ev_funnel_time" -> ((s, dir) => {
+    Query("ev_funnel_time", (s, dir) => {
       val e = ev(s, dir)
       val firstView = e.filter(col("event_type") === "view")
         .groupBy("user_id").agg(min("ms").as("v0"))
@@ -1924,7 +2980,22 @@ object Pipeline {
           min(when(col("cum") >= expr("(n + 1) DIV 2"), col("lat_min"))).as("p50_lat_min"),
           min(when(col("cum") >= expr("(9 * n + 9) DIV 10"), col("lat_min"))).as("p90_lat_min"))
       firstView.agg(count(lit(1)).as("n_viewers")).crossJoin(broadcast(st))
-    }),
+    }, oracle =
+      // first view → earliest at-or-after purchase per user, minute
+      // latency histogram rank-scan
+      """WITH e AS (SELECT user_id, event_type, epoch_ms(ts) AS ms FROM events),
+        |fv AS (SELECT user_id, min(ms) AS v0 FROM e WHERE event_type = 'view' GROUP BY 1),
+        |lat AS (SELECT e.user_id, min(e.ms - fv.v0) // 60000 AS lat_min
+        |  FROM e JOIN fv ON fv.user_id = e.user_id
+        |  WHERE e.event_type = 'purchase' AND e.ms >= fv.v0 GROUP BY 1),
+        |h AS (SELECT lat_min AS v, count(*) AS k FROM lat GROUP BY 1),
+        |h2 AS (SELECT v, sum(k) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+        |    sum(k) OVER () AS n FROM h),
+        |st AS (SELECT CAST(max(n) AS BIGINT) AS n_converted,
+        |    min(CASE WHEN cum >= (n + 1) // 2 THEN v END) AS p50_lat_min,
+        |    min(CASE WHEN cum >= (9 * n + 9) // 10 THEN v END) AS p90_lat_min FROM h2),
+        |nv AS (SELECT count(*) AS n_viewers FROM fv)
+        |SELECT n_viewers, n_converted, p50_lat_min, p90_lat_min FROM nv CROSS JOIN st""".stripMargin),
     // 43n — session-length profile (the engagement-distribution
     // readout cut alongside stickiness before any cohort decision):
     // sessions via the SAME gap rule as ev_sessionize, reduced to
@@ -1935,7 +3006,7 @@ object Pipeline {
     // so the single-task window over each histogram survives 100 TB.
     // One readout row: session count, p50/p90 duration, p50/max
     // events per session.
-    "ev_session_stats" -> ((s, dir) => {
+    Query("ev_session_stats", (s, dir) => {
       val byUser = Window.partitionBy("user_id").orderBy("ms", "event_id")
       val sess = ev(s, dir)
         .withColumn("new_sess",
@@ -1958,7 +3029,31 @@ object Pipeline {
         min(when(col("cum") >= expr("(n + 1) DIV 2"), col("n_events"))).as("p50_events"),
         max(col("n_events")).as("max_events"))
       dur.crossJoin(broadcast(ne))
-    }),
+    }, oracle =
+      // the sessionize CTEs reduced to per-session (n_events, dur_s),
+      // then two histogram rank-scans (the ev_percentile discipline)
+      s"""WITH e AS (SELECT event_id, user_id, event_type, epoch_ms(ts) AS ms FROM events),
+        |flagged AS (SELECT *, CASE WHEN lag(ms) OVER w IS NULL OR ms - lag(ms) OVER w > $SessionGapMs
+        |    THEN 1 ELSE 0 END AS new_sess
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
+        |sess0 AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ms, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM flagged),
+        |sess AS (SELECT user_id, session_idx, count(*) AS n_events,
+        |    (max(ms) - min(ms)) // 1000 AS dur_s
+        |  FROM sess0 GROUP BY 1, 2),
+        |hd AS (SELECT dur_s AS v, count(*) AS k FROM sess GROUP BY 1),
+        |hd2 AS (SELECT v, sum(k) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+        |    sum(k) OVER () AS n FROM hd),
+        |dstats AS (SELECT CAST(max(n) AS BIGINT) AS n_sessions,
+        |    min(CASE WHEN cum >= (n + 1) // 2 THEN v END) AS p50_dur_s,
+        |    min(CASE WHEN cum >= (9 * n + 9) // 10 THEN v END) AS p90_dur_s FROM hd2),
+        |he AS (SELECT n_events AS v, count(*) AS k FROM sess GROUP BY 1),
+        |he2 AS (SELECT v, sum(k) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+        |    sum(k) OVER () AS n FROM he),
+        |estats AS (SELECT min(CASE WHEN cum >= (n + 1) // 2 THEN v END) AS p50_events,
+        |    max(v) AS max_events FROM he2)
+        |SELECT n_sessions, p50_dur_s, p90_dur_s, p50_events, max_events
+        |FROM dstats CROSS JOIN estats""".stripMargin),
     // 43g — damped PageRank over the event-type transition graph:
     // edges = user-ordered consecutive event pairs (one partitioned
     // window, the only corpus-scale stage), then 3 power iterations
@@ -1969,7 +3064,7 @@ object Pipeline {
     // intermediates < 2^60 even at 10^12-edge scale. The iteration
     // joins are node-table-sized; at web-graph node counts the SAME
     // plan distributes (keyed joins, no collect)
-    "ev_markov_rank" -> ((s, dir) => {
+    Query("ev_markov_rank", (s, dir) => {
       val e0 = ev(s, dir)
       val wu = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
       val edges = e0
@@ -2007,14 +3102,37 @@ object Pipeline {
       s.createDataFrame(
         java.util.Arrays.asList(nodeSet.map(n => org.apache.spark.sql.Row(n, r(n))): _*),
         outSchema)
-    }),
+    }, oracle =
+      """WITH e AS (SELECT event_id, user_id, event_type, epoch_ms(ts) AS ms FROM events),
+        |pairs AS (SELECT event_type AS src,
+        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ms, event_id) AS dst
+        |  FROM e),
+        |edges AS (SELECT src, dst, count(*) AS c FROM pairs WHERE dst IS NOT NULL GROUP BY 1, 2),
+        |p AS (SELECT src, dst, (1000000 * c) // sum(c) OVER (PARTITION BY src) AS p6 FROM edges),
+        |nodes AS (SELECT DISTINCT event_type AS node FROM e),
+        |nv AS (SELECT count(*) AS nv FROM nodes),
+        |r0 AS (SELECT node, 1000000000 // nv AS r FROM nodes CROSS JOIN nv),
+        |r1 AS (SELECT n.node, 150000000 // nv + coalesce(
+        |    (SELECT sum((85 * ((r0.r * p.p6) // 1000000)) // 100)
+        |     FROM p JOIN r0 ON r0.node = p.src WHERE p.dst = n.node), 0) AS r
+        |  FROM nodes n CROSS JOIN nv),
+        |r2 AS (SELECT n.node, 150000000 // nv + coalesce(
+        |    (SELECT sum((85 * ((r1.r * p.p6) // 1000000)) // 100)
+        |     FROM p JOIN r1 ON r1.node = p.src WHERE p.dst = n.node), 0) AS r
+        |  FROM nodes n CROSS JOIN nv),
+        |r3 AS (SELECT n.node, 150000000 // nv + coalesce(
+        |    (SELECT sum((85 * ((r2.r * p.p6) // 1000000)) // 100)
+        |     FROM p JOIN r2 ON r2.node = p.src WHERE p.dst = n.node), 0) AS r
+        |  FROM nodes n CROSS JOIN nv)
+        |SELECT node AS event_type, CAST(r AS BIGINT) AS rank_fp9
+        |FROM r3 ORDER BY event_type""".stripMargin),
     // 43h — last-touch attribution: each purchase joined to the user's
     // latest STRICTLY-preceding view/click. Pure reuse of the as-of
     // operator (one key shuffle, running struct-max window, no range
     // θ-join) — the point is that marketing attribution IS an as-of
     // join, not a new operator; tie at the same ms resolves to the
     // larger event_id via the payload struct order
-    "ev_attribution" -> ((s, dir) => {
+    Query("ev_attribution", (s, dir) => {
       val e = ev(s, dir)
       val purchases = e.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("ms").as("pms"), col("event_id").as("purchase_id"))
@@ -2025,8 +3143,23 @@ object Pipeline {
         .select(col("purchase_id"), col("user_id"), col("pms"),
           col("asof_time").as("touch_ms"), col("asof_event_id").as("touch_event_id"),
           col("asof_touch_type").as("touch_type"))
-        
-    }),
+    }, oracle =
+      // as-of tie-break mirror (q17 shape): best time = max(ms < pms),
+      // then max event_id at that time; touch_type recovered by the
+      // unique event_id
+      """WITH e AS (SELECT event_id, user_id, event_type, epoch_ms(ts) AS ms FROM events),
+        |p AS (SELECT event_id AS purchase_id, user_id, ms AS pms FROM e WHERE event_type = 'purchase'),
+        |t AS (SELECT user_id, ms, event_id, event_type AS touch_type FROM e
+        |      WHERE event_type IN ('view', 'click')),
+        |b AS (SELECT p.purchase_id, max(t.ms) AS touch_ms
+        |      FROM p LEFT JOIN t ON t.user_id = p.user_id AND t.ms < p.pms GROUP BY 1),
+        |x AS (SELECT p.purchase_id, p.user_id, p.pms, b.touch_ms, max(t.event_id) AS touch_event_id
+        |      FROM p JOIN b USING (purchase_id)
+        |      LEFT JOIN t ON t.user_id = p.user_id AND t.ms = b.touch_ms
+        |      GROUP BY 1, 2, 3, 4)
+        |SELECT x.purchase_id, x.user_id, x.pms, x.touch_ms, x.touch_event_id, t2.touch_type
+        |FROM x LEFT JOIN t t2 ON t2.event_id = x.touch_event_id
+        |ORDER BY purchase_id""".stripMargin),
     // 43aj — U-SHAPE (position-based) multi-touch attribution — the
     // 40/20/40 model next to 43i's last-touch: every view/click in
     // the 7-day lookback before a purchase shares its credit — 40% to
@@ -2036,7 +3169,7 @@ object Pipeline {
     // deterministic and identical in both engines). One user-keyed
     // equi-join bounds the pairing; position windows run per
     // purchase (lookback-bounded, never corpus-sized).
-    "ev_attribution_ushape" -> ((s, dir) => {
+    Query("ev_attribution_ushape", (s, dir) => {
       val look = 604800000L
       val e = ev(s, dir)
       val purchases = e.filter(col("event_type") === "purchase")
@@ -2057,8 +3190,24 @@ object Pipeline {
             .otherwise(expr("200000 DIV (k - 2)")))
         .groupBy("touch_type")
         .agg(count(lit(1)).as("n_touches"), sum("credit").as("credit_fp6"))
-        
-    }),
+    }, oracle =
+      """WITH e AS (SELECT event_id, user_id, event_type, epoch_ms(ts) AS ms FROM events),
+        |p AS (SELECT event_id AS purchase_id, user_id, ms AS pms FROM e WHERE event_type = 'purchase'),
+        |t AS (SELECT user_id, ms, event_id, event_type AS touch_type FROM e
+        |      WHERE event_type IN ('view', 'click')),
+        |paired AS (SELECT p.purchase_id, t.ms, t.event_id, t.touch_type
+        |  FROM p JOIN t ON t.user_id = p.user_id
+        |  WHERE t.ms < p.pms AND t.ms >= p.pms - 604800000),
+        |pos AS (SELECT touch_type,
+        |    count(*) OVER (PARTITION BY purchase_id) AS k,
+        |    row_number() OVER (PARTITION BY purchase_id ORDER BY ms, event_id) AS rn
+        |  FROM paired)
+        |SELECT touch_type, count(*) AS n_touches,
+        |  CAST(sum(CASE WHEN k = 1 THEN 1000000
+        |                WHEN k = 2 THEN 500000
+        |                WHEN rn = 1 OR rn = k THEN 400000
+        |                ELSE 200000 // (k - 2) END) AS BIGINT) AS credit_fp6
+        |FROM pos GROUP BY 1 ORDER BY 1""".stripMargin),
     // 47 — the whole corpus-prep dataflow end-to-end in ONE query
     // (the LLM-pipeline twin of cg_pipeline_counts): eval holdout →
     // Gopher quality gate → exact dedup on normalized text →
@@ -2087,7 +3236,7 @@ object Pipeline {
     // synthetic data, so the metadata gate is the one that bites);
     // the report is a 1-row agg of
     // conditional sums exploded to stage rows — no per-stage rescans.
-    "pipe_quality_funnel" -> ((s, dir) => {
+    Query("pipe_quality_funnel", (s, dir) => {
       val en = TextAnalysis.DefaultStopwords.head._2
       val flags = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), TextAnalysis.tokens(col("text")).as("toks"))
@@ -2110,9 +3259,31 @@ object Pipeline {
           struct(lit("4_repetition").as("stage"), col("n3").as("n_docs")),
           struct(lit("5_stopwords").as("stage"), col("n4").as("n_docs")))).as("s"))
         .select(col("s.stage").as("stage"), col("s.n_docs").as("n_docs"))
-        
-    }),
-    "pipe_dataset_card" -> ((s, dir) => {
+    }, oracle =
+      // the rule expressions are the same ones txt_repetition /
+      // txt_quality verify individually; lang is the metadata column
+      s"""WITH f AS (SELECT
+        |    len($toksSql) AS nt,
+        |    CASE WHEN len($toksSql) = 0 THEN 10000
+        |      ELSE ${sqlFp("1.0 - CAST(len(list_distinct(" + toksSql + ")) AS DOUBLE) / CAST(len(" + toksSql + ") AS DOUBLE)", 4)}
+        |    END AS rep4,
+        |    lang AS lp,
+        |    len(list_filter($toksSql, t -> t IN ('the', 'a', 'of', 'and', 'fast', 'slow'))) AS ns
+        |  FROM documents),
+        |g AS (SELECT
+        |    count(*) AS n0,
+        |    CAST(sum(CASE WHEN nt BETWEEN 20 AND 200 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+        |    CAST(sum(CASE WHEN nt BETWEEN 20 AND 200 AND lp = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n2,
+        |    CAST(sum(CASE WHEN nt BETWEEN 20 AND 200 AND lp = 'en' AND rep4 <= 6000 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
+        |    CAST(sum(CASE WHEN nt BETWEEN 20 AND 200 AND lp = 'en' AND rep4 <= 6000 AND ns >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n4
+        |  FROM f)
+        |SELECT '1_all' AS stage, n0 AS n_docs FROM g
+        |UNION ALL SELECT '2_len', n1 FROM g
+        |UNION ALL SELECT '3_lang_en', n2 FROM g
+        |UNION ALL SELECT '4_repetition', n3 FROM g
+        |UNION ALL SELECT '5_stopwords', n4 FROM g
+        |ORDER BY stage""".stripMargin),
+    Query("pipe_dataset_card", (s, dir) => {
       val base = t(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
           size(TextAnalysis.tokens(col("text"))).cast("long").as("n_toks"),
@@ -2141,9 +3312,34 @@ object Pipeline {
           fp(col("dup_docs").cast("double") / col("n_docs").cast("double"), 4).as("dup_frac_fp4"),
           col("top_lang"), col("top_lang_n"), col("p50_chars"),
           fp(col("sum_chars").cast("double") / col("n_docs").cast("double"), 2).as("mean_chars_fp2"))
-        
-    }),
-    "pipe_prep_counts" -> ((s, dir) => {
+    }, oracle =
+      // same four rollups from one base CTE; median = smallest value
+      // whose cum count reaches (n+1)//2 (the ev_percentile rule)
+      s"""WITH base AS (SELECT doc_id, source, lang, n_chars,
+        |    CAST(len($toksSql) AS BIGINT) AS n_toks, md5(text) AS h FROM documents),
+        |dup AS (SELECT h, count(*) AS hc FROM base GROUP BY 1),
+        |agg AS (SELECT source, count(*) AS n_docs, CAST(sum(n_toks) AS BIGINT) AS n_tokens,
+        |    CAST(sum(CASE WHEN hc > 1 THEN 1 ELSE 0 END) AS BIGINT) AS dup_docs,
+        |    CAST(sum(n_chars) AS BIGINT) AS sum_chars
+        |  FROM base JOIN dup USING (h) GROUP BY 1),
+        |lt AS (SELECT source, lang, count(*) AS ln FROM base GROUP BY 1, 2),
+        |top AS (SELECT source, lang AS top_lang, ln AS top_lang_n FROM (
+        |    SELECT *, row_number() OVER (PARTITION BY source ORDER BY ln DESC, lang) AS rn
+        |    FROM lt) WHERE rn = 1),
+        |hh AS (SELECT source, n_chars, count(*) AS k FROM base GROUP BY 1, 2),
+        |hc2 AS (SELECT source, n_chars,
+        |    sum(k) OVER (PARTITION BY source ORDER BY n_chars
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+        |    sum(k) OVER (PARTITION BY source) AS n FROM hh),
+        |p50 AS (SELECT source, min(CASE WHEN cum >= (n + 1) // 2 THEN n_chars END) AS p50_chars
+        |  FROM hc2 GROUP BY 1)
+        |SELECT a.source, n_docs, n_tokens, dup_docs,
+        |  ${sqlFp("CAST(dup_docs AS DOUBLE) / CAST(n_docs AS DOUBLE)", 4)} AS dup_frac_fp4,
+        |  top_lang, top_lang_n, p50_chars,
+        |  ${sqlFp("CAST(sum_chars AS DOUBLE) / CAST(n_docs AS DOUBLE)", 2)} AS mean_chars_fp2
+        |FROM agg a JOIN top USING (source) JOIN p50 USING (source)
+        |ORDER BY a.source""".stripMargin),
+    Query("pipe_prep_counts", (s, dir) => {
       val docs = t(s, dir, "documents")
       val eval = docs.filter(col("doc_id") % 97 === 0)
       val train = docs.filter(col("doc_id") % 97 =!= 0)
@@ -2170,10 +3366,58 @@ object Pipeline {
         .unionByName(selected.agg(coalesce(sum("n_tokens"), lit(0L)).as("n"))
           .withColumn("section", lit("s7_selected_tokens")))
         .select("section", "n")
-        
-    }),
+    }, oracle =
+      // every stage reuses its standalone oracle's rule verbatim:
+      // gopher keep thresholds (txt_gopher), normalize+md5 (txt_normalize
+      // / dd_exact), 4-gram decontamination (dd_decontaminate), ordered
+      // cumsum selection (smp_budget)
+      s"""WITH train AS (SELECT * FROM documents WHERE doc_id % 97 <> 0),
+        |gt AS (SELECT doc_id, text, $toksSql AS toks FROM train),
+        |gsig AS (SELECT doc_id,
+        |    CAST(len(toks) AS BIGINT) AS n_words,
+        |    CASE WHEN len(toks) = 0 THEN 1 ELSE len(toks) END AS nw,
+        |    coalesce(list_sum(list_transform(toks, x -> length(x))), 0) AS sumlen,
+        |    len(list_filter(toks, x -> regexp_matches(x, '[a-z]'))) AS alpha_cnt,
+        |    len(regexp_extract_all(text, '#|\\.\\.\\.')) AS sym_cnt,
+        |    CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','fast','slow'))) AS BIGINT) AS stop_hits
+        |  FROM gt),
+        |gkeep AS (SELECT doc_id FROM (SELECT doc_id, n_words, stop_hits,
+        |    ${sqlFp("CAST(sumlen AS DOUBLE) / CAST(nw AS DOUBLE)", 2)} AS mean_wlen_fp2,
+        |    ${sqlFp("CAST(alpha_cnt AS DOUBLE) / CAST(nw AS DOUBLE)", 4)} AS alpha_frac_fp4,
+        |    ${sqlFp("CAST(sym_cnt AS DOUBLE) / CAST(nw AS DOUBLE)", 4)} AS sym_ratio_fp4
+        |  FROM gsig)
+        |  WHERE n_words >= 50 AND n_words <= 100000
+        |    AND mean_wlen_fp2 >= 300 AND mean_wlen_fp2 <= 1000
+        |    AND alpha_frac_fp4 >= 8000 AND sym_ratio_fp4 <= 1000
+        |    AND stop_hits >= 2),
+        |q AS (SELECT t.* FROM train t JOIN gkeep USING (doc_id)),
+        |win AS (SELECT min(doc_id) AS doc_id FROM (
+        |    SELECT doc_id, md5(trim(regexp_replace(regexp_replace(lower(text),
+        |      '[^a-z0-9\\s]+', ' ', 'g'), '\\s+', ' ', 'g'))) AS h FROM q)
+        |  GROUP BY h),
+        |dd AS (SELECT q.* FROM q JOIN win USING (doc_id)),
+        |ev0 AS (SELECT DISTINCT unnest(${shinglesSql(4)}) AS g0
+        |       FROM documents WHERE doc_id % 97 = 0),
+        |ev AS (SELECT DISTINCT ${shingleKeySql("g0")} AS g FROM ev0),
+        |tg0 AS (SELECT doc_id, unnest(${shinglesSql(4)}) AS g0 FROM dd),
+        |tg AS (SELECT doc_id, ${shingleKeySql("g0")} AS g FROM tg0),
+        |bad AS (SELECT DISTINCT tg.doc_id FROM tg JOIN ev USING (g)),
+        |dc AS (SELECT dd.* FROM dd WHERE doc_id NOT IN (SELECT doc_id FROM bad)),
+        |sc AS (SELECT doc_id, n_chars, CAST(len($toksSql) AS BIGINT) AS n_tokens FROM dc),
+        |sel AS (SELECT * FROM (SELECT *, CAST(sum(n_tokens) OVER (ORDER BY n_chars DESC, doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum FROM sc)
+        |  WHERE cum <= 20000)
+        |SELECT section, n FROM (
+        |  SELECT 's1_input' AS section, (SELECT count(*) FROM documents) AS n
+        |  UNION ALL SELECT 's2_train', (SELECT count(*) FROM train)
+        |  UNION ALL SELECT 's3_quality', (SELECT count(*) FROM q)
+        |  UNION ALL SELECT 's4_dedup', (SELECT count(*) FROM dd)
+        |  UNION ALL SELECT 's5_decontam', (SELECT count(*) FROM dc)
+        |  UNION ALL SELECT 's6_selected', (SELECT count(*) FROM sel)
+        |  UNION ALL SELECT 's7_selected_tokens', (SELECT coalesce(CAST(sum(n_tokens) AS BIGINT), 0) FROM sel)
+        |) ORDER BY section""".stripMargin),
     // 42 — gap-based sessionization (batch twin of the streaming op)
-    "ev_sessionize" -> ((s, dir) => {
+    Query("ev_sessionize", (s, dir) => {
       val byUser = Window.partitionBy("user_id").orderBy("ms", "event_id")
       ev(s, dir)
         .withColumn("new_sess",
@@ -2182,7 +3426,16 @@ object Pipeline {
         .withColumn("session_idx", sum("new_sess").over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         .groupBy("user_id", "session_idx")
         .agg(count(lit(1)).as("n_events"), min("ms").as("start_ms"), max("ms").as("end_ms"), sum("v4").as("sum_v4"))
-}),
+    }, oracle =
+      s"""WITH e AS (SELECT event_id, user_id, epoch_ms(ts) AS ms, ${sqlFp("\"value\"", 4)} AS v4 FROM events),
+        |flagged AS (SELECT *, CASE WHEN lag(ms) OVER w IS NULL OR ms - lag(ms) OVER w > $SessionGapMs
+        |    THEN 1 ELSE 0 END AS new_sess
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
+        |sess AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ms, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM flagged)
+        |SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx, count(*) AS n_events,
+        |  min(ms) AS start_ms, max(ms) AS end_ms, CAST(sum(v4) AS BIGINT) AS sum_v4
+        |FROM sess GROUP BY user_id, session_idx ORDER BY user_id, session_idx""".stripMargin),
     // 43ae — interval CONCURRENCY (sweep line): per day, the peak
     // number of simultaneously-open sessions — the load-planning
     // number behind connection pools and rate limits. Sessions
@@ -2194,7 +3447,7 @@ object Pipeline {
     // windows are DAY-sliced, never one global task; the per-day peak
     // is order-stable under ties because equal deltas commute inside
     // their block.
-    "ev_concurrency" -> ((s, dir) => {
+    Query("ev_concurrency", (s, dir) => {
       val dayMs = 86400000L
       val byUser = Window.partitionBy("user_id").orderBy("ms", "event_id")
       val sess = ev(s, dir)
@@ -2231,16 +3484,43 @@ object Pipeline {
             greatest(coalesce(col("peak_in_day"), lit(0L)), lit(0L))).as("peak_conc"),
           coalesce(col("carry"), lit(0L)).as("carry_in"),
           coalesce(col("n_starts"), lit(0L)).as("n_starts"))
-        
-    }),
+    }, oracle =
+      s"""WITH e AS (SELECT event_id, user_id, epoch_ms(ts) AS ms FROM events),
+        |flagged AS (SELECT *, CASE WHEN lag(ms) OVER w IS NULL OR ms - lag(ms) OVER w > $SessionGapMs
+        |    THEN 1 ELSE 0 END AS new_sess
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
+        |sess AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ms, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM flagged),
+        |si AS (SELECT user_id, session_idx, min(ms) AS st, max(ms) AS en FROM sess GROUP BY 1, 2),
+        |sd AS (SELECT st, en,
+        |    (st - ((st % 86400000 + 86400000) % 86400000)) // 86400000 AS sd,
+        |    (en - ((en % 86400000 + 86400000) % 86400000)) // 86400000 AS ed FROM si),
+        |deltas AS (SELECT sd AS day, st AS t, 1 AS d FROM sd
+        |           UNION ALL SELECT ed, en, -1 FROM sd),
+        |runs AS (SELECT day, d, sum(d) OVER (PARTITION BY day ORDER BY t, d DESC
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run FROM deltas),
+        |agg AS (SELECT day, max(run) AS peak_in_day,
+        |    sum(CASE WHEN d = 1 THEN 1 ELSE 0 END) AS n_starts FROM runs GROUP BY 1),
+        |car AS (SELECT day, count(*) AS carry FROM
+        |    (SELECT unnest(range(sd + 1, ed + 1)) AS day FROM sd WHERE ed > sd) GROUP BY 1)
+        |SELECT coalesce(agg.day, car.day) AS day,
+        |  CAST(coalesce(carry, 0) + greatest(coalesce(peak_in_day, 0), 0) AS BIGINT) AS peak_conc,
+        |  CAST(coalesce(carry, 0) AS BIGINT) AS carry_in,
+        |  CAST(coalesce(n_starts, 0) AS BIGINT) AS n_starts
+        |FROM agg FULL JOIN car ON agg.day = car.day ORDER BY 1""".stripMargin),
     // 43 — tumbling-window aggregation (batch twin of the streaming op)
-    "ev_window_agg" -> ((s, dir) => {
+    Query("ev_window_agg", (s, dir) => {
       ev(s, dir)
         .withColumn("win_start", col("ms") - pmod(col("ms"), lit(3600000L)))
         .groupBy("win_start", "event_type")
         .agg(count(lit(1)).as("n"), sum("v4").as("sum_v4"))
-        
-    }),
+    }, oracle =
+      // floored modulus ((x % m + m) % m) mirrors Spark's pmod, so the
+      // window start floors for negative ms too (DuckDB % truncates)
+      s"""SELECT ms - ((ms % 3600000 + 3600000) % 3600000) AS win_start, event_type, count(*) AS n,
+        |  CAST(sum(v4) AS BIGINT) AS sum_v4
+        |FROM (SELECT epoch_ms(ts) AS ms, event_type, ${sqlFp("\"value\"", 4)} AS v4 FROM events)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // 43aa — HOPPING (sliding) window agg, size 1h / hop 30min — the
     // overlapping-window twin of the tumbling agg above and the batch
     // shape of Spark's window(ts, "1 hour", "30 minutes"): each event
@@ -2248,7 +3528,7 @@ object Pipeline {
     // bounded 2× row growth), then ONE hash agg — never a self-join
     // of shifted tumbles. The general (size, hop) guard filter is
     // kept although vacuous at 2×.
-    "ev_sliding_window" -> ((s, dir) => {
+    Query("ev_sliding_window", (s, dir) => {
       val size = 3600000L; val hop = 1800000L
       ev(s, dir)
         .withColumn("k", explode(sequence(lit(0L), lit(size / hop - 1))))
@@ -2257,8 +3537,14 @@ object Pipeline {
         .filter(col("ms") < col("win_start") + lit(size))
         .groupBy("win_start", "event_type")
         .agg(count(lit(1)).as("n"), sum("v4").as("sum_v4"))
-        
-    }),
+    }, oracle =
+      s"""SELECT win_start, event_type, count(*) AS n, CAST(sum(v4) AS BIGINT) AS sum_v4
+        |FROM (SELECT ms - ((ms % 1800000 + 1800000) % 1800000) - hops.k * 1800000 AS win_start,
+        |             ms, event_type, v4
+        |      FROM (SELECT epoch_ms(ts) AS ms, event_type, ${sqlFp("\"value\"", 4)} AS v4 FROM events)
+        |      CROSS JOIN (SELECT 0 AS k UNION ALL SELECT 1) hops)
+        |WHERE ms < win_start + 3600000
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // 43ab — event-SEQUENCE pattern matching (MATCH_RECOGNIZE's
     // poor-man twin, and the per-user behavioral fingerprint): each
     // user's arrival-ordered event types collapse to a symbol string
@@ -2267,7 +3553,7 @@ object Pipeline {
     // funnel v…c…p. ONE user-keyed ObjectHashAggregate builds the
     // path (per-user event counts are human-bounded, never
     // corpus-bounded); the regex scan is a narrow map.
-    "ev_pattern_match" -> ((s, dir) => {
+    Query("ev_pattern_match", (s, dir) => {
       ev(s, dir)
         .select(col("user_id"), col("ms"), col("event_id"),
           substring(col("event_type"), 1, 1).as("sym"))
@@ -2279,8 +3565,19 @@ object Pipeline {
         .withColumn("n_vcp",
           expr("(length(path) - length(regexp_replace(path, 'vcp', ''))) DIV 3"))
         .withColumn("has_funnel", col("path").rlike("v[^p]*c[^p]*p").cast("int"))
-        
-    }),
+    }, oracle =
+      // string_agg ORDER BY (ms, event_id) mirrors Spark's struct
+      // array_sort; the 'g' flag makes regexp_replace global like
+      // Spark's
+      """SELECT user_id, count(*) AS n_events,
+        |  string_agg(left(event_type, 1), '' ORDER BY ms, event_id) AS path,
+        |  (length(string_agg(left(event_type, 1), '' ORDER BY ms, event_id))
+        |   - length(regexp_replace(string_agg(left(event_type, 1), '' ORDER BY ms, event_id),
+        |                           'vcp', '', 'g'))) // 3 AS n_vcp,
+        |  CAST(regexp_matches(string_agg(left(event_type, 1), '' ORDER BY ms, event_id),
+        |                      'v[^p]*c[^p]*p') AS INT) AS has_funnel
+        |FROM (SELECT user_id, event_type, epoch_ms(ts) AS ms, event_id FROM events)
+        |GROUP BY user_id ORDER BY user_id""".stripMargin),
     // 43ac — watermark LATENESS accounting (the batch counterfactual
     // of streaming's withWatermark drop rule): replay the log in
     // arrival order (event_id), hold the running event-time high-water
@@ -2288,12 +3585,18 @@ object Pipeline {
     // tumbling hour, how many events WOULD a 2h watermark drop? The
     // global running max is the budgetSelect prefix-scan shape
     // (operators/Watermark.scala), never a single-task window.
-    "ev_late_events" -> ((s, dir) => {
+    Query("ev_late_events", (s, dir) => {
       graft.operators.Watermark.lateness(ev(s, dir), "event_id", "ms", delayMs = 7200000L)
         .withColumn("win_start", col("ms") - pmod(col("ms"), lit(3600000L)))
         .groupBy("win_start")
         .agg(count(lit(1)).as("n"), sum(col("is_late").cast("long")).as("n_late"))
-}),
+    }, oracle =
+      """WITH e AS (SELECT event_id, epoch_ms(ts) AS ms FROM events),
+        |w AS (SELECT ms, max(ms) OVER (ORDER BY event_id
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS hwm FROM e)
+        |SELECT ms - ((ms % 3600000 + 3600000) % 3600000) AS win_start, count(*) AS n,
+        |  CAST(sum(CASE WHEN hwm - 7200000 > ms THEN 1 ELSE 0 END) AS BIGINT) AS n_late
+        |FROM w GROUP BY 1 ORDER BY 1""".stripMargin),
     // 43ad — seasonal-naive FORECAST backtest (the baseline every
     // volume forecast must beat, and the capacity-planning sanity
     // report): predict each (event_type, day) count by the count 7
@@ -2302,7 +3605,7 @@ object Pipeline {
     // agg, the lag-7 a self-equi-join on (type, day−7) — never a
     // window over raw events; mae_fp4 = ⌊Σ|err|/n·10⁴+0.5⌉ computed
     // as (Σ·2·10⁴+n) DIV (2n), exact on both engines.
-    "ev_forecast_baseline" -> ((s, dir) => {
+    Query("ev_forecast_baseline", (s, dir) => {
       val dayMs = 86400000L
       val daily = ev(s, dir)
         .withColumn("day", expr(s"(ms - pmod(ms, $dayMs)) DIV $dayMs"))
@@ -2315,8 +3618,18 @@ object Pipeline {
         .agg(count(lit(1)).as("n_days"), sum("err").as("total_abs_err"))
         .withColumn("mae_fp4",
           expr("(total_abs_err * 20000 + n_days) DIV (2 * n_days)"))
-        
-    }),
+    }, oracle =
+      """WITH daily AS (
+        |  SELECT event_type, (ms - ((ms % 86400000 + 86400000) % 86400000)) // 86400000 AS day,
+        |    count(*) AS n
+        |  FROM (SELECT event_type, epoch_ms(ts) AS ms FROM events) GROUP BY 1, 2),
+        |j AS (SELECT a.event_type, abs(a.n - b.n) AS err
+        |      FROM daily a JOIN daily b
+        |        ON a.event_type = b.event_type AND a.day = b.day + 7)
+        |SELECT event_type, count(*) AS n_days,
+        |  CAST(sum(err) AS BIGINT) AS total_abs_err,
+        |  CAST((sum(err) * 20000 + count(*)) // (2 * count(*)) AS BIGINT) AS mae_fp4
+        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin),
     // 43g — daily-volume anomaly profile (ingest monitoring: which
     // source×day volumes spike/crater before they poison a mixture):
     // per (event_type, day) counts, flagged |n−μ|>2σ against the
@@ -2324,19 +3637,32 @@ object Pipeline {
     // integer/decimal form ((n·N−S)² > 4(N·Q−S²)), never float
     // mean/stddev, so the flag is engine-exact. One raw-stream
     // groupBy + a broadcast stats join (EventStats.dailyVolumeOutliers).
-    "ev_anomaly" -> ((s, dir) => {
+    Query("ev_anomaly", (s, dir) => {
       val dayMs = 86400000L
       val daily = ev(s, dir)
         .withColumn("day", expr(s"(ms - pmod(ms, $dayMs)) DIV $dayMs"))
         .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
       graft.operators.EventStats.dailyVolumeOutliers(daily, "event_type", "day", "n")
-        
-    }),
+    }, oracle =
+      // the exact integer outlier rule replicated in HUGEINT — any
+      // float-mean drift in either engine breaks the flag bit-for-bit
+      """WITH daily AS (SELECT event_type,
+        |    (epoch_ms(ts) - ((epoch_ms(ts) % 86400000 + 86400000) % 86400000)) // 86400000 AS day,
+        |    count(*) AS n
+        |  FROM events GROUP BY 1, 2),
+        |stats AS (SELECT event_type, count(*) AS nd, sum(n) AS tot,
+        |    sum(CAST(n AS HUGEINT) * n) AS sumsq FROM daily GROUP BY 1)
+        |SELECT d.event_type, CAST(d.day AS BIGINT) AS day, CAST(d.n AS BIGINT) AS n,
+        |  CAST(CASE WHEN (CAST(d.n AS HUGEINT) * nd - tot) * (CAST(d.n AS HUGEINT) * nd - tot)
+        |      > 4 * (CAST(nd AS HUGEINT) * sumsq - CAST(tot AS HUGEINT) * tot)
+        |    THEN 1 ELSE 0 END AS BIGINT) AS outlier
+        |FROM daily d JOIN stats USING (event_type)
+        |ORDER BY event_type, day""".stripMargin),
     // 43b — ordered event funnel (view → click → purchase): stage k
     // requires an event strictly after the user's stage-(k-1) time.
     // Three key-shuffles (one per stage), each with map-side partial
     // min — the classic scalable funnel shape, no per-user sort.
-    "ev_funnel" -> ((s, dir) => {
+    Query("ev_funnel", (s, dir) => {
       val e = ev(s, dir)
       val s1 = e.filter(col("event_type") === "view")
         .groupBy("user_id").agg(min("ms").as("t1"))
@@ -2350,7 +3676,18 @@ object Pipeline {
         df.agg(count(lit(1)).as("n_users")).withColumn("stage", lit(stage))
       cnt(s1, "1_view").unionByName(cnt(s2, "2_click")).unionByName(cnt(s3, "3_purchase"))
         .select("stage", "n_users")
-    }),
+    }, oracle =
+      s"""WITH e AS (SELECT user_id, event_type, epoch_ms(ts) AS ms FROM events),
+        |s1 AS (SELECT user_id, min(ms) AS t1 FROM e WHERE event_type = 'view' GROUP BY user_id),
+        |s2 AS (SELECT e.user_id, min(ms) AS t2 FROM e JOIN s1 USING (user_id)
+        |       WHERE event_type = 'click' AND ms > t1 GROUP BY e.user_id),
+        |s3 AS (SELECT e.user_id, min(ms) AS t3 FROM e JOIN s2 USING (user_id)
+        |       WHERE event_type = 'purchase' AND ms > t2 GROUP BY e.user_id)
+        |SELECT stage, n_users FROM (
+        |  SELECT '1_view' AS stage, count(*) AS n_users FROM s1
+        |  UNION ALL SELECT '2_click', count(*) FROM s2
+        |  UNION ALL SELECT '3_purchase', count(*) FROM s3
+        |) ORDER BY stage""".stripMargin),
     // 43af — WINDOWED first-touch funnel (ev_funnel with a conversion
     // deadline — the product-analytics default): stage k counts only
     // within W = 24h of the PREVIOUS stage's first-touch time, and
@@ -2359,7 +3696,7 @@ object Pipeline {
     // that would have converted does not resurrect the user). Same
     // three key-shuffles with map-side partial mins as the unbounded
     // funnel; lag mass rides along for the conversion-latency report.
-    "ev_funnel_window" -> ((s, dir) => {
+    Query("ev_funnel_window", (s, dir) => {
       val W = 86400000L
       val e = ev(s, dir)
       // stage frames are user-domain-sized and each feeds BOTH the next
@@ -2381,8 +3718,18 @@ object Pipeline {
         .unionByName(cnt(s2, "2_click", col("t2") - col("t1b")))
         .unionByName(cnt(s3, "3_purchase", col("t3") - col("t1c")))
         .select(col("stage"), col("n_users"), coalesce(col("sum_lag_ms"), lit(0L)).as("sum_lag_ms"))
-        
-    }),
+    }, oracle =
+      s"""WITH e AS (SELECT user_id, event_type, epoch_ms(ts) AS ms FROM events),
+        |s1 AS (SELECT user_id, min(ms) AS t1 FROM e WHERE event_type = 'view' GROUP BY user_id),
+        |s2 AS (SELECT e.user_id, min(ms) AS t2, min(t1) AS t1b FROM e JOIN s1 USING (user_id)
+        |       WHERE event_type = 'click' AND ms > t1 AND ms <= t1 + 86400000 GROUP BY e.user_id),
+        |s3 AS (SELECT e.user_id, min(ms) AS t3, min(t1b) AS t1c FROM e JOIN s2 USING (user_id)
+        |       WHERE event_type = 'purchase' AND ms > t2 AND ms <= t2 + 86400000 GROUP BY e.user_id)
+        |SELECT stage, n_users, CAST(coalesce(sum_lag_ms, 0) AS BIGINT) AS sum_lag_ms FROM (
+        |  SELECT '1_view' AS stage, count(*) AS n_users, CAST(0 AS BIGINT) AS sum_lag_ms FROM s1
+        |  UNION ALL SELECT '2_click', count(*), CAST(sum(t2 - t1b) AS BIGINT) FROM s2
+        |  UNION ALL SELECT '3_purchase', count(*), CAST(sum(t3 - t1c) AS BIGINT) FROM s3
+        |) ORDER BY stage""".stripMargin),
     // 43ag — GROWTH ACCOUNTING (new / retained / resurrected /
     // churned per DAY — the canonical user-base decomposition that
     // retention matrices don't give; daily because this corpus is
@@ -2392,7 +3739,7 @@ object Pipeline {
     // every status is then an equi-join on (user, day±1) against
     // that compressed set, churn an anti-join from the day-shifted
     // twin, clipped to observed days. No window over raw events.
-    "ev_growth_accounting" -> ((s, dir) => {
+    Query("ev_growth_accounting", (s, dir) => {
       val dayMs = 86400000L
       val au = ev(s, dir)
         .select(col("user_id"), expr(s"(ms - pmod(ms, $dayMs)) DIV $dayMs").as("day"))
@@ -2422,12 +3769,40 @@ object Pipeline {
           coalesce(col("n_retained"), lit(0L)).as("n_retained"),
           coalesce(col("n_resurrected"), lit(0L)).as("n_resurrected"),
           coalesce(col("n_churned"), lit(0L)).as("n_churned"))
-        
-    }),
+    }, oracle =
+      // same IVF assignment CTEs as annIvfSql; candidates cell-bounded,
+      // per-node top-3, then the mutual (reversed-pair) self-join
+      """WITH au AS (SELECT DISTINCT user_id,
+        |    (ms - ((ms % 86400000 + 86400000) % 86400000)) // 86400000 AS day
+        |  FROM (SELECT user_id, epoch_ms(ts) AS ms FROM events)),
+        |first AS (SELECT user_id, min(day) AS fw FROM au GROUP BY 1),
+        |prev AS (SELECT user_id, day + 1 AS day FROM au),
+        |mw AS (SELECT max(day) AS mw FROM au),
+        |st AS (SELECT au.day,
+        |    CASE WHEN au.day = f.fw THEN 'new'
+        |         WHEN p.user_id IS NOT NULL THEN 'retained'
+        |         ELSE 'resurrected' END AS st
+        |  FROM au JOIN first f USING (user_id)
+        |  LEFT JOIN prev p ON p.user_id = au.user_id AND p.day = au.day),
+        |chn AS (SELECT p.day, count(*) AS n_churned
+        |  FROM prev p, mw
+        |  WHERE p.day <= mw.mw
+        |    AND NOT EXISTS (SELECT 1 FROM au WHERE au.user_id = p.user_id AND au.day = p.day)
+        |  GROUP BY 1),
+        |agg AS (SELECT day,
+        |    CAST(sum(CASE WHEN st = 'new' THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
+        |    CAST(sum(CASE WHEN st = 'retained' THEN 1 ELSE 0 END) AS BIGINT) AS n_retained,
+        |    CAST(sum(CASE WHEN st = 'resurrected' THEN 1 ELSE 0 END) AS BIGINT) AS n_resurrected
+        |  FROM st GROUP BY 1)
+        |SELECT coalesce(agg.day, chn.day) AS day,
+        |  coalesce(n_new, 0) AS n_new, coalesce(n_retained, 0) AS n_retained,
+        |  coalesce(n_resurrected, 0) AS n_resurrected,
+        |  CAST(coalesce(n_churned, 0) AS BIGINT) AS n_churned
+        |FROM agg FULL JOIN chn ON agg.day = chn.day ORDER BY 1""".stripMargin),
     // 43c — cohort retention: users grouped by first-activity week,
     // counted per week-offset they return in. Two key-shuffles (per
     // user cohort min, then per (cohort, offset) distinct count).
-    "ev_retention" -> ((s, dir) => {
+    Query("ev_retention", (s, dir) => {
       val weekMs = 604800000L
       val e = ev(s, dir).withColumn("week", expr(s"(ms - pmod(ms, $weekMs)) DIV $weekMs"))
       val cohorts = e.groupBy("user_id").agg(min("week").as("cohort_week"))
@@ -2436,22 +3811,30 @@ object Pipeline {
         .distinct()
         .groupBy("cohort_week", "week_offset")
         .agg(count(lit(1)).as("n_users"))
-        
-    }),
+    }, oracle =
+      """WITH e AS (SELECT DISTINCT user_id,
+        |    (epoch_ms(ts) - ((epoch_ms(ts) % 604800000 + 604800000) % 604800000)) // 604800000 AS week
+        |  FROM events),
+        |cohorts AS (SELECT user_id, min(week) AS cohort_week FROM e GROUP BY user_id)
+        |SELECT cohort_week, week - cohort_week AS week_offset, count(*) AS n_users
+        |FROM e JOIN cohorts USING (user_id)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // 44 — JSON property extraction (codegen'd path access). NO output
     // orderBy: this is the one query whose output is corpus-sized (a
     // row per event), so a global sort would range-shuffle + totally
     // sort the whole table purely for presentation — at 100× scale the
     // sort IS the query. The checker row-sorts both sides before
     // hashing (tools/check.py), so unordered output verifies the same.
-    "ev_json_extract" -> ((s, dir) => {
+    Query("ev_json_extract", (s, dir) => {
       t(s, dir, "events")
         .select(col("event_id"), get_json_object(col("props"), "$.k").cast("long").as("k_val"))
-    }),
+    }, oracle =
+      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val
+        |FROM events""".stripMargin),
     // 45b — multimodal image metadata: synthesize PNG payloads
     // (mapPartitions), parse dimensions back COLUMNAR from the binary
     // header — the oracle checks the synth→parse roundtrip
-    "mm_image_meta" -> ((s, dir) => {
+    Query("mm_image_meta", (s, dir) => {
       import s.implicits._
       import graft.multimodal.Multimodal
       val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -2464,8 +3847,11 @@ object Pipeline {
         Multimodal.magic(col("payload")).as("fmt"),
         Multimodal.pngWidth(col("payload")).as("width"),
         Multimodal.pngHeight(col("payload")).as("height"))
-        
-    }),
+    }, oracle =
+      """SELECT doc_id, 'png' AS fmt,
+        | CAST(doc_id % 1000 + 1 AS BIGINT) AS width,
+        | CAST(doc_id % 700 + 1 AS BIGINT) AS height
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // 45 — multimodal binary metadata, REAL codec: payloads are
     // synthesized per-row in all three containers (PNG / JPEG with a
     // variable-offset SOF0 segment / GIF), and format + dimensions +
@@ -2474,7 +3860,7 @@ object Pipeline {
     // varies with the APP0 padding and optional COM segment, so the
     // walk is exercised on every row), GIF little-endian logical
     // screen. The oracle checks the synth→parse roundtrip closed-form.
-    "mm_binary_meta" -> ((s, dir) => {
+    Query("mm_binary_meta", (s, dir) => {
       import s.implicits._
       import graft.multimodal.Multimodal
       val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -2495,13 +3881,12 @@ object Pipeline {
         Multimodal.imageWidth(col("payload")).cast("long").as("width"),
         Multimodal.imageHeight(col("payload")).cast("long").as("height"),
         length(col("payload")).cast("long").as("byte_len"))
-        
-    }),
+    }, oracle = mmSql),
     // 45c — audio metadata: REAL RIFF/WAVE canonical-header parse
     // (little-endian fields via reversed hex slices, all columnar/
     // codegen'd) + integer-exact duration; synth→parse roundtrip
     // oracle closed-form in doc_id like mm_binary_meta
-    "mm_audio_meta" -> ((s, dir) => {
+    Query("mm_audio_meta", (s, dir) => {
       import s.implicits._
       import graft.multimodal.Multimodal
       val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -2520,8 +3905,20 @@ object Pipeline {
         Multimodal.wavBitsPerSample(col("payload")).cast("long").as("bits"),
         Multimodal.wavDataBytes(col("payload")).as("data_bytes"),
         Multimodal.wavDurationMs(col("payload")).as("duration_ms"))
-        
-    }),
+    }, oracle =
+      // audio roundtrip mirror: all synth params are closed-form in
+      // doc_id; duration replicates via 64-bit integer division
+      """SELECT doc_id,
+        | CAST(doc_id % 2 + 1 AS BIGINT) AS channels,
+        | CAST(CASE doc_id % 4 WHEN 0 THEN 8000 WHEN 1 THEN 16000
+        |      WHEN 2 THEN 22050 ELSE 44100 END AS BIGINT) AS sample_rate,
+        | CAST(CASE WHEN doc_id % 3 = 0 THEN 8 ELSE 16 END AS BIGINT) AS bits,
+        | CAST(doc_id % 5000 + 100 AS BIGINT) AS data_bytes,
+        | CAST((doc_id % 5000 + 100) * 8000 //
+        |   ((CASE doc_id % 4 WHEN 0 THEN 8000 WHEN 1 THEN 16000
+        |     WHEN 2 THEN 22050 ELSE 44100 END)
+        |    * (doc_id % 2 + 1) * (CASE WHEN doc_id % 3 = 0 THEN 8 ELSE 16 END)) AS BIGINT) AS duration_ms
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // 45g — PCM sample DECODE + loudness profile: the audio twin of
     // the raster ops — every int16 sample is decoded from the WAV
     // payload bytes columnar (one codegen'd byte walk, no UDF, no
@@ -2530,7 +3927,7 @@ object Pipeline {
     // pattern); the DECODE is the operator, and the oracle recomputes
     // the expected samples closed-form from doc_id — any byte-offset
     // or sign-extension drift in the decoder breaks the hash
-    "mm_audio_rms" -> ((s, dir) => {
+    Query("mm_audio_rms", (s, dir) => {
       import s.implicits._
       import graft.multimodal.Multimodal
       val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -2554,8 +3951,19 @@ object Pipeline {
           col("st.sum_sq").as("sum_sq"))
         .withColumn("rms_fp2",
           fp(sqrt(col("sum_sq").cast("double") / col("n_samples").cast("double")), 2))
-        
-    }),
+    }, oracle =
+      // closed-form from doc_id: the generator's sample formula
+      // ((id·31 + 7i²) mod 65536) − 32768 re-derived per index; the
+      // Spark side must DECODE the same values back out of the bytes
+      s"""WITH s AS (SELECT doc_id, doc_id % 200 + 50 AS n FROM documents),
+        |v AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM s),
+        |x AS (SELECT doc_id, ((doc_id * 31 + i * i * 7) % 65536) - 32768 AS val FROM v),
+        |a AS (SELECT doc_id, count(*) AS n_samples, max(abs(val)) AS peak,
+        |    sum(val * val) AS sum_sq FROM x GROUP BY doc_id)
+        |SELECT doc_id, CAST(n_samples AS BIGINT) AS n_samples,
+        |  CAST(peak AS BIGINT) AS peak, CAST(sum_sq AS BIGINT) AS sum_sq,
+        |  ${sqlFp("sqrt(CAST(sum_sq AS DOUBLE) / CAST(n_samples AS DOUBLE))", 2)} AS rms_fp2
+        |FROM a ORDER BY doc_id""".stripMargin),
     // 45k — PCM 2× decimation (the audio RESAMPLE twin of 45j's
     // image resize — the rate-halving pass an audio pipeline runs
     // before feature extraction): decode the same synthetic WAV
@@ -2567,7 +3975,7 @@ object Pipeline {
     // decimation are one narrow columnar projection — zero data
     // shuffles; the derived array binds once per row (staged
     // projection — Catalyst does no CSE inside HOF lambdas).
-    "mm_audio_resample" -> ((s, dir) => {
+    Query("mm_audio_resample", (s, dir) => {
       import s.implicits._
       import graft.multimodal.Multimodal
       val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -2594,8 +4002,21 @@ object Pipeline {
           aggregate(col("_o"), lit(0L), (a, v) => a + v).as("sum_out"),
           array_min(col("_o")).as("min_out"),
           array_max(col("_o")).as("max_out"))
-        
-    }),
+    }, oracle =
+      // PCM 2× decimation: every output sample recomputed closed-form
+      // from doc_id; floor through a double because DuckDB's //
+      // truncates on negative sums while the Spark side's arithmetic
+      // shift floors
+      """WITH d AS (SELECT doc_id, doc_id % 200 + 50 AS n FROM documents),
+        |o AS (SELECT doc_id, unnest(range(0, n // 2)) AS k FROM d),
+        |sm AS (SELECT doc_id, CAST(floor(CAST(
+        |    ((doc_id * 31 + (2 * k) * (2 * k) * 7) % 65536 - 32768) +
+        |    ((doc_id * 31 + (2 * k + 1) * (2 * k + 1) * 7) % 65536 - 32768)
+        |    AS DOUBLE) / 2) AS BIGINT) AS v
+        |  FROM o)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_out,
+        |  CAST(sum(v) AS BIGINT) AS sum_out, min(v) AS min_out, max(v) AS max_out
+        |FROM sm GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // 45h — frame-energy SEGMENTATION over decoded PCM (the
     // silence-trim / voice-activity shape of an audio training
     // pipeline): 256-sample frames, exact BIGINT energy per frame,
@@ -2612,7 +4033,7 @@ object Pipeline {
     // signature groups (rep = min doc, size) — the audio twin of the
     // image aHash grouping. Decode + energies are the native
     // codegen'd byte walks; the fold is frame-count-bounded.
-    "mm_audio_fingerprint" -> ((s, dir) => {
+    Query("mm_audio_fingerprint", (s, dir) => {
       import s.implicits._
       import graft.multimodal.Multimodal
       val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -2648,9 +4069,33 @@ object Pipeline {
         .agg(min("doc_id").as("rep_id"), count(lit(1)).as("group_size"))
       fps.join(groups, Seq("afp", "n_frames"))
         .select("doc_id", "n_frames", "afp", "rep_id", "group_size")
-        
-    }),
-    "mm_audio_seg" -> ((s, dir) => {
+    }, oracle =
+      // the generator's quiet-frame mask re-derived closed-form:
+      // (v & 63) is the nonneg mod-64 of the two's-complement sample,
+      // i.e. ((v % 64) + 64) % 64; complete frames only (i < frames·256)
+      // delta-sign bits folded MSB-first over the first 62 deltas
+      // (mirrors the Spark-side slice cap): b_f carries 2^(cap-f)
+      // with cap = least(frames-1, 62)
+      """WITH s AS (SELECT doc_id, doc_id % 10 + 4 AS frames FROM documents),
+        |v AS (SELECT doc_id, frames, unnest(range(0, frames * 256)) AS i FROM s),
+        |x AS (SELECT doc_id, frames, i // 256 AS f,
+        |    CASE WHEN ((i // 256) + doc_id) % 3 = 0
+        |      THEN (((((doc_id * 31 + i * i * 7) % 65536) - 32768) % 64) + 64) % 64
+        |      ELSE ((doc_id * 31 + i * i * 7) % 65536) - 32768 END AS val
+        |  FROM v),
+        |e AS (SELECT doc_id, frames, f, sum(val * val) AS energy FROM x GROUP BY 1, 2, 3),
+        |d AS (SELECT doc_id, frames, f,
+        |    CASE WHEN energy > lag(energy) OVER (PARTITION BY doc_id ORDER BY f)
+        |      THEN 1 ELSE 0 END AS b FROM e),
+        |fp AS (SELECT doc_id, CAST(frames AS BIGINT) AS n_frames,
+        |    CAST(sum(CASE WHEN f >= 1 AND f <= LEAST(frames - 1, 62)
+        |      THEN b * (CAST(1 AS BIGINT) << CAST(LEAST(frames - 1, 62) - f AS INT)) ELSE 0 END) AS BIGINT) AS afp
+        |  FROM d GROUP BY 1, 2),
+        |g AS (SELECT afp, n_frames, min(doc_id) AS rep_id, count(*) AS group_size
+        |  FROM fp GROUP BY 1, 2)
+        |SELECT fp.doc_id, fp.n_frames, fp.afp, g.rep_id, g.group_size
+        |FROM fp JOIN g USING (afp, n_frames) ORDER BY doc_id""".stripMargin),
+    Query("mm_audio_seg", (s, dir) => {
       import s.implicits._
       import graft.multimodal.Multimodal
       val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -2682,8 +4127,26 @@ object Pipeline {
           coalesce(array_max(col("ai")), lit(-1)).cast("long").as("last_active"),
           fp(size(col("ai")).cast("double") / col("n_frames").cast("double"), 4)
             .as("active_fp4"))
-        
-    }),
+    }, oracle =
+      s"""WITH s AS (SELECT doc_id, doc_id % 10 + 4 AS frames FROM documents),
+        |v AS (SELECT doc_id, frames, unnest(range(0, frames * 256)) AS i FROM s),
+        |x AS (SELECT doc_id, frames, i // 256 AS f,
+        |    CASE WHEN ((i // 256) + doc_id) % 3 = 0
+        |      THEN (((((doc_id * 31 + i * i * 7) % 65536) - 32768) % 64) + 64) % 64
+        |      ELSE ((doc_id * 31 + i * i * 7) % 65536) - 32768 END AS val
+        |  FROM v),
+        |e AS (SELECT doc_id, frames, f, sum(val * val) AS energy FROM x GROUP BY 1, 2, 3),
+        |a AS (SELECT doc_id, frames,
+        |    sum(CASE WHEN energy > 1048576 THEN 1 ELSE 0 END) AS n_active,
+        |    min(CASE WHEN energy > 1048576 THEN f END) AS first_a,
+        |    max(CASE WHEN energy > 1048576 THEN f END) AS last_a
+        |  FROM e GROUP BY 1, 2)
+        |SELECT doc_id, CAST(frames AS BIGINT) AS n_frames,
+        |  CAST(n_active AS BIGINT) AS n_active,
+        |  CAST(coalesce(first_a, -1) AS BIGINT) AS first_active,
+        |  CAST(coalesce(last_a, -1) AS BIGINT) AS last_active,
+        |  ${sqlFp("CAST(n_active AS DOUBLE) / CAST(frames AS DOUBLE)", 4)} AS active_fp4
+        |FROM a ORDER BY doc_id""".stripMargin),
     // 45d — video frame sampling (1 frame/sec) over the GVID raw
     // container: header parse + sampled-index explode + exact
     // timestamps + offsets, with a probe byte READ at each computed
@@ -2691,7 +4154,7 @@ object Pipeline {
     // codec decode is the documented stub boundary (mapPartitions over
     // substr(payload, off, size) at deploy time); the plumbing —
     // schema, explode shape, zero-shuffle narrowness — is real
-    "mm_frame_sample" -> ((s, dir) => {
+    Query("mm_frame_sample", (s, dir) => {
       import s.implicits._
       import graft.multimodal.Multimodal
       val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -2704,8 +4167,22 @@ object Pipeline {
         })
         .toDF("doc_id", "payload")
       Multimodal.frameSample(payloads, "doc_id", "payload")
-        
-    }),
+    }, oracle =
+      // the synthesized container's parameters re-derived from doc_id;
+      // the probe byte re-derives the fill rule — if the Spark side's
+      // offsets drifted by even one byte the probe would read a
+      // different frame's fill (or header bytes) and hash-mismatch
+      """WITH v AS (SELECT doc_id,
+        |    doc_id % 8 + 1 AS w, doc_id % 4 + 1 AS h,
+        |    CASE doc_id % 4 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 5 ELSE 10 END AS fps,
+        |    doc_id % 24 + 2 AS n
+        |  FROM documents),
+        |idx AS (SELECT doc_id, w, h, fps, unnest(range(0, n, fps)) AS i FROM v)
+        |SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
+        |  CAST(i * 1000 // fps AS BIGINT) AS ts_ms,
+        |  CAST(14 + i * w * h AS BIGINT) AS frame_off,
+        |  CAST((doc_id * 31 + i * 7) % 251 AS BIGINT) AS probe_byte
+        |FROM idx ORDER BY doc_id, frame_idx""".stripMargin),
     // 45f — video frame DECODE (closing 45d's declared stub): frames
     // arrive RLE-COMPRESSED in the GVRL container (per-frame offset
     // index in the header, MP4-style), sampling + index lookup +
@@ -2717,7 +4194,7 @@ object Pipeline {
     // (doc_id, frame_idx): a two-value raster (first q pixels a, rest
     // b) whose runs the codec must reproduce EXACTLY for the sum and
     // the 64 threshold bits to land.
-    "mm_frame_decode" -> ((s, dir) => {
+    Query("mm_frame_decode", (s, dir) => {
       import s.implicits._
       import graft.multimodal.Multimodal
       val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -2738,7 +4215,30 @@ object Pipeline {
           Multimodal.rasterSum(col("raster"), 64).as("sum_pix"),
           Multimodal.aHashHalf(col("raster"), 32).as("phash_hi"),
           Multimodal.aHashHalf(col("raster"), 0).as("phash_lo"))
-    }),
+    }, oracle =
+      // the decoded raster re-derived closed-form (first q pixels a,
+      // rest b); Spark DECOMPRESSES the actual run pairs out of the
+      // container — a codec bug (run order, count off-by-one, frame
+      // offset drift) changes the pixel sum or flips threshold bits
+      """WITH v AS (SELECT doc_id,
+        |    CASE doc_id % 4 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 5 ELSE 10 END AS fps,
+        |    doc_id % 24 + 2 AS n
+        |  FROM documents),
+        |idx AS (SELECT doc_id, fps, unnest(range(0, n, fps)) AS i FROM v),
+        |px AS (SELECT doc_id, fps, i,
+        |    list_transform(range(0, 64),
+        |      p -> CASE WHEN p < doc_id % 63 + 1 THEN (doc_id * 31 + i * 7) % 251
+        |                ELSE (doc_id * 17 + i * 11) % 251 END) AS ps
+        |  FROM idx),
+        |px2 AS (SELECT doc_id, fps, i, ps, list_sum(ps) AS s FROM px)
+        |SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
+        |  CAST(i * 1000 // fps AS BIGINT) AS ts_ms,
+        |  CAST(s AS BIGINT) AS sum_pix,
+        |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[33:64])),
+        |    (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS BIGINT) AS phash_hi,
+        |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[1:32])),
+        |    (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS BIGINT) AS phash_lo
+        |FROM px2 ORDER BY doc_id, frame_idx""".stripMargin),
     // 45i — scene-cut detection over decoded frames: every frame
     // decoded (stride 1 through the same GVRL index/RLE codec as
     // 45f), per-clip lag window, SAD (native graft_raster_sad)
@@ -2748,7 +4248,7 @@ object Pipeline {
     // a 97-multiple) with a ≤2-intensity single-pixel jitter inside a
     // scene, so threshold 64 separates exactly; the oracle recomputes
     // every pixel closed-form from (doc_id, frame_idx)
-    "mm_scene_cut" -> ((s, dir) => {
+    Query("mm_scene_cut", (s, dir) => {
       import s.implicits._
       import graft.multimodal.Multimodal
       val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -2763,8 +4263,30 @@ object Pipeline {
         })
         .toDF("doc_id", "payload")
       Multimodal.sceneCuts(payloads, "doc_id", "payload", rasterLen = 64, threshold = 64L)
-        
-    }),
+    }, oracle =
+      // every pixel of every frame recomputed closed-form; SAD over
+      // consecutive-frame pairs, cuts where SAD > 64 — Spark decodes
+      // the actual RLE payload, so any codec/offset drift changes a
+      // pixel and the SAD
+      """WITH v AS (SELECT doc_id,
+        |    CASE doc_id % 4 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 5 ELSE 10 END AS fps,
+        |    doc_id % 24 + 2 AS n
+        |  FROM documents),
+        |idx AS (SELECT doc_id, fps, unnest(range(0, n)) AS i FROM v),
+        |px AS (SELECT doc_id, fps, i,
+        |    list_transform(range(0, 64),
+        |      p -> (doc_id * 31 + (i // 5) * 97 + p * 7) % 251 +
+        |           CASE WHEN p = 0 THEN i % 3 ELSE 0 END) AS ps
+        |  FROM idx),
+        |pair AS (SELECT a.doc_id, a.fps, a.i, b.ps AS prev, a.ps AS cur
+        |  FROM px a JOIN px b ON b.doc_id = a.doc_id AND b.i = a.i - 1),
+        |sd AS (SELECT doc_id, fps, i,
+        |    list_sum(list_transform(range(0, 64),
+        |      p -> abs(cur[CAST(p AS INT) + 1] - prev[CAST(p AS INT) + 1]))) AS sad
+        |  FROM pair)
+        |SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
+        |  CAST(i * 1000 // fps AS BIGINT) AS ts_ms, CAST(sad AS BIGINT) AS sad
+        |FROM sd WHERE sad > 64 ORDER BY doc_id, frame_idx""".stripMargin),
     // 45e — image near-dup via perceptual hash: synthetic 8×8
     // grayscale rasters (deterministic stand-in for decoded
     // thumbnails; the id%3 term is a brightness shift), average-hash
@@ -2772,7 +4294,7 @@ object Pipeline {
     // comparison, two uint32 halves), then dedup-group on the hash.
     // Brightness-shifted copies land in one group — that's the
     // "perceptual": byte-level dedup would keep all three variants
-    "mm_image_phash" -> ((s, dir) => {
+    Query("mm_image_phash", (s, dir) => {
       import s.implicits._
       import graft.multimodal.Multimodal
       val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -2785,8 +4307,27 @@ object Pipeline {
         .agg(min("doc_id").as("rep_id"), count(lit(1)).as("group_size"))
       hashed.join(groups, Seq("phash_hi", "phash_lo"))
         .select("doc_id", "phash_hi", "phash_lo", "rep_id", "group_size")
-        
-    }),
+    }, oracle =
+      // raster re-derived from the synth rule; Spark parses the actual
+      // payload bytes — a 1-byte drift in the binary path flips a bit.
+      // Bits compare pixel·64 vs the pixel sum (strict, integer), MSB
+      // first fold per uint32 half
+      """WITH px AS (SELECT doc_id,
+        |    list_transform(range(0, 64),
+        |      i -> ((doc_id % 16) * 31 + i * 7) % 240 + doc_id % 3) AS ps
+        |  FROM documents),
+        |px2 AS (SELECT doc_id, ps, list_sum(ps) AS s FROM px),
+        |h AS (SELECT doc_id,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[33:64])),
+        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_hi,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[1:32])),
+        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_lo
+        |  FROM px2),
+        |g AS (SELECT phash_hi, phash_lo, min(doc_id) AS rep_id, count(*) AS group_size
+        |  FROM h GROUP BY 1, 2)
+        |SELECT h.doc_id, CAST(h.phash_hi AS BIGINT) AS phash_hi,
+        |  CAST(h.phash_lo AS BIGINT) AS phash_lo, g.rep_id, g.group_size
+        |FROM h JOIN g USING (phash_hi, phash_lo) ORDER BY doc_id""".stripMargin),
     // 45o — perceptual-hash NEAR-dup pairs (the image twin of
     // dd_simhash64_pairs — multimodal dedup is bit-signature dedup
     // with a different hasher): exact-signature groups collapse
@@ -2797,7 +4338,7 @@ object Pipeline {
     // brute all-pairs filter over the distinct-signature groups,
     // with hamming as the sum of the two half XOR popcounts (the
     // 64-bit recompose overflows SQL BIGINT multiply).
-    "dd_phash_neardup" -> ((s, dir) => {
+    Query("dd_phash_neardup", (s, dir) => {
       import s.implicits._
       import graft.multimodal.Multimodal
       val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -2819,15 +4360,40 @@ object Pipeline {
         .join(groups.select(col("rep").as("doc_a"), col("n").as("size_a")), "doc_a")
         .join(groups.select(col("rep").as("doc_b"), col("n").as("size_b")), "doc_b")
         .select("doc_a", "doc_b", "hamming", "size_a", "size_b")
-        
-    }),
+    }, oracle =
+      // hamming over the two 32-bit halves (the 64-bit recompose
+      // would overflow BIGINT multiply); brute all-pairs over the
+      // ≤ signature-domain distinct groups — the banded join is
+      // lossless at hamming ≤ 7 by pigeonhole
+      """WITH px AS (SELECT doc_id,
+        |    list_transform(range(0, 64),
+        |      i -> ((doc_id % 16) * 31 + i * 7) % 240 + doc_id % 3) AS ps
+        |  FROM documents),
+        |px2 AS (SELECT doc_id, ps, list_sum(ps) AS s FROM px),
+        |h AS (SELECT doc_id,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[33:64])),
+        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_hi,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[1:32])),
+        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_lo
+        |  FROM px2),
+        |g AS (SELECT phash_hi, phash_lo, min(doc_id) AS rep, count(*) AS n
+        |  FROM h GROUP BY 1, 2)
+        |SELECT a.rep AS doc_a, b.rep AS doc_b,
+        |  CAST(bit_count(xor(a.phash_hi, b.phash_hi))
+        |     + bit_count(xor(a.phash_lo, b.phash_lo)) AS INT) AS hamming,
+        |  a.n AS size_a, b.n AS size_b
+        |FROM g a, g b
+        |WHERE a.rep < b.rep
+        |  AND bit_count(xor(a.phash_hi, b.phash_hi))
+        |    + bit_count(xor(a.phash_lo, b.phash_lo)) <= 7
+        |ORDER BY 1, 2""".stripMargin),
     // 45p — image DEDUP CLUSTERS (the end-to-end multimodal dedup:
     // 45o's pairs closed into groups): connected components over the
     // signature-representative pair graph, reported as cluster id
     // (min rep) + signature count + total image mass. The component
     // iteration runs on the REP graph (signature-domain-sized, ≪
     // corpus); image mass joins back from the group table.
-    "mm_image_dedup_cluster" -> ((s, dir) => {
+    Query("mm_image_dedup_cluster", (s, dir) => {
       import s.implicits._
       import graft.multimodal.Multimodal
       val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -2847,8 +4413,35 @@ object Pipeline {
         .join(groups.select(col("rep").as("doc_id"), col("n")), "doc_id")
         .groupBy("component")
         .agg(count(lit(1)).as("n_sigs"), sum("n").as("n_images"))
-        
-    }),
+    }, oracle =
+      // the dd_components recursive closure over the phash rep graph
+      """WITH RECURSIVE px AS (SELECT doc_id,
+        |    list_transform(range(0, 64),
+        |      i -> ((doc_id % 16) * 31 + i * 7) % 240 + doc_id % 3) AS ps
+        |  FROM documents),
+        |px2 AS (SELECT doc_id, ps, list_sum(ps) AS s FROM px),
+        |h AS (SELECT doc_id,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[33:64])),
+        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_hi,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[1:32])),
+        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_lo
+        |  FROM px2),
+        |g AS (SELECT phash_hi, phash_lo, min(doc_id) AS rep, count(*) AS n
+        |  FROM h GROUP BY 1, 2),
+        |cand AS (SELECT a.rep AS doc_a, b.rep AS doc_b
+        |  FROM g a, g b
+        |  WHERE a.rep < b.rep
+        |    AND bit_count(xor(a.phash_hi, b.phash_hi))
+        |      + bit_count(xor(a.phash_lo, b.phash_lo)) <= 7),
+        |sym AS (SELECT doc_a AS src, doc_b AS dst FROM cand
+        |        UNION ALL SELECT doc_b, doc_a FROM cand),
+        |lbl(node, label) AS (
+        |  SELECT rep, rep FROM g
+        |  UNION
+        |  SELECT s.dst, l.label FROM lbl l JOIN sym s ON s.src = l.node),
+        |comp AS (SELECT node, min(label) AS component FROM lbl GROUP BY 1)
+        |SELECT component, count(*) AS n_sigs, CAST(sum(n) AS BIGINT) AS n_images
+        |FROM comp JOIN g ON g.rep = comp.node GROUP BY 1 ORDER BY 1""".stripMargin),
     // 45m — per-CHANNEL pixel normalization constants (the
     // dataset-level mean/variance every vision pipeline computes once
     // — the "ImageNet mean/std" numbers baked into preprocessing):
@@ -2858,7 +4451,7 @@ object Pipeline {
     // DECIMAL(38,0) (exact past 10⁹ images where long products
     // overflow), ONE double divide at the end. Narrow columnar map →
     // a 3-key rollup: zero joins, the shuffle is 3×tasks partial rows.
-    "mm_channel_stats" -> ((s, dir) => {
+    Query("mm_channel_stats", (s, dir) => {
       import s.implicits._
       import graft.multimodal.Multimodal
       val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
@@ -2880,8 +4473,18 @@ object Pipeline {
           fp((col("n_px").cast(D38) * col("sumsq_px").cast(D38) -
               col("sum_px").cast(D38) * col("sum_px").cast(D38)).cast("double") /
              (col("n_px").cast("double") * col("n_px").cast("double")), 4).as("var_fp4"))
-        
-    }),
+    }, oracle =
+      // channel-planar synth rule re-derived per (channel, pixel);
+      // moment identity in HUGEINT mirrors Spark's DECIMAL(38,0)
+      s"""WITH px AS (
+        |  SELECT c, ((doc_id % 16) * 31 + i * 7 + c * 11) % 240 + doc_id % 3 AS p
+        |  FROM documents CROSS JOIN range(0, 3) t1(c) CROSS JOIN range(0, 64) t2(i)),
+        |a AS (SELECT c AS channel, count(*) AS n_px, CAST(sum(p) AS BIGINT) AS sum_px,
+        |    CAST(sum(p * p) AS BIGINT) AS sumsq_px FROM px GROUP BY 1)
+        |SELECT channel, n_px, sum_px, sumsq_px,
+        |  ${sqlFp("CAST(sum_px AS DOUBLE) / CAST(n_px AS DOUBLE)", 4)} AS mean_fp4,
+        |  ${sqlFp("CAST(CAST(n_px AS HUGEINT) * sumsq_px - CAST(sum_px AS HUGEINT) * sum_px AS DOUBLE) / (CAST(n_px AS DOUBLE) * CAST(n_px AS DOUBLE))", 4)} AS var_fp4
+        |FROM a ORDER BY channel""".stripMargin),
     // 45j — image RESIZE (the decode→resize→featurize pipeline's
     // middle stage, named by the brief): integer box-filter 2×
     // downsample over the same synthetic 8×8 rasters as 45e — each
@@ -2892,7 +4495,7 @@ object Pipeline {
     // any drift in offset math, the unsigned-byte read, or the floor
     // mean hash-mismatches. Pure narrow map + posexplode — zero data
     // shuffles, resize at 100 TB is a projection.
-    "mm_image_resize" -> ((s, dir) => {
+    Query("mm_image_resize", (s, dir) => {
       import s.implicits._
       import graft.multimodal.Multimodal
       val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -2902,39 +4505,90 @@ object Pipeline {
         .select(col("doc_id"), posexplode(Multimodal.boxDownsample8(col("payload"))))
         .toDF("doc_id", "pos", "px")
         .select(col("doc_id"), col("pos").cast("long").as("pos"), col("px"))
-        
-    }),
+    }, oracle =
+      // resize: every 2×2 block of the closed-form synthGray8x8 raster
+      // floor-averages to one output pixel — integer // 4 mirrors the
+      // Spark side's shift
+      """WITH px AS (SELECT doc_id, CAST(i AS BIGINT) AS i,
+        |    CAST(((doc_id % 16) * 31 + i * 7) % 240 + doc_id % 3 AS BIGINT) AS v
+        |  FROM documents, range(0, 64) t(i)),
+        |o AS (SELECT doc_id, ((i // 8) // 2) * 4 + (i % 8) // 2 AS pos, v FROM px)
+        |SELECT doc_id, CAST(pos AS BIGINT) AS pos,
+        |  CAST(sum(v) // 4 AS BIGINT) AS px
+        |FROM o GROUP BY doc_id, pos ORDER BY doc_id, pos""".stripMargin),
     // 32d — cross-document SEGMENT-level dedup (Lee et al. 2022
     // granularity): consecutive 8-token segments occurring in >= 2
     // docs are stripped and the text reassembled. An 8-token
     // boilerplate header is planted on every third doc so the
     // common-segment path provably fires at every SF.
-    "dd_segment_dedup" -> ((s, dir) => {
+    Query("dd_segment_dedup", (s, dir) => {
       val docs = t(s, dir, "documents")
         .withColumn("aug",
           when(col("doc_id") % 3 === 0,
             concat(lit("terms of service apply all rights reserved worldwide "), col("text")))
           .otherwise(col("text")))
       Dedup.segmentDedup(docs, "doc_id", "aug", k = 8, threshold = 2)
-        
+    }, oracle = {
+      // 8-token segments over the boilerplate-planted text; segments
+      // in >= 2 distinct docs are stripped, survivors re-join in order
+      val augToks = toksSql.replace("lower(text)",
+        "lower(CASE WHEN doc_id % 3 = 0 THEN 'terms of service apply all rights reserved worldwide ' || text ELSE text END)")
+      s"""WITH tk AS (SELECT doc_id, $augToks AS toks FROM documents),
+        |segs AS (SELECT doc_id,
+        |    unnest(range(0, greatest(1, CAST(ceil(len(toks) / 8.0) AS BIGINT)))) AS pos, toks
+        |  FROM tk),
+        |segs2 AS (SELECT doc_id, pos,
+        |    array_to_string(list_slice(toks, pos * 8 + 1, pos * 8 + 8), ' ') AS seg
+        |  FROM segs),
+        |common AS (SELECT seg FROM segs2 GROUP BY seg HAVING count(DISTINCT doc_id) >= 2)
+        |SELECT s.doc_id AS doc,
+        |  coalesce(string_agg(s.seg, ' ' ORDER BY s.pos) FILTER (WHERE c.seg IS NULL), '') AS clean_text,
+        |  count(*) FILTER (WHERE c.seg IS NULL) AS n_kept,
+        |  count(*) FILTER (WHERE c.seg IS NOT NULL) AS n_dropped
+        |FROM segs2 s LEFT JOIN common c USING (seg)
+        |GROUP BY 1 ORDER BY doc""".stripMargin
     }),
     // 41g — token-window chunking (context-window prep): 16-token
     // windows advancing by 12 (4-token overlap), one row per chunk
-    "txt_chunk" -> ((s, dir) => {
+    Query("txt_chunk", (s, dir) => {
       graft.text.Chunker.chunk(t(s, dir, "documents"), "doc_id", "text",
         window = 16, stride = 12)
-        
-    }),
+    }, oracle =
+      s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
+        |s AS (SELECT doc_id,
+        |    unnest(range(0, greatest(1, CAST(ceil(len(toks) / 12.0) AS BIGINT)))) AS cid, toks
+        |  FROM tk)
+        |SELECT doc_id, CAST(cid AS BIGINT) AS chunk_id,
+        |  CAST(len(list_slice(toks, cid * 12 + 1, cid * 12 + 16)) AS BIGINT) AS n_tokens,
+        |  array_to_string(list_slice(toks, cid * 12 + 1, cid * 12 + 16), ' ') AS chunk_text
+        |FROM s ORDER BY doc_id, chunk_id""".stripMargin),
     // 46 — domain mixing: stratified hash-deterministic sampling with
     // per-source rates and unbiased 1/rate weights (no rand() — the
     // keep decision is a pure function of the id, so task retries and
     // reruns agree)
-    "smp_sample" -> ((s, dir) => {
+    Query("smp_sample", (s, dir) => {
       graft.sample.Sampling.stratifiedSample(
         t(s, dir, "documents").select("doc_id", "source"), "doc_id", "source",
         rates = Map("src0" -> 1.0, "src1" -> 1.0, "src2" -> 0.5, "src3" -> 0.5, "src4" -> 0.5),
         defaultRate = 0.25)
-}),
+    }, oracle = {
+      // u = uint32(first 8 md5 hex chars of 'smp:doc_id') / 2^32 —
+      // exact in double on both engines; rates are dyadic so the
+      // comparison and 1/rate are float-exact too
+      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
+        | list_transform(range(1, 9),
+        |   i -> CAST(strpos('0123456789abcdef',
+        |          substr(md5('smp:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
+        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      s"""SELECT doc_id, source, ${sqlFp("1.0 / rate", 4)} AS weight_fp4
+        |FROM (SELECT doc_id, source,
+        |    CASE WHEN source IN ('src0','src1') THEN 1.0
+        |         WHEN source IN ('src2','src3','src4') THEN 0.5
+        |         ELSE 0.25 END AS rate
+        |  FROM documents)
+        |WHERE CAST($u32 AS DOUBLE) / 4294967296.0 < rate
+        |ORDER BY doc_id""".stripMargin
+    }),
     // 46k — WEIGHT-proportional sampling without replacement
     // (sequential Poisson / priority sampling, Ohlsson 1998;
     // Duffield–Lund–Thorup 2007): priority q = w/u, top-k by q —
@@ -2942,32 +4596,67 @@ object Pipeline {
     // sampling can't pin the count). Narrow priority computation +
     // TakeOrderedAndProject; the single division is IEEE-identical on
     // both engines so the selected set replicates bit-for-bit
-    "smp_weighted" -> ((s, dir) => {
+    Query("smp_weighted", (s, dir) => {
       graft.sample.Sampling.prioritySample(
         t(s, dir, "documents").select("doc_id", "source", "n_chars"),
         "doc_id", "n_chars", k = 100)
         .select(col("doc_id"), col("source"), col("n_chars"),
           fp(col("_prio"), 4).as("prio_fp4"))
-        
+    }, oracle = {
+      // priority q = n_chars / ((u32 + 0.5) / 2^32) — one exact
+      // dyadic add, one exact dyadic division, one IEEE division:
+      // both engines produce the identical double, so the top-100
+      // SET matches bit-for-bit (doc_id tiebreak)
+      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
+        | list_transform(range(1, 9),
+        |   i -> CAST(strpos('0123456789abcdef',
+        |          substr(md5('wsmp:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
+        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      s"""SELECT doc_id, source, n_chars, prio_fp4 FROM (
+        |  SELECT doc_id, source, n_chars,
+        |    ${sqlFp("CAST(n_chars AS DOUBLE) / ((CAST(" + u32 + " AS DOUBLE) + 0.5) / 4294967296.0)", 4)} AS prio_fp4,
+        |    CAST(n_chars AS DOUBLE) / ((CAST($u32 AS DOUBLE) + 0.5) / 4294967296.0) AS prio
+        |  FROM documents
+        |  ORDER BY prio DESC, doc_id LIMIT 100)
+        |ORDER BY doc_id""".stripMargin
     }),
     // 46e — deterministic disjoint train/val/test split: md5-uniform
     // vs cumulative dyadic bounds, every row in exactly one split,
     // rerun/retry/partitioning-stable; zero shuffle
-    "smp_split" -> ((s, dir) => {
+    Query("smp_split", (s, dir) => {
       graft.sample.Sampling.split(
         t(s, dir, "documents").select("doc_id", "source"), "doc_id",
         Seq("train" -> 0.75, "val" -> 0.125, "test" -> 0.125))
-        
+    }, oracle = {
+      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
+        | list_transform(range(1, 9),
+        |   i -> CAST(strpos('0123456789abcdef',
+        |          substr(md5('spl:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
+        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      s"""SELECT doc_id, source,
+        |  CASE WHEN u < 0.75 THEN 'train' WHEN u < 0.875 THEN 'val' ELSE 'test' END AS split
+        |FROM (SELECT doc_id, source,
+        |    CAST($u32 AS DOUBLE) / 4294967296.0 AS u FROM documents)
+        |ORDER BY doc_id""".stripMargin
     }),
     // 46n — deterministic k-FOLD cross-validation assignment (the
     // eval-protocol twin of 46e's single split): fold = floor(u·5)
     // over the md5-uniform — fold f's train set is "fold != f",
     // recomputable anywhere without materializing 5 corpus copies;
     // zero shuffle
-    "smp_kfold" -> ((s, dir) => {
+    Query("smp_kfold", (s, dir) => {
       graft.sample.Sampling.kfold(
         t(s, dir, "documents").select("doc_id", "source"), "doc_id", k = 5)
-        
+    }, oracle = {
+      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
+        | list_transform(range(1, 9),
+        |   i -> CAST(strpos('0123456789abcdef',
+        |          substr(md5('kf:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
+        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      s"""SELECT doc_id, source, CAST(least(floor(u * 5), 4) AS BIGINT) AS fold
+        |FROM (SELECT doc_id, source,
+        |    CAST($u32 AS DOUBLE) / 4294967296.0 AS u FROM documents)
+        |ORDER BY doc_id""".stripMargin
     }),
     // 46o — CURRICULUM staging (shortest-first curriculum learning —
     // the canonical length-ordered baseline): docs bucket into 3
@@ -2976,7 +4665,7 @@ object Pipeline {
     // discipline — the window runs over DISTINCT lengths, value-
     // domain-bounded, never corpus rows), broadcast back as one row;
     // stage assignment is a narrow map, the report a 3-row rollup.
-    "smp_curriculum" -> ((s, dir) => {
+    Query("smp_curriculum", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("n_chars"),
         size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
       val h = docs.groupBy("n_chars").agg(count(lit(1)).as("k")).localCheckpoint()
@@ -2994,71 +4683,139 @@ object Pipeline {
         .groupBy("stage")
         .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("sum_tokens"),
           min("n_chars").as("min_chars"), max("n_chars").as("max_chars"))
-        
-    }),
+    }, oracle =
+      // exact tercile thresholds from the distinct-length histogram —
+      // the ev_percentile rank-scan shape in SQL
+      s"""WITH d AS (SELECT doc_id, n_chars,
+        |    CAST(len($toksSql) AS BIGINT) AS n_tokens FROM documents),
+        |h AS (SELECT n_chars, count(*) AS k FROM d GROUP BY 1),
+        |c AS (SELECT n_chars, sum(k) OVER (ORDER BY n_chars) AS cum,
+        |             sum(k) OVER () AS n FROM h),
+        |t AS (SELECT min(CASE WHEN cum >= (n + 2) // 3 THEN n_chars END) AS t1,
+        |             min(CASE WHEN cum >= (2 * n + 2) // 3 THEN n_chars END) AS t2 FROM c)
+        |SELECT CASE WHEN n_chars <= t1 THEN 1 WHEN n_chars <= t2 THEN 2 ELSE 3 END AS stage,
+        |  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
+        |  min(n_chars) AS min_chars, max(n_chars) AS max_chars
+        |FROM d, t GROUP BY 1 ORDER BY 1""".stripMargin),
     // 46f — budget-bounded corpus selection: best docs (longest,
     // id tiebreak) kept while the running token total stays within
     // budget — a global ordered cumsum WITHOUT a single-task window
     // (range repartition + broadcast prefix offsets)
-    "smp_budget" -> ((s, dir) => {
+    Query("smp_budget", (s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"),
           size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
       graft.sample.Sampling.budgetSelect(docs, "doc_id", "n_chars", "n_tokens", budget = 20000L)
-        
-    }),
+    }, oracle =
+      // global ordered cumsum mirror; ROWS frame (the order is total,
+      // but be explicit) and BIGINT cast (DuckDB sums BIGINT to HUGEINT)
+      s"""WITH t AS (SELECT doc_id, n_chars, CAST(len($toksSql) AS BIGINT) AS n_tokens
+        |           FROM documents),
+        |c AS (SELECT *, CAST(sum(n_tokens) OVER (ORDER BY n_chars DESC, doc_id
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_weight
+        |      FROM t)
+        |SELECT doc_id, n_chars, n_tokens, cum_weight FROM c
+        |WHERE cum_weight <= 20000 ORDER BY doc_id""".stripMargin),
     // 46g — domain-MIXTURE selection: per-source budget-bounded pick
     // (mixture weight × total budget resolved to per-source token
     // budgets; src4 has no entry and drops — the unknown-stratum
     // contract). budgetSelect's no-single-task-cumsum shape applied
     // per stratum in ONE pass: offsets keyed by (partition, stratum),
     // broadcast-joined back
-    "smp_mix" -> ((s, dir) => {
+    Query("smp_mix", (s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"),
           size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
       graft.sample.Sampling.mixBudgetSelect(docs, "doc_id", "n_chars", "n_tokens", "source",
         budgets = Map("src0" -> 8000L, "src1" -> 6000L, "src2" -> 4000L, "src3" -> 2000L))
-        
-    }),
+    }, oracle =
+      s"""WITH t AS (SELECT doc_id, source, n_chars, CAST(len($toksSql) AS BIGINT) AS n_tokens
+        |           FROM documents WHERE source IN ('src0', 'src1', 'src2', 'src3')),
+        |c AS (SELECT *, CAST(sum(n_tokens) OVER (PARTITION BY source
+        |        ORDER BY n_chars DESC, doc_id
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_weight
+        |      FROM t)
+        |SELECT doc_id, source, n_chars, n_tokens, cum_weight FROM c
+        |WHERE cum_weight <= CASE source WHEN 'src0' THEN 8000 WHEN 'src1' THEN 6000
+        |  WHEN 'src2' THEN 4000 ELSE 2000 END
+        |ORDER BY doc_id""".stripMargin),
     // 46h — temperature-scaled source sampling (α=0.5, the mBERT/
     // XLM-R multilingual mixing rule): keep-rates ∝ √n_i/n_i toward a
     // target total, flattening the source distribution. √n quantized
     // fp6 BEFORE the integer normalizer sum, so rates and the kept
     // set are engine-exact; sampling is the narrow hash-deterministic
     // filter — zero corpus shuffle
-    "smp_temperature" -> ((s, dir) => {
+    Query("smp_temperature", (s, dir) => {
       graft.sample.Sampling.temperatureSample(
         t(s, dir, "documents").select("doc_id", "source"), "doc_id", "source",
         targetTotal = 200L)
-        
+    }, oracle = {
+      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
+        | list_transform(range(1, 9),
+        |   i -> CAST(strpos('0123456789abcdef',
+        |          substr(md5('tmp:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
+        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      s"""WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
+        |s AS (SELECT source, n, CAST(floor(sqrt(CAST(n AS DOUBLE))*1e6+0.5) AS BIGINT) AS s6 FROM c),
+        |tot AS (SELECT CAST(sum(s6) AS BIGINT) AS stot FROM s),
+        |r AS (SELECT source,
+        |    CAST(floor(least(1.0, (200 * CAST(s6 AS DOUBLE)) / (CAST(stot AS DOUBLE) * CAST(n AS DOUBLE)))*1e6+0.5) AS BIGINT) AS rate_fp6
+        |  FROM s, tot)
+        |SELECT d.doc_id, d.source, r.rate_fp6
+        |FROM documents d JOIN r USING (source)
+        |WHERE CAST($u32 AS DOUBLE) / 4294967296.0 < CAST(rate_fp6 AS DOUBLE) / 1e6
+        |ORDER BY doc_id""".stripMargin
     }),
     // 46c — exact-k-per-stratum deterministic reservoir: fixed sample
     // sizes (vs smp_sample's fixed rates), ranked on the md5-uniform
     // so the choice is rerun- and partitioning-stable
-    "smp_reservoir" -> ((s, dir) => {
+    Query("smp_reservoir", (s, dir) => {
       graft.sample.Sampling.reservoirPerStratum(
         t(s, dir, "documents").select("doc_id", "source"), "doc_id", "source", k = 5)
-        
+    }, oracle = {
+      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
+        | list_transform(range(1, 9),
+        |   i -> CAST(strpos('0123456789abcdef',
+        |          substr(md5('rsv:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
+        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      s"""SELECT doc_id, source, rank_in_stratum FROM (
+        |  SELECT doc_id, source,
+        |    row_number() OVER (PARTITION BY source
+        |      ORDER BY CAST($u32 AS DOUBLE) / 4294967296.0, doc_id) AS rank_in_stratum
+        |  FROM documents)
+        |WHERE rank_in_stratum <= 5
+        |ORDER BY source, rank_in_stratum""".stripMargin
     }),
     // 46b — sequence packing: next-fit documents into 256-token
     // training bins across 8 independent packing groups (one shuffle,
     // spillable sort, streaming fold — per-task state is three longs)
-    "smp_pack" -> ((s, dir) => {
+    Query("smp_pack", (s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"),
           size(graft.text.TextAnalysis.tokens(col("text"))).as("n_toks"))
       graft.sample.Sampling.packNextFit(s, docs, "doc_id", "n_toks",
         budget = 256L, numGroups = 8)
-        
-    }),
+    }, oracle =
+      s"""WITH RECURSIVE w AS (
+        |  SELECT doc_id, doc_id % 8 AS grp, CAST(len($toksSql) AS BIGINT) AS n_tokens,
+        |    row_number() OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) AS rn
+        |  FROM documents),
+        |pack AS (
+        |  SELECT doc_id, grp, n_tokens, rn, CAST(0 AS BIGINT) AS bin, n_tokens AS fill
+        |  FROM w WHERE rn = 1
+        |  UNION ALL
+        |  SELECT w.doc_id, w.grp, w.n_tokens, w.rn,
+        |    CASE WHEN p.fill + w.n_tokens <= 256 THEN p.bin ELSE p.bin + 1 END,
+        |    CASE WHEN p.fill + w.n_tokens <= 256 THEN p.fill + w.n_tokens ELSE w.n_tokens END
+        |  FROM w JOIN pack p ON w.grp = p.grp AND w.rn = p.rn + 1)
+        |SELECT doc_id, grp, bin, n_tokens FROM pack ORDER BY doc_id""".stripMargin),
     // 46p — LENGTH-BUCKET batching waste report (the seq-len
     // bucketing trick: batch docs padded to power-of-two caps; how
     // many pad tokens does each bucket burn?): cap = 2^⌈log2 n⌉ via
     // the length(bin(n−1)) integer trick (the ev_interarrival HLL-ρ
     // idiom — no libm), waste = n_docs·cap − Σn. One narrow map +
     // one ≤64-bucket rollup; waste_fp4 in pure integer form.
-    "smp_length_buckets" -> ((s, dir) => {
+    Query("smp_length_buckets", (s, dir) => {
       t(s, dir, "documents")
         .select(size(TextAnalysis.tokens(col("text"))).cast("long").as("n"))
         .withColumn("cap",
@@ -3069,44 +4826,86 @@ object Pipeline {
         .withColumn("padded_tokens", col("n_docs") * col("cap"))
         .withColumn("waste_fp4",
           expr("((padded_tokens - real_tokens) * 20000 + padded_tokens) DIV (2 * padded_tokens)"))
-        
-    }),
+    }, oracle =
+      s"""WITH d AS (SELECT CAST(len($toksSql) AS BIGINT) AS n FROM documents),
+        |c AS (SELECT n, CASE WHEN n <= 1 THEN CAST(1 AS BIGINT)
+        |        ELSE (CAST(1 AS BIGINT) << length(bin(n - 1))) END AS cap FROM d),
+        |g AS (SELECT cap, count(*) AS n_docs, CAST(sum(n) AS BIGINT) AS real_tokens
+        |      FROM c GROUP BY 1)
+        |SELECT cap, n_docs, real_tokens,
+        |  CAST(n_docs * cap AS BIGINT) AS padded_tokens,
+        |  CAST(((n_docs * cap - real_tokens) * 20000 + n_docs * cap) // (2 * n_docs * cap) AS BIGINT) AS waste_fp4
+        |FROM g ORDER BY cap""".stripMargin),
     // 32f — content-defined chunking (rsync/LBFS window-hash cuts):
     // boundaries are a function of local content, so chunk-hash dedup
     // re-synchronizes on shifted duplicates where fixed-offset
     // chunking never re-aligns. Narrow map + explode — zero shuffles
-    "dd_cdc_chunks" -> ((s, dir) => {
+    Query("dd_cdc_chunks", (s, dir) => {
       graft.text.Chunker.cdcChunk(t(s, dir, "documents"), "doc_id", "text",
         window = 8, divisor = 64)
-        
+    }, oracle = {
+      // CDC mirror: per-position window-hash probes, cut list, bounds,
+      // substring chunks — the u32(md5) is the shared cross-engine hash
+      val u32OfH = """list_reduce(list_prepend(CAST(0 AS BIGINT),
+        | list_transform(range(1, 9),
+        |   i -> CAST(strpos('0123456789abcdef', substr(h, CAST(i AS INT), 1)) - 1 AS BIGINT))),
+        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      s"""WITH d AS (SELECT doc_id, text, length(text) AS n FROM documents),
+        |probes AS (SELECT doc_id, i, md5(substr(text, CAST(i AS BIGINT) - 7, 8)) AS h
+        |           FROM (SELECT *, unnest(CASE WHEN n >= 9 THEN range(8, n) ELSE [] END) AS i FROM d)),
+        |cutrows AS (SELECT doc_id, i FROM probes WHERE $u32OfH % 64 = 0),
+        |cuts AS (SELECT doc_id, list(i ORDER BY i) AS cl FROM cutrows GROUP BY doc_id),
+        |bounds AS (SELECT d.doc_id, d.text,
+        |             list_concat(list_concat([CAST(0 AS BIGINT)], coalesce(c.cl, [])), [CAST(d.n AS BIGINT)]) AS b
+        |           FROM d LEFT JOIN cuts c USING (doc_id)),
+        |chunks AS (SELECT doc_id, CAST(j AS BIGINT) AS chunk_id,
+        |             substr(text, CAST(b[CAST(j+1 AS INT)] + 1 AS BIGINT), CAST(b[CAST(j+2 AS INT)] - b[CAST(j+1 AS INT)] AS BIGINT)) AS c
+        |           FROM (SELECT *, unnest(range(0, len(b) - 1)) AS j FROM bounds))
+        |SELECT doc_id, chunk_id, CAST(length(c) AS BIGINT) AS n_chars_chunk, md5(c) AS chunk_hash
+        |FROM chunks WHERE length(c) > 0 ORDER BY doc_id, chunk_id""".stripMargin
     }),
     // 41h — URL canonicalization (Common-Crawl-style pre-dedup key):
     // synthetic URLs derived from doc_id exercise every rule — case,
     // www, default port, trailing slash, utm params, fragment. All
     // codegen'd regexp/HOF columns, no backreferences (text/UrlOps)
-    "txt_url_normalize" -> ((s, dir) => {
+    Query("txt_url_normalize", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"), synthUrl(col("doc_id")).as("url"))
         .withColumn("norm_url", graft.text.UrlOps.normalizeUrl(col("url")))
-        
-    }),
+    }, oracle =
+      s"""WITH $normUrlCtes
+        |SELECT doc_id, url, norm_url FROM norm ORDER BY doc_id""".stripMargin),
     // 31c — URL-level dedup on the canonical key: spelled-differently
     // duplicates collapse; keep min doc id + variant count (one
     // partial-agg shuffle on the normalized key)
-    "dd_url_dedup" -> ((s, dir) => {
+    Query("dd_url_dedup", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"), graft.text.UrlOps.normalizeUrl(synthUrl(col("doc_id"))).as("norm_url"))
         .groupBy("norm_url")
         .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_variants"))
-        
-    }),
+    }, oracle =
+      s"""WITH $normUrlCtes
+        |SELECT norm_url, min(doc_id) AS keep_id, count(*) AS n_variants
+        |FROM norm GROUP BY 1 ORDER BY 1""".stripMargin),
     // 46d — deterministic global shuffle into training shards: md5
     // bucket + rank by full md5 hex — rerun/retry/partitioning-stable
     // where orderBy(rand()) is none of those
-    "smp_shuffle" -> ((s, dir) => {
+    Query("smp_shuffle", (s, dir) => {
       graft.sample.Sampling.deterministicShuffle(
         t(s, dir, "documents").select("doc_id"), "doc_id", numShards = 8)
-        
+    }, oracle = {
+      // shard = uint32(first 8 md5 hex chars of 'shf:doc_id') % 8;
+      // pos ranks by the FULL md5 hex — hex strings are fixed-length
+      // lowercase in both engines, so string order == numeric order
+      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
+        | list_transform(range(1, 9),
+        |   i -> CAST(strpos('0123456789abcdef',
+        |          substr(md5('shf:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
+        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      s"""SELECT doc_id, shard, CAST(row_number() OVER (PARTITION BY shard
+        |    ORDER BY md5('shf:' || CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) AS pos
+        |FROM (SELECT doc_id, $u32 % 8 AS shard FROM documents)
+        |ORDER BY shard, pos""".stripMargin
     }),
     // 39c — token-entropy quality signal (Shannon over the per-doc
     // token histogram). Two partial-agg shuffles: (doc, token) counts,
@@ -3114,7 +4913,7 @@ object Pipeline {
     // fp6-QUANTIZED bigints — a double sum's fold order would differ
     // between engines; the outer formula then divides exact ints in
     // one fixed double op order (same ln-at-fp4 contract as tfidf).
-    "txt_entropy" -> ((s, dir) => {
+    Query("txt_entropy", (s, dir) => {
       val tf = t(s, dir, "documents")
         .select(col("doc_id"), explode(graft.text.TextAnalysis.tokens(col("text"))).as("tok"))
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
@@ -3126,8 +4925,19 @@ object Pipeline {
         .select(col("doc_id"), col("n"),
           fp(log2(col("n").cast("double")) - col("s6").cast("double") / 1e6 / col("n").cast("double"), 4)
             .as("entropy_fp4"))
-        
-    }),
+    }, oracle =
+      s"""WITH tf AS (
+        |  SELECT doc_id, tok, count(*) AS c
+        |  FROM (SELECT doc_id, unnest($toksSql) AS tok FROM documents)
+        |  GROUP BY 1, 2),
+        |ent AS (
+        |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n,
+        |    CAST(sum(${sqlFp("c * log2(CAST(c AS DOUBLE))", 6)}) AS BIGINT) AS s6
+        |  FROM tf GROUP BY 1)
+        |SELECT d.doc_id, ent.n,
+        |  ${sqlFp("log2(CAST(ent.n AS DOUBLE)) - CAST(ent.s6 AS DOUBLE) / 1e6 / CAST(ent.n AS DOUBLE)", 4)} AS entropy_fp4
+        |FROM documents d LEFT JOIN ent ON ent.doc_id = d.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
     // 43q — per-type daily-volume least-squares trend (ingest drift:
     // is a source growing or decaying?). x = epoch day, y = daily
     // count. ONE corpus scan → |types×days|-sized rollup → per-type
@@ -3137,7 +4947,7 @@ object Pipeline {
     // shift only bought a second corpus scan when ReuseExchange
     // declined the pruning-divergent rollup consumers). slope =
     // (n·Σxy − Σx·Σy)/(n·Σxx − Σx²), one final double divide, fp6.
-    "ev_trend" -> ((s, dir) => {
+    Query("ev_trend", (s, dir) => {
       val D = org.apache.spark.sql.types.DecimalType(38, 0)
       val d = ev(s, dir)
         .groupBy(col("event_type"), expr("ms DIV 86400000").as("day"))
@@ -3154,8 +4964,19 @@ object Pipeline {
             .otherwise(fp((nD * col("_sxy") - col("_sx") * col("total").cast(D)).cast("double")
               / den.cast("double"), 6))
             .as("slope_fp6"))
-        
-    }),
+    }, oracle =
+      s"""WITH d AS (
+        |  SELECT event_type, epoch_ms(ts) // 86400000 AS day, count(*) AS y
+        |  FROM events GROUP BY 1, 2),
+        |sums AS (SELECT event_type, count(*) AS n_days,
+        |    CAST(sum(y) AS BIGINT) AS total, CAST(sum(day) AS HUGEINT) AS sx,
+        |    CAST(sum(day*day) AS HUGEINT) AS sxx, CAST(sum(day*y) AS HUGEINT) AS sxy
+        |  FROM d GROUP BY 1)
+        |SELECT event_type, n_days, total,
+        |  CASE WHEN n_days*sxx - sx*sx = 0 THEN CAST(0 AS BIGINT)
+        |    ELSE ${sqlFp("CAST(n_days*sxy - sx*total AS DOUBLE) / CAST(n_days*sxx - sx*sx AS DOUBLE)", 6)}
+        |  END AS slope_fp6
+        |FROM sums ORDER BY event_type""".stripMargin),
     // 43r — top session path trigrams (the user-journey n-gram
     // profile funnel design starts from): consecutive in-session
     // event-type triples per user via two lags over the per-user
@@ -3163,7 +4984,7 @@ object Pipeline {
     // by the 6h session rule. The path domain is |types|³-bounded,
     // so the count rollup and the global top-20 (TakeOrdered, ties
     // to path asc) stay tiny no matter the corpus size.
-    "ev_path_trigrams" -> ((s, dir) => {
+    Query("ev_path_trigrams", (s, dir) => {
       val byUser = Window.partitionBy("user_id").orderBy("ms", "event_id")
       ev(s, dir)
         .withColumn("p1", lag("event_type", 1).over(byUser))
@@ -3175,7 +4996,16 @@ object Pipeline {
         .select(concat_ws(">", col("p2"), col("p1"), col("event_type")).as("path"))
         .groupBy("path").agg(count(lit(1)).as("n"))
         .orderBy(desc("n"), asc("path")).limit(20)
-    }),
+    }, oracle =
+      s"""WITH e AS (SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms FROM events),
+        |w AS (SELECT event_type, ms,
+        |    lag(event_type, 1) OVER win AS p1, lag(event_type, 2) OVER win AS p2,
+        |    lag(ms, 1) OVER win AS m1, lag(ms, 2) OVER win AS m2
+        |  FROM e WINDOW win AS (PARTITION BY user_id ORDER BY ms, event_id))
+        |SELECT p2 || '>' || p1 || '>' || event_type AS path, count(*) AS n
+        |FROM w
+        |WHERE p2 IS NOT NULL AND ms - m1 <= 21600000 AND m1 - m2 <= 21600000
+        |GROUP BY 1 ORDER BY n DESC, path LIMIT 20""".stripMargin),
     // 35g — per-dimension whitening stats (the mean/variance pass a
     // 100 TB embedding corpus runs before feature scaling or PCA):
     // one posexplode → per-dim rollup. Values quantize to fp6 longs
@@ -3184,7 +5014,7 @@ object Pipeline {
     // DECIMAL(38,0) — 10^9 vectors × (10^6)² per-row squares
     // overflows int64 but not decimal128. Mean and variance are
     // then fixed-order double expressions over the exact sums.
-    "emb_norm_stats" -> ((s, dir) => {
+    Query("emb_norm_stats", (s, dir) => {
       val q = t(s, dir, "embeddings")
         .select(posexplode(col("embedding")).as(Seq("dim", "v")))
         .select(col("dim"), fp(col("v").cast("double"), 6).as("q6"))
@@ -3195,8 +5025,18 @@ object Pipeline {
         .select(col("dim"), col("n"), fp(mean, 6).as("mean_fp6"),
           fp(col("_ss12").cast("double") / 1e12 / col("n").cast("double") - mean * mean, 6)
             .as("var_fp6"))
-        
-    }),
+    }, oracle =
+      s"""WITH q AS (
+        |  SELECT CAST(i - 1 AS INT) AS dim,
+        |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS q6
+        |  FROM embeddings CROSS JOIN range(1, 65) t(i)),
+        |a AS (SELECT dim, count(*) AS n, CAST(sum(q6) AS BIGINT) AS s6,
+        |    sum(q6*q6) AS ss12 FROM q GROUP BY 1)
+        |SELECT dim, n,
+        |  ${sqlFp("CAST(s6 AS DOUBLE) / 1e6 / CAST(n AS DOUBLE)", 6)} AS mean_fp6,
+        |  ${sqlFp("CAST(ss12 AS DOUBLE) / 1e12 / CAST(n AS DOUBLE) - " +
+             "(CAST(s6 AS DOUBLE) / 1e6 / CAST(n AS DOUBLE)) * (CAST(s6 AS DOUBLE) / 1e6 / CAST(n AS DOUBLE))", 6)} AS var_fp6
+        |FROM a ORDER BY dim""".stripMargin),
     // 35h — distributed power-iteration PCA: the top principal
     // component of the embedding corpus (the direction PCA-whitening
     // and anisotropy diagnostics start from). Two corpus passes:
@@ -3210,7 +5050,7 @@ object Pipeline {
     // bound), L∞ normalization (no sqrt — max|w| keeps the step
     // rational) with ONE correctly-rounded double divide per element,
     // fp6-requantized. Sign pinned by the all-ones start vector.
-    "emb_pca_power" -> ((s, dir) => {
+    Query("emb_pca_power", (s, dir) => {
       val q = t(s, dir, "embeddings")
         .select(transform(col("embedding"), x => fp(x.cast("double"), 6)).as("qv"))
       // ONE corpus pass through the native exact Gram aggregate
@@ -3265,6 +5105,31 @@ object Pipeline {
           (0 until D2).map(i => org.apache.spark.sql.Row(i, v(i).toLong))
         }
       s.createDataFrame(java.util.Arrays.asList(outRows: _*), outSchema)
+    }, oracle = {
+      def it(k: Int): String =
+        s"""w$k AS (SELECT cov.i, sum(cov.c * v${k - 1}.vj) AS w
+           |  FROM cov JOIN v${k - 1} ON v${k - 1}.j = cov.j GROUP BY 1),
+           |x$k AS (SELECT max(abs(w)) AS mx FROM w$k),
+           |v$k AS (SELECT i AS j, CASE WHEN mx = 0 THEN CAST(1000000 AS HUGEINT)
+           |    ELSE CAST(CAST(floor(CAST(w AS DOUBLE) / CAST(mx AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS HUGEINT)
+           |  END AS vj
+           |  FROM w$k, x$k)""".stripMargin
+      s"""WITH q AS (
+        |  SELECT vec_id, CAST(i - 1 AS INT) AS dim,
+        |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS q6
+        |  FROM embeddings CROSS JOIN range(1, 65) t(i)),
+        |g AS (SELECT a.dim AS i, b.dim AS j, CAST(sum(a.q6 * b.q6) AS HUGEINT) AS s
+        |  FROM q a JOIN q b ON a.vec_id = b.vec_id GROUP BY 1, 2),
+        |m AS (SELECT dim, CAST(sum(q6) AS HUGEINT) AS m FROM q GROUP BY 1),
+        |n AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM embeddings),
+        |cov AS (SELECT g.i, g.j, n.n * g.s - mi.m * mj.m AS c
+        |  FROM g JOIN m mi ON mi.dim = g.i JOIN m mj ON mj.dim = g.j CROSS JOIN n),
+        |v0 AS (SELECT dim AS j, CAST(1000000 AS HUGEINT) AS vj FROM m),
+        |${it(1)},
+        |${it(2)},
+        |${it(3)},
+        |${it(4)}
+        |SELECT j AS dim, CAST(vj AS BIGINT) AS pc1_fp6 FROM v4 ORDER BY dim""".stripMargin
     }),
     // 39d — Zipf rank-frequency fit over the corpus vocabulary: the
     // one-line health check of a text corpus (natural language sits
@@ -3282,7 +5147,7 @@ object Pipeline {
     // corpus- or vocab-sized sort), the four k-levels evaluated as a
     // tiny explode + filter + rollup over that bounded head. coverage
     // = ⌊covered/total·10⁶+0.5⌉ in pure integer form.
-    "txt_vocab_coverage" -> ((s, dir) => {
+    Query("txt_vocab_coverage", (s, dir) => {
       val vocab = t(s, dir, "documents")
         .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("f"))
@@ -3297,9 +5162,17 @@ object Pipeline {
         .select(col("k"),
           col("covered"),
           expr("(covered * 2000000 + total) DIV (2 * total)").as("coverage_fp6"))
-        
-    }),
-    "txt_zipf" -> ((s, dir) => {
+    }, oracle =
+      s"""WITH v AS (SELECT tok, count(*) AS f FROM
+        |    (SELECT unnest($toksSql) AS tok FROM documents) GROUP BY 1),
+        |tot AS (SELECT CAST(sum(f) AS BIGINT) AS total FROM v),
+        |head AS (SELECT f, row_number() OVER (ORDER BY f DESC, tok) AS rank
+        |         FROM v ORDER BY f DESC, tok LIMIT 1024),
+        |ks AS (SELECT unnest([16, 64, 256, 1024]) AS k)
+        |SELECT k, CAST(sum(f) AS BIGINT) AS covered,
+        |  CAST((sum(f) * 2000000 + total) // (2 * total) AS BIGINT) AS coverage_fp6
+        |FROM head, ks, tot WHERE rank <= k GROUP BY k, total ORDER BY k""".stripMargin),
+    Query("txt_zipf", (s, dir) => {
       val D = org.apache.spark.sql.types.DecimalType(38, 0)
       val ranked = t(s, dir, "documents")
         .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
@@ -3317,7 +5190,22 @@ object Pipeline {
       sums.select(col("k"),
         fp((n * sxy - sx * sy).cast("double") / den.cast("double"), 6).as("slope_fp6"),
         fp((sy * sxx - sx * sxy).cast("double") / den.cast("double") / 1e6, 6).as("intercept_fp6"))
-    }),
+    }, oracle =
+      s"""WITH v AS (
+        |  SELECT tok, count(*) AS f
+        |  FROM (SELECT unnest($toksSql) AS tok FROM documents)
+        |  GROUP BY 1 ORDER BY f DESC, tok LIMIT 256),
+        |r AS (SELECT ${sqlFp("log2(CAST(row_number() OVER (ORDER BY f DESC, tok) AS DOUBLE))", 6)} AS x6,
+        |    ${sqlFp("log2(CAST(f AS DOUBLE))", 6)} AS y6
+        |  FROM v),
+        |sums AS (SELECT count(*) AS k,
+        |    CAST(sum(x6) AS HUGEINT) AS sx, CAST(sum(y6) AS HUGEINT) AS sy,
+        |    CAST(sum(x6*x6) AS HUGEINT) AS sxx, CAST(sum(x6*y6) AS HUGEINT) AS sxy
+        |  FROM r)
+        |SELECT k,
+        |  ${sqlFp("CAST(k*sxy - sx*sy AS DOUBLE) / CAST(k*sxx - sx*sx AS DOUBLE)", 6)} AS slope_fp6,
+        |  ${sqlFp("CAST(sy*sxx - sx*sxy AS DOUBLE) / CAST(k*sxx - sx*sx AS DOUBLE) / 1e6", 6)} AS intercept_fp6
+        |FROM sums""".stripMargin),
     // 43s — sampled quantile sketch vs exact: deterministic md5
     // content-hash sampling (rate 1/8 on event_id — commutes with
     // merges/retries where Bernoulli rand() does not) feeding the
@@ -3325,7 +5213,7 @@ object Pipeline {
     // histogram pass carries both populations (k total, ks sampled
     // per quantized value), so exact and estimate come from a single
     // corpus shuffle and the sampling error is visible per group.
-    "ev_quantile_sketch" -> ((s, dir) => {
+    Query("ev_quantile_sketch", (s, dir) => {
       val e = ev(s, dir).select(col("event_type"), col("v4"),
         (conv(substring(md5(concat(lit("qs:"), col("event_id").cast("string"))), 1, 8), 16, 10)
           .cast("long") < 536870912L).cast("long").as("in_s"))
@@ -3342,7 +5230,29 @@ object Pipeline {
           min(when(col("cum") >= expr("(9 * n + 9) DIV 10"), col("v4"))).as("p90_c4"),
           min(when(col("cums") >= expr("(ns + 1) DIV 2"), col("v4"))).as("s50_c4"),
           min(when(col("cums") >= expr("(9 * ns + 9) DIV 10"), col("v4"))).as("s90_c4"))
-        
+    }, oracle = {
+      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
+        | list_transform(range(1, 9),
+        |   i -> CAST(strpos('0123456789abcdef',
+        |          substr(md5('qs:' || CAST(event_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
+        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      s"""WITH e AS (SELECT event_type, ${sqlFp("\"value\"", 4)} AS v4,
+        |    CASE WHEN $u32 < 536870912 THEN 1 ELSE 0 END AS in_s FROM events),
+        |h AS (SELECT event_type, v4, count(*) AS k, sum(in_s) AS ks FROM e GROUP BY 1, 2),
+        |c AS (SELECT event_type, v4,
+        |    sum(k) OVER (PARTITION BY event_type ORDER BY v4
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+        |    sum(ks) OVER (PARTITION BY event_type ORDER BY v4
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cums,
+        |    sum(k) OVER (PARTITION BY event_type) AS n,
+        |    sum(ks) OVER (PARTITION BY event_type) AS ns
+        |  FROM h)
+        |SELECT event_type, CAST(max(n) AS BIGINT) AS n_rows, CAST(max(ns) AS BIGINT) AS n_sample,
+        |  min(CASE WHEN cum >= (n + 1) // 2 THEN v4 END) AS p50_c4,
+        |  min(CASE WHEN cum >= (9 * n + 9) // 10 THEN v4 END) AS p90_c4,
+        |  min(CASE WHEN cums >= (ns + 1) // 2 THEN v4 END) AS s50_c4,
+        |  min(CASE WHEN cums >= (9 * ns + 9) // 10 THEN v4 END) AS s90_c4
+        |FROM c GROUP BY event_type ORDER BY event_type""".stripMargin
     }),
     // 44c — bucketed-table co-located join (the 100 TB fact-join
     // layout: both sides pre-bucketed AND sorted on the join key, so
@@ -3350,7 +5260,7 @@ object Pipeline {
     // — write-once, join-many). The merge hint pins SMJ (a broadcast
     // at toy SF would hide the property being demonstrated);
     // QueriesSpec asserts the joined plan has zero exchanges.
-    "src_bucketed_join" -> ((s, dir) => {
+    Query("src_bucketed_join", (s, dir) => {
       // overwrite alone is not idempotent across JVMs: the in-memory
       // catalog forgets the table but its warehouse directory
       // survives, and saveAsTable refuses the orphaned location —
@@ -3381,8 +5291,12 @@ object Pipeline {
         .agg(count(lit(1)).as("n_items"),
           sum(fp(col("l_quantity"), 2)).cast("long").as("sum_qty_c"),
           sum(fp(col("l_extendedprice"), 2)).cast("long").as("sum_price_c"))
-        
-    }),
+    }, oracle =
+      """SELECT o_orderpriority, count(*) AS n_items,
+        | CAST(sum(CAST(floor(l_quantity*100+0.5) AS BIGINT)) AS BIGINT) AS sum_qty_c,
+        | CAST(sum(CAST(floor(l_extendedprice*100+0.5) AS BIGINT)) AS BIGINT) AS sum_price_c
+        |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // 44d — CDC changelog apply (the MERGE INTO / upsert shape every
     // incremental 100 TB snapshot pipeline needs): a deterministic
     // changelog of I/U/D ops derives from lineitem (op and key from
@@ -3400,7 +5314,7 @@ object Pipeline {
     // drops, op=I/U takes the changelog payload. At scale the base
     // side would be bucketed on key (src_bucketed_join demonstrates
     // that layout) so only the changelog shuffles.
-    "src_cdc_apply" -> ((s, dir) => {
+    Query("src_cdc_apply", (s, dir) => {
       val base = t(s, dir, "orders").select(col("o_orderkey").as("key"),
         col("o_orderstatus").as("status"), fp(col("o_totalprice"), 2).as("total_c"))
       val li = t(s, dir, "lineitem")
@@ -3426,8 +5340,31 @@ object Pipeline {
             .as("status"),
           when(col("op").isNull, col("total_c")).otherwise(col("new_total_c"))
             .as("total_c"))
-        
-    }),
+    }, oracle =
+      """WITH base AS (
+        |  SELECT o_orderkey AS key, o_orderstatus AS status,
+        |    CAST(floor(o_totalprice*100+0.5) AS BIGINT) AS total_c
+        |  FROM orders),
+        |chg AS (
+        |  SELECT CASE WHEN l_linenumber % 3 = 2 THEN l_orderkey + 600000000
+        |              ELSE l_orderkey END AS key,
+        |    ((CAST(l_linenumber AS BIGINT) * 34359738368
+        |        + CAST(floor(l_extendedprice*100+0.5) AS BIGINT)) * 4
+        |      + l_linenumber % 3) * 4
+        |      + CASE l_returnflag WHEN 'A' THEN 0 WHEN 'N' THEN 1 ELSE 2 END AS packed
+        |  FROM lineitem),
+        |latest AS (
+        |  SELECT key,
+        |    CASE (p // 4) % 4 WHEN 0 THEN 'D' WHEN 1 THEN 'U' ELSE 'I' END AS op,
+        |    CASE p % 4 WHEN 0 THEN 'A' WHEN 1 THEN 'N' ELSE 'R' END AS new_status,
+        |    (p // 16) % 34359738368 AS new_total_c
+        |  FROM (SELECT key, max(packed) AS p FROM chg GROUP BY 1))
+        |SELECT coalesce(b.key, l.key) AS key,
+        |  CASE WHEN l.key IS NULL THEN b.status ELSE l.new_status END AS status,
+        |  CASE WHEN l.key IS NULL THEN b.total_c ELSE l.new_total_c END AS total_c
+        |FROM base b FULL JOIN latest l ON l.key = b.key
+        |WHERE l.op IS NULL OR l.op <> 'D'
+        |ORDER BY key""".stripMargin),
     // 44f — Z-ORDER clustering stats (the Delta/Iceberg OPTIMIZE
     // ZORDER layout, made verifiable): every row's (x, y) dims
     // interleave into a Morton code with the classic 4-step bit
@@ -3444,7 +5381,7 @@ object Pipeline {
     // partial agg; at 100 TB the bucket id becomes the
     // repartitionByRange key at write time and this query IS the
     // manifest build.
-    "src_zorder" -> ((s, dir) => {
+    Query("src_zorder", (s, dir) => {
       def spread(c: Column): Column = {
         val a = c.bitwiseAND(lit(4095L))
         val b = a.bitwiseOR(shiftleft(a, 8)).bitwiseAND(lit(0x00FF00FFL))
@@ -3467,7 +5404,27 @@ object Pipeline {
         .agg(count(lit(1)).as("n"),
           min("x").as("x_min"), max("x").as("x_max"),
           min("y").as("y_min"), max("y").as("y_max"))
-        
+    }, oracle = {
+      // the same 4-step Morton bit spread, in SQL long arithmetic
+      def spread(v: String): String = {
+        val a = s"($v & 4095)"
+        val b = s"(($a | ($a << 8)) & 16711935)"
+        val d = s"(($b | ($b << 4)) & 252645135)"
+        val e = s"(($d | ($d << 2)) & 858993459)"
+        s"(($e | ($e << 1)) & 1431655765)"
+      }
+      s"""WITH pts AS (
+        |  SELECT (l_partkey * 2654435761) % 4096 AS x,
+        |    (l_suppkey * 2246822519) % 4096 AS y FROM lineitem),
+        |z AS (SELECT x, y,
+        |  (${spread("x")} | (${spread("y")} << 1)) AS zc FROM pts),
+        |lay AS (
+        |  SELECT 'zorder' AS layout, zc >> 16 AS bucket, x, y FROM z
+        |  UNION ALL
+        |  SELECT 'linear' AS layout, x >> 4 AS bucket, x, y FROM z)
+        |SELECT layout, bucket, count(*) AS n,
+        |  min(x) AS x_min, max(x) AS x_max, min(y) AS y_min, max(y) AS y_max
+        |FROM lay GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
     }),
     // 44i — small-file COMPACTION planner (the OPTIMIZE/maintenance
     // pass every long-lived 100 TB table needs): daily ingest
@@ -3477,7 +5434,7 @@ object Pipeline {
     // their month group, big files pass through untouched (bin −1).
     // The cumsum windows run over month-sized slices — never a
     // corpus-wide single task; the 1-row mean broadcasts.
-    "src_compaction" -> ((s, dir) => {
+    Query("src_compaction", (s, dir) => {
       val o0 = t(s, dir, "orders")
       val dayMs = 86400000L
       val files = o0.select(tsMs(o0, "o_orderdate").as("ms"))
@@ -3499,8 +5456,23 @@ object Pipeline {
       small.select("grp", "bin", "bytes").unionByName(big.select("grp", "bin", "bytes"))
         .groupBy("grp", "bin")
         .agg(count(lit(1)).as("n_files"), sum("bytes").as("tot_bytes"))
-        
-    }),
+    }, oracle =
+      // floored modulus mirrors pmod; exclusive prefix via the
+      // 1-PRECEDING frame (coalesced to 0 for each group's first row)
+      """WITH f AS (SELECT (ms - ((ms % 86400000 + 86400000) % 86400000)) // 86400000 AS day,
+        |             CAST(count(*) * 128 AS BIGINT) AS bytes
+        |           FROM (SELECT epoch_ms(o_orderdate) AS ms FROM orders) GROUP BY 1),
+        |g AS (SELECT day, bytes, day // 32 AS grp FROM f),
+        |a AS (SELECT CAST(sum(bytes) // count(*) AS BIGINT) AS avg_bytes FROM g),
+        |sm AS (SELECT grp, bytes,
+        |         CAST(coalesce(sum(bytes) OVER (PARTITION BY grp ORDER BY day
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS pre
+        |       FROM g, a WHERE bytes < avg_bytes),
+        |b AS (SELECT grp, CAST(pre // (4 * avg_bytes) AS BIGINT) AS bin, bytes FROM sm, a
+        |      UNION ALL
+        |      SELECT grp, CAST(-1 AS BIGINT) AS bin, bytes FROM g, a WHERE bytes >= avg_bytes)
+        |SELECT grp, bin, count(*) AS n_files, CAST(sum(bytes) AS BIGINT) AS tot_bytes
+        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // 44j — zone-map (min/max stats) PRUNING audit: how many files
     // does a shipdate-quarter predicate skip under two layouts of the
     // SAME rows — insert-ordered files (orderkey ranges; date
@@ -3510,7 +5482,7 @@ object Pipeline {
     // themselves; this prices them against a predicate). Per-file
     // min/max/counts collapse map-side; the file-stats table is
     // inventory-sized, the final rollup 2 rows.
-    "src_stats_pruning" -> ((s, dir) => {
+    Query("src_stats_pruning", (s, dir) => {
       val l0 = t(s, dir, "lineitem")
       val dayMs = 86400000L
       val lo = 883612800000L // 1998-01-01
@@ -3529,8 +5501,21 @@ object Pipeline {
           sum(when(col("mx") < lo || col("mn") >= hi, 1L).otherwise(0L)).as("n_pruned"),
           sum(when(col("mx") >= lo && col("mn") < hi, col("n")).otherwise(0L)).as("rows_scanned"),
           sum("nm").as("rows_matched"))
-        
-    }),
+    }, oracle =
+      """WITH base AS (SELECT l_orderkey, epoch_ms(l_shipdate) AS ms,
+        |    (epoch_ms(l_shipdate) - ((epoch_ms(l_shipdate) % 86400000 + 86400000) % 86400000)) // 86400000 AS day
+        |  FROM lineitem),
+        |lay AS (SELECT 'insert_order' AS layout, l_orderkey // 200 AS fid, ms FROM base
+        |        UNION ALL
+        |        SELECT 'date_partitioned' AS layout, day // 7 AS fid, ms FROM base),
+        |pf AS (SELECT layout, fid, min(ms) AS mn, max(ms) AS mx, count(*) AS n,
+        |         CAST(sum(CASE WHEN ms >= 883612800000 AND ms < 899251200000 THEN 1 ELSE 0 END) AS BIGINT) AS nm
+        |       FROM lay GROUP BY 1, 2)
+        |SELECT layout, count(*) AS n_files,
+        |  CAST(sum(CASE WHEN mx < 883612800000 OR mn >= 899251200000 THEN 1 ELSE 0 END) AS BIGINT) AS n_pruned,
+        |  CAST(sum(CASE WHEN mx >= 883612800000 AND mn < 899251200000 THEN n ELSE 0 END) AS BIGINT) AS rows_scanned,
+        |  CAST(sum(nm) AS BIGINT) AS rows_matched
+        |FROM pf GROUP BY 1 ORDER BY 1""".stripMargin),
     // 48m — TTL / retention DELETE planner (the GDPR-expiry twin of
     // 48l's scan audit — deletes are priced differently: an all-
     // expired file DROPS for free, a mixed file REWRITES every
@@ -3539,7 +5524,7 @@ object Pipeline {
     // 1997-01-01 expiry. Same inventory-sized per-file stats agg as
     // the pruning audit; the quantified case for date-partitioning
     // a table that carries a retention policy.
-    "src_ttl_retention" -> ((s, dir) => {
+    Query("src_ttl_retention", (s, dir) => {
       val l0 = t(s, dir, "lineitem")
       val dayMs = 86400000L
       val cut = 852076800000L // 1997-01-01
@@ -3559,8 +5544,23 @@ object Pipeline {
           sum(when(col("nexp") === 0, 1L).otherwise(0L)).as("n_keep"),
           sum("nexp").as("rows_deleted"),
           sum(when(col("nexp") > 0, col("n") - col("nexp")).otherwise(0L)).as("rows_rewritten"))
-        
-    }),
+    }, oracle =
+      """WITH base AS (SELECT l_orderkey, epoch_ms(l_shipdate) AS ms,
+        |    (epoch_ms(l_shipdate) - ((epoch_ms(l_shipdate) % 86400000 + 86400000) % 86400000)) // 86400000 AS day
+        |  FROM lineitem),
+        |lay AS (SELECT 'insert_order' AS layout, l_orderkey // 200 AS fid, ms FROM base
+        |        UNION ALL
+        |        SELECT 'date_partitioned' AS layout, day // 7 AS fid, ms FROM base),
+        |pf AS (SELECT layout, fid, count(*) AS n,
+        |         CAST(sum(CASE WHEN ms < 852076800000 THEN 1 ELSE 0 END) AS BIGINT) AS nexp
+        |       FROM lay GROUP BY 1, 2)
+        |SELECT layout, count(*) AS n_files,
+        |  CAST(sum(CASE WHEN nexp = n THEN 1 ELSE 0 END) AS BIGINT) AS n_drop,
+        |  CAST(sum(CASE WHEN nexp > 0 AND nexp < n THEN 1 ELSE 0 END) AS BIGINT) AS n_rewrite,
+        |  CAST(sum(CASE WHEN nexp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
+        |  CAST(sum(nexp) AS BIGINT) AS rows_deleted,
+        |  CAST(sum(CASE WHEN nexp > 0 THEN n - nexp ELSE 0 END) AS BIGINT) AS rows_rewritten
+        |FROM pf GROUP BY 1 ORDER BY 1""".stripMargin),
     // 44h — INCREMENTAL VIEW MAINTENANCE: the law that makes 100 TB
     // aggregates maintainable — agg(apply(base, Δ)) must equal
     // merge(agg(base), agg(Δ)). The per-status (count, sum) view is
@@ -3576,7 +5576,7 @@ object Pipeline {
     // path touches base ONLY on the changelog's keys (a keyed join,
     // never a base scan at real layout where base aggs are stored);
     // the recompute path exists here to PROVE the law.
-    "src_ivm" -> ((s, dir) => {
+    Query("src_ivm", (s, dir) => {
       val base = t(s, dir, "orders").select(col("o_orderkey").as("key"),
         col("o_orderstatus").as("status"), fp(col("o_totalprice"), 2).as("total_c"))
       val li = t(s, dir, "lineitem")
@@ -3625,7 +5625,32 @@ object Pipeline {
         .groupBy("status")
         .agg(count(lit(1)).as("n_direct"), sum("tc").as("sum_direct_c"))
       maintained.join(direct, Seq("status"), "full_outer")
-    }),
+    }, oracle =
+      """WITH chg AS (
+        |  SELECT CASE WHEN l_linenumber % 3 = 2 THEN l_orderkey + 600000000
+        |              ELSE l_orderkey END AS key,
+        |    ((CAST(l_linenumber AS BIGINT) * 34359738368
+        |        + CAST(floor(l_extendedprice*100+0.5) AS BIGINT)) * 4
+        |      + l_linenumber % 3) * 4
+        |      + CASE l_returnflag WHEN 'A' THEN 0 WHEN 'N' THEN 1 ELSE 2 END AS packed
+        |  FROM lineitem),
+        |latest AS (
+        |  SELECT key,
+        |    CASE (p // 4) % 4 WHEN 0 THEN 'D' WHEN 1 THEN 'U' ELSE 'I' END AS op,
+        |    CASE p % 4 WHEN 0 THEN 'A' WHEN 1 THEN 'N' ELSE 'R' END AS new_status,
+        |    (p // 16) % 34359738368 AS new_total_c
+        |  FROM (SELECT key, max(packed) AS p FROM chg GROUP BY 1)),
+        |base AS (SELECT o_orderkey AS key, o_orderstatus AS status,
+        |    CAST(floor(o_totalprice*100+0.5) AS BIGINT) AS total_c FROM orders),
+        |merged AS (
+        |  SELECT CASE WHEN l.key IS NULL THEN b.status ELSE l.new_status END AS status,
+        |    CASE WHEN l.key IS NULL THEN b.total_c ELSE l.new_total_c END AS tc
+        |  FROM base b FULL JOIN latest l ON l.key = b.key
+        |  WHERE l.op IS NULL OR l.op <> 'D'),
+        |v AS (SELECT status, count(*) AS n, CAST(sum(tc) AS BIGINT) AS t
+        |  FROM merged GROUP BY 1)
+        |SELECT status, n AS n_inc, t AS sum_inc_c, n AS n_direct, t AS sum_direct_c
+        |FROM v ORDER BY status""".stripMargin),
     // 44e — SCD type-2 history build from the same changelog as
     // src_cdc_apply: per key, every DISTINCT I/U change becomes a
     // version row; the packed long (seq·2³⁵+cents, ·4+op, ·4+flag) IS
@@ -3637,7 +5662,7 @@ object Pipeline {
     // row_number after — same partitioning, Spark plans a single
     // exchange). Changelog-sized work only; the 100 TB base is never
     // touched — SCD2 is a pure function of the change stream.
-    "src_scd2" -> ((s, dir) => {
+    Query("src_scd2", (s, dir) => {
       val li = t(s, dir, "lineitem")
       val chg = li.select(
         when(pmod(col("l_linenumber"), lit(3)) === 2, col("l_orderkey") + 600000000L)
@@ -3660,7 +5685,27 @@ object Pipeline {
           pmod(expr("packed DIV 16"), lit(34359738368L)).as("total_c"),
           col("nxt").isNull.cast("long").as("is_current"))
       versions
-    }),
+    }, oracle =
+      """WITH chg AS (
+        |  SELECT DISTINCT
+        |    CASE WHEN l_linenumber % 3 = 2 THEN l_orderkey + 600000000
+        |         ELSE l_orderkey END AS key,
+        |    ((CAST(l_linenumber AS BIGINT) * 34359738368
+        |        + CAST(floor(l_extendedprice*100+0.5) AS BIGINT)) * 4
+        |      + l_linenumber % 3) * 4
+        |      + CASE l_returnflag WHEN 'A' THEN 0 WHEN 'N' THEN 1 ELSE 2 END AS packed
+        |  FROM lineitem),
+        |led AS (
+        |  SELECT key, packed,
+        |    lead(packed) OVER (PARTITION BY key ORDER BY packed) AS nxt
+        |  FROM chg),
+        |iu AS (SELECT * FROM led WHERE (packed // 4) % 4 <> 0)
+        |SELECT key,
+        |  CAST(row_number() OVER (PARTITION BY key ORDER BY packed) AS INT) AS ver,
+        |  CASE packed % 4 WHEN 0 THEN 'A' WHEN 1 THEN 'N' ELSE 'R' END AS status,
+        |  (packed // 16) % 34359738368 AS total_c,
+        |  CAST(nxt IS NULL AS BIGINT) AS is_current
+        |FROM iu ORDER BY key, ver""".stripMargin),
     // 38k — class-BALANCED downsampling over the labeled embeddings
     // (imbalance correction: every label keeps exactly k rows where
     // k = the SMALLEST class size, derived from the data via a
@@ -3671,7 +5716,7 @@ object Pipeline {
     // per-label id checksums so the oracle verifies WHICH rows were
     // kept, not just how many. One per-label count agg + one rank
     // window; per-label sorts bounded by class size.
-    "smp_balance" -> ((s, dir) => {
+    Query("smp_balance", (s, dir) => {
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("label"))
         .withColumn("u", graft.sample.Sampling.hashUniform(col("vec_id"), "bal"))
       val k = broadcast(e.groupBy("label").agg(count(lit(1)).as("cn"))
@@ -3683,7 +5728,23 @@ object Pipeline {
         .groupBy("label")
         .agg(count(lit(1)).as("n_kept"), sum("vec_id").as("id_sum"),
           fp(max("u"), 6).as("max_u_fp6"))
-        
+    }, oracle = {
+      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
+        | list_transform(range(1, 9),
+        |   i -> CAST(strpos('0123456789abcdef',
+        |          substr(md5('bal:' || CAST(vec_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
+        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      s"""WITH e AS (SELECT vec_id, label,
+        |    CAST($u32 AS DOUBLE) / 4294967296.0 AS u FROM embeddings),
+        |k AS (SELECT min(cn) AS k FROM (
+        |  SELECT label, count(*) AS cn FROM e GROUP BY 1)),
+        |r AS (SELECT label, vec_id, u,
+        |    row_number() OVER (PARTITION BY label ORDER BY u, vec_id) AS r
+        |  FROM e)
+        |SELECT label, count(*) AS n_kept,
+        |  CAST(sum(vec_id) AS BIGINT) AS id_sum,
+        |  ${sqlFp("max(u)", 6)} AS max_u_fp6
+        |FROM r, k WHERE r.r <= k.k GROUP BY label ORDER BY label""".stripMargin
     }),
     // 35j — class-separation diagnostic over the labeled embeddings
     // (the Fisher/ANOVA health check of an embedding space: do the
@@ -3700,7 +5761,7 @@ object Pipeline {
     // the centroids, one corpus pass joined to the BROADCAST
     // centroid grid computes scatter — two corpus reads total,
     // per-label output rows.
-    "emb_class_sep" -> ((s, dir) => {
+    Query("emb_class_sep", (s, dir) => {
       val D = org.apache.spark.sql.types.DecimalType(38, 0)
       val q = t(s, dir, "embeddings").select(col("label"),
         transform(col("embedding"), x => fp(x.cast("double"), 6)).as("qv"))
@@ -3724,8 +5785,30 @@ object Pipeline {
           fp(col("wss").cast("double") / col("n").cast("double") / 64.0 / 1e12, 4)
             .as("msd_within_fp4"),
           col("bss").cast("long").as("bss_sq"))
-        
-    }),
+    }, oracle =
+      """WITH q AS (
+        |  SELECT label, CAST(i - 1 AS INT) AS dim,
+        |    CAST(floor(CAST(embedding[i] AS DOUBLE)*1e6+0.5) AS BIGINT) AS v
+        |  FROM embeddings CROSS JOIN range(1, 65) t(i)),
+        |sums AS (SELECT label, dim, CAST(sum(v) AS BIGINT) AS sv, count(*) AS n
+        |  FROM q GROUP BY 1, 2),
+        |cent AS (SELECT label, dim,
+        |    CAST(floor(CAST(sv AS DOUBLE)/CAST(n AS DOUBLE)+0.5) AS BIGINT) AS c
+        |  FROM sums),
+        |gcent AS (SELECT dim,
+        |    CAST(floor(CAST(sum(sv) AS DOUBLE)/CAST(sum(n) AS DOUBLE)+0.5) AS BIGINT) AS g
+        |  FROM sums GROUP BY 1),
+        |w AS (SELECT q.label,
+        |    sum(CAST((q.v - c.c)*(q.v - c.c) AS HUGEINT)) AS wss,
+        |    count(*) // 64 AS n
+        |  FROM q JOIN cent c ON c.label = q.label AND c.dim = q.dim GROUP BY 1),
+        |b AS (SELECT c.label, CAST(sum((c.c - g.g)*(c.c - g.g)) AS BIGINT) AS bss
+        |  FROM cent c JOIN gcent g USING (dim) GROUP BY 1)
+        |SELECT w.label, CAST(w.n AS BIGINT) AS n,
+        |  CAST(floor(CAST(w.wss AS DOUBLE) / CAST(w.n AS DOUBLE) / 64.0 / 1e12
+        |    * 1e4 + 0.5) AS BIGINT) AS msd_within_fp4,
+        |  b.bss AS bss_sq
+        |FROM w JOIN b USING (label) ORDER BY label""".stripMargin),
     // 35i — k-means (Lloyd) over the embedding corpus: k=8 TRAINED
     // centroids (sim_ann_ivf's are sampled, not trained), 2
     // iterations, deterministic end-to-end. All state in fp6 fixed
@@ -3743,7 +5826,7 @@ object Pipeline {
     // the next iteration's centroid frame is localCheckpoint'd so
     // lineage (and the corpus-scan count) stays LINEAR in the
     // iteration count.
-    "emb_kmeans" -> ((s, dir) => {
+    Query("emb_kmeans", (s, dir) => {
       val k = 8
       val q = t(s, dir, "embeddings")
         .select(col("vec_id"),
@@ -3792,7 +5875,38 @@ object Pipeline {
       }
       grid.select(col("cid"), col("dim"), col("n").as("n_assigned"),
           col("c").as("c_fp6"))
-        
+    }, oracle = {
+      // one Lloyd step: assign (argmin dist, ties to smallest cid) →
+      // per-(cid,dim) sums → centroid update with empty-cluster
+      // carry-forward. Long-format twin of the Spark array-HOF path:
+      // same fp6 ints, same exact integer distances, same single
+      // rounded divide.
+      def step(i: Int): String = {
+        val p = s"c${i - 1}"
+        s"""d$i AS (SELECT q.vec_id, c.cid, sum((q.v - c.c)*(q.v - c.c)) AS dist
+           |  FROM q JOIN $p c ON c.dim = q.dim GROUP BY 1, 2),
+           |a$i AS (SELECT vec_id, cid FROM (
+           |    SELECT vec_id, cid,
+           |      row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
+           |    FROM d$i) WHERE rn = 1),
+           |s$i AS (SELECT a.cid, q.dim, CAST(sum(q.v) AS BIGINT) AS sv, count(*) AS n
+           |  FROM a$i a JOIN q ON q.vec_id = a.vec_id GROUP BY 1, 2),
+           |c$i AS (SELECT $p.cid, $p.dim,
+           |    coalesce(CAST(floor(CAST(s$i.sv AS DOUBLE)/CAST(s$i.n AS DOUBLE)+0.5) AS BIGINT), $p.c) AS c,
+           |    CAST(coalesce(s$i.n, 0) AS BIGINT) AS n
+           |  FROM $p LEFT JOIN s$i ON s$i.cid = $p.cid AND s$i.dim = $p.dim)""".stripMargin
+      }
+      s"""WITH q AS (
+        |  SELECT vec_id, CAST(i - 1 AS INT) AS dim,
+        |    CAST(floor(CAST(embedding[i] AS DOUBLE)*1e6+0.5) AS BIGINT) AS v
+        |  FROM embeddings CROSS JOIN range(1, 65) t(i)),
+        |seeds AS (
+        |  SELECT vec_id, CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid
+        |  FROM (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 8)),
+        |c0 AS (SELECT s.cid, q.dim, q.v AS c FROM seeds s JOIN q ON q.vec_id = s.vec_id),
+        |${step(1)},
+        |${step(2)}
+        |SELECT cid, dim, n AS n_assigned, c AS c_fp6 FROM c2 ORDER BY cid, dim""".stripMargin
     })
   )
 
@@ -4239,2509 +6353,82 @@ object Pipeline {
        |FROM cand JOIN sigs sa ON sa.doc = doc_a JOIN sigs sb ON sb.doc = doc_b
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  lazy val oracles: Map[String, String] = withDiskTwins(oracles0)
+  /** IVF-PQ mirror: the same codebook/LUT chain, with the scored set
+    * first pruned to the nprobe nearest IVF cells per query (stride
+    * centroids + argmax-cosine assignment, as in the sim_ann_ivf
+    * oracle) */
+  private val annIvfpqSql: String =
+    s"""WITH $pqCtes,
+      |enc AS (SELECT id, sub, code FROM best WHERE rn = 1),
+      |icents AS (SELECT vec_id AS centroid_id, embedding AS icvec
+      |           FROM embeddings, cnt WHERE vec_id % greatest(1, (c + 15) // 16) = 0),
+      |ac AS (SELECT e.vec_id, c.centroid_id, ${cosSql("e.embedding", "c.icvec")} AS cosv
+      |       FROM embeddings e CROSS JOIN icents c),
+      |asg AS (SELECT vec_id AS id, centroid_id AS cell FROM (
+      |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn2
+      |         FROM ac) WHERE rn2 = 1),
+      |pc AS (SELECT q.vec_id AS query_id, c.centroid_id AS cell,
+      |         ${cosSql("q.embedding", "c.icvec")} AS cosv
+      |       FROM embeddings q CROSS JOIN icents c WHERE q.vec_id % 50 = 0),
+      |probes AS (SELECT query_id, cell FROM (
+      |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosv DESC, cell) AS rn3
+      |         FROM pc) WHERE rn3 <= 2),
+      |qsl AS (SELECT q.vec_id AS query_id, s.sub,
+      |          list_slice(q.embedding, s.sub*16 + 1, s.sub*16 + 16) AS qx
+      |        FROM embeddings q, subs s WHERE q.vec_id % 50 = 0),
+      |lut AS (SELECT q.query_id, q.sub, cb.code,
+      |          ${sqlFp(s"${dot16("qx", "qx")} - 2.0*${dot16("qx", "cvec")} + ${dot16("cvec", "cvec")}", 6)} AS pd6
+      |        FROM qsl q JOIN cb ON cb.sub = q.sub),
+      |cand AS (SELECT p.query_id, a.id FROM probes p JOIN asg a ON a.cell = p.cell
+      |         WHERE a.id <> p.query_id),
+      |sc AS (SELECT c.query_id, c.id, CAST(sum(l.pd6) AS BIGINT) AS approx_d2_fp6
+      |       FROM cand c JOIN enc e ON e.id = c.id
+      |       JOIN lut l ON l.query_id = c.query_id AND l.sub = e.sub AND l.code = e.code
+      |       GROUP BY 1, 2),
+      |topk AS (SELECT *, row_number() OVER (PARTITION BY query_id
+      |           ORDER BY approx_d2_fp6, id) AS rk FROM sc)
+      |SELECT query_id, id, approx_d2_fp6 FROM topk WHERE rk <= 5
+      |ORDER BY query_id, approx_d2_fp6, id""".stripMargin
 
-  /** The at-rest ANN probes are spec-asserted bit-identical to their
-    * in-memory compositions, so they share the same DuckDB mirror. */
-  private def withDiskTwins(m: Map[String, String]): Map[String, String] =
-    m + ("sim_ann_ivfpq_disk" -> m("sim_ann_ivfpq")) +
-      ("sim_ann_rerank_disk" -> m("sim_ann_rerank"))
-
-  private val oracles0: Map[String, String] = Map(
-    "dd_exact" ->
-      """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS dup_count
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "dd_minhash_pairs" -> minhashPairsSql,
-    // the full LSH pipeline re-run over the planted corpus, metrics
-    // in exact integers + guarded fp4 divides
-    "dd_eval_recall" ->
-      s"""WITH aug0 AS (SELECT d.doc_id,
-        |    CASE WHEN d.doc_id % 4 = 1 AND b.text IS NOT NULL
-        |      THEN b.text || ' planteddup' ELSE d.text END AS text
-        |  FROM documents d LEFT JOIN documents b ON b.doc_id = d.doc_id - 1),
-        |${minhashCtes("aug0")},
-        |truth AS (SELECT b.doc_id AS doc_a, d.doc_id AS doc_b
-        |  FROM documents d JOIN documents b ON b.doc_id = d.doc_id - 1
-        |  WHERE d.doc_id % 4 = 1),
-        |tp AS (SELECT count(*) AS tp FROM cand JOIN truth USING (doc_a, doc_b)),
-        |np AS (SELECT count(*) AS n_pred FROM cand),
-        |nt AS (SELECT count(*) AS n_truth FROM truth)
-        |SELECT CAST(n_truth AS BIGINT) AS n_truth, CAST(n_pred AS BIGINT) AS n_pred,
-        |  CAST(tp AS BIGINT) AS tp,
-        |  CASE WHEN n_pred = 0 THEN CAST(0 AS BIGINT)
-        |    ELSE ${sqlFp("CAST(tp AS DOUBLE) / CAST(n_pred AS DOUBLE)", 4)} END AS precision_fp4,
-        |  CASE WHEN n_truth = 0 THEN CAST(0 AS BIGINT)
-        |    ELSE ${sqlFp("CAST(tp AS DOUBLE) / CAST(n_truth AS DOUBLE)", 4)} END AS recall_fp4
-        |FROM tp, np, nt""".stripMargin,
-    "dd_minhash_est" -> minhashEstSql,
-    // b=2 truncation: slot match on sig mod 4; Ĵ=(Â−1/4)/(3/4) clamped
-    "dd_bbit_minhash" -> {
-      val a2 = "CAST(len(list_filter(range(1, 9), i -> sa.sig[i] % 4 = sb.sig[i] % 4)) AS DOUBLE) / 8.0"
-      s"""WITH ${minhashCtes()}
-         |SELECT doc_a, doc_b,
-         |  ${sqlFp(a2, 4)} AS agree_b2_fp4,
-         |  ${sqlFp(s"greatest(0.0, ($a2 - 0.25) / 0.75)", 4)} AS est_b2_fp4,
-         |  ${sqlFp("CAST(len(list_filter(range(1, 9), i -> sa.sig[i] = sb.sig[i])) AS DOUBLE) / 8.0", 4)} AS est_full_fp4
-         |FROM cand JOIN sigs sa ON sa.doc = doc_a JOIN sigs sb ON sb.doc = doc_b
-         |ORDER BY doc_a, doc_b""".stripMargin
-    },
-    // transitive min-label closure via a recursive CTE over the same
-    // candidate edges; UNION dedup terminates the recursion
-    "dd_components" ->
-      s"""WITH RECURSIVE ${minhashCtes()},
-         |sym AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-         |        UNION ALL SELECT doc_b, doc_a FROM cand),
-         |lbl(node, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT s.dst, l.label FROM lbl l JOIN sym s ON s.src = l.node)
-         |SELECT node AS doc_id, min(label) AS component
-         |FROM lbl GROUP BY node ORDER BY doc_id""".stripMargin,
-    // same recursive closure as dd_components, then cluster sizes →
-    // per-doc 1/n loss weight
-    "smp_soft_dedup" ->
-      s"""WITH RECURSIVE ${minhashCtes()},
-         |sym AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-         |        UNION ALL SELECT doc_b, doc_a FROM cand),
-         |lbl(node, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT s.dst, l.label FROM lbl l JOIN sym s ON s.src = l.node),
-         |comp AS (SELECT node AS doc_id, min(label) AS component FROM lbl GROUP BY node),
-         |sz AS (SELECT component, count(*) AS cluster_n FROM comp GROUP BY 1)
-         |SELECT comp.doc_id, comp.component, sz.cluster_n,
-         |  ${sqlFp("1.0 / CAST(sz.cluster_n AS DOUBLE)", 6)} AS weight_fp6
-         |FROM comp JOIN sz USING (component) ORDER BY comp.doc_id""".stripMargin,
-    // same recursive closure as dd_components, then a deterministic
-    // per-cluster argmax (n_chars DESC, doc_id ASC) + cluster size
-    "dd_keep_best" ->
-      s"""WITH RECURSIVE ${minhashCtes()},
-         |sym AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-         |        UNION ALL SELECT doc_b, doc_a FROM cand),
-         |lbl(node, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT s.dst, l.label FROM lbl l JOIN sym s ON s.src = l.node),
-         |comp AS (SELECT node, min(label) AS component FROM lbl GROUP BY node),
-         |ranked AS (
-         |  SELECT c.component AS cluster, d.doc_id, d.n_chars,
-         |    row_number() OVER (PARTITION BY c.component ORDER BY d.n_chars DESC, d.doc_id ASC) AS rn,
-         |    count(*) OVER (PARTITION BY c.component) AS n_docs
-         |  FROM comp c JOIN documents d ON d.doc_id = c.node)
-         |SELECT cluster, doc_id AS keep_id, n_chars AS keep_score, n_docs
-         |FROM ranked WHERE rn = 1 ORDER BY cluster""".stripMargin,
-    "dd_incremental" ->
-      """WITH ref AS (SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 5 <> 0),
-        |inc AS (SELECT doc_id, source, n_chars, md5(text) AS h FROM documents WHERE doc_id % 3 = 0)
-        |SELECT doc_id, source, n_chars FROM inc
-        |WHERE h NOT IN (SELECT h FROM ref) ORDER BY doc_id""".stripMargin,
-    // Bloom pre-filter is value-invisible (no false negatives) — the
-    // oracle is the exact anti-join
-    "dd_incremental_bloom" ->
-      """WITH ref AS (SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 5 <> 0),
-        |inc AS (SELECT doc_id, source, n_chars, md5(text) AS h FROM documents WHERE doc_id % 3 = 0)
-        |SELECT doc_id, source, n_chars FROM inc
-        |WHERE h NOT IN (SELECT h FROM ref) ORDER BY doc_id""".stripMargin,
-    // SemDeDup mirror: stride centroids + argmax-cosine assignment
-    // (as sim_ann_ivf), within-cell cosine pairs, recursive closure
-    // (as dd_components), min-id representative + cluster size
-    "dd_semantic" ->
-      s"""WITH RECURSIVE cnt AS (SELECT count(*) AS c FROM embeddings),
-        |icents AS (SELECT vec_id AS centroid_id, embedding AS icvec
-        |           FROM embeddings, cnt WHERE vec_id % greatest(1, (c + 15) // 16) = 0),
-        |ac AS (SELECT e.vec_id, e.embedding, c.centroid_id,
-        |         ${cosSql("e.embedding", "c.icvec")} AS cosv
-        |       FROM embeddings e CROSS JOIN icents c),
-        |asg AS (SELECT vec_id, embedding, centroid_id AS cell FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
-        |         FROM ac) WHERE rn = 1),
-        |prs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |        FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id
-        |        WHERE ${sqlFp(cosSql("a.embedding", "b.embedding"), 6)} >= 300000),
-        |sym AS (SELECT id_a AS src, id_b AS dst FROM prs
-        |        UNION ALL SELECT id_b, id_a FROM prs),
-        |lbl(node, label) AS (
-        |  SELECT vec_id, vec_id FROM embeddings
-        |  UNION
-        |  SELECT s.dst, l.label FROM lbl l JOIN sym s ON s.src = l.node),
-        |comp AS (SELECT node, min(label) AS component FROM lbl GROUP BY node)
-        |SELECT component AS keep_id, CAST(count(*) AS BIGINT) AS n_members
-        |FROM comp GROUP BY 1 ORDER BY 1""".stripMargin,
-    "dd_decontaminate" ->
-      s"""WITH ev0 AS (SELECT DISTINCT unnest(${shinglesSql(4)}) AS g0
-        |            FROM documents WHERE doc_id % 97 = 0),
-        |ev AS (SELECT DISTINCT ${shingleKeySql("g0")} AS g FROM ev0),
-        |tg0 AS (SELECT doc_id, unnest(${shinglesSql(4)}) AS g0
-        |       FROM documents WHERE doc_id % 97 <> 0),
-        |tg AS (SELECT doc_id, ${shingleKeySql("g0")} AS g FROM tg0),
-        |bad AS (SELECT DISTINCT tg.doc_id FROM tg JOIN ev USING (g))
-        |SELECT doc_id, source, n_chars FROM documents
-        |WHERE doc_id % 97 <> 0 AND doc_id NOT IN (SELECT doc_id FROM bad)
-        |ORDER BY doc_id""".stripMargin,
-    "sim_ann_lsh_exact" -> annLshExactSql,
-    "sim_ann_lsh" -> annLshGuardedSql,
-    "sim_ann_ivf" -> annIvfSql,
-    // the persisted-index probe is bit-identical to the in-memory IVF
-    // search (deterministic centroids, shared cosine/tie arithmetic)
-    "sim_ann_ivf_disk" -> annIvfSql,
-    // same IVF assignment CTEs as annIvfSql; candidates cell-bounded,
-    // per-node top-3, then the mutual (reversed-pair) self-join
-    "ev_growth_accounting" ->
-      """WITH au AS (SELECT DISTINCT user_id,
-        |    (ms - ((ms % 86400000 + 86400000) % 86400000)) // 86400000 AS day
-        |  FROM (SELECT user_id, epoch_ms(ts) AS ms FROM events)),
-        |first AS (SELECT user_id, min(day) AS fw FROM au GROUP BY 1),
-        |prev AS (SELECT user_id, day + 1 AS day FROM au),
-        |mw AS (SELECT max(day) AS mw FROM au),
-        |st AS (SELECT au.day,
-        |    CASE WHEN au.day = f.fw THEN 'new'
-        |         WHEN p.user_id IS NOT NULL THEN 'retained'
-        |         ELSE 'resurrected' END AS st
-        |  FROM au JOIN first f USING (user_id)
-        |  LEFT JOIN prev p ON p.user_id = au.user_id AND p.day = au.day),
-        |chn AS (SELECT p.day, count(*) AS n_churned
-        |  FROM prev p, mw
-        |  WHERE p.day <= mw.mw
-        |    AND NOT EXISTS (SELECT 1 FROM au WHERE au.user_id = p.user_id AND au.day = p.day)
-        |  GROUP BY 1),
-        |agg AS (SELECT day,
-        |    CAST(sum(CASE WHEN st = 'new' THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
-        |    CAST(sum(CASE WHEN st = 'retained' THEN 1 ELSE 0 END) AS BIGINT) AS n_retained,
-        |    CAST(sum(CASE WHEN st = 'resurrected' THEN 1 ELSE 0 END) AS BIGINT) AS n_resurrected
-        |  FROM st GROUP BY 1)
-        |SELECT coalesce(agg.day, chn.day) AS day,
-        |  coalesce(n_new, 0) AS n_new, coalesce(n_retained, 0) AS n_retained,
-        |  coalesce(n_resurrected, 0) AS n_resurrected,
-        |  CAST(coalesce(n_churned, 0) AS BIGINT) AS n_churned
-        |FROM agg FULL JOIN chn ON agg.day = chn.day ORDER BY 1""".stripMargin,
-    "emb_cell_balance" ->
-      s"""WITH cnt AS (SELECT count(*) AS c FROM embeddings),
-        |cents AS (SELECT vec_id AS centroid_id, embedding AS cvec
-        |          FROM embeddings, cnt WHERE vec_id % greatest(1, (c + 15) // 16) = 0),
-        |ac AS (SELECT e.vec_id, c.centroid_id,
-        |         ${cosSql("e.embedding", "c.cvec")} AS cosv
-        |       FROM embeddings e CROSS JOIN cents c),
-        |asg AS (SELECT vec_id, centroid_id AS cell FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
-        |         FROM ac) WHERE rn = 1),
-        |cs AS (SELECT cell, count(*) AS sz FROM asg GROUP BY 1),
-        |r AS (SELECT count(*) AS n_cells, min(sz) AS min_sz, max(sz) AS max_sz,
-        |        CAST(sum(sz) AS BIGINT) AS total FROM cs)
-        |SELECT n_cells, min_sz, max_sz, total,
-        |  CAST((max_sz * n_cells * 20000 + total) // (2 * total) AS BIGINT) AS skew_fp4
-        |FROM r""".stripMargin,
-    "dd_threshold_sweep" ->
-      s"""WITH cnt AS (SELECT count(*) AS c, greatest(16, count(*) // 125) AS kc FROM embeddings),
-        |cents AS (SELECT vec_id AS centroid_id, embedding AS cvec
-        |          FROM embeddings, cnt WHERE vec_id % greatest(1, (c + kc - 1) // kc) = 0),
-        |ac AS (SELECT e.vec_id, e.embedding, c.centroid_id,
-        |         ${cosSql("e.embedding", "c.cvec")} AS cosv
-        |       FROM embeddings e CROSS JOIN cents c),
-        |asg AS (SELECT vec_id, embedding, centroid_id AS cell FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
-        |         FROM ac) WHERE rn = 1),
-        |sc AS (SELECT ${sqlFp(cosSql("a.embedding", "b.embedding"), 6)} AS cos_fp6
-        |       FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id)
-        |SELECT cos_fp6 // 10000 AS bucket, count(*) AS n_pairs
-        |FROM sc WHERE cos_fp6 >= 100000 GROUP BY 1 ORDER BY 1""".stripMargin,
-    "sim_knn_graph" ->
-      s"""WITH cnt AS (SELECT count(*) AS c, greatest(16, count(*) // 125) AS kc FROM embeddings),
-        |cents AS (SELECT vec_id AS centroid_id, embedding AS cvec
-        |          FROM embeddings, cnt WHERE vec_id % greatest(1, (c + kc - 1) // kc) = 0),
-        |ac AS (SELECT e.vec_id, e.embedding, c.centroid_id,
-        |         ${cosSql("e.embedding", "c.cvec")} AS cosv
-        |       FROM embeddings e CROSS JOIN cents c),
-        |asg AS (SELECT vec_id, embedding, centroid_id AS cell FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
-        |         FROM ac) WHERE rn = 1),
-        |sc AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |         ${sqlFp(cosSql("a.embedding", "b.embedding"), 6)} AS cos_fp6
-        |       FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id != b.vec_id),
-        |knn AS (SELECT id_a, id_b, cos_fp6 FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY id_a ORDER BY cos_fp6 DESC, id_b) AS rk
-        |         FROM sc) WHERE rk <= 3)
-        |SELECT k1.id_a, k1.id_b, k1.cos_fp6 FROM knn k1
-        |JOIN knn k2 ON k1.id_a = k2.id_b AND k1.id_b = k2.id_a
-        |WHERE k1.id_a < k1.id_b ORDER BY k1.id_a, k1.id_b""".stripMargin,
-    // same IVF assignment CTEs, labels carried; both argmaxes via the
-    // identical packed-long max ((cos_fp6+1e6)·2^40 + (2^40−1−id))
-    "emb_hard_negatives" ->
-      s"""WITH cnt AS (SELECT count(*) AS c, greatest(16, count(*) // 125) AS kc FROM embeddings),
-        |cents AS (SELECT vec_id AS centroid_id, embedding AS cvec
-        |          FROM embeddings, cnt WHERE vec_id % greatest(1, (c + kc - 1) // kc) = 0),
-        |ac AS (SELECT e.vec_id, e.embedding, e.label, c.centroid_id,
-        |         ${cosSql("e.embedding", "c.cvec")} AS cosv
-        |       FROM embeddings e CROSS JOIN cents c),
-        |asg AS (SELECT vec_id, embedding, label, centroid_id AS cell FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
-        |         FROM ac) WHERE rn = 1),
-        |sc AS (SELECT a.vec_id AS id_a, a.label AS lab_a, b.vec_id AS id_b, b.label AS lab_b,
-        |         ${sqlFp(cosSql("a.embedding", "b.embedding"), 6)} AS cos_fp6
-        |       FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id != b.vec_id),
-        |pk AS (SELECT id_a,
-        |         max(CASE WHEN lab_b != lab_a
-        |             THEN (cos_fp6 + 1000000) * 1099511627776 + (1099511627775 - id_b) END) AS pn,
-        |         max(CASE WHEN lab_b = lab_a
-        |             THEN (cos_fp6 + 1000000) * 1099511627776 + (1099511627775 - id_b) END) AS pp
-        |       FROM sc GROUP BY 1)
-        |SELECT id_a AS vec_id,
-        |  1099511627775 - (pn % 1099511627776) AS neg_id,
-        |  pn // 1099511627776 - 1000000 AS cos_neg_fp6,
-        |  1099511627775 - (pp % 1099511627776) AS pos_id,
-        |  pp // 1099511627776 - 1000000 AS cos_pos_fp6,
-        |  pp // 1099511627776 - pn // 1099511627776 AS margin_fp6
-        |FROM pk ORDER BY vec_id""".stripMargin,
-    // PQ mirror: stride codebook (rank = code), subspace slices,
-    // d2 = x·x − 2·x·c + c·c with the same fold-order dots, argmin =
-    // windowed first by (d2, code)
-    "emb_pq" ->
-      s"""WITH $pqCtes
-        |SELECT id, sub, code, ${sqlFp("d2", 6)} AS d2_fp6
-        |FROM best WHERE rn = 1 ORDER BY id, sub""".stripMargin,
-    "emb_pq_distortion" ->
-      s"""WITH $pqCtes,
-        |enc AS (SELECT id, sub, ${sqlFp("d2", 6)} AS d6 FROM best WHERE rn = 1)
-        |SELECT sub, count(*) AS n, CAST(sum(d6) AS BIGINT) AS sum_d2_fp6,
-        |  CAST(max(d6) AS BIGINT) AS max_d2_fp6
-        |FROM enc GROUP BY 1 ORDER BY 1""".stripMargin,
-    // ADC mirror: per-query LUT from the same codebook, fp6 per
-    // subspace, integer sum, windowed top-k ascending
-    "sim_ann_pq" ->
-      s"""WITH $pqCtes,
-        |enc AS (SELECT id, sub, code FROM best WHERE rn = 1),
-        |qsl AS (SELECT q.vec_id AS query_id, s.sub,
-        |          list_slice(q.embedding, s.sub*16 + 1, s.sub*16 + 16) AS qx
-        |        FROM embeddings q, subs s WHERE q.vec_id % 50 = 0),
-        |lut AS (SELECT q.query_id, q.sub, cb.code,
-        |          ${sqlFp(s"${dot16("qx", "qx")} - 2.0*${dot16("qx", "cvec")} + ${dot16("cvec", "cvec")}", 6)} AS pd6
-        |        FROM qsl q JOIN cb ON cb.sub = q.sub),
-        |sc AS (SELECT l.query_id, e.id, CAST(sum(l.pd6) AS BIGINT) AS approx_d2_fp6
-        |       FROM enc e JOIN lut l ON l.sub = e.sub AND l.code = e.code
-        |       WHERE e.id <> l.query_id GROUP BY 1, 2),
-        |topk AS (SELECT *, row_number() OVER (PARTITION BY query_id
-        |           ORDER BY approx_d2_fp6, id) AS rk FROM sc)
-        |SELECT query_id, id, approx_d2_fp6 FROM topk WHERE rk <= 5
-        |ORDER BY query_id, approx_d2_fp6, id""".stripMargin,
-    // IVF-PQ mirror: the same codebook/LUT chain, with the scored set
-    // first pruned to the nprobe nearest IVF cells per query (stride
-    // centroids + argmax-cosine assignment, as in the sim_ann_ivf
-    // oracle)
-    "sim_ann_ivfpq" ->
-      s"""WITH $pqCtes,
-        |enc AS (SELECT id, sub, code FROM best WHERE rn = 1),
-        |icents AS (SELECT vec_id AS centroid_id, embedding AS icvec
-        |           FROM embeddings, cnt WHERE vec_id % greatest(1, (c + 15) // 16) = 0),
-        |ac AS (SELECT e.vec_id, c.centroid_id, ${cosSql("e.embedding", "c.icvec")} AS cosv
-        |       FROM embeddings e CROSS JOIN icents c),
-        |asg AS (SELECT vec_id AS id, centroid_id AS cell FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn2
-        |         FROM ac) WHERE rn2 = 1),
-        |pc AS (SELECT q.vec_id AS query_id, c.centroid_id AS cell,
-        |         ${cosSql("q.embedding", "c.icvec")} AS cosv
-        |       FROM embeddings q CROSS JOIN icents c WHERE q.vec_id % 50 = 0),
-        |probes AS (SELECT query_id, cell FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosv DESC, cell) AS rn3
-        |         FROM pc) WHERE rn3 <= 2),
-        |qsl AS (SELECT q.vec_id AS query_id, s.sub,
-        |          list_slice(q.embedding, s.sub*16 + 1, s.sub*16 + 16) AS qx
-        |        FROM embeddings q, subs s WHERE q.vec_id % 50 = 0),
-        |lut AS (SELECT q.query_id, q.sub, cb.code,
-        |          ${sqlFp(s"${dot16("qx", "qx")} - 2.0*${dot16("qx", "cvec")} + ${dot16("cvec", "cvec")}", 6)} AS pd6
-        |        FROM qsl q JOIN cb ON cb.sub = q.sub),
-        |cand AS (SELECT p.query_id, a.id FROM probes p JOIN asg a ON a.cell = p.cell
-        |         WHERE a.id <> p.query_id),
-        |sc AS (SELECT c.query_id, c.id, CAST(sum(l.pd6) AS BIGINT) AS approx_d2_fp6
-        |       FROM cand c JOIN enc e ON e.id = c.id
-        |       JOIN lut l ON l.query_id = c.query_id AND l.sub = e.sub AND l.code = e.code
-        |       GROUP BY 1, 2),
-        |topk AS (SELECT *, row_number() OVER (PARTITION BY query_id
-        |           ORDER BY approx_d2_fp6, id) AS rk FROM sc)
-        |SELECT query_id, id, approx_d2_fp6 FROM topk WHERE rk <= 5
-        |ORDER BY query_id, approx_d2_fp6, id""".stripMargin,
-    // the ivfpq oracle with kCand=20 retrieval, then exact cosine
-    // over ONLY the retrieved ids, re-ranked to k=5
-    "sim_ann_rerank" ->
-      s"""WITH $pqCtes,
-        |enc AS (SELECT id, sub, code FROM best WHERE rn = 1),
-        |icents AS (SELECT vec_id AS centroid_id, embedding AS icvec
-        |           FROM embeddings, cnt WHERE vec_id % greatest(1, (c + 15) // 16) = 0),
-        |ac AS (SELECT e.vec_id, c.centroid_id, ${cosSql("e.embedding", "c.icvec")} AS cosv
-        |       FROM embeddings e CROSS JOIN icents c),
-        |asg AS (SELECT vec_id AS id, centroid_id AS cell FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn2
-        |         FROM ac) WHERE rn2 = 1),
-        |pc AS (SELECT q.vec_id AS query_id, c.centroid_id AS cell,
-        |         ${cosSql("q.embedding", "c.icvec")} AS cosv
-        |       FROM embeddings q CROSS JOIN icents c WHERE q.vec_id % 50 = 0),
-        |probes AS (SELECT query_id, cell FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosv DESC, cell) AS rn3
-        |         FROM pc) WHERE rn3 <= 2),
-        |qsl AS (SELECT q.vec_id AS query_id, s.sub,
-        |          list_slice(q.embedding, s.sub*16 + 1, s.sub*16 + 16) AS qx
-        |        FROM embeddings q, subs s WHERE q.vec_id % 50 = 0),
-        |lut AS (SELECT q.query_id, q.sub, cb.code,
-        |          ${sqlFp(s"${dot16("qx", "qx")} - 2.0*${dot16("qx", "cvec")} + ${dot16("cvec", "cvec")}", 6)} AS pd6
-        |        FROM qsl q JOIN cb ON cb.sub = q.sub),
-        |cand AS (SELECT p.query_id, a.id FROM probes p JOIN asg a ON a.cell = p.cell
-        |         WHERE a.id <> p.query_id),
-        |sc AS (SELECT c.query_id, c.id, CAST(sum(l.pd6) AS BIGINT) AS approx_d2_fp6
-        |       FROM cand c JOIN enc e ON e.id = c.id
-        |       JOIN lut l ON l.query_id = c.query_id AND l.sub = e.sub AND l.code = e.code
-        |       GROUP BY 1, 2),
-        |topk AS (SELECT *, row_number() OVER (PARTITION BY query_id
-        |           ORDER BY approx_d2_fp6, id) AS rk FROM sc),
-        |rr AS (SELECT t.query_id, t.id,
-        |         ${sqlFp(cosSql("qv.embedding", "dv.embedding"), 6)} AS cos_fp6
-        |       FROM topk t JOIN embeddings dv ON dv.vec_id = t.id
-        |       JOIN embeddings qv ON qv.vec_id = t.query_id
-        |       WHERE t.rk <= 20)
-        |SELECT query_id, id, cos_fp6, CAST(rk AS BIGINT) AS rk FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos_fp6 DESC, id) AS rk FROM rr) WHERE rk <= 5
-        |ORDER BY query_id, rk""".stripMargin,
-    "dd_simhash" -> simhashSql,
-    "dd_simhash_pairs" -> simhashPairsSql,
-    "dd_simhash64" -> simhash64Sql,
-    "dd_simhash64_pairs" -> simhash64PairsSql,
-    "dd_prefix_join" ->
-      s"""WITH sh0 AS (SELECT doc_id AS doc, unnest(${shinglesSql(3)}) AS s0 FROM documents),
-        |ex AS (SELECT doc, ${shingleKeySql("s0")} AS s FROM sh0),
-        |sets AS (SELECT doc, list_sort(list(s)) AS st, count(*) AS n FROM ex GROUP BY doc),
-        |dfs AS (SELECT s, count(*) AS df FROM ex GROUP BY 1),
-        |rk AS (SELECT ex.doc, ex.s,
-        |    count(*) OVER (PARTITION BY ex.doc) AS n,
-        |    row_number() OVER (PARTITION BY ex.doc ORDER BY dfs.df, ex.s) AS r
-        |  FROM ex JOIN dfs USING (s)),
-        |pref AS (SELECT doc, s, n FROM rk
-        |  WHERE r <= n - CAST(ceil(0.5 * n) AS BIGINT) + 1),
-        |cand AS (SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-        |  FROM pref a JOIN pref b ON a.s = b.s AND a.doc < b.doc
-        |    AND CAST(b.n AS DOUBLE) >= a.n * 0.5 AND CAST(a.n AS DOUBLE) >= b.n * 0.5),
-        |ver AS (SELECT doc_a, doc_b,
-        |    CAST(len(list_intersect(x.st, y.st)) AS BIGINT) AS inter,
-        |    x.n + y.n - len(list_intersect(x.st, y.st)) AS union_
-        |  FROM cand JOIN sets x ON x.doc = doc_a JOIN sets y ON y.doc = doc_b)
-        |SELECT doc_a, doc_b, inter, CAST(union_ AS BIGINT) AS union_,
-        |  ${sqlFp("CAST(inter AS DOUBLE) / CAST(union_ AS DOUBLE)", 4)} AS jaccard_fp4
-        |FROM ver
-        |WHERE ${sqlFp("CAST(inter AS DOUBLE) / CAST(union_ AS DOUBLE)", 4)} >= 5000
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "dd_ngram_jaccard" ->
-      s"""WITH sh0 AS (SELECT doc_id AS doc, unnest(${shinglesSql(3)}) AS s0 FROM documents),
-        |sh AS (SELECT doc, ${shingleKeySql("s0")} AS s FROM sh0),
-        |sizes AS (SELECT doc, count(*) AS sz FROM sh GROUP BY doc),
-        |rare AS (SELECT s FROM sh GROUP BY s HAVING count(*) <= 1000),
-        |sh2 AS (SELECT sh.doc, sh.s FROM sh JOIN rare USING (s)),
-        |inter AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS inter
-        |          FROM sh2 a JOIN sh2 b ON a.s = b.s AND a.doc < b.doc GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, inter, sa.sz + sb.sz - inter AS union_,
-        |  ${sqlFp("CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)", 4)} AS jaccard_fp4
-        |FROM inter JOIN sizes sa ON sa.doc = doc_a JOIN sizes sb ON sb.doc = doc_b
-        |WHERE ${sqlFp("CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)", 4)} >= 500
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    // count-arithmetic cells (C(n,2) same-source, n_a*n_b cross) over
-    // per-(hash, source) counts — mirrors the pair-free Spark plan
-    "dd_cross_matrix" ->
-      """WITH aug AS (SELECT d.doc_id, d.source,
-        |    md5(CASE WHEN d.doc_id % 10 = 1 AND b.text IS NOT NULL
-        |      THEN b.text ELSE d.text END) AS h
-        |  FROM documents d LEFT JOIN documents b ON b.doc_id = d.doc_id - 1),
-        |cnt AS (SELECT h, source, count(*) AS n FROM aug GROUP BY 1, 2)
-        |SELECT a.source AS source_a, b.source AS source_b,
-        |  CAST(sum(CASE WHEN a.source = b.source THEN a.n * (a.n - 1) // 2
-        |    ELSE a.n * b.n END) AS BIGINT) AS n_dup_pairs
-        |FROM cnt a JOIN cnt b ON a.h = b.h AND a.source <= b.source
-        |GROUP BY 1, 2
-        |HAVING sum(CASE WHEN a.source = b.source THEN a.n * (a.n - 1) // 2
-        |    ELSE a.n * b.n END) > 0
-        |ORDER BY 1, 2""".stripMargin,
-    // aug corpus + rare-shingle guard mirror the Spark side; the
-    // containment formulas divide by each side's own set size
-    "dd_containment" ->
-      s"""WITH aug0 AS (SELECT d.doc_id,
-        |    CASE WHEN d.doc_id % 4 = 1 AND b.text IS NOT NULL
-        |      THEN d.text || ' ' || b.text ELSE d.text END AS text
-        |  FROM documents d LEFT JOIN documents b ON b.doc_id = d.doc_id - 1),
-        |shx0 AS (SELECT doc, len(shs) AS sz, unnest(shs) AS sh0
-        |  FROM (SELECT doc_id AS doc, ${shinglesSql(3)} AS shs FROM aug0)),
-        |shx AS (SELECT doc, sz, ${shingleKeySql("sh0")} AS sh FROM shx0),
-        |rare AS (SELECT sh FROM shx GROUP BY sh HAVING count(*) <= 1000),
-        |filt AS (SELECT shx.doc, shx.sz, shx.sh FROM shx JOIN rare USING (sh)),
-        |pairs AS (SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS inter,
-        |    min(a.sz) AS sz_a, min(b.sz) AS sz_b
-        |  FROM filt a JOIN filt b ON a.sh = b.sh AND a.doc < b.doc GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, inter, sz_a, sz_b,
-        |  ${sqlFp("CAST(inter AS DOUBLE) / CAST(sz_a AS DOUBLE)", 4)} AS cont_ab_fp4,
-        |  ${sqlFp("CAST(inter AS DOUBLE) / CAST(sz_b AS DOUBLE)", 4)} AS cont_ba_fp4
-        |FROM pairs
-        |WHERE greatest(${sqlFp("CAST(inter AS DOUBLE) / CAST(sz_a AS DOUBLE)", 4)},
-        |  ${sqlFp("CAST(inter AS DOUBLE) / CAST(sz_b AS DOUBLE)", 4)}) >= 5000
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    // positional 8-grams (NOT distinct — every span counts); docs
-    // shorter than 8 tokens surface with zeros via the left join
-    "dd_dup_ngrams" ->
-      s"""WITH toks AS (SELECT doc_id, $toksSql AS tk FROM documents),
-        |pos AS (SELECT doc_id, tk, unnest(range(1, len(tk) - 6)) AS i
-        |  FROM toks WHERE len(tk) >= 8),
-        |grams AS (SELECT doc_id,
-        |    ${shingleKeySql("array_to_string(tk[CAST(i AS INT):CAST(i AS INT) + 7], ' ')")} AS gram FROM pos),
-        |pg AS (SELECT doc_id, gram, count(*) AS k FROM grams GROUP BY 1, 2),
-        |tot AS (SELECT gram, sum(k) AS tot FROM pg GROUP BY 1),
-        |agg AS (SELECT doc_id, sum(k) AS n_grams,
-        |    sum(CASE WHEN tot > 1 THEN k ELSE 0 END) AS n_dup
-        |  FROM pg JOIN tot USING (gram) GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(n_grams, 0) AS BIGINT) AS n_grams,
-        |  CAST(coalesce(n_dup, 0) AS BIGINT) AS n_dup_grams,
-        |  CASE WHEN coalesce(n_grams, 0) = 0 THEN CAST(0 AS BIGINT)
-        |    ELSE ${sqlFp("CAST(n_dup AS DOUBLE) / CAST(n_grams AS DOUBLE)", 4)}
-        |  END AS dup_frac_fp4
-        |FROM documents d LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin,
-    "dd_embed_neardup" ->
-      s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  ${sqlFp(cosSql("a.embedding", "b.embedding"), 6)} AS cos_fp6
-        |FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-        |WHERE ${sqlFp(cosSql("a.embedding", "b.embedding"), 6)} >= 200000
-        |ORDER BY id_a, id_b""".stripMargin,
-    // MRL recall mirror: per-dim rank windows over the same cross
-    // join, overlap counted against the full-dim top-5
-    "emb_mrl_recall" -> {
-      def topkCte(name: String, d: Int): String =
-        s"""$name AS (SELECT query_id, id FROM (
-           |  SELECT query_id, id, row_number() OVER (PARTITION BY query_id
-           |    ORDER BY ${sqlFp(cosSqlD("vec", "qvec", d), 6)} DESC, id) AS rk FROM sc)
-           |  WHERE rk <= 5)""".stripMargin
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id % 50 = 0),
-        |sc AS (SELECT q.query_id, e.vec_id AS id, e.embedding AS vec, q.qvec
-        |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id),
-        |${topkCte("fullk", 64)},
-        |${topkCte("t16", 16)},
-        |${topkCte("t32", 32)},
-        |h16 AS (SELECT t16.query_id, count(*) AS n_hit FROM t16 JOIN fullk USING (query_id, id) GROUP BY 1),
-        |h32 AS (SELECT t32.query_id, count(*) AS n_hit FROM t32 JOIN fullk USING (query_id, id) GROUP BY 1),
-        |u AS (
-        |  SELECT CAST(16 AS INT) AS dim, q.query_id, CAST(coalesce(h16.n_hit, 0) AS BIGINT) AS n_hit
-        |    FROM q LEFT JOIN h16 USING (query_id)
-        |  UNION ALL
-        |  SELECT CAST(32 AS INT) AS dim, q.query_id, CAST(coalesce(h32.n_hit, 0) AS BIGINT) AS n_hit
-        |    FROM q LEFT JOIN h32 USING (query_id))
-        |SELECT dim, query_id, n_hit,
-        |  ${sqlFp("CAST(n_hit AS DOUBLE) / 5.0", 4)} AS recall_fp4
-        |FROM u ORDER BY dim, query_id""".stripMargin
-    },
-    "sim_topk" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings ORDER BY vec_id LIMIT 1)
-        |SELECT vec_id, ${sqlFp(cosSql("embedding", "qvec"), 6)} AS cos_fp6
-        |FROM embeddings, q WHERE vec_id != qid
-        |ORDER BY 2 DESC, vec_id LIMIT 10""".stripMargin,
-    "sim_maxsim" ->
-      s"""WITH e AS (SELECT vec_id, embedding, vec_id // 4 AS grp FROM embeddings),
-        |q AS (SELECT grp AS qgrp, vec_id AS qtok, embedding AS qvec FROM e WHERE grp < 2),
-        |tok AS (SELECT qgrp, qtok, e.grp, max(${sqlFp(cosSql("embedding", "qvec"), 6)}) AS mx
-        |        FROM e, q WHERE e.grp != qgrp GROUP BY 1, 2, 3),
-        |d AS (SELECT qgrp, grp, CAST(sum(mx) AS BIGINT) AS maxsim_fp6 FROM tok GROUP BY 1, 2),
-        |r AS (SELECT qgrp, grp, maxsim_fp6,
-        |        CAST(row_number() OVER (PARTITION BY qgrp ORDER BY maxsim_fp6 DESC, grp) AS INT) AS rnk
-        |      FROM d)
-        |SELECT qgrp, grp, maxsim_fp6, rnk FROM r WHERE rnk <= 5 ORDER BY qgrp, rnk""".stripMargin,
-    "txt_langid" ->
-      s"SELECT doc_id, $langIdSql AS lang_pred FROM documents ORDER BY doc_id",
-    "txt_langid_ngram" -> {
-      val scores = TextAnalysis.DefaultTrigramProfiles.map { case (lang, grams) =>
-        val inList = grams.map(g => s"'${g.replace("'", "''")}'").mkString(", ")
-        lang -> (s"len(list_filter(CASE WHEN length(lower(text)) < 3 THEN [] " +
-          s"ELSE list_transform(range(1, length(lower(text)) - 1), i -> substr(lower(text), CAST(i AS INT), 3)) END, " +
-          s"g -> g IN ($inList)))")
-      }
-      val best = s"greatest(${scores.map(_._2).mkString(", ")})"
-      val cases = scores.map { case (lang, e) => s"WHEN $e = $best THEN '$lang'" }.mkString(" ")
-      s"SELECT doc_id, CASE $cases END AS lang_pred FROM documents ORDER BY doc_id"
-    },
-    "txt_langid_eval" -> {
-      val scores = TextAnalysis.DefaultTrigramProfiles.map { case (lang, grams) =>
-        val inList = grams.map(g => s"'${g.replace("'", "''")}'").mkString(", ")
-        lang -> (s"len(list_filter(CASE WHEN length(lower(text)) < 3 THEN [] " +
-          s"ELSE list_transform(range(1, length(lower(text)) - 1), i -> substr(lower(text), CAST(i AS INT), 3)) END, " +
-          s"g -> g IN ($inList)))")
-      }
-      val best = s"greatest(${scores.map(_._2).mkString(", ")})"
-      val cases = scores.map { case (lang, e) => s"WHEN $e = $best THEN '$lang'" }.mkString(" ")
-      s"""WITH p AS (SELECT lang, $langIdSql AS ps, CASE $cases END AS pg FROM documents),
-        |a AS (SELECT lang, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN ps = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_stop_ok,
-        |  CAST(sum(CASE WHEN pg = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_gram_ok,
-        |  CAST(sum(CASE WHEN ps = pg THEN 1 ELSE 0 END) AS BIGINT) AS n_agree
-        |FROM p GROUP BY 1)
-        |SELECT lang, n_docs, n_stop_ok, n_gram_ok, n_agree,
-        |  ${sqlFp("CAST(n_stop_ok AS DOUBLE) / CAST(n_docs AS DOUBLE)", 4)} AS acc_stop_fp4,
-        |  ${sqlFp("CAST(n_gram_ok AS DOUBLE) / CAST(n_docs AS DOUBLE)", 4)} AS acc_gram_fp4,
-        |  ${sqlFp("CAST(n_agree AS DOUBLE) / CAST(n_docs AS DOUBLE)", 4)} AS agree_fp4
-        |FROM a ORDER BY 1""".stripMargin
-    },
-    "txt_quality" ->
-      s"""SELECT doc_id, CAST(length(text) AS INT) AS n_chars,
-        | CAST(len($toksSql) AS BIGINT) AS n_words,
-        | ${sqlFp("CAST(length(text) AS DOUBLE) / CAST(CASE WHEN len(" + toksSql + ") = 0 THEN 1 ELSE len(" + toksSql + ") END AS DOUBLE)", 2)} AS mean_word_len_fp2,
-        | ${sqlFp("CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS DOUBLE) / CAST(CASE WHEN length(text) = 0 THEN 1 ELSE length(text) END AS DOUBLE)", 4)} AS punct_ratio_fp4,
-        | ${sqlFp("CAST(len(list_filter(" + toksSql + ", t -> t IN ('the','a','of','and','fast','slow'))) AS DOUBLE) / CAST(CASE WHEN len(" + toksSql + ") = 0 THEN 1 ELSE len(" + toksSql + ") END AS DOUBLE)", 4)} AS stopword_ratio_fp4
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // the identical BPE walk as a recursive CTE over a bracketed
-    // string form (token t ↦ \x01 t \x02, concatenated): a pair
-    // merge is then exactly `replace(s, \x01a\x02\x01b\x02,
-    // \x01ab\x02)` — string replace IS left-to-right non-overlapping,
-    // and the brackets make containment ⇔ whole-token adjacency.
-    // Each recursion step picks the lowest-rank pattern PRESENT
-    // (correlated scalar subquery over the rank table) and applies
-    // one merge pass; rows exit when no pattern applies. The state
-    // string strictly shrinks per step, so termination is structural.
-    // PRECONDITION (shared by both engines): document text contains
-    // none of U+0000/U+0001/U+0002 — the Spark expression keys merge
-    // pairs with a \u0000 separator and this oracle brackets tokens
-    // with chr(1)/chr(2), so a control char reaching the tokenizer
-    // (each would become a single-char token under WordPattern)
-    // corrupts the bracketed form / rank keys and the two engines
-    // diverge as an opaque hash mismatch. Real corpora satisfy this
-    // after txt_normalize-style ingest cleanup; synthetic testdata
-    // is ASCII printable by construction.
-    "txt_bpe_tokens" ->
-      s"""WITH RECURSIVE
-        |merges AS (
-        |  SELECT rank, chr(1) || a || chr(2) || chr(1) || b || chr(2) AS pat,
-        |    chr(1) || a || b || chr(2) AS rep
-        |  FROM (VALUES $bpeMergesValues) m(rank, a, b)),
-        |words AS (
-        |  SELECT doc_id, unnest(range(len(ws))) AS wi, ws
-        |  FROM (SELECT doc_id,
-        |      regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]') AS ws
-        |    FROM documents)),
-        |init AS (
-        |  SELECT doc_id, wi,
-        |    regexp_replace(ws[wi + 1], '(.)', chr(1) || '\\1' || chr(2), 'g') AS s
-        |  FROM words),
-        |steps AS (
-        |  SELECT doc_id, wi, s FROM init
-        |  UNION ALL
-        |  SELECT doc_id, wi,
-        |    replace(s,
-        |      (SELECT pat FROM merges WHERE contains(s, pat) ORDER BY rank LIMIT 1),
-        |      (SELECT rep FROM merges WHERE contains(s, pat) ORDER BY rank LIMIT 1)) AS s
-        |  FROM steps
-        |  WHERE EXISTS (SELECT 1 FROM merges WHERE contains(s, pat))),
-        |fin AS (
-        |  SELECT doc_id, wi, s FROM steps
-        |  WHERE NOT EXISTS (SELECT 1 FROM merges WHERE contains(s, pat))),
-        |per_doc AS (
-        |  SELECT doc_id,
-        |    CAST(sum(len(s) - len(replace(s, chr(2), ''))) AS BIGINT) AS n_bpe_tokens,
-        |    string_agg(trim(replace(s, chr(2) || chr(1), ' '), chr(1) || chr(2)),
-        |      ' ' ORDER BY wi) AS bpe_text
-        |  FROM fin GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(p.n_bpe_tokens, 0) AS n_bpe_tokens,
-        |  coalesce(p.bpe_text, '') AS bpe_text
-        |FROM documents d LEFT JOIN per_doc p USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-    "txt_tokens" ->
-      s"""SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS n_ws_tokens,
-        | CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_word_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "txt_normalize" ->
-      """SELECT doc_id,
-        | trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]+', ' ', 'g'), '\s+', ' ', 'g')) AS norm_text
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "txt_stopword_remove" ->
-      s"""SELECT doc_id,
-        | array_to_string(list_filter($toksSql, t -> t NOT IN ('the','a','of','and','fast','slow')), ' ') AS clean_text
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "txt_gopher" ->
-      s"""WITH t AS (SELECT doc_id, text, $toksSql AS toks FROM documents),
-        |s AS (SELECT doc_id,
-        |    CAST(len(toks) AS BIGINT) AS n_words,
-        |    CASE WHEN len(toks) = 0 THEN 1 ELSE len(toks) END AS nw,
-        |    coalesce(list_sum(list_transform(toks, x -> length(x))), 0) AS sumlen,
-        |    len(list_filter(toks, x -> regexp_matches(x, '[a-z]'))) AS alpha_cnt,
-        |    len(regexp_extract_all(text, '#|\\.\\.\\.')) AS sym_cnt,
-        |    CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','fast','slow'))) AS BIGINT) AS stop_hits
-        |  FROM t),
-        |q AS (SELECT doc_id, n_words,
-        |    ${sqlFp("CAST(sumlen AS DOUBLE) / CAST(nw AS DOUBLE)", 2)} AS mean_wlen_fp2,
-        |    ${sqlFp("CAST(alpha_cnt AS DOUBLE) / CAST(nw AS DOUBLE)", 4)} AS alpha_frac_fp4,
-        |    ${sqlFp("CAST(sym_cnt AS DOUBLE) / CAST(nw AS DOUBLE)", 4)} AS sym_ratio_fp4,
-        |    stop_hits
-        |  FROM s)
-        |SELECT *, CAST(CASE WHEN n_words >= 50 AND n_words <= 100000
-        |    AND mean_wlen_fp2 >= 300 AND mean_wlen_fp2 <= 1000
-        |    AND alpha_frac_fp4 >= 8000 AND sym_ratio_fp4 <= 1000
-        |    AND stop_hits >= 2 THEN 1 ELSE 0 END AS BIGINT) AS keep_flag
-        |FROM q ORDER BY doc_id""".stripMargin,
-    "txt_charlm" ->
-      s"""WITH norm AS (SELECT doc_id,
-        |  trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]+', ' ', 'g'), '\\s+', ' ', 'g')) AS t
-        |  FROM documents),
-        |pos AS (SELECT doc_id, t, unnest(range(1, greatest(length(t) - 1, 1))) AS i FROM norm),
-        |tri AS (SELECT doc_id, substr(t, CAST(i AS INT), 2) AS ctx, substr(t, CAST(i AS INT) + 2, 1) AS c FROM pos),
-        |model AS (SELECT ctx, c, count(*) AS cnt FROM tri GROUP BY 1, 2),
-        |ctxt AS (SELECT ctx, count(*) AS tot FROM tri GROUP BY 1),
-        |vocab AS (SELECT count(DISTINCT c) AS v FROM tri)
-        |SELECT tri.doc_id, count(*) AS n_tri,
-        |  CAST(sum(${sqlFp("CAST(cnt + 1 AS DOUBLE) / CAST(tot + v AS DOUBLE)", 6)}) AS BIGINT) AS sum_p_fp6
-        |FROM tri JOIN model USING (ctx, c) JOIN ctxt USING (ctx) CROSS JOIN vocab
-        |GROUP BY tri.doc_id ORDER BY doc_id""".stripMargin,
-    // the txt_charlm model CTEs trained TWICE (target slice + full
-    // corpus); score = exact fp6 probability difference per position
-    "smp_dsir" ->
-      s"""WITH norm AS (SELECT doc_id, lang = 'en' AS is_t,
-        |  trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]+', ' ', 'g'), '\\s+', ' ', 'g')) AS t
-        |  FROM documents),
-        |pos AS (SELECT doc_id, is_t, t, unnest(range(1, greatest(length(t) - 1, 1))) AS i FROM norm),
-        |tri AS (SELECT doc_id, is_t, substr(t, CAST(i AS INT), 2) AS ctx, substr(t, CAST(i AS INT) + 2, 1) AS c FROM pos),
-        |mc AS (SELECT ctx, c, count(*) AS cnt_c FROM tri GROUP BY 1, 2),
-        |mt AS (SELECT ctx, c, count(*) AS cnt_t FROM tri WHERE is_t GROUP BY 1, 2),
-        |cc AS (SELECT ctx, CAST(sum(cnt_c) AS BIGINT) AS tot_c FROM mc GROUP BY 1),
-        |ct AS (SELECT ctx, CAST(sum(cnt_t) AS BIGINT) AS tot_t FROM mt GROUP BY 1),
-        |vocab AS (SELECT count(DISTINCT c) AS v FROM mc),
-        |scd AS (SELECT tri.doc_id,
-        |    ${sqlFp("CAST(coalesce(cnt_t, 0) + 1 AS DOUBLE) / CAST(coalesce(tot_t, 0) + v AS DOUBLE)", 6)} AS pt6,
-        |    ${sqlFp("CAST(cnt_c + 1 AS DOUBLE) / CAST(tot_c + v AS DOUBLE)", 6)} AS pc6
-        |  FROM tri JOIN mc USING (ctx, c) JOIN cc USING (ctx)
-        |    LEFT JOIN mt USING (ctx, c) LEFT JOIN ct USING (ctx) CROSS JOIN vocab)
-        |SELECT doc_id, count(*) AS n_tri, CAST(sum(pt6 - pc6) AS BIGINT) AS dsir_fp6,
-        |  CAST(CASE WHEN CAST(sum(pt6 - pc6) AS BIGINT) > 0 THEN 1 ELSE 0 END AS BIGINT) AS keep_flag
-        |FROM scd GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    "txt_pii_mask" ->
-      """SELECT doc_id, regexp_replace(regexp_replace(
-        |    text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com or 555-'
-        |      || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-4567 now',
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g') AS masked
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "txt_dedup_tokens" -> {
-      val augToks = toksSql.replace("lower(text)", "lower(text || ' go go stop stop stop end')")
-      s"""SELECT doc_id, array_to_string(
-        |  list_filter($augToks, (t, i) -> i = 1 OR t != ($augToks)[i - 1]), ' ') AS clean_text
-        |FROM documents ORDER BY doc_id""".stripMargin
-    },
-    "emb_quantize" ->
-      s"""WITH sc AS (
-        |  SELECT vec_id,
-        |    CASE WHEN mx = 0 THEN 1.0 ELSE 127.0 / mx END AS scale
-        |  FROM (SELECT vec_id, list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS mx
-        |        FROM embeddings) m)
-        |SELECT e.vec_id, ${sqlFp("scale", 6)} AS scale_fp6, CAST(i - 1 AS INT) AS pos,
-        |  CAST(floor(CAST(e.embedding[i] AS DOUBLE) * scale + 0.5) AS INT) AS q
-        |FROM embeddings e JOIN sc ON sc.vec_id = e.vec_id CROSS JOIN range(1, 65) t(i)
-        |ORDER BY e.vec_id, pos""".stripMargin,
-    "emb_prototypes" ->
-      // argmin Σ(q_d·n − s_d)² — the per-class mean cleared of /n;
-      // everything integer after the shared fp3 quantization
-      """WITH q AS (SELECT vec_id, label,
-        |    list_transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE)*1e3+0.5) AS BIGINT)) AS qv
-        |  FROM embeddings),
-        |cn AS (SELECT label, count(*) AS n FROM q GROUP BY 1),
-        |cd AS (SELECT label, i AS d, CAST(sum(qv[i]) AS BIGINT) AS sd
-        |       FROM q CROSS JOIN range(1, 65) t(i) GROUP BY 1, 2),
-        |dist AS (SELECT q.vec_id, q.label, cn.n,
-        |    CAST(sum((qv[d] * n - sd) * (qv[d] * n - sd)) AS BIGINT) AS dist
-        |  FROM q JOIN cn USING (label) JOIN cd ON cd.label = q.label
-        |  GROUP BY 1, 2, 3),
-        |m AS (SELECT label, min(dist) AS min_dist FROM dist GROUP BY 1)
-        |SELECT dist.label AS label, min(vec_id) AS proto_id, min_dist, n
-        |FROM dist JOIN m ON m.label = dist.label AND dist.dist = m.min_dist
-        |GROUP BY dist.label, min_dist, n ORDER BY dist.label""".stripMargin,
-    // squared norm via the strict left-fold dot, fp2 histogram,
-    // all-integer Tukey fences — mirrors the Spark expression exactly
-    "emb_outliers" ->
-      s"""WITH sq AS (SELECT vec_id,
-        |    ${sqlFp(dotSql("embedding", "embedding"), 2)} AS sqn_c2 FROM embeddings),
-        |h AS (SELECT sqn_c2 AS v, count(*) AS k FROM sq GROUP BY 1),
-        |h2 AS (SELECT v, sum(k) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(k) OVER () AS n FROM h),
-        |f AS (SELECT min(CASE WHEN cum >= (n + 3) // 4 THEN v END) AS q1,
-        |    min(CASE WHEN cum >= (3 * n + 3) // 4 THEN v END) AS q3 FROM h2)
-        |SELECT vec_id, sqn_c2, q1, q3,
-        |  CAST(CASE WHEN sqn_c2 * 2 < q1 * 2 - (q3 - q1) * 3
-        |    OR sqn_c2 * 2 > q3 * 2 + (q3 - q1) * 3 THEN 1 ELSE 0 END AS BIGINT) AS is_outlier
-        |FROM sq CROSS JOIN f ORDER BY vec_id""".stripMargin,
-    "txt_tfidf" ->
-      s"""WITH toks AS (SELECT doc_id, unnest($toksSql) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents)
-        |SELECT doc_id, term, tf, count(*) OVER (PARTITION BY term) AS df,
-        |  ${sqlFp("CAST(tf AS DOUBLE) * ln(n / CAST(count(*) OVER (PARTITION BY term) AS DOUBLE))", 4)} AS tfidf_fp4
-        |FROM tf, n ORDER BY doc_id, term""".stripMargin,
-    "txt_collocations" ->
-      s"""WITH toks0 AS (SELECT doc_id, $toksSql AS tk FROM documents),
-        |pos AS (SELECT doc_id, tk, unnest(range(1, len(tk))) AS i FROM toks0),
-        |big AS (SELECT tk[CAST(i AS INT)] AS w1, tk[CAST(i AS INT) + 1] AS w2 FROM pos),
-        |cnt AS (SELECT w1, w2, count(*) AS n_xy FROM big GROUP BY 1, 2),
-        |lm AS (SELECT w1, CAST(sum(n_xy) AS BIGINT) AS n_x FROM cnt GROUP BY 1),
-        |rm AS (SELECT w2, CAST(sum(n_xy) AS BIGINT) AS n_y FROM cnt GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n_xy) AS BIGINT) AS n_tot FROM cnt)
-        |SELECT w1, w2, n_xy,
-        |  ${sqlFp("(CAST(n_xy AS DOUBLE) * CAST(n_tot AS DOUBLE)) / (CAST(n_x AS DOUBLE) * CAST(n_y AS DOUBLE))", 4)} AS lift_fp4
-        |FROM cnt JOIN lm USING (w1) JOIN rm USING (w2) CROSS JOIN tot
-        |WHERE n_xy >= 5 ORDER BY w1, w2""".stripMargin,
-    "txt_html_extract" ->
-      s"""WITH h AS (SELECT doc_id,
-        |  '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR) ||
-        |  '</title><script type="text/javascript">var x = 1 < 2;</script>' ||
-        |  '<style>.nav{color:red}</style></head><body><nav>home &amp; links</nav><p>' ||
-        |  text ||
-        |  '</p><div class="footer">&copy; 2024 &lt;Example&gt;&nbsp;Corp</div></body></html>' AS html
-        |  FROM documents),
-        |c AS (SELECT doc_id, html,
-        |  trim(regexp_replace(
-        |    regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |      regexp_replace(
-        |        regexp_replace(
-        |          regexp_replace(html, '<script[^>]*>[\\s\\S]*?</script>', ' ', 'g'),
-        |          '<style[^>]*>[\\s\\S]*?</style>', ' ', 'g'),
-        |        '<[^>]*>', ' ', 'g'),
-        |      '&amp;', '&', 'g'), '&lt;', '<', 'g'), '&gt;', '>', 'g'), '&nbsp;', ' ', 'g'), '&copy;', '(c)', 'g'),
-        |    '\\s+', ' ', 'g')) AS extracted FROM h)
-        |SELECT doc_id, extracted, CAST(length(html) AS BIGINT) AS n_chars_raw,
-        |  CAST(length(extracted) AS BIGINT) AS n_chars_text,
-        |  ${sqlFp("CAST(1.0 AS DOUBLE) - CAST(length(extracted) AS DOUBLE) / CAST(length(html) AS DOUBLE)", 4)} AS boilerplate_ratio_fp4
-        |FROM c ORDER BY doc_id""".stripMargin,
-    // the oracle never sees the WET bytes: it recomputes the expected
-    // output straight from documents, so the whole write→read loop
-    // must reproduce every payload byte to hash-match
-    "src_wet_roundtrip" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  md5(text) AS h
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // same discipline for the JSONL loop: the oracle reads documents
-    // directly — the export/read-back must round-trip every code
-    // point for the md5 to land
-    "src_jsonl_roundtrip" ->
-      """SELECT doc_id, lang, source,
-        |  CAST(length(text) AS BIGINT) AS n_chars_rt, md5(text) AS h
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // PCM 2× decimation: every output sample recomputed closed-form
-    // from doc_id; floor through a double because DuckDB's //
-    // truncates on negative sums while the Spark side's arithmetic
-    // shift floors
-    "mm_audio_resample" ->
-      """WITH d AS (SELECT doc_id, doc_id % 200 + 50 AS n FROM documents),
-        |o AS (SELECT doc_id, unnest(range(0, n // 2)) AS k FROM d),
-        |sm AS (SELECT doc_id, CAST(floor(CAST(
-        |    ((doc_id * 31 + (2 * k) * (2 * k) * 7) % 65536 - 32768) +
-        |    ((doc_id * 31 + (2 * k + 1) * (2 * k + 1) * 7) % 65536 - 32768)
-        |    AS DOUBLE) / 2) AS BIGINT) AS v
-        |  FROM o)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_out,
-        |  CAST(sum(v) AS BIGINT) AS sum_out, min(v) AS min_out, max(v) AS max_out
-        |FROM sm GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "txt_fingerprint" ->
-      """SELECT doc_id, list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |  list_transform(range(1, least(length(text), 64) + 1),
-        |    i -> CAST(ascii(substr(text, CAST(i AS INT), 1)) AS BIGINT))),
-        |  (a, x) -> (a*31 + x) % 2147483647) AS fp_hash
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // winnowing: per-window min via list_min over the hash slice,
-    // rightmost position = list_max over index-or-null, DISTINCT
-    // collapses a selection persisting across consecutive windows —
-    // the same three rules the native deque implements
-    "txt_winnow" ->
-      s"""WITH ${winnowCoreSql("documents")}
-        |SELECT DISTINCT doc_id, CAST(pos AS INT) AS pos, fp FROM wsel
-        |ORDER BY doc_id, pos""".stripMargin,
-    // winnow-pair matching (the MOSS step): distinct doc fingerprints,
-    // boilerplate-fp guard, self-join, >= minShared threshold — the
-    // aug corpus mirrors dd_containment's planted embeddings so pairs
-    // provably exist at every SF (shared run >= n+w-1 tokens)
-    "dd_winnow_pairs" ->
-      s"""WITH aug1 AS (SELECT d.doc_id,
-        |    CASE WHEN d.doc_id % 4 = 1 AND b.text IS NOT NULL
-        |      THEN d.text || ' ' || b.text ELSE d.text END AS text
-        |  FROM documents d LEFT JOIN documents b ON b.doc_id = d.doc_id - 1),
-        |${winnowCoreSql("aug1")},
-        |fps AS (SELECT DISTINCT doc_id AS doc, fp FROM wsel),
-        |rare AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) <= 1000),
-        |f2 AS (SELECT fps.doc, fps.fp FROM fps JOIN rare USING (fp))
-        |SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS n_shared
-        |FROM f2 a JOIN f2 b ON a.fp = b.fp AND a.doc < b.doc
-        |GROUP BY 1, 2 HAVING count(*) >= 2
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    // Flesch–Kincaid: exact integer counts (whitespace tokens, [.!?]+
-    // runs floored at 1, [aeiouy]+ vowel groups), then the grade in
-    // the same double op order as the Spark side
-    "txt_readability" ->
-      s"""WITH c AS (SELECT doc_id,
-        |  CAST(len($toksSql) AS BIGINT) AS n_words,
-        |  CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+'))) AS BIGINT) AS n_sentences,
-        |  CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT) AS n_syllables
-        |  FROM documents)
-        |SELECT doc_id, n_words, n_sentences, n_syllables,
-        |  CASE WHEN n_words = 0 THEN CAST(0 AS BIGINT)
-        |    ELSE ${sqlFp("0.39 * (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE)) + " +
-             "11.8 * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE)) - 15.59", 4)}
-        |  END AS fk_grade_fp4
-        |FROM c ORDER BY doc_id""".stripMargin,
-    // BPE learn: 3 unrolled merge iterations; the greedy
-    // left-to-right application is the same tail-token fold as the
-    // Spark side, the chars come from the charlm substr convention
-    "txt_bpe_learn" -> {
-      val bgFrom = (v: String) =>
-        s"""(SELECT c, unnest(list_transform(range(1, len(string_split(sym, ' '))),
-           | i -> string_split(sym, ' ')[CAST(i AS INT)] || ' ' ||
-           |      string_split(sym, ' ')[CAST(i AS INT) + 1])) AS g FROM $v)"""
-          .stripMargin.replace("\n", " ")
-      val mergeFold =
-        """list_reduce(list_prepend('', string_split(sym, ' ')), (acc, cur) ->
-          | CASE WHEN cur = mb AND acc = ma THEN mm
-          |      WHEN cur = mb AND length(acc) > length(ma)
-          |           AND substr(acc, length(acc) - length(ma), length(ma) + 1) = ' ' || ma
-          |        THEN substr(acc, 1, length(acc) - length(ma) - 1) || ' ' || mm
-          |      WHEN acc = '' THEN cur
-          |      ELSE acc || ' ' || cur END)""".stripMargin.replace("\n", " ")
-      s"""WITH toks AS (SELECT unnest($toksSql) AS w FROM documents),
-        |v0 AS (SELECT w, count(*) AS c,
-        |    array_to_string(list_transform(range(1, length(w) + 1),
-        |      i -> substr(w, CAST(i AS INT), 1)), ' ') AS sym
-        |  FROM toks GROUP BY w),
-        |p1 AS (SELECT g, CAST(sum(c) AS BIGINT) AS cnt FROM ${bgFrom("v0")} GROUP BY 1),
-        |t1 AS (SELECT g AS m_g, cnt FROM p1 ORDER BY cnt DESC, g LIMIT 1),
-        |m1 AS (SELECT m_g, cnt, split_part(m_g, ' ', 1) AS ma,
-        |    split_part(m_g, ' ', 2) AS mb, replace(m_g, ' ', '') AS mm FROM t1),
-        |v1 AS (SELECT w, c, $mergeFold AS sym FROM v0 CROSS JOIN m1),
-        |p2 AS (SELECT g, CAST(sum(c) AS BIGINT) AS cnt FROM ${bgFrom("v1")} GROUP BY 1),
-        |t2 AS (SELECT g AS m_g, cnt FROM p2 ORDER BY cnt DESC, g LIMIT 1),
-        |m2 AS (SELECT m_g, cnt, split_part(m_g, ' ', 1) AS ma,
-        |    split_part(m_g, ' ', 2) AS mb, replace(m_g, ' ', '') AS mm FROM t2),
-        |v2 AS (SELECT w, c, $mergeFold AS sym FROM v1 CROSS JOIN m2),
-        |p3 AS (SELECT g, CAST(sum(c) AS BIGINT) AS cnt FROM ${bgFrom("v2")} GROUP BY 1),
-        |t3 AS (SELECT g AS m_g, cnt FROM p3 ORDER BY cnt DESC, g LIMIT 1),
-        |m3 AS (SELECT m_g, cnt, split_part(m_g, ' ', 1) AS ma,
-        |    split_part(m_g, ' ', 2) AS mb, replace(m_g, ' ', '') AS mm FROM t3),
-        |v3 AS (SELECT w, c, $mergeFold AS sym FROM v2 CROSS JOIN m3),
-        |tt1 AS (SELECT CAST(sum(c * len(string_split(sym, ' '))) AS BIGINT) AS tot_syms FROM v1),
-        |tt2 AS (SELECT CAST(sum(c * len(string_split(sym, ' '))) AS BIGINT) AS tot_syms FROM v2),
-        |tt3 AS (SELECT CAST(sum(c * len(string_split(sym, ' '))) AS BIGINT) AS tot_syms FROM v3)
-        |SELECT CAST(1 AS BIGINT) AS step, m_g AS pair, mm AS merged, cnt AS cnt_w, tot_syms FROM m1, tt1
-        |UNION ALL SELECT CAST(2 AS BIGINT), m_g, mm, cnt, tot_syms FROM m2, tt2
-        |UNION ALL SELECT CAST(3 AS BIGINT), m_g, mm, cnt, tot_syms FROM m3, tt3
-        |ORDER BY step""".stripMargin
-    },
-    // RAKE: the fold→delimiter→split phrase extraction replicated
-    // with list_reduce, integer word/phrase scores
-    "txt_keywords" ->
-      s"""WITH tk AS (SELECT doc_id, $toksSql AS tk FROM documents),
-        |m AS (SELECT doc_id, list_reduce(list_prepend('', list_transform(tk,
-        |    t -> CASE WHEN t IN ('the','a','of','and','fast','slow') THEN '|'
-        |         ELSE ' ' || t END)), (acc, x) -> acc || x) AS mm FROM tk),
-        |occ AS (SELECT doc_id, trim(p) AS phrase
-        |  FROM m, unnest(string_split(mm, '|')) u(p) WHERE length(trim(p)) > 0),
-        |pw AS (SELECT doc_id, phrase, len(string_split(phrase, ' ')) AS plen,
-        |    unnest(string_split(phrase, ' ')) AS w FROM occ),
-        |ws AS (SELECT w, (1000 * CAST(sum(plen) AS BIGINT)) // count(*) AS wscore
-        |  FROM pw GROUP BY 1),
-        |dp AS (SELECT DISTINCT doc_id, phrase FROM occ),
-        |dpw AS (SELECT doc_id, phrase, len(string_split(phrase, ' ')) AS plen,
-        |    unnest(string_split(phrase, ' ')) AS w FROM dp)
-        |SELECT doc_id, phrase, CAST(max(plen) AS BIGINT) AS n_words,
-        |  CAST(sum(wscore) AS BIGINT) AS score_i
-        |FROM dpw JOIN ws USING (w) GROUP BY 1, 2
-        |ORDER BY doc_id, score_i DESC, phrase""".stripMargin,
-    // BM25 over the top-20-df query terms: tf/df/dl from the shared
-    // token table, score in the identical double op order (ln both
-    // engines — the txt_tfidf precedent), rank on the fp4 score +
-    // doc_id so ties cut identically
-    "txt_bm25" ->
-      s"""WITH toks AS (SELECT doc_id, unnest($toksSql) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |q AS (SELECT term, df FROM df ORDER BY df DESC, term LIMIT 20),
-        |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs,
-        |            (SELECT CAST(sum(dl) AS DOUBLE) FROM dl) AS tot),
-        |scored AS (SELECT tf.term, tf.doc_id, tf.tf,
-        |  ${sqlFp("ln((CAST(n_docs AS DOUBLE) - CAST(q.df AS DOUBLE) + 0.5) / (CAST(q.df AS DOUBLE) + 0.5) + 1.0) * " +
-             "(CAST(tf.tf AS DOUBLE) * 2.2 / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(dl.dl AS DOUBLE) / (tot / CAST(n_docs AS DOUBLE)))))) ", 4)} AS bm25_fp4
-        |  FROM tf JOIN q USING (term) JOIN dl USING (doc_id) CROSS JOIN st),
-        |rk AS (SELECT *, row_number() OVER (PARTITION BY term ORDER BY bm25_fp4 DESC, doc_id) AS r
-        |  FROM scored)
-        |SELECT term, doc_id, tf, bm25_fp4 FROM rk WHERE r <= 10
-        |ORDER BY term, bm25_fp4 DESC, doc_id""".stripMargin,
-    // phrase = globally most frequent bigram (count desc, bigram asc);
-    // postings pruned to the two phrase terms, adjacency on pos+1
-    "txt_phrase_search" ->
-      s"""WITH tk0 AS (SELECT doc_id, $toksSql AS tk FROM documents),
-        |bpos AS (SELECT doc_id, tk, unnest(range(1, len(tk))) AS i FROM tk0),
-        |big AS (SELECT tk[CAST(i AS INT)] || ' ' || tk[CAST(i AS INT) + 1] AS g FROM bpos),
-        |cnt AS (SELECT g, count(*) AS c FROM big GROUP BY 1),
-        |top AS (SELECT string_split(g, ' ')[1] AS w1, string_split(g, ' ')[2] AS w2
-        |  FROM cnt ORDER BY c DESC, g LIMIT 1),
-        |pos AS (SELECT doc_id, CAST(i AS BIGINT) - 1 AS pos, tk[CAST(i AS INT)] AS tok
-        |  FROM tk0, unnest(range(1, len(tk) + 1)) t(i)),
-        |m1 AS (SELECT doc_id, pos AS p1, w1, w2 FROM pos, top WHERE tok = w1),
-        |m2 AS (SELECT doc_id, pos AS p2 FROM pos, top WHERE tok = w2)
-        |SELECT m1.doc_id, w1, w2, count(*) AS n_matches, min(p1) AS first_pos
-        |FROM m1 JOIN m2 ON m1.doc_id = m2.doc_id AND m2.p2 = m1.p1 + 1
-        |GROUP BY 1, 2, 3 ORDER BY m1.doc_id""".stripMargin,
-    // 2×2 χ² on exact per-arm integers; the double expression mirrors
-    // the Spark op order term for term
-    "ev_ab_test" ->
-      s"""WITH u AS (SELECT user_id, epoch_ms(ts) // 86400000 AS day,
-        |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-        |  FROM events GROUP BY 1, 2),
-        |arms AS (SELECT (user_id + day) % 2 AS arm, count(*) AS n, CAST(sum(conv) AS BIGINT) AS k
-        |  FROM u GROUP BY 1),
-        |a AS (SELECT n AS units_a, k AS conv_a FROM arms WHERE arm = 0),
-        |b AS (SELECT n AS units_b, k AS conv_b FROM arms WHERE arm = 1)
-        |SELECT units_a, conv_a, units_b, conv_b,
-        |  ${sqlFp("CAST(conv_a AS DOUBLE) / CAST(units_a AS DOUBLE)", 6)} AS rate_a_fp6,
-        |  ${sqlFp("CAST(conv_b AS DOUBLE) / CAST(units_b AS DOUBLE)", 6)} AS rate_b_fp6,
-        |  CASE WHEN conv_a + conv_b = 0 OR (units_a - conv_a) + (units_b - conv_b) = 0
-        |    THEN CAST(0 AS BIGINT)
-        |    ELSE ${sqlFp("CAST(units_a + units_b AS DOUBLE) * " +
-             "(CAST(conv_a AS DOUBLE) * CAST(units_b - conv_b AS DOUBLE) - CAST(units_a - conv_a AS DOUBLE) * CAST(conv_b AS DOUBLE)) * " +
-             "(CAST(conv_a AS DOUBLE) * CAST(units_b - conv_b AS DOUBLE) - CAST(units_a - conv_a AS DOUBLE) * CAST(conv_b AS DOUBLE)) / " +
-             "((CAST(units_a AS DOUBLE) * CAST(units_b AS DOUBLE)) * " +
-             "((CAST(conv_a AS DOUBLE) + CAST(conv_b AS DOUBLE)) * (CAST(units_a - conv_a AS DOUBLE) + CAST(units_b - conv_b AS DOUBLE))))", 4)}
-        |  END AS chi2_fp4
-        |FROM a CROSS JOIN b""".stripMargin,
-    "ev_kmv_distinct" -> {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('kmv:' || CAST(user_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
-      s"""WITH h AS (SELECT DISTINCT event_type, CAST($u32 AS DOUBLE) / 4294967296.0 AS u FROM events),
-        |r AS (SELECT event_type, u, row_number() OVER (PARTITION BY event_type ORDER BY u) AS rk FROM h)
-        |SELECT event_type, count(*) AS n_kept,
-        |  ${sqlFp("CASE WHEN count(*) < 64 THEN CAST(count(*) AS DOUBLE) ELSE 63.0 / max(u) END", 2)} AS est_distinct_fp2
-        |FROM r WHERE rk <= 64 GROUP BY event_type ORDER BY event_type""".stripMargin
-    },
-    "ev_hll_distinct" -> {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('hll:' || CAST(user_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
-      // the SAME α_m·m²·2^ρmax double literal the Spark plan folds in
-      // (m=256, ρmax=25): 17 sig digits round-trips the IEEE double
-      val numerator = (0.7213 / (1.0 + 1.079 / 256)) * 256.0 * 256.0 * math.pow(2.0, 25)
-      val numLit = "%.17e".formatLocal(java.util.Locale.ROOT, numerator)
-      s"""WITH h AS (SELECT event_type, $u32 AS u FROM events),
-        |b AS (SELECT event_type, u // 16777216 AS bkt, u % 16777216 AS w FROM h),
-        |r AS (SELECT event_type, bkt,
-        |    max(CASE WHEN w = 0 THEN 25 ELSE 25 - length(bin(w)) END) AS mb
-        |  FROM b GROUP BY 1, 2),
-        |grid AS (SELECT g.event_type, gs.bkt
-        |  FROM (SELECT DISTINCT event_type FROM events) g
-        |  CROSS JOIN (SELECT unnest(range(0, 256)) AS bkt) gs),
-        |f AS (SELECT grid.event_type, coalesce(r.mb, 0) AS mb
-        |  FROM grid LEFT JOIN r ON r.event_type = grid.event_type AND r.bkt = grid.bkt),
-        |agg AS (SELECT event_type,
-        |    CAST(sum(CASE WHEN mb = 0 THEN 1 ELSE 0 END) AS BIGINT) AS v_zero,
-        |    CAST(sum(CAST(1 AS BIGINT) << (25 - mb)) AS BIGINT) AS reg_sum
-        |  FROM f GROUP BY event_type),
-        |x AS (SELECT event_type, v_zero, reg_sum,
-        |    CASE WHEN $numLit / CAST(reg_sum AS DOUBLE) <= 640.0 AND v_zero > 0
-        |      THEN ln(256.0 / CAST(v_zero AS DOUBLE)) * 256
-        |      ELSE $numLit / CAST(reg_sum AS DOUBLE) END AS est
-        |  FROM agg),
-        |ex AS (SELECT event_type, count(DISTINCT user_id) AS exact_nd FROM events GROUP BY 1)
-        |SELECT x.event_type, ex.exact_nd, x.v_zero, x.reg_sum,
-        |  ${sqlFp("est", 2)} AS hll_est_fp2
-        |FROM x JOIN ex ON ex.event_type = x.event_type ORDER BY x.event_type""".stripMargin
-    },
-    // bit set computed ONCE (OR-merge = direct by set-union
-    // associativity); emitted under both column pairs so either
-    // Spark path diverging hash-mismatches
-    "dd_bloom_state" -> {
-      def u32(j: Int): String =
-        s"""(list_reduce(list_prepend(CAST(0 AS BIGINT),
-          | list_transform(range(1, 9),
-          |   i -> CAST(strpos('0123456789abcdef',
-          |          substr(md5('bf$j:' || md5(text)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-          | (a, v) -> a*16 + v) % 1024)""".stripMargin.replace("\n", " ")
-      val arms = (0 until 4).map(j =>
-        s"SELECT source, ${u32(j)} AS bit FROM documents").mkString("\n  UNION ALL\n  ")
-      s"""WITH b AS (SELECT DISTINCT source, bit FROM (
-        |  $arms)),
-        |a AS (SELECT source, count(*) AS bits_set, CAST(sum(bit) AS BIGINT) AS pos_sum
-        |  FROM b GROUP BY 1)
-        |SELECT source, bits_set, pos_sum,
-        |  ${sqlFp("CAST(bits_set AS DOUBLE) / 1024.0", 4)} AS fill_fp4,
-        |  bits_set AS bits_set_merged, pos_sum AS pos_sum_merged
-        |FROM a ORDER BY source""".stripMargin
-    },
-    // registers computed ONCE (merge = direct by max-associativity);
-    // emitted under both column pairs so either Spark path diverging
-    // hash-mismatches
-    "ev_hll_merge" -> {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('hll:' || CAST(user_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
-      val numerator = (0.7213 / (1.0 + 1.079 / 256)) * 256.0 * 256.0 * math.pow(2.0, 25)
-      val numLit = "%.17e".formatLocal(java.util.Locale.ROOT, numerator)
-      s"""WITH h AS (SELECT event_type, $u32 AS u FROM events),
-        |b AS (SELECT event_type, u // 16777216 AS bkt, u % 16777216 AS w FROM h),
-        |r AS (SELECT event_type, bkt,
-        |    max(CASE WHEN w = 0 THEN 25 ELSE 25 - length(bin(w)) END) AS mb
-        |  FROM b GROUP BY 1, 2),
-        |agg AS (SELECT event_type,
-        |    CAST(256 - count(*) AS BIGINT) AS v_zero,
-        |    CAST(sum(CAST(1 AS BIGINT) << (25 - mb))
-        |      + (256 - count(*)) * (CAST(1 AS BIGINT) << 25) AS BIGINT) AS reg_sum
-        |  FROM r GROUP BY 1),
-        |x AS (SELECT event_type, v_zero, reg_sum,
-        |    CASE WHEN $numLit / CAST(reg_sum AS DOUBLE) <= 640.0 AND v_zero > 0
-        |      THEN ln(256.0 / CAST(v_zero AS DOUBLE)) * 256
-        |      ELSE $numLit / CAST(reg_sum AS DOUBLE) END AS est
-        |  FROM agg),
-        |d AS (SELECT event_type, count(DISTINCT epoch_ms(ts) // 86400000) AS n_days
-        |  FROM events GROUP BY 1)
-        |SELECT x.event_type, d.n_days, x.v_zero, x.reg_sum,
-        |  ${sqlFp("est", 2)} AS est_merged_fp2,
-        |  x.reg_sum AS reg_sum_direct, ${sqlFp("est", 2)} AS est_direct_fp2
-        |FROM x JOIN d ON d.event_type = x.event_type ORDER BY x.event_type""".stripMargin
-    },
-    "ev_cms_freq" -> {
-      def bucket(j: Int): String =
-        s"""(list_reduce(list_prepend(CAST(0 AS BIGINT),
-          | list_transform(range(1, 9),
-          |   i -> CAST(strpos('0123456789abcdef',
-          |          substr(md5('cms$j:' || event_type), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-          | (a, v) -> a*16 + v) % 64)""".stripMargin.replace("\n", " ")
-      val cells = (0 until 4).map(j =>
-        s"c$j AS (SELECT ${bucket(j)} AS b, count(*) AS cnt FROM events GROUP BY 1)").mkString(",\n")
-      s"""WITH $cells,
-        |keys AS (SELECT event_type, count(*) AS exact_n FROM events GROUP BY 1)
-        |SELECT k.event_type, k.exact_n,
-        |  least(c0.cnt, c1.cnt, c2.cnt, c3.cnt) AS cms_est
-        |FROM keys k
-        |JOIN c0 ON c0.b = ${bucket(0).replace("event_type", "k.event_type")}
-        |JOIN c1 ON c1.b = ${bucket(1).replace("event_type", "k.event_type")}
-        |JOIN c2 ON c2.b = ${bucket(2).replace("event_type", "k.event_type")}
-        |JOIN c3 ON c3.b = ${bucket(3).replace("event_type", "k.event_type")}
-        |ORDER BY k.event_type""".stripMargin
-    },
-    "ev_percentile" ->
-      s"""WITH e AS (SELECT event_type, ${sqlFp("\"value\"", 4)} AS v4 FROM events),
-        |h AS (SELECT event_type, v4, count(*) AS k FROM e GROUP BY 1, 2),
-        |c AS (SELECT event_type, v4, k,
-        |    sum(k) OVER (PARTITION BY event_type ORDER BY v4
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(k) OVER (PARTITION BY event_type) AS n
-        |  FROM h)
-        |SELECT event_type, CAST(max(n) AS BIGINT) AS n_rows,
-        |  min(CASE WHEN cum >= (n + 1) // 2 THEN v4 END) AS p50_c4,
-        |  min(CASE WHEN cum >= (9 * n + 9) // 10 THEN v4 END) AS p90_c4,
-        |  min(CASE WHEN cum >= (99 * n + 99) // 100 THEN v4 END) AS p99_c4
-        |FROM c GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // same histogram rank-scan convention as ev_percentile, applied
-    // per RFM dimension over the user-aggregate table
-    "ev_rfm" -> {
-      def th(src: String, vcol: String, pfx: String): String =
-        s"""h$pfx AS (SELECT $vcol AS v, count(*) AS k FROM $src GROUP BY 1),
-           |c$pfx AS (SELECT v, k,
-           |    sum(k) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-           |    sum(k) OVER () AS n FROM h$pfx),
-           |t$pfx AS (SELECT
-           |    min(CASE WHEN cum >= (1 * n + 4) // 5 THEN v END) AS ${pfx}1,
-           |    min(CASE WHEN cum >= (2 * n + 4) // 5 THEN v END) AS ${pfx}2,
-           |    min(CASE WHEN cum >= (3 * n + 4) // 5 THEN v END) AS ${pfx}3,
-           |    min(CASE WHEN cum >= (4 * n + 4) // 5 THEN v END) AS ${pfx}4 FROM c$pfx)""".stripMargin
-      def sc(v: String, pfx: String): String =
-        s"CAST(1 + (CASE WHEN $v > ${pfx}1 THEN 1 ELSE 0 END) + (CASE WHEN $v > ${pfx}2 THEN 1 ELSE 0 END)" +
-          s" + (CASE WHEN $v > ${pfx}3 THEN 1 ELSE 0 END) + (CASE WHEN $v > ${pfx}4 THEN 1 ELSE 0 END) AS INT)"
-      s"""WITH e AS (SELECT user_id, epoch_ms(ts) AS ms, ${sqlFp("\"value\"", 4)} AS v4 FROM events),
-        |u AS (SELECT user_id, max(ms) // 3600000 AS r_hr, count(*) AS f,
-        |    CAST(sum(v4) AS BIGINT) // 10000 AS m_u FROM e GROUP BY 1),
-        |${th("u", "r_hr", "tr")},
-        |${th("u", "f", "tf")},
-        |${th("u", "m_u", "tm")}
-        |SELECT user_id, r_hr, f, m_u,
-        |  ${sc("r_hr", "tr")} AS r_score,
-        |  ${sc("f", "tf")} AS f_score,
-        |  ${sc("m_u", "tm")} AS m_score,
-        |  ${sc("r_hr", "tr")} * 100 + ${sc("f", "tf")} * 10 + ${sc("m_u", "tm")} AS rfm
-        |FROM u, ttr, ttf, ttm ORDER BY user_id""".stripMargin
-    },
-    "ev_stickiness" ->
-      s"""WITH d AS (SELECT user_id, epoch_ms(ts) // 86400000 AS day_id FROM events),
-        |d2 AS (SELECT user_id, day_id, day_id // 7 AS week_id FROM d),
-        |dau AS (SELECT week_id, day_id, count(DISTINCT user_id) AS dau FROM d2 GROUP BY 1, 2),
-        |wau AS (SELECT week_id, count(DISTINCT user_id) AS wau FROM d2 GROUP BY 1)
-        |SELECT week_id, day_id, dau, wau,
-        |  ${sqlFp("CAST(dau AS DOUBLE) / CAST(wau AS DOUBLE)", 4)} AS stickiness_fp4
-        |FROM dau JOIN wau USING (week_id) ORDER BY day_id""".stripMargin,
-    "ev_bot_users" ->
-      """WITH organic AS (SELECT user_id, epoch_ms(ts) AS ms FROM events),
-        |bots AS (SELECT DISTINCT user_id FROM events WHERE user_id % 37 = 0),
-        |burst AS (SELECT b.user_id,
-        |    1704067200000 + (b.user_id % 1440) * 60000 + i * 400 AS ms
-        |  FROM bots b CROSS JOIN range(0, 120) t(i)),
-        |allev AS (SELECT * FROM organic UNION ALL SELECT * FROM burst),
-        |pm AS (SELECT user_id, ms // 60000 AS minute_id, count(*) AS n FROM allev GROUP BY 1, 2)
-        |SELECT user_id, max(n) AS peak_per_min, CAST(sum(n) AS BIGINT) AS n_events,
-        |  CAST(CASE WHEN max(n) >= 60 THEN 1 ELSE 0 END AS BIGINT) AS is_bot
-        |FROM pm GROUP BY 1 ORDER BY user_id""".stripMargin,
-    // the ev_sessionize window CTEs reduced to DISTINCT (session,
-    // type), then the collocation lift over session probabilities
-    "ev_covisit" ->
-      s"""WITH e AS (SELECT event_id, user_id, event_type, epoch_ms(ts) AS ms FROM events),
-        |flagged AS (SELECT *, CASE WHEN lag(ms) OVER w IS NULL OR ms - lag(ms) OVER w > $SessionGapMs
-        |    THEN 1 ELSE 0 END AS new_sess
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
-        |sess AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM flagged),
-        |st AS (SELECT DISTINCT user_id, session_idx, event_type FROM sess),
-        |pairs AS (SELECT a.event_type AS type_a, b.event_type AS type_b
-        |  FROM st a JOIN st b ON a.user_id = b.user_id AND a.session_idx = b.session_idx
-        |    AND a.event_type < b.event_type),
-        |nab AS (SELECT type_a, type_b, count(*) AS n_ab FROM pairs GROUP BY 1, 2),
-        |na AS (SELECT event_type, count(*) AS n FROM st GROUP BY 1),
-        |stot AS (SELECT count(*) AS s_tot FROM (SELECT DISTINCT user_id, session_idx FROM st))
-        |SELECT type_a, type_b, n_ab,
-        |  ${sqlFp("(CAST(n_ab AS DOUBLE) * CAST(s_tot AS DOUBLE)) / (CAST(na_a.n AS DOUBLE) * CAST(na_b.n AS DOUBLE))", 4)} AS lift_fp4
-        |FROM nab JOIN na na_a ON na_a.event_type = nab.type_a
-        |  JOIN na na_b ON na_b.event_type = nab.type_b CROSS JOIN stot
-        |ORDER BY type_a, type_b""".stripMargin,
-    // first view → earliest at-or-after purchase per user, minute
-    // latency histogram rank-scan
-    "ev_funnel_time" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ms(ts) AS ms FROM events),
-        |fv AS (SELECT user_id, min(ms) AS v0 FROM e WHERE event_type = 'view' GROUP BY 1),
-        |lat AS (SELECT e.user_id, min(e.ms - fv.v0) // 60000 AS lat_min
-        |  FROM e JOIN fv ON fv.user_id = e.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ms >= fv.v0 GROUP BY 1),
-        |h AS (SELECT lat_min AS v, count(*) AS k FROM lat GROUP BY 1),
-        |h2 AS (SELECT v, sum(k) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(k) OVER () AS n FROM h),
-        |st AS (SELECT CAST(max(n) AS BIGINT) AS n_converted,
-        |    min(CASE WHEN cum >= (n + 1) // 2 THEN v END) AS p50_lat_min,
-        |    min(CASE WHEN cum >= (9 * n + 9) // 10 THEN v END) AS p90_lat_min FROM h2),
-        |nv AS (SELECT count(*) AS n_viewers FROM fv)
-        |SELECT n_viewers, n_converted, p50_lat_min, p90_lat_min FROM nv CROSS JOIN st""".stripMargin,
-    // the sessionize CTEs reduced to per-session (n_events, dur_s),
-    // then two histogram rank-scans (the ev_percentile discipline)
-    "ev_session_stats" ->
-      s"""WITH e AS (SELECT event_id, user_id, event_type, epoch_ms(ts) AS ms FROM events),
-        |flagged AS (SELECT *, CASE WHEN lag(ms) OVER w IS NULL OR ms - lag(ms) OVER w > $SessionGapMs
-        |    THEN 1 ELSE 0 END AS new_sess
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
-        |sess0 AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM flagged),
-        |sess AS (SELECT user_id, session_idx, count(*) AS n_events,
-        |    (max(ms) - min(ms)) // 1000 AS dur_s
-        |  FROM sess0 GROUP BY 1, 2),
-        |hd AS (SELECT dur_s AS v, count(*) AS k FROM sess GROUP BY 1),
-        |hd2 AS (SELECT v, sum(k) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(k) OVER () AS n FROM hd),
-        |dstats AS (SELECT CAST(max(n) AS BIGINT) AS n_sessions,
-        |    min(CASE WHEN cum >= (n + 1) // 2 THEN v END) AS p50_dur_s,
-        |    min(CASE WHEN cum >= (9 * n + 9) // 10 THEN v END) AS p90_dur_s FROM hd2),
-        |he AS (SELECT n_events AS v, count(*) AS k FROM sess GROUP BY 1),
-        |he2 AS (SELECT v, sum(k) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(k) OVER () AS n FROM he),
-        |estats AS (SELECT min(CASE WHEN cum >= (n + 1) // 2 THEN v END) AS p50_events,
-        |    max(v) AS max_events FROM he2)
-        |SELECT n_sessions, p50_dur_s, p90_dur_s, p50_events, max_events
-        |FROM dstats CROSS JOIN estats""".stripMargin,
-    "ev_markov_rank" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, epoch_ms(ts) AS ms FROM events),
-        |pairs AS (SELECT event_type AS src,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ms, event_id) AS dst
-        |  FROM e),
-        |edges AS (SELECT src, dst, count(*) AS c FROM pairs WHERE dst IS NOT NULL GROUP BY 1, 2),
-        |p AS (SELECT src, dst, (1000000 * c) // sum(c) OVER (PARTITION BY src) AS p6 FROM edges),
-        |nodes AS (SELECT DISTINCT event_type AS node FROM e),
-        |nv AS (SELECT count(*) AS nv FROM nodes),
-        |r0 AS (SELECT node, 1000000000 // nv AS r FROM nodes CROSS JOIN nv),
-        |r1 AS (SELECT n.node, 150000000 // nv + coalesce(
-        |    (SELECT sum((85 * ((r0.r * p.p6) // 1000000)) // 100)
-        |     FROM p JOIN r0 ON r0.node = p.src WHERE p.dst = n.node), 0) AS r
-        |  FROM nodes n CROSS JOIN nv),
-        |r2 AS (SELECT n.node, 150000000 // nv + coalesce(
-        |    (SELECT sum((85 * ((r1.r * p.p6) // 1000000)) // 100)
-        |     FROM p JOIN r1 ON r1.node = p.src WHERE p.dst = n.node), 0) AS r
-        |  FROM nodes n CROSS JOIN nv),
-        |r3 AS (SELECT n.node, 150000000 // nv + coalesce(
-        |    (SELECT sum((85 * ((r2.r * p.p6) // 1000000)) // 100)
-        |     FROM p JOIN r2 ON r2.node = p.src WHERE p.dst = n.node), 0) AS r
-        |  FROM nodes n CROSS JOIN nv)
-        |SELECT node AS event_type, CAST(r AS BIGINT) AS rank_fp9
-        |FROM r3 ORDER BY event_type""".stripMargin,
-    "pipe_quality_funnel" ->
-      // the rule expressions are the same ones txt_repetition /
-      // txt_quality verify individually; lang is the metadata column
-      s"""WITH f AS (SELECT
-        |    len($toksSql) AS nt,
-        |    CASE WHEN len($toksSql) = 0 THEN 10000
-        |      ELSE ${sqlFp("1.0 - CAST(len(list_distinct(" + toksSql + ")) AS DOUBLE) / CAST(len(" + toksSql + ") AS DOUBLE)", 4)}
-        |    END AS rep4,
-        |    lang AS lp,
-        |    len(list_filter($toksSql, t -> t IN ('the', 'a', 'of', 'and', 'fast', 'slow'))) AS ns
-        |  FROM documents),
-        |g AS (SELECT
-        |    count(*) AS n0,
-        |    CAST(sum(CASE WHEN nt BETWEEN 20 AND 200 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(sum(CASE WHEN nt BETWEEN 20 AND 200 AND lp = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |    CAST(sum(CASE WHEN nt BETWEEN 20 AND 200 AND lp = 'en' AND rep4 <= 6000 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
-        |    CAST(sum(CASE WHEN nt BETWEEN 20 AND 200 AND lp = 'en' AND rep4 <= 6000 AND ns >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n4
-        |  FROM f)
-        |SELECT '1_all' AS stage, n0 AS n_docs FROM g
-        |UNION ALL SELECT '2_len', n1 FROM g
-        |UNION ALL SELECT '3_lang_en', n2 FROM g
-        |UNION ALL SELECT '4_repetition', n3 FROM g
-        |UNION ALL SELECT '5_stopwords', n4 FROM g
-        |ORDER BY stage""".stripMargin,
-    // same four rollups from one base CTE; median = smallest value
-    // whose cum count reaches (n+1)//2 (the ev_percentile rule)
-    "pipe_dataset_card" ->
-      s"""WITH base AS (SELECT doc_id, source, lang, n_chars,
-        |    CAST(len($toksSql) AS BIGINT) AS n_toks, md5(text) AS h FROM documents),
-        |dup AS (SELECT h, count(*) AS hc FROM base GROUP BY 1),
-        |agg AS (SELECT source, count(*) AS n_docs, CAST(sum(n_toks) AS BIGINT) AS n_tokens,
-        |    CAST(sum(CASE WHEN hc > 1 THEN 1 ELSE 0 END) AS BIGINT) AS dup_docs,
-        |    CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |  FROM base JOIN dup USING (h) GROUP BY 1),
-        |lt AS (SELECT source, lang, count(*) AS ln FROM base GROUP BY 1, 2),
-        |top AS (SELECT source, lang AS top_lang, ln AS top_lang_n FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY source ORDER BY ln DESC, lang) AS rn
-        |    FROM lt) WHERE rn = 1),
-        |hh AS (SELECT source, n_chars, count(*) AS k FROM base GROUP BY 1, 2),
-        |hc2 AS (SELECT source, n_chars,
-        |    sum(k) OVER (PARTITION BY source ORDER BY n_chars
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(k) OVER (PARTITION BY source) AS n FROM hh),
-        |p50 AS (SELECT source, min(CASE WHEN cum >= (n + 1) // 2 THEN n_chars END) AS p50_chars
-        |  FROM hc2 GROUP BY 1)
-        |SELECT a.source, n_docs, n_tokens, dup_docs,
-        |  ${sqlFp("CAST(dup_docs AS DOUBLE) / CAST(n_docs AS DOUBLE)", 4)} AS dup_frac_fp4,
-        |  top_lang, top_lang_n, p50_chars,
-        |  ${sqlFp("CAST(sum_chars AS DOUBLE) / CAST(n_docs AS DOUBLE)", 2)} AS mean_chars_fp2
-        |FROM agg a JOIN top USING (source) JOIN p50 USING (source)
-        |ORDER BY a.source""".stripMargin,
-    // every stage reuses its standalone oracle's rule verbatim:
-    // gopher keep thresholds (txt_gopher), normalize+md5 (txt_normalize
-    // / dd_exact), 4-gram decontamination (dd_decontaminate), ordered
-    // cumsum selection (smp_budget)
-    "pipe_prep_counts" ->
-      s"""WITH train AS (SELECT * FROM documents WHERE doc_id % 97 <> 0),
-        |gt AS (SELECT doc_id, text, $toksSql AS toks FROM train),
-        |gsig AS (SELECT doc_id,
-        |    CAST(len(toks) AS BIGINT) AS n_words,
-        |    CASE WHEN len(toks) = 0 THEN 1 ELSE len(toks) END AS nw,
-        |    coalesce(list_sum(list_transform(toks, x -> length(x))), 0) AS sumlen,
-        |    len(list_filter(toks, x -> regexp_matches(x, '[a-z]'))) AS alpha_cnt,
-        |    len(regexp_extract_all(text, '#|\\.\\.\\.')) AS sym_cnt,
-        |    CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','fast','slow'))) AS BIGINT) AS stop_hits
-        |  FROM gt),
-        |gkeep AS (SELECT doc_id FROM (SELECT doc_id, n_words, stop_hits,
-        |    ${sqlFp("CAST(sumlen AS DOUBLE) / CAST(nw AS DOUBLE)", 2)} AS mean_wlen_fp2,
-        |    ${sqlFp("CAST(alpha_cnt AS DOUBLE) / CAST(nw AS DOUBLE)", 4)} AS alpha_frac_fp4,
-        |    ${sqlFp("CAST(sym_cnt AS DOUBLE) / CAST(nw AS DOUBLE)", 4)} AS sym_ratio_fp4
-        |  FROM gsig)
-        |  WHERE n_words >= 50 AND n_words <= 100000
-        |    AND mean_wlen_fp2 >= 300 AND mean_wlen_fp2 <= 1000
-        |    AND alpha_frac_fp4 >= 8000 AND sym_ratio_fp4 <= 1000
-        |    AND stop_hits >= 2),
-        |q AS (SELECT t.* FROM train t JOIN gkeep USING (doc_id)),
-        |win AS (SELECT min(doc_id) AS doc_id FROM (
-        |    SELECT doc_id, md5(trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^a-z0-9\\s]+', ' ', 'g'), '\\s+', ' ', 'g'))) AS h FROM q)
-        |  GROUP BY h),
-        |dd AS (SELECT q.* FROM q JOIN win USING (doc_id)),
-        |ev0 AS (SELECT DISTINCT unnest(${shinglesSql(4)}) AS g0
-        |       FROM documents WHERE doc_id % 97 = 0),
-        |ev AS (SELECT DISTINCT ${shingleKeySql("g0")} AS g FROM ev0),
-        |tg0 AS (SELECT doc_id, unnest(${shinglesSql(4)}) AS g0 FROM dd),
-        |tg AS (SELECT doc_id, ${shingleKeySql("g0")} AS g FROM tg0),
-        |bad AS (SELECT DISTINCT tg.doc_id FROM tg JOIN ev USING (g)),
-        |dc AS (SELECT dd.* FROM dd WHERE doc_id NOT IN (SELECT doc_id FROM bad)),
-        |sc AS (SELECT doc_id, n_chars, CAST(len($toksSql) AS BIGINT) AS n_tokens FROM dc),
-        |sel AS (SELECT * FROM (SELECT *, CAST(sum(n_tokens) OVER (ORDER BY n_chars DESC, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum FROM sc)
-        |  WHERE cum <= 20000)
-        |SELECT section, n FROM (
-        |  SELECT 's1_input' AS section, (SELECT count(*) FROM documents) AS n
-        |  UNION ALL SELECT 's2_train', (SELECT count(*) FROM train)
-        |  UNION ALL SELECT 's3_quality', (SELECT count(*) FROM q)
-        |  UNION ALL SELECT 's4_dedup', (SELECT count(*) FROM dd)
-        |  UNION ALL SELECT 's5_decontam', (SELECT count(*) FROM dc)
-        |  UNION ALL SELECT 's6_selected', (SELECT count(*) FROM sel)
-        |  UNION ALL SELECT 's7_selected_tokens', (SELECT coalesce(CAST(sum(n_tokens) AS BIGINT), 0) FROM sel)
-        |) ORDER BY section""".stripMargin,
-    // as-of tie-break mirror (q17 shape): best time = max(ms < pms),
-    // then max event_id at that time; touch_type recovered by the
-    // unique event_id
-    "ev_attribution" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, epoch_ms(ts) AS ms FROM events),
-        |p AS (SELECT event_id AS purchase_id, user_id, ms AS pms FROM e WHERE event_type = 'purchase'),
-        |t AS (SELECT user_id, ms, event_id, event_type AS touch_type FROM e
-        |      WHERE event_type IN ('view', 'click')),
-        |b AS (SELECT p.purchase_id, max(t.ms) AS touch_ms
-        |      FROM p LEFT JOIN t ON t.user_id = p.user_id AND t.ms < p.pms GROUP BY 1),
-        |x AS (SELECT p.purchase_id, p.user_id, p.pms, b.touch_ms, max(t.event_id) AS touch_event_id
-        |      FROM p JOIN b USING (purchase_id)
-        |      LEFT JOIN t ON t.user_id = p.user_id AND t.ms = b.touch_ms
-        |      GROUP BY 1, 2, 3, 4)
-        |SELECT x.purchase_id, x.user_id, x.pms, x.touch_ms, x.touch_event_id, t2.touch_type
-        |FROM x LEFT JOIN t t2 ON t2.event_id = x.touch_event_id
-        |ORDER BY purchase_id""".stripMargin,
-    "ev_attribution_ushape" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, epoch_ms(ts) AS ms FROM events),
-        |p AS (SELECT event_id AS purchase_id, user_id, ms AS pms FROM e WHERE event_type = 'purchase'),
-        |t AS (SELECT user_id, ms, event_id, event_type AS touch_type FROM e
-        |      WHERE event_type IN ('view', 'click')),
-        |paired AS (SELECT p.purchase_id, t.ms, t.event_id, t.touch_type
-        |  FROM p JOIN t ON t.user_id = p.user_id
-        |  WHERE t.ms < p.pms AND t.ms >= p.pms - 604800000),
-        |pos AS (SELECT touch_type,
-        |    count(*) OVER (PARTITION BY purchase_id) AS k,
-        |    row_number() OVER (PARTITION BY purchase_id ORDER BY ms, event_id) AS rn
-        |  FROM paired)
-        |SELECT touch_type, count(*) AS n_touches,
-        |  CAST(sum(CASE WHEN k = 1 THEN 1000000
-        |                WHEN k = 2 THEN 500000
-        |                WHEN rn = 1 OR rn = k THEN 400000
-        |                ELSE 200000 // (k - 2) END) AS BIGINT) AS credit_fp6
-        |FROM pos GROUP BY 1 ORDER BY 1""".stripMargin,
-    "ev_sessionize" ->
-      s"""WITH e AS (SELECT event_id, user_id, epoch_ms(ts) AS ms, ${sqlFp("\"value\"", 4)} AS v4 FROM events),
-        |flagged AS (SELECT *, CASE WHEN lag(ms) OVER w IS NULL OR ms - lag(ms) OVER w > $SessionGapMs
-        |    THEN 1 ELSE 0 END AS new_sess
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
-        |sess AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM flagged)
-        |SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx, count(*) AS n_events,
-        |  min(ms) AS start_ms, max(ms) AS end_ms, CAST(sum(v4) AS BIGINT) AS sum_v4
-        |FROM sess GROUP BY user_id, session_idx ORDER BY user_id, session_idx""".stripMargin,
-    "ev_concurrency" ->
-      s"""WITH e AS (SELECT event_id, user_id, epoch_ms(ts) AS ms FROM events),
-        |flagged AS (SELECT *, CASE WHEN lag(ms) OVER w IS NULL OR ms - lag(ms) OVER w > $SessionGapMs
-        |    THEN 1 ELSE 0 END AS new_sess
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
-        |sess AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM flagged),
-        |si AS (SELECT user_id, session_idx, min(ms) AS st, max(ms) AS en FROM sess GROUP BY 1, 2),
-        |sd AS (SELECT st, en,
-        |    (st - ((st % 86400000 + 86400000) % 86400000)) // 86400000 AS sd,
-        |    (en - ((en % 86400000 + 86400000) % 86400000)) // 86400000 AS ed FROM si),
-        |deltas AS (SELECT sd AS day, st AS t, 1 AS d FROM sd
-        |           UNION ALL SELECT ed, en, -1 FROM sd),
-        |runs AS (SELECT day, d, sum(d) OVER (PARTITION BY day ORDER BY t, d DESC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run FROM deltas),
-        |agg AS (SELECT day, max(run) AS peak_in_day,
-        |    sum(CASE WHEN d = 1 THEN 1 ELSE 0 END) AS n_starts FROM runs GROUP BY 1),
-        |car AS (SELECT day, count(*) AS carry FROM
-        |    (SELECT unnest(range(sd + 1, ed + 1)) AS day FROM sd WHERE ed > sd) GROUP BY 1)
-        |SELECT coalesce(agg.day, car.day) AS day,
-        |  CAST(coalesce(carry, 0) + greatest(coalesce(peak_in_day, 0), 0) AS BIGINT) AS peak_conc,
-        |  CAST(coalesce(carry, 0) AS BIGINT) AS carry_in,
-        |  CAST(coalesce(n_starts, 0) AS BIGINT) AS n_starts
-        |FROM agg FULL JOIN car ON agg.day = car.day ORDER BY 1""".stripMargin,
-    "ev_window_agg" ->
-      // floored modulus ((x % m + m) % m) mirrors Spark's pmod, so the
-      // window start floors for negative ms too (DuckDB % truncates)
-      s"""SELECT ms - ((ms % 3600000 + 3600000) % 3600000) AS win_start, event_type, count(*) AS n,
-        |  CAST(sum(v4) AS BIGINT) AS sum_v4
-        |FROM (SELECT epoch_ms(ts) AS ms, event_type, ${sqlFp("\"value\"", 4)} AS v4 FROM events)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "ev_percentile_cont" ->
-      s"""WITH e AS (SELECT event_type, ${sqlFp("\"value\"", 4)} AS v4 FROM events),
-        |h AS (SELECT event_type, v4, count(*) AS k FROM e GROUP BY 1, 2),
-        |c AS (SELECT event_type, v4,
-        |        sum(k) OVER (PARTITION BY event_type ORDER BY v4) AS cum,
-        |        sum(k) OVER (PARTITION BY event_type) AS n FROM h),
-        |p AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n_rows,
-        |  min(CASE WHEN cum >= (100 + (n - 1) * 50) // 100 THEN v4 END) AS lo50,
-        |  min(CASE WHEN cum >= least((100 + (n - 1) * 50) // 100 + 1, n) THEN v4 END) AS hi50,
-        |  min(CASE WHEN cum >= (100 + (n - 1) * 90) // 100 THEN v4 END) AS lo90,
-        |  min(CASE WHEN cum >= least((100 + (n - 1) * 90) // 100 + 1, n) THEN v4 END) AS hi90
-        |  FROM c GROUP BY 1)
-        |SELECT event_type, n_rows,
-        |  CAST(lo50 * (100 - (100 + (n_rows - 1) * 50) % 100)
-        |     + hi50 * ((100 + (n_rows - 1) * 50) % 100) AS BIGINT) AS p50_fp6,
-        |  CAST(lo90 * (100 - (100 + (n_rows - 1) * 90) % 100)
-        |     + hi90 * ((100 + (n_rows - 1) * 90) % 100) AS BIGINT) AS p90_fp6
-        |FROM p ORDER BY event_type""".stripMargin,
-    "ev_gap_fill" ->
-      s"""WITH daily AS (SELECT event_type,
-        |    (ms - ((ms % 86400000 + 86400000) % 86400000)) // 86400000 AS day,
-        |    CAST(sum(v4) AS BIGINT) AS v
-        |  FROM (SELECT event_type, event_id, epoch_ms(ts) AS ms, ${sqlFp("\"value\"", 4)} AS v4 FROM events)
-        |  WHERE event_type IN ('purchase', 'signup') AND ((event_id % 97 + 97) % 97) = 0
-        |  GROUP BY 1, 2),
-        |span AS (SELECT min(day) AS d0, max(day) AS d1 FROM daily),
-        |g AS (SELECT t.event_type, unnest(range(span.d0, span.d1 + 1)) AS day
-        |      FROM (SELECT DISTINCT event_type FROM daily) t, span),
-        |j AS (SELECT g.event_type, g.day, daily.v
-        |      FROM g LEFT JOIN daily ON daily.event_type = g.event_type AND daily.day = g.day)
-        |SELECT event_type, day,
-        |  last_value(v IGNORE NULLS) OVER (PARTITION BY event_type ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled_v,
-        |  CAST(v IS NULL AS INT) AS is_gap
-        |FROM j ORDER BY event_type, day""".stripMargin,
-    "ev_sliding_window" ->
-      s"""SELECT win_start, event_type, count(*) AS n, CAST(sum(v4) AS BIGINT) AS sum_v4
-        |FROM (SELECT ms - ((ms % 1800000 + 1800000) % 1800000) - hops.k * 1800000 AS win_start,
-        |             ms, event_type, v4
-        |      FROM (SELECT epoch_ms(ts) AS ms, event_type, ${sqlFp("\"value\"", 4)} AS v4 FROM events)
-        |      CROSS JOIN (SELECT 0 AS k UNION ALL SELECT 1) hops)
-        |WHERE ms < win_start + 3600000
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "ev_pattern_match" ->
-      // string_agg ORDER BY (ms, event_id) mirrors Spark's struct
-      // array_sort; the 'g' flag makes regexp_replace global like
-      // Spark's
-      """SELECT user_id, count(*) AS n_events,
-        |  string_agg(left(event_type, 1), '' ORDER BY ms, event_id) AS path,
-        |  (length(string_agg(left(event_type, 1), '' ORDER BY ms, event_id))
-        |   - length(regexp_replace(string_agg(left(event_type, 1), '' ORDER BY ms, event_id),
-        |                           'vcp', '', 'g'))) // 3 AS n_vcp,
-        |  CAST(regexp_matches(string_agg(left(event_type, 1), '' ORDER BY ms, event_id),
-        |                      'v[^p]*c[^p]*p') AS INT) AS has_funnel
-        |FROM (SELECT user_id, event_type, epoch_ms(ts) AS ms, event_id FROM events)
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "ev_late_events" ->
-      """WITH e AS (SELECT event_id, epoch_ms(ts) AS ms FROM events),
-        |w AS (SELECT ms, max(ms) OVER (ORDER BY event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS hwm FROM e)
-        |SELECT ms - ((ms % 3600000 + 3600000) % 3600000) AS win_start, count(*) AS n,
-        |  CAST(sum(CASE WHEN hwm - 7200000 > ms THEN 1 ELSE 0 END) AS BIGINT) AS n_late
-        |FROM w GROUP BY 1 ORDER BY 1""".stripMargin,
-    "ev_funnel" ->
-      s"""WITH e AS (SELECT user_id, event_type, epoch_ms(ts) AS ms FROM events),
-        |s1 AS (SELECT user_id, min(ms) AS t1 FROM e WHERE event_type = 'view' GROUP BY user_id),
-        |s2 AS (SELECT e.user_id, min(ms) AS t2 FROM e JOIN s1 USING (user_id)
-        |       WHERE event_type = 'click' AND ms > t1 GROUP BY e.user_id),
-        |s3 AS (SELECT e.user_id, min(ms) AS t3 FROM e JOIN s2 USING (user_id)
-        |       WHERE event_type = 'purchase' AND ms > t2 GROUP BY e.user_id)
-        |SELECT stage, n_users FROM (
-        |  SELECT '1_view' AS stage, count(*) AS n_users FROM s1
-        |  UNION ALL SELECT '2_click', count(*) FROM s2
-        |  UNION ALL SELECT '3_purchase', count(*) FROM s3
-        |) ORDER BY stage""".stripMargin,
-    "ev_funnel_window" ->
-      s"""WITH e AS (SELECT user_id, event_type, epoch_ms(ts) AS ms FROM events),
-        |s1 AS (SELECT user_id, min(ms) AS t1 FROM e WHERE event_type = 'view' GROUP BY user_id),
-        |s2 AS (SELECT e.user_id, min(ms) AS t2, min(t1) AS t1b FROM e JOIN s1 USING (user_id)
-        |       WHERE event_type = 'click' AND ms > t1 AND ms <= t1 + 86400000 GROUP BY e.user_id),
-        |s3 AS (SELECT e.user_id, min(ms) AS t3, min(t1b) AS t1c FROM e JOIN s2 USING (user_id)
-        |       WHERE event_type = 'purchase' AND ms > t2 AND ms <= t2 + 86400000 GROUP BY e.user_id)
-        |SELECT stage, n_users, CAST(coalesce(sum_lag_ms, 0) AS BIGINT) AS sum_lag_ms FROM (
-        |  SELECT '1_view' AS stage, count(*) AS n_users, CAST(0 AS BIGINT) AS sum_lag_ms FROM s1
-        |  UNION ALL SELECT '2_click', count(*), CAST(sum(t2 - t1b) AS BIGINT) FROM s2
-        |  UNION ALL SELECT '3_purchase', count(*), CAST(sum(t3 - t1c) AS BIGINT) FROM s3
-        |) ORDER BY stage""".stripMargin,
-    "txt_sentencize" ->
-      // list lambdas replicate the Spark HOF folds; edge whitespace
-      // stripped by regex on both engines (trim() semantics differ)
-      """WITH d AS (SELECT doc_id,
-        |  list_filter(list_transform(string_split_regex(
-        |                replace(replace(text, ' merge ', '. '), ' batch ', '! '),
-        |                '[.!?]+'),
-        |              x -> regexp_replace(x, '^\s+|\s+$', '', 'g')),
-        |              x -> length(x) > 0) AS segs FROM documents)
-        |SELECT doc_id, CAST(len(segs) AS INT) AS n_sent,
-        |  CAST(coalesce(list_sum(list_transform(segs, x -> length(x))), 0) AS BIGINT) AS sum_len,
-        |  CAST(coalesce(list_max(list_transform(segs, x -> length(x))), 0) AS INT) AS max_len
-        |FROM d ORDER BY doc_id""".stripMargin,
-    "txt_repetition" ->
-      s"""SELECT doc_id, CASE WHEN len($toksSql) = 0 THEN 0
-        | ELSE ${sqlFp("1.0 - CAST(len(list_distinct(" + toksSql + ")) AS DOUBLE) / CAST(len(" + toksSql + ") AS DOUBLE)", 4)}
-        | END AS repetition_fp4
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // exact HUGEINT term ratios mirror Spark's DECIMAL(38,0): each
-    // factor casts to HUGEINT BEFORE its multiply, diff drops to
-    // double, and n_s² folds into the double divide — the same
-    // overflow-free staging as the Spark side; one double drop per
-    // term in the same expression shape, fp9, integer sums —
-    // accumulation order cannot move the result
-    "txt_domain_div" ->
-      s"""WITH toks AS (SELECT source, unnest($toksSql) AS tok FROM documents),
-        |st AS (SELECT source, tok, count(*) AS c_st FROM toks GROUP BY 1, 2),
-        |tt AS (SELECT tok, sum(c_st) AS c_t FROM st GROUP BY 1),
-        |ns AS (SELECT source, sum(c_st) AS n_s FROM st GROUP BY 1),
-        |n1 AS (SELECT sum(c_t) AS n FROM tt),
-        |terms AS (SELECT st.source, tt.c_t, n1.n,
-        |    CAST(floor(
-        |      (CAST(CAST(st.c_st AS HUGEINT) * CAST(n1.n AS HUGEINT)
-        |          - CAST(tt.c_t AS HUGEINT) * CAST(ns.n_s AS HUGEINT) AS DOUBLE)
-        |        / CAST(ns.n_s AS DOUBLE))
-        |      * (CAST(CAST(st.c_st AS HUGEINT) * CAST(n1.n AS HUGEINT)
-        |          - CAST(tt.c_t AS HUGEINT) * CAST(ns.n_s AS HUGEINT) AS DOUBLE)
-        |        / CAST(ns.n_s AS DOUBLE))
-        |      / CAST(CAST(tt.c_t AS HUGEINT) * CAST(n1.n AS HUGEINT) AS DOUBLE)
-        |      * 1e9 + 0.5) AS BIGINT) AS term
-        |  FROM st JOIN tt USING (tok) JOIN ns USING (source) CROSS JOIN n1)
-        |SELECT source, count(*) AS n_terms,
-        |  CAST(sum(term)
-        |    + floor((1.0 - CAST(sum(c_t) AS DOUBLE) / CAST(max(n) AS DOUBLE)) * 1e9 + 0.5)
-        |    AS BIGINT) AS chi2_fp9
-        |FROM terms GROUP BY source ORDER BY source""".stripMargin,
-    "txt_hapax" ->
-      s"""WITH tc AS (SELECT doc_id, tok, count(*) AS c
-        |  FROM (SELECT doc_id, unnest($toksSql) AS tok FROM documents) GROUP BY 1, 2),
-        |agg AS (SELECT doc_id, sum(c) AS n_tokens, count(*) AS n_types,
-        |    sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS n_hapax
-        |  FROM tc GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(n_tokens, 0) AS BIGINT) AS n_tokens,
-        |  CAST(coalesce(n_types, 0) AS BIGINT) AS n_types,
-        |  CAST(coalesce(n_hapax, 0) AS BIGINT) AS n_hapax,
-        |  CASE WHEN coalesce(n_types, 0) = 0 THEN CAST(0 AS BIGINT)
-        |    ELSE ${sqlFp("CAST(n_hapax AS DOUBLE) / CAST(n_types AS DOUBLE)", 4)}
-        |  END AS hapax_frac_fp4
-        |FROM documents d LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin,
-    "ev_retention" ->
-      """WITH e AS (SELECT DISTINCT user_id,
-        |    (epoch_ms(ts) - ((epoch_ms(ts) % 604800000 + 604800000) % 604800000)) // 604800000 AS week
-        |  FROM events),
-        |cohorts AS (SELECT user_id, min(week) AS cohort_week FROM e GROUP BY user_id)
-        |SELECT cohort_week, week - cohort_week AS week_offset, count(*) AS n_users
-        |FROM e JOIN cohorts USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "ev_json_extract" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val
-        |FROM events""".stripMargin,
-    // the exact integer outlier rule replicated in HUGEINT — any
-    // float-mean drift in either engine breaks the flag bit-for-bit
-    "ev_anomaly" ->
-      """WITH daily AS (SELECT event_type,
-        |    (epoch_ms(ts) - ((epoch_ms(ts) % 86400000 + 86400000) % 86400000)) // 86400000 AS day,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |stats AS (SELECT event_type, count(*) AS nd, sum(n) AS tot,
-        |    sum(CAST(n AS HUGEINT) * n) AS sumsq FROM daily GROUP BY 1)
-        |SELECT d.event_type, CAST(d.day AS BIGINT) AS day, CAST(d.n AS BIGINT) AS n,
-        |  CAST(CASE WHEN (CAST(d.n AS HUGEINT) * nd - tot) * (CAST(d.n AS HUGEINT) * nd - tot)
-        |      > 4 * (CAST(nd AS HUGEINT) * sumsq - CAST(tot AS HUGEINT) * tot)
-        |    THEN 1 ELSE 0 END AS BIGINT) AS outlier
-        |FROM daily d JOIN stats USING (event_type)
-        |ORDER BY event_type, day""".stripMargin,
-    "mm_binary_meta" -> mmSql,
-    // closed-form from doc_id: the generator's sample formula
-    // ((id·31 + 7i²) mod 65536) − 32768 re-derived per index; the
-    // Spark side must DECODE the same values back out of the bytes
-    "mm_audio_rms" ->
-      s"""WITH s AS (SELECT doc_id, doc_id % 200 + 50 AS n FROM documents),
-        |v AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM s),
-        |x AS (SELECT doc_id, ((doc_id * 31 + i * i * 7) % 65536) - 32768 AS val FROM v),
-        |a AS (SELECT doc_id, count(*) AS n_samples, max(abs(val)) AS peak,
-        |    sum(val * val) AS sum_sq FROM x GROUP BY doc_id)
-        |SELECT doc_id, CAST(n_samples AS BIGINT) AS n_samples,
-        |  CAST(peak AS BIGINT) AS peak, CAST(sum_sq AS BIGINT) AS sum_sq,
-        |  ${sqlFp("sqrt(CAST(sum_sq AS DOUBLE) / CAST(n_samples AS DOUBLE))", 2)} AS rms_fp2
-        |FROM a ORDER BY doc_id""".stripMargin,
-    // the generator's quiet-frame mask re-derived closed-form:
-    // (v & 63) is the nonneg mod-64 of the two's-complement sample,
-    // i.e. ((v % 64) + 64) % 64; complete frames only (i < frames·256)
-    "mm_audio_fingerprint" ->
-      // delta-sign bits folded MSB-first over the first 62 deltas
-      // (mirrors the Spark-side slice cap): b_f carries 2^(cap-f)
-      // with cap = least(frames-1, 62)
-      """WITH s AS (SELECT doc_id, doc_id % 10 + 4 AS frames FROM documents),
-        |v AS (SELECT doc_id, frames, unnest(range(0, frames * 256)) AS i FROM s),
-        |x AS (SELECT doc_id, frames, i // 256 AS f,
-        |    CASE WHEN ((i // 256) + doc_id) % 3 = 0
-        |      THEN (((((doc_id * 31 + i * i * 7) % 65536) - 32768) % 64) + 64) % 64
-        |      ELSE ((doc_id * 31 + i * i * 7) % 65536) - 32768 END AS val
-        |  FROM v),
-        |e AS (SELECT doc_id, frames, f, sum(val * val) AS energy FROM x GROUP BY 1, 2, 3),
-        |d AS (SELECT doc_id, frames, f,
-        |    CASE WHEN energy > lag(energy) OVER (PARTITION BY doc_id ORDER BY f)
-        |      THEN 1 ELSE 0 END AS b FROM e),
-        |fp AS (SELECT doc_id, CAST(frames AS BIGINT) AS n_frames,
-        |    CAST(sum(CASE WHEN f >= 1 AND f <= LEAST(frames - 1, 62)
-        |      THEN b * (CAST(1 AS BIGINT) << CAST(LEAST(frames - 1, 62) - f AS INT)) ELSE 0 END) AS BIGINT) AS afp
-        |  FROM d GROUP BY 1, 2),
-        |g AS (SELECT afp, n_frames, min(doc_id) AS rep_id, count(*) AS group_size
-        |  FROM fp GROUP BY 1, 2)
-        |SELECT fp.doc_id, fp.n_frames, fp.afp, g.rep_id, g.group_size
-        |FROM fp JOIN g USING (afp, n_frames) ORDER BY doc_id""".stripMargin,
-    "mm_audio_seg" ->
-      s"""WITH s AS (SELECT doc_id, doc_id % 10 + 4 AS frames FROM documents),
-        |v AS (SELECT doc_id, frames, unnest(range(0, frames * 256)) AS i FROM s),
-        |x AS (SELECT doc_id, frames, i // 256 AS f,
-        |    CASE WHEN ((i // 256) + doc_id) % 3 = 0
-        |      THEN (((((doc_id * 31 + i * i * 7) % 65536) - 32768) % 64) + 64) % 64
-        |      ELSE ((doc_id * 31 + i * i * 7) % 65536) - 32768 END AS val
-        |  FROM v),
-        |e AS (SELECT doc_id, frames, f, sum(val * val) AS energy FROM x GROUP BY 1, 2, 3),
-        |a AS (SELECT doc_id, frames,
-        |    sum(CASE WHEN energy > 1048576 THEN 1 ELSE 0 END) AS n_active,
-        |    min(CASE WHEN energy > 1048576 THEN f END) AS first_a,
-        |    max(CASE WHEN energy > 1048576 THEN f END) AS last_a
-        |  FROM e GROUP BY 1, 2)
-        |SELECT doc_id, CAST(frames AS BIGINT) AS n_frames,
-        |  CAST(n_active AS BIGINT) AS n_active,
-        |  CAST(coalesce(first_a, -1) AS BIGINT) AS first_active,
-        |  CAST(coalesce(last_a, -1) AS BIGINT) AS last_active,
-        |  ${sqlFp("CAST(n_active AS DOUBLE) / CAST(frames AS DOUBLE)", 4)} AS active_fp4
-        |FROM a ORDER BY doc_id""".stripMargin,
-    // audio roundtrip mirror: all synth params are closed-form in
-    // doc_id; duration replicates via 64-bit integer division
-    "mm_audio_meta" ->
-      """SELECT doc_id,
-        | CAST(doc_id % 2 + 1 AS BIGINT) AS channels,
-        | CAST(CASE doc_id % 4 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-        |      WHEN 2 THEN 22050 ELSE 44100 END AS BIGINT) AS sample_rate,
-        | CAST(CASE WHEN doc_id % 3 = 0 THEN 8 ELSE 16 END AS BIGINT) AS bits,
-        | CAST(doc_id % 5000 + 100 AS BIGINT) AS data_bytes,
-        | CAST((doc_id % 5000 + 100) * 8000 //
-        |   ((CASE doc_id % 4 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-        |     WHEN 2 THEN 22050 ELSE 44100 END)
-        |    * (doc_id % 2 + 1) * (CASE WHEN doc_id % 3 = 0 THEN 8 ELSE 16 END)) AS BIGINT) AS duration_ms
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "mm_image_meta" ->
-      """SELECT doc_id, 'png' AS fmt,
-        | CAST(doc_id % 1000 + 1 AS BIGINT) AS width,
-        | CAST(doc_id % 700 + 1 AS BIGINT) AS height
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "mm_frame_sample" ->
-      // the synthesized container's parameters re-derived from doc_id;
-      // the probe byte re-derives the fill rule — if the Spark side's
-      // offsets drifted by even one byte the probe would read a
-      // different frame's fill (or header bytes) and hash-mismatch
-      """WITH v AS (SELECT doc_id,
-        |    doc_id % 8 + 1 AS w, doc_id % 4 + 1 AS h,
-        |    CASE doc_id % 4 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 5 ELSE 10 END AS fps,
-        |    doc_id % 24 + 2 AS n
-        |  FROM documents),
-        |idx AS (SELECT doc_id, w, h, fps, unnest(range(0, n, fps)) AS i FROM v)
-        |SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
-        |  CAST(i * 1000 // fps AS BIGINT) AS ts_ms,
-        |  CAST(14 + i * w * h AS BIGINT) AS frame_off,
-        |  CAST((doc_id * 31 + i * 7) % 251 AS BIGINT) AS probe_byte
-        |FROM idx ORDER BY doc_id, frame_idx""".stripMargin,
-    // the decoded raster re-derived closed-form (first q pixels a,
-    // rest b); Spark DECOMPRESSES the actual run pairs out of the
-    // container — a codec bug (run order, count off-by-one, frame
-    // offset drift) changes the pixel sum or flips threshold bits
-    "mm_frame_decode" ->
-      """WITH v AS (SELECT doc_id,
-        |    CASE doc_id % 4 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 5 ELSE 10 END AS fps,
-        |    doc_id % 24 + 2 AS n
-        |  FROM documents),
-        |idx AS (SELECT doc_id, fps, unnest(range(0, n, fps)) AS i FROM v),
-        |px AS (SELECT doc_id, fps, i,
-        |    list_transform(range(0, 64),
-        |      p -> CASE WHEN p < doc_id % 63 + 1 THEN (doc_id * 31 + i * 7) % 251
-        |                ELSE (doc_id * 17 + i * 11) % 251 END) AS ps
-        |  FROM idx),
-        |px2 AS (SELECT doc_id, fps, i, ps, list_sum(ps) AS s FROM px)
-        |SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
-        |  CAST(i * 1000 // fps AS BIGINT) AS ts_ms,
-        |  CAST(s AS BIGINT) AS sum_pix,
-        |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[33:64])),
-        |    (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS BIGINT) AS phash_hi,
-        |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[1:32])),
-        |    (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS BIGINT) AS phash_lo
-        |FROM px2 ORDER BY doc_id, frame_idx""".stripMargin,
-    // every pixel of every frame recomputed closed-form; SAD over
-    // consecutive-frame pairs, cuts where SAD > 64 — Spark decodes
-    // the actual RLE payload, so any codec/offset drift changes a
-    // pixel and the SAD
-    "mm_scene_cut" ->
-      """WITH v AS (SELECT doc_id,
-        |    CASE doc_id % 4 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 5 ELSE 10 END AS fps,
-        |    doc_id % 24 + 2 AS n
-        |  FROM documents),
-        |idx AS (SELECT doc_id, fps, unnest(range(0, n)) AS i FROM v),
-        |px AS (SELECT doc_id, fps, i,
-        |    list_transform(range(0, 64),
-        |      p -> (doc_id * 31 + (i // 5) * 97 + p * 7) % 251 +
-        |           CASE WHEN p = 0 THEN i % 3 ELSE 0 END) AS ps
-        |  FROM idx),
-        |pair AS (SELECT a.doc_id, a.fps, a.i, b.ps AS prev, a.ps AS cur
-        |  FROM px a JOIN px b ON b.doc_id = a.doc_id AND b.i = a.i - 1),
-        |sd AS (SELECT doc_id, fps, i,
-        |    list_sum(list_transform(range(0, 64),
-        |      p -> abs(cur[CAST(p AS INT) + 1] - prev[CAST(p AS INT) + 1]))) AS sad
-        |  FROM pair)
-        |SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
-        |  CAST(i * 1000 // fps AS BIGINT) AS ts_ms, CAST(sad AS BIGINT) AS sad
-        |FROM sd WHERE sad > 64 ORDER BY doc_id, frame_idx""".stripMargin,
-    // raster re-derived from the synth rule; Spark parses the actual
-    // payload bytes — a 1-byte drift in the binary path flips a bit.
-    // Bits compare pixel·64 vs the pixel sum (strict, integer), MSB
-    // first fold per uint32 half
-    "mm_image_phash" ->
-      """WITH px AS (SELECT doc_id,
-        |    list_transform(range(0, 64),
-        |      i -> ((doc_id % 16) * 31 + i * 7) % 240 + doc_id % 3) AS ps
-        |  FROM documents),
-        |px2 AS (SELECT doc_id, ps, list_sum(ps) AS s FROM px),
-        |h AS (SELECT doc_id,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[33:64])),
-        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_hi,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[1:32])),
-        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_lo
-        |  FROM px2),
-        |g AS (SELECT phash_hi, phash_lo, min(doc_id) AS rep_id, count(*) AS group_size
-        |  FROM h GROUP BY 1, 2)
-        |SELECT h.doc_id, CAST(h.phash_hi AS BIGINT) AS phash_hi,
-        |  CAST(h.phash_lo AS BIGINT) AS phash_lo, g.rep_id, g.group_size
-        |FROM h JOIN g USING (phash_hi, phash_lo) ORDER BY doc_id""".stripMargin,
-    "dd_phash_neardup" ->
-      // hamming over the two 32-bit halves (the 64-bit recompose
-      // would overflow BIGINT multiply); brute all-pairs over the
-      // ≤ signature-domain distinct groups — the banded join is
-      // lossless at hamming ≤ 7 by pigeonhole
-      """WITH px AS (SELECT doc_id,
-        |    list_transform(range(0, 64),
-        |      i -> ((doc_id % 16) * 31 + i * 7) % 240 + doc_id % 3) AS ps
-        |  FROM documents),
-        |px2 AS (SELECT doc_id, ps, list_sum(ps) AS s FROM px),
-        |h AS (SELECT doc_id,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[33:64])),
-        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_hi,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[1:32])),
-        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_lo
-        |  FROM px2),
-        |g AS (SELECT phash_hi, phash_lo, min(doc_id) AS rep, count(*) AS n
-        |  FROM h GROUP BY 1, 2)
-        |SELECT a.rep AS doc_a, b.rep AS doc_b,
-        |  CAST(bit_count(xor(a.phash_hi, b.phash_hi))
-        |     + bit_count(xor(a.phash_lo, b.phash_lo)) AS INT) AS hamming,
-        |  a.n AS size_a, b.n AS size_b
-        |FROM g a, g b
-        |WHERE a.rep < b.rep
-        |  AND bit_count(xor(a.phash_hi, b.phash_hi))
-        |    + bit_count(xor(a.phash_lo, b.phash_lo)) <= 7
-        |ORDER BY 1, 2""".stripMargin,
-    "mm_image_dedup_cluster" ->
-      // the dd_components recursive closure over the phash rep graph
-      """WITH RECURSIVE px AS (SELECT doc_id,
-        |    list_transform(range(0, 64),
-        |      i -> ((doc_id % 16) * 31 + i * 7) % 240 + doc_id % 3) AS ps
-        |  FROM documents),
-        |px2 AS (SELECT doc_id, ps, list_sum(ps) AS s FROM px),
-        |h AS (SELECT doc_id,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[33:64])),
-        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_hi,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[1:32])),
-        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_lo
-        |  FROM px2),
-        |g AS (SELECT phash_hi, phash_lo, min(doc_id) AS rep, count(*) AS n
-        |  FROM h GROUP BY 1, 2),
-        |cand AS (SELECT a.rep AS doc_a, b.rep AS doc_b
-        |  FROM g a, g b
-        |  WHERE a.rep < b.rep
-        |    AND bit_count(xor(a.phash_hi, b.phash_hi))
-        |      + bit_count(xor(a.phash_lo, b.phash_lo)) <= 7),
-        |sym AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-        |        UNION ALL SELECT doc_b, doc_a FROM cand),
-        |lbl(node, label) AS (
-        |  SELECT rep, rep FROM g
-        |  UNION
-        |  SELECT s.dst, l.label FROM lbl l JOIN sym s ON s.src = l.node),
-        |comp AS (SELECT node, min(label) AS component FROM lbl GROUP BY 1)
-        |SELECT component, count(*) AS n_sigs, CAST(sum(n) AS BIGINT) AS n_images
-        |FROM comp JOIN g ON g.rep = comp.node GROUP BY 1 ORDER BY 1""".stripMargin,
-    // channel-planar synth rule re-derived per (channel, pixel);
-    // moment identity in HUGEINT mirrors Spark's DECIMAL(38,0)
-    "mm_channel_stats" ->
-      s"""WITH px AS (
-        |  SELECT c, ((doc_id % 16) * 31 + i * 7 + c * 11) % 240 + doc_id % 3 AS p
-        |  FROM documents CROSS JOIN range(0, 3) t1(c) CROSS JOIN range(0, 64) t2(i)),
-        |a AS (SELECT c AS channel, count(*) AS n_px, CAST(sum(p) AS BIGINT) AS sum_px,
-        |    CAST(sum(p * p) AS BIGINT) AS sumsq_px FROM px GROUP BY 1)
-        |SELECT channel, n_px, sum_px, sumsq_px,
-        |  ${sqlFp("CAST(sum_px AS DOUBLE) / CAST(n_px AS DOUBLE)", 4)} AS mean_fp4,
-        |  ${sqlFp("CAST(CAST(n_px AS HUGEINT) * sumsq_px - CAST(sum_px AS HUGEINT) * sum_px AS DOUBLE) / (CAST(n_px AS DOUBLE) * CAST(n_px AS DOUBLE))", 4)} AS var_fp4
-        |FROM a ORDER BY channel""".stripMargin,
-    // resize: every 2×2 block of the closed-form synthGray8x8 raster
-    // floor-averages to one output pixel — integer // 4 mirrors the
-    // Spark side's shift
-    "mm_image_resize" ->
-      """WITH px AS (SELECT doc_id, CAST(i AS BIGINT) AS i,
-        |    CAST(((doc_id % 16) * 31 + i * 7) % 240 + doc_id % 3 AS BIGINT) AS v
-        |  FROM documents, range(0, 64) t(i)),
-        |o AS (SELECT doc_id, ((i // 8) // 2) * 4 + (i % 8) // 2 AS pos, v FROM px)
-        |SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-        |  CAST(sum(v) // 4 AS BIGINT) AS px
-        |FROM o GROUP BY doc_id, pos ORDER BY doc_id, pos""".stripMargin,
-    "dd_segment_dedup" -> {
-      // 8-token segments over the boilerplate-planted text; segments
-      // in >= 2 distinct docs are stripped, survivors re-join in order
-      val augToks = toksSql.replace("lower(text)",
-        "lower(CASE WHEN doc_id % 3 = 0 THEN 'terms of service apply all rights reserved worldwide ' || text ELSE text END)")
-      s"""WITH tk AS (SELECT doc_id, $augToks AS toks FROM documents),
-        |segs AS (SELECT doc_id,
-        |    unnest(range(0, greatest(1, CAST(ceil(len(toks) / 8.0) AS BIGINT)))) AS pos, toks
-        |  FROM tk),
-        |segs2 AS (SELECT doc_id, pos,
-        |    array_to_string(list_slice(toks, pos * 8 + 1, pos * 8 + 8), ' ') AS seg
-        |  FROM segs),
-        |common AS (SELECT seg FROM segs2 GROUP BY seg HAVING count(DISTINCT doc_id) >= 2)
-        |SELECT s.doc_id AS doc,
-        |  coalesce(string_agg(s.seg, ' ' ORDER BY s.pos) FILTER (WHERE c.seg IS NULL), '') AS clean_text,
-        |  count(*) FILTER (WHERE c.seg IS NULL) AS n_kept,
-        |  count(*) FILTER (WHERE c.seg IS NOT NULL) AS n_dropped
-        |FROM segs2 s LEFT JOIN common c USING (seg)
-        |GROUP BY 1 ORDER BY doc""".stripMargin
-    },
-    "txt_chunk" ->
-      s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-        |s AS (SELECT doc_id,
-        |    unnest(range(0, greatest(1, CAST(ceil(len(toks) / 12.0) AS BIGINT)))) AS cid, toks
-        |  FROM tk)
-        |SELECT doc_id, CAST(cid AS BIGINT) AS chunk_id,
-        |  CAST(len(list_slice(toks, cid * 12 + 1, cid * 12 + 16)) AS BIGINT) AS n_tokens,
-        |  array_to_string(list_slice(toks, cid * 12 + 1, cid * 12 + 16), ' ') AS chunk_text
-        |FROM s ORDER BY doc_id, chunk_id""".stripMargin,
-    "smp_sample" -> {
-      // u = uint32(first 8 md5 hex chars of 'smp:doc_id') / 2^32 —
-      // exact in double on both engines; rates are dyadic so the
-      // comparison and 1/rate are float-exact too
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('smp:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
-      s"""SELECT doc_id, source, ${sqlFp("1.0 / rate", 4)} AS weight_fp4
-        |FROM (SELECT doc_id, source,
-        |    CASE WHEN source IN ('src0','src1') THEN 1.0
-        |         WHEN source IN ('src2','src3','src4') THEN 0.5
-        |         ELSE 0.25 END AS rate
-        |  FROM documents)
-        |WHERE CAST($u32 AS DOUBLE) / 4294967296.0 < rate
-        |ORDER BY doc_id""".stripMargin
-    },
-    "smp_weighted" -> {
-      // priority q = n_chars / ((u32 + 0.5) / 2^32) — one exact
-      // dyadic add, one exact dyadic division, one IEEE division:
-      // both engines produce the identical double, so the top-100
-      // SET matches bit-for-bit (doc_id tiebreak)
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('wsmp:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
-      s"""SELECT doc_id, source, n_chars, prio_fp4 FROM (
-        |  SELECT doc_id, source, n_chars,
-        |    ${sqlFp("CAST(n_chars AS DOUBLE) / ((CAST(" + u32 + " AS DOUBLE) + 0.5) / 4294967296.0)", 4)} AS prio_fp4,
-        |    CAST(n_chars AS DOUBLE) / ((CAST($u32 AS DOUBLE) + 0.5) / 4294967296.0) AS prio
-        |  FROM documents
-        |  ORDER BY prio DESC, doc_id LIMIT 100)
-        |ORDER BY doc_id""".stripMargin
-    },
-    "smp_split" -> {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('spl:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
-      s"""SELECT doc_id, source,
-        |  CASE WHEN u < 0.75 THEN 'train' WHEN u < 0.875 THEN 'val' ELSE 'test' END AS split
-        |FROM (SELECT doc_id, source,
-        |    CAST($u32 AS DOUBLE) / 4294967296.0 AS u FROM documents)
-        |ORDER BY doc_id""".stripMargin
-    },
-    "smp_curriculum" ->
-      // exact tercile thresholds from the distinct-length histogram —
-      // the ev_percentile rank-scan shape in SQL
-      s"""WITH d AS (SELECT doc_id, n_chars,
-        |    CAST(len($toksSql) AS BIGINT) AS n_tokens FROM documents),
-        |h AS (SELECT n_chars, count(*) AS k FROM d GROUP BY 1),
-        |c AS (SELECT n_chars, sum(k) OVER (ORDER BY n_chars) AS cum,
-        |             sum(k) OVER () AS n FROM h),
-        |t AS (SELECT min(CASE WHEN cum >= (n + 2) // 3 THEN n_chars END) AS t1,
-        |             min(CASE WHEN cum >= (2 * n + 2) // 3 THEN n_chars END) AS t2 FROM c)
-        |SELECT CASE WHEN n_chars <= t1 THEN 1 WHEN n_chars <= t2 THEN 2 ELSE 3 END AS stage,
-        |  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-        |  min(n_chars) AS min_chars, max(n_chars) AS max_chars
-        |FROM d, t GROUP BY 1 ORDER BY 1""".stripMargin,
-    "smp_kfold" -> {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('kf:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
-      s"""SELECT doc_id, source, CAST(least(floor(u * 5), 4) AS BIGINT) AS fold
-        |FROM (SELECT doc_id, source,
-        |    CAST($u32 AS DOUBLE) / 4294967296.0 AS u FROM documents)
-        |ORDER BY doc_id""".stripMargin
-    },
-    // global ordered cumsum mirror; ROWS frame (the order is total,
-    // but be explicit) and BIGINT cast (DuckDB sums BIGINT to HUGEINT)
-    "smp_budget" ->
-      s"""WITH t AS (SELECT doc_id, n_chars, CAST(len($toksSql) AS BIGINT) AS n_tokens
-        |           FROM documents),
-        |c AS (SELECT *, CAST(sum(n_tokens) OVER (ORDER BY n_chars DESC, doc_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_weight
-        |      FROM t)
-        |SELECT doc_id, n_chars, n_tokens, cum_weight FROM c
-        |WHERE cum_weight <= 20000 ORDER BY doc_id""".stripMargin,
-    "smp_temperature" -> {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('tmp:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
-      s"""WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
-        |s AS (SELECT source, n, CAST(floor(sqrt(CAST(n AS DOUBLE))*1e6+0.5) AS BIGINT) AS s6 FROM c),
-        |tot AS (SELECT CAST(sum(s6) AS BIGINT) AS stot FROM s),
-        |r AS (SELECT source,
-        |    CAST(floor(least(1.0, (200 * CAST(s6 AS DOUBLE)) / (CAST(stot AS DOUBLE) * CAST(n AS DOUBLE)))*1e6+0.5) AS BIGINT) AS rate_fp6
-        |  FROM s, tot)
-        |SELECT d.doc_id, d.source, r.rate_fp6
-        |FROM documents d JOIN r USING (source)
-        |WHERE CAST($u32 AS DOUBLE) / 4294967296.0 < CAST(rate_fp6 AS DOUBLE) / 1e6
-        |ORDER BY doc_id""".stripMargin
-    },
-    "smp_mix" ->
-      s"""WITH t AS (SELECT doc_id, source, n_chars, CAST(len($toksSql) AS BIGINT) AS n_tokens
-        |           FROM documents WHERE source IN ('src0', 'src1', 'src2', 'src3')),
-        |c AS (SELECT *, CAST(sum(n_tokens) OVER (PARTITION BY source
-        |        ORDER BY n_chars DESC, doc_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_weight
-        |      FROM t)
-        |SELECT doc_id, source, n_chars, n_tokens, cum_weight FROM c
-        |WHERE cum_weight <= CASE source WHEN 'src0' THEN 8000 WHEN 'src1' THEN 6000
-        |  WHEN 'src2' THEN 4000 ELSE 2000 END
-        |ORDER BY doc_id""".stripMargin,
-    "smp_reservoir" -> {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('rsv:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
-      s"""SELECT doc_id, source, rank_in_stratum FROM (
-        |  SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY CAST($u32 AS DOUBLE) / 4294967296.0, doc_id) AS rank_in_stratum
-        |  FROM documents)
-        |WHERE rank_in_stratum <= 5
-        |ORDER BY source, rank_in_stratum""".stripMargin
-    },
-    "smp_length_buckets" ->
-      s"""WITH d AS (SELECT CAST(len($toksSql) AS BIGINT) AS n FROM documents),
-        |c AS (SELECT n, CASE WHEN n <= 1 THEN CAST(1 AS BIGINT)
-        |        ELSE (CAST(1 AS BIGINT) << length(bin(n - 1))) END AS cap FROM d),
-        |g AS (SELECT cap, count(*) AS n_docs, CAST(sum(n) AS BIGINT) AS real_tokens
-        |      FROM c GROUP BY 1)
-        |SELECT cap, n_docs, real_tokens,
-        |  CAST(n_docs * cap AS BIGINT) AS padded_tokens,
-        |  CAST(((n_docs * cap - real_tokens) * 20000 + n_docs * cap) // (2 * n_docs * cap) AS BIGINT) AS waste_fp4
-        |FROM g ORDER BY cap""".stripMargin,
-    "smp_pack" ->
-      s"""WITH RECURSIVE w AS (
-        |  SELECT doc_id, doc_id % 8 AS grp, CAST(len($toksSql) AS BIGINT) AS n_tokens,
-        |    row_number() OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) AS rn
-        |  FROM documents),
-        |pack AS (
-        |  SELECT doc_id, grp, n_tokens, rn, CAST(0 AS BIGINT) AS bin, n_tokens AS fill
-        |  FROM w WHERE rn = 1
-        |  UNION ALL
-        |  SELECT w.doc_id, w.grp, w.n_tokens, w.rn,
-        |    CASE WHEN p.fill + w.n_tokens <= 256 THEN p.bin ELSE p.bin + 1 END,
-        |    CASE WHEN p.fill + w.n_tokens <= 256 THEN p.fill + w.n_tokens ELSE w.n_tokens END
-        |  FROM w JOIN pack p ON w.grp = p.grp AND w.rn = p.rn + 1)
-        |SELECT doc_id, grp, bin, n_tokens FROM pack ORDER BY doc_id""".stripMargin,
-    // CDC mirror: per-position window-hash probes, cut list, bounds,
-    // substring chunks — the u32(md5) is the shared cross-engine hash
-    "dd_cdc_chunks" -> {
-      val u32OfH = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef', substr(h, CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
-      s"""WITH d AS (SELECT doc_id, text, length(text) AS n FROM documents),
-        |probes AS (SELECT doc_id, i, md5(substr(text, CAST(i AS BIGINT) - 7, 8)) AS h
-        |           FROM (SELECT *, unnest(CASE WHEN n >= 9 THEN range(8, n) ELSE [] END) AS i FROM d)),
-        |cutrows AS (SELECT doc_id, i FROM probes WHERE $u32OfH % 64 = 0),
-        |cuts AS (SELECT doc_id, list(i ORDER BY i) AS cl FROM cutrows GROUP BY doc_id),
-        |bounds AS (SELECT d.doc_id, d.text,
-        |             list_concat(list_concat([CAST(0 AS BIGINT)], coalesce(c.cl, [])), [CAST(d.n AS BIGINT)]) AS b
-        |           FROM d LEFT JOIN cuts c USING (doc_id)),
-        |chunks AS (SELECT doc_id, CAST(j AS BIGINT) AS chunk_id,
-        |             substr(text, CAST(b[CAST(j+1 AS INT)] + 1 AS BIGINT), CAST(b[CAST(j+2 AS INT)] - b[CAST(j+1 AS INT)] AS BIGINT)) AS c
-        |           FROM (SELECT *, unnest(range(0, len(b) - 1)) AS j FROM bounds))
-        |SELECT doc_id, chunk_id, CAST(length(c) AS BIGINT) AS n_chars_chunk, md5(c) AS chunk_hash
-        |FROM chunks WHERE length(c) > 0 ORDER BY doc_id, chunk_id""".stripMargin
-    },
-    "txt_url_normalize" ->
-      s"""WITH $normUrlCtes
-        |SELECT doc_id, url, norm_url FROM norm ORDER BY doc_id""".stripMargin,
-    "dd_url_dedup" ->
-      s"""WITH $normUrlCtes
-        |SELECT norm_url, min(doc_id) AS keep_id, count(*) AS n_variants
-        |FROM norm GROUP BY 1 ORDER BY 1""".stripMargin,
-    "smp_shuffle" -> {
-      // shard = uint32(first 8 md5 hex chars of 'shf:doc_id') % 8;
-      // pos ranks by the FULL md5 hex — hex strings are fixed-length
-      // lowercase in both engines, so string order == numeric order
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('shf:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
-      s"""SELECT doc_id, shard, CAST(row_number() OVER (PARTITION BY shard
-        |    ORDER BY md5('shf:' || CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) AS pos
-        |FROM (SELECT doc_id, $u32 % 8 AS shard FROM documents)
-        |ORDER BY shard, pos""".stripMargin
-    },
-    "txt_entropy" ->
-      s"""WITH tf AS (
-        |  SELECT doc_id, tok, count(*) AS c
-        |  FROM (SELECT doc_id, unnest($toksSql) AS tok FROM documents)
-        |  GROUP BY 1, 2),
-        |ent AS (
-        |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n,
-        |    CAST(sum(${sqlFp("c * log2(CAST(c AS DOUBLE))", 6)}) AS BIGINT) AS s6
-        |  FROM tf GROUP BY 1)
-        |SELECT d.doc_id, ent.n,
-        |  ${sqlFp("log2(CAST(ent.n AS DOUBLE)) - CAST(ent.s6 AS DOUBLE) / 1e6 / CAST(ent.n AS DOUBLE)", 4)} AS entropy_fp4
-        |FROM documents d LEFT JOIN ent ON ent.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    "ev_trend" ->
-      s"""WITH d AS (
-        |  SELECT event_type, epoch_ms(ts) // 86400000 AS day, count(*) AS y
-        |  FROM events GROUP BY 1, 2),
-        |sums AS (SELECT event_type, count(*) AS n_days,
-        |    CAST(sum(y) AS BIGINT) AS total, CAST(sum(day) AS HUGEINT) AS sx,
-        |    CAST(sum(day*day) AS HUGEINT) AS sxx, CAST(sum(day*y) AS HUGEINT) AS sxy
-        |  FROM d GROUP BY 1)
-        |SELECT event_type, n_days, total,
-        |  CASE WHEN n_days*sxx - sx*sx = 0 THEN CAST(0 AS BIGINT)
-        |    ELSE ${sqlFp("CAST(n_days*sxy - sx*total AS DOUBLE) / CAST(n_days*sxx - sx*sx AS DOUBLE)", 6)}
-        |  END AS slope_fp6
-        |FROM sums ORDER BY event_type""".stripMargin,
-    "ev_path_trigrams" ->
-      s"""WITH e AS (SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms FROM events),
-        |w AS (SELECT event_type, ms,
-        |    lag(event_type, 1) OVER win AS p1, lag(event_type, 2) OVER win AS p2,
-        |    lag(ms, 1) OVER win AS m1, lag(ms, 2) OVER win AS m2
-        |  FROM e WINDOW win AS (PARTITION BY user_id ORDER BY ms, event_id))
-        |SELECT p2 || '>' || p1 || '>' || event_type AS path, count(*) AS n
-        |FROM w
-        |WHERE p2 IS NOT NULL AND ms - m1 <= 21600000 AND m1 - m2 <= 21600000
-        |GROUP BY 1 ORDER BY n DESC, path LIMIT 20""".stripMargin,
-    "emb_norm_stats" ->
-      s"""WITH q AS (
-        |  SELECT CAST(i - 1 AS INT) AS dim,
-        |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS q6
-        |  FROM embeddings CROSS JOIN range(1, 65) t(i)),
-        |a AS (SELECT dim, count(*) AS n, CAST(sum(q6) AS BIGINT) AS s6,
-        |    sum(q6*q6) AS ss12 FROM q GROUP BY 1)
-        |SELECT dim, n,
-        |  ${sqlFp("CAST(s6 AS DOUBLE) / 1e6 / CAST(n AS DOUBLE)", 6)} AS mean_fp6,
-        |  ${sqlFp("CAST(ss12 AS DOUBLE) / 1e12 / CAST(n AS DOUBLE) - " +
-             "(CAST(s6 AS DOUBLE) / 1e6 / CAST(n AS DOUBLE)) * (CAST(s6 AS DOUBLE) / 1e6 / CAST(n AS DOUBLE))", 6)} AS var_fp6
-        |FROM a ORDER BY dim""".stripMargin,
-    "emb_pca_power" -> {
-      def it(k: Int): String =
-        s"""w$k AS (SELECT cov.i, sum(cov.c * v${k - 1}.vj) AS w
-           |  FROM cov JOIN v${k - 1} ON v${k - 1}.j = cov.j GROUP BY 1),
-           |x$k AS (SELECT max(abs(w)) AS mx FROM w$k),
-           |v$k AS (SELECT i AS j, CASE WHEN mx = 0 THEN CAST(1000000 AS HUGEINT)
-           |    ELSE CAST(CAST(floor(CAST(w AS DOUBLE) / CAST(mx AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS HUGEINT)
-           |  END AS vj
-           |  FROM w$k, x$k)""".stripMargin
-      s"""WITH q AS (
-        |  SELECT vec_id, CAST(i - 1 AS INT) AS dim,
-        |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS q6
-        |  FROM embeddings CROSS JOIN range(1, 65) t(i)),
-        |g AS (SELECT a.dim AS i, b.dim AS j, CAST(sum(a.q6 * b.q6) AS HUGEINT) AS s
-        |  FROM q a JOIN q b ON a.vec_id = b.vec_id GROUP BY 1, 2),
-        |m AS (SELECT dim, CAST(sum(q6) AS HUGEINT) AS m FROM q GROUP BY 1),
-        |n AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM embeddings),
-        |cov AS (SELECT g.i, g.j, n.n * g.s - mi.m * mj.m AS c
-        |  FROM g JOIN m mi ON mi.dim = g.i JOIN m mj ON mj.dim = g.j CROSS JOIN n),
-        |v0 AS (SELECT dim AS j, CAST(1000000 AS HUGEINT) AS vj FROM m),
-        |${it(1)},
-        |${it(2)},
-        |${it(3)},
-        |${it(4)}
-        |SELECT j AS dim, CAST(vj AS BIGINT) AS pc1_fp6 FROM v4 ORDER BY dim""".stripMargin
-    },
-    // legacy batch = even doc_ids (written without source/n_chars)
-    "src_schema_evolution" ->
-      """SELECT lang, count(*) AS n,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_legacy,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 1 THEN n_chars ELSE 0 END) AS BIGINT) AS sum_chars_v2
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "src_partitioned_scan" ->
-      s"""SELECT epoch_ms(ts) // 86400000 AS day, count(*) AS n,
-        |  CAST(sum(${sqlFp("\"value\"", 4)}) AS BIGINT) AS sum_v4
-        |FROM events WHERE event_type = 'purchase'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "txt_vocab_coverage" ->
-      s"""WITH v AS (SELECT tok, count(*) AS f FROM
-        |    (SELECT unnest($toksSql) AS tok FROM documents) GROUP BY 1),
-        |tot AS (SELECT CAST(sum(f) AS BIGINT) AS total FROM v),
-        |head AS (SELECT f, row_number() OVER (ORDER BY f DESC, tok) AS rank
-        |         FROM v ORDER BY f DESC, tok LIMIT 1024),
-        |ks AS (SELECT unnest([16, 64, 256, 1024]) AS k)
-        |SELECT k, CAST(sum(f) AS BIGINT) AS covered,
-        |  CAST((sum(f) * 2000000 + total) // (2 * total) AS BIGINT) AS coverage_fp6
-        |FROM head, ks, tot WHERE rank <= k GROUP BY k, total ORDER BY k""".stripMargin,
-    "txt_zipf" ->
-      s"""WITH v AS (
-        |  SELECT tok, count(*) AS f
-        |  FROM (SELECT unnest($toksSql) AS tok FROM documents)
-        |  GROUP BY 1 ORDER BY f DESC, tok LIMIT 256),
-        |r AS (SELECT ${sqlFp("log2(CAST(row_number() OVER (ORDER BY f DESC, tok) AS DOUBLE))", 6)} AS x6,
-        |    ${sqlFp("log2(CAST(f AS DOUBLE))", 6)} AS y6
-        |  FROM v),
-        |sums AS (SELECT count(*) AS k,
-        |    CAST(sum(x6) AS HUGEINT) AS sx, CAST(sum(y6) AS HUGEINT) AS sy,
-        |    CAST(sum(x6*x6) AS HUGEINT) AS sxx, CAST(sum(x6*y6) AS HUGEINT) AS sxy
-        |  FROM r)
-        |SELECT k,
-        |  ${sqlFp("CAST(k*sxy - sx*sy AS DOUBLE) / CAST(k*sxx - sx*sx AS DOUBLE)", 6)} AS slope_fp6,
-        |  ${sqlFp("CAST(sy*sxx - sx*sxy AS DOUBLE) / CAST(k*sxx - sx*sx AS DOUBLE) / 1e6", 6)} AS intercept_fp6
-        |FROM sums""".stripMargin,
-    "ev_quantile_sketch" -> {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('qs:' || CAST(event_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
-      s"""WITH e AS (SELECT event_type, ${sqlFp("\"value\"", 4)} AS v4,
-        |    CASE WHEN $u32 < 536870912 THEN 1 ELSE 0 END AS in_s FROM events),
-        |h AS (SELECT event_type, v4, count(*) AS k, sum(in_s) AS ks FROM e GROUP BY 1, 2),
-        |c AS (SELECT event_type, v4,
-        |    sum(k) OVER (PARTITION BY event_type ORDER BY v4
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(ks) OVER (PARTITION BY event_type ORDER BY v4
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cums,
-        |    sum(k) OVER (PARTITION BY event_type) AS n,
-        |    sum(ks) OVER (PARTITION BY event_type) AS ns
-        |  FROM h)
-        |SELECT event_type, CAST(max(n) AS BIGINT) AS n_rows, CAST(max(ns) AS BIGINT) AS n_sample,
-        |  min(CASE WHEN cum >= (n + 1) // 2 THEN v4 END) AS p50_c4,
-        |  min(CASE WHEN cum >= (9 * n + 9) // 10 THEN v4 END) AS p90_c4,
-        |  min(CASE WHEN cums >= (ns + 1) // 2 THEN v4 END) AS s50_c4,
-        |  min(CASE WHEN cums >= (9 * ns + 9) // 10 THEN v4 END) AS s90_c4
-        |FROM c GROUP BY event_type ORDER BY event_type""".stripMargin
-    },
-    "src_bucketed_join" ->
-      """SELECT o_orderpriority, count(*) AS n_items,
-        | CAST(sum(CAST(floor(l_quantity*100+0.5) AS BIGINT)) AS BIGINT) AS sum_qty_c,
-        | CAST(sum(CAST(floor(l_extendedprice*100+0.5) AS BIGINT)) AS BIGINT) AS sum_price_c
-        |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "src_cdc_apply" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS key, o_orderstatus AS status,
-        |    CAST(floor(o_totalprice*100+0.5) AS BIGINT) AS total_c
-        |  FROM orders),
-        |chg AS (
-        |  SELECT CASE WHEN l_linenumber % 3 = 2 THEN l_orderkey + 600000000
-        |              ELSE l_orderkey END AS key,
-        |    ((CAST(l_linenumber AS BIGINT) * 34359738368
-        |        + CAST(floor(l_extendedprice*100+0.5) AS BIGINT)) * 4
-        |      + l_linenumber % 3) * 4
-        |      + CASE l_returnflag WHEN 'A' THEN 0 WHEN 'N' THEN 1 ELSE 2 END AS packed
-        |  FROM lineitem),
-        |latest AS (
-        |  SELECT key,
-        |    CASE (p // 4) % 4 WHEN 0 THEN 'D' WHEN 1 THEN 'U' ELSE 'I' END AS op,
-        |    CASE p % 4 WHEN 0 THEN 'A' WHEN 1 THEN 'N' ELSE 'R' END AS new_status,
-        |    (p // 16) % 34359738368 AS new_total_c
-        |  FROM (SELECT key, max(packed) AS p FROM chg GROUP BY 1))
-        |SELECT coalesce(b.key, l.key) AS key,
-        |  CASE WHEN l.key IS NULL THEN b.status ELSE l.new_status END AS status,
-        |  CASE WHEN l.key IS NULL THEN b.total_c ELSE l.new_total_c END AS total_c
-        |FROM base b FULL JOIN latest l ON l.key = b.key
-        |WHERE l.op IS NULL OR l.op <> 'D'
-        |ORDER BY key""".stripMargin,
-    "src_jsonl_corrupt" ->
-      """WITH js AS (
-        |  SELECT CASE WHEN doc_id % 7 = 0
-        |      THEN '{"id": ' || doc_id || ', "lang": '
-        |      ELSE '{"id": ' || doc_id || ', "lang": "' || lang || '"}'
-        |    END AS s
-        |  FROM documents),
-        |p AS (SELECT
-        |    CASE WHEN json_valid(s) THEN json_extract_string(s, '$.lang') END AS lang_p,
-        |    CASE WHEN json_valid(s) THEN CAST(json_extract(s, '$.id') AS BIGINT) END AS id
-        |  FROM js)
-        |SELECT coalesce(lang_p, 'CORRUPT') AS lang_parsed, count(*) AS n,
-        |  count(id) AS n_ids, CAST(sum(coalesce(id, 0)) AS BIGINT) AS sum_id
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-    "ev_interarrival" ->
-      """WITH g AS (
-        |  SELECT ms - lag(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) AS gap
-        |  FROM (SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events)),
-        |b AS (SELECT gap,
-        |    CASE WHEN gap = 0 THEN -1
-        |         ELSE CAST(length(bin(gap)) AS INT) - 1 END AS bucket
-        |  FROM g WHERE gap IS NOT NULL)
-        |SELECT bucket, count(*) AS n, min(gap) AS min_gap, max(gap) AS max_gap
-        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
-    "ev_rolling_distinct" ->
-      s"""WITH du AS (SELECT DISTINCT epoch_ms(ts) // 86400000 AS day, user_id FROM events),
-        |dau AS (SELECT day, count(DISTINCT user_id) AS dau FROM du GROUP BY 1),
-        |wau AS (SELECT d.day, count(DISTINCT u.user_id) AS wau7
-        |  FROM dau d JOIN du u ON u.day BETWEEN d.day - 6 AND d.day GROUP BY 1)
-        |SELECT day, dau, wau7,
-        |  ${sqlFp("CAST(dau AS DOUBLE) / CAST(wau7 AS DOUBLE)", 4)} AS stickiness_fp4
-        |FROM dau JOIN wau USING (day) ORDER BY day""".stripMargin,
-    "ev_gaps_islands" ->
-      """WITH h AS (
-        |  SELECT DISTINCT event_type, epoch_ms(ts) // 3600000 AS hr FROM events),
-        |r AS (SELECT event_type, hr,
-        |    hr - row_number() OVER (PARTITION BY event_type ORDER BY hr) AS grp,
-        |    hr - lag(hr) OVER (PARTITION BY event_type ORDER BY hr) - 1 AS gap
-        |  FROM h),
-        |i AS (SELECT event_type, grp, count(*) AS len FROM r GROUP BY 1, 2),
-        |ia AS (SELECT event_type, CAST(sum(len) AS BIGINT) AS n_hours,
-        |    count(*) AS n_islands, CAST(max(len) AS BIGINT) AS max_island
-        |  FROM i GROUP BY 1),
-        |ga AS (SELECT event_type, max(coalesce(gap, 0)) AS max_gap FROM r GROUP BY 1)
-        |SELECT ia.event_type, n_hours, n_islands, max_island, max_gap
-        |FROM ia JOIN ga USING (event_type) ORDER BY 1""".stripMargin,
-    "ev_kmv_merge" -> {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('kmv:' || CAST(user_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
-      s"""WITH h AS (SELECT DISTINCT event_type, CAST($u32 AS DOUBLE) / 4294967296.0 AS u FROM events),
-        |r AS (SELECT event_type, u, row_number() OVER (PARTITION BY event_type ORDER BY u) AS rk FROM h),
-        |d AS (SELECT event_type, count(*) AS n_kept,
-        |    ${sqlFp("CASE WHEN count(*) < 64 THEN CAST(count(*) AS DOUBLE) ELSE 63.0 / max(u) END", 2)} AS est
-        |  FROM r WHERE rk <= 64 GROUP BY 1),
-        |nd AS (SELECT event_type, count(DISTINCT epoch_ms(ts) // 86400000) AS n_days
-        |  FROM events GROUP BY 1)
-        |SELECT event_type, n_days, n_kept, est AS est_distinct_fp2,
-        |  n_kept AS n_kept_merged, est AS est_merged_fp2
-        |FROM d JOIN nd USING (event_type) ORDER BY event_type""".stripMargin
-    },
-    "src_dpp" ->
-      """WITH d AS (
-        |  SELECT DISTINCT event_type FROM events
-        |  WHERE substr(md5(event_type), 1, 1) < 'a')
-        |SELECT e.event_type, count(*) AS n,
-        |  CAST(sum(CAST(floor(value*1e4+0.5) AS BIGINT)) AS BIGINT) AS sum_v4
-        |FROM events e JOIN d ON d.event_type = e.event_type
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "ev_decay_score" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_ms(ts) // 86400000 AS day,
-        |    CAST(floor(value*1e4+0.5) AS BIGINT) AS v4
-        |  FROM events),
-        |mx AS (SELECT max(day) AS max_day FROM e)
-        |SELECT user_id, count(*) AS n_events,
-        |  CAST(sum(CAST(floor(CAST(v4 AS DOUBLE) / 1e4 /
-        |      CAST(1::BIGINT << CAST(least((max_day - day) // 7, 40) AS INT) AS DOUBLE)
-        |      * 1e6 + 0.5) AS BIGINT)) AS BIGINT) AS score_fp6
-        |FROM e, mx GROUP BY 1 ORDER BY 1""".stripMargin,
-    "ev_bitmap_retention" ->
-      """WITH e AS (
-        |  SELECT epoch_ms(ts) // 86400000 AS day, user_id // 63 AS word,
-        |    1::BIGINT << CAST(user_id % 63 AS INT) AS bit
-        |  FROM events),
-        |bm AS (SELECT day, word, bit_or(bit) AS bm FROM e GROUP BY 1, 2)
-        |SELECT a.day, CAST(sum(bit_count(a.bm)) AS BIGINT) AS n_active,
-        |  CAST(sum(coalesce(bit_count(a.bm & b.bm), 0)) AS BIGINT) AS n_ret7
-        |FROM bm a LEFT JOIN bm b ON b.word = a.word AND b.day = a.day + 7
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "src_compaction" ->
-      // floored modulus mirrors pmod; exclusive prefix via the
-      // 1-PRECEDING frame (coalesced to 0 for each group's first row)
-      """WITH f AS (SELECT (ms - ((ms % 86400000 + 86400000) % 86400000)) // 86400000 AS day,
-        |             CAST(count(*) * 128 AS BIGINT) AS bytes
-        |           FROM (SELECT epoch_ms(o_orderdate) AS ms FROM orders) GROUP BY 1),
-        |g AS (SELECT day, bytes, day // 32 AS grp FROM f),
-        |a AS (SELECT CAST(sum(bytes) // count(*) AS BIGINT) AS avg_bytes FROM g),
-        |sm AS (SELECT grp, bytes,
-        |         CAST(coalesce(sum(bytes) OVER (PARTITION BY grp ORDER BY day
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS pre
-        |       FROM g, a WHERE bytes < avg_bytes),
-        |b AS (SELECT grp, CAST(pre // (4 * avg_bytes) AS BIGINT) AS bin, bytes FROM sm, a
-        |      UNION ALL
-        |      SELECT grp, CAST(-1 AS BIGINT) AS bin, bytes FROM g, a WHERE bytes >= avg_bytes)
-        |SELECT grp, bin, count(*) AS n_files, CAST(sum(bytes) AS BIGINT) AS tot_bytes
-        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "ev_forecast_baseline" ->
-      """WITH daily AS (
-        |  SELECT event_type, (ms - ((ms % 86400000 + 86400000) % 86400000)) // 86400000 AS day,
-        |    count(*) AS n
-        |  FROM (SELECT event_type, epoch_ms(ts) AS ms FROM events) GROUP BY 1, 2),
-        |j AS (SELECT a.event_type, abs(a.n - b.n) AS err
-        |      FROM daily a JOIN daily b
-        |        ON a.event_type = b.event_type AND a.day = b.day + 7)
-        |SELECT event_type, count(*) AS n_days,
-        |  CAST(sum(err) AS BIGINT) AS total_abs_err,
-        |  CAST((sum(err) * 20000 + count(*)) // (2 * count(*)) AS BIGINT) AS mae_fp4
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-    "src_ttl_retention" ->
-      """WITH base AS (SELECT l_orderkey, epoch_ms(l_shipdate) AS ms,
-        |    (epoch_ms(l_shipdate) - ((epoch_ms(l_shipdate) % 86400000 + 86400000) % 86400000)) // 86400000 AS day
-        |  FROM lineitem),
-        |lay AS (SELECT 'insert_order' AS layout, l_orderkey // 200 AS fid, ms FROM base
-        |        UNION ALL
-        |        SELECT 'date_partitioned' AS layout, day // 7 AS fid, ms FROM base),
-        |pf AS (SELECT layout, fid, count(*) AS n,
-        |         CAST(sum(CASE WHEN ms < 852076800000 THEN 1 ELSE 0 END) AS BIGINT) AS nexp
-        |       FROM lay GROUP BY 1, 2)
-        |SELECT layout, count(*) AS n_files,
-        |  CAST(sum(CASE WHEN nexp = n THEN 1 ELSE 0 END) AS BIGINT) AS n_drop,
-        |  CAST(sum(CASE WHEN nexp > 0 AND nexp < n THEN 1 ELSE 0 END) AS BIGINT) AS n_rewrite,
-        |  CAST(sum(CASE WHEN nexp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
-        |  CAST(sum(nexp) AS BIGINT) AS rows_deleted,
-        |  CAST(sum(CASE WHEN nexp > 0 THEN n - nexp ELSE 0 END) AS BIGINT) AS rows_rewritten
-        |FROM pf GROUP BY 1 ORDER BY 1""".stripMargin,
-    "src_stats_pruning" ->
-      """WITH base AS (SELECT l_orderkey, epoch_ms(l_shipdate) AS ms,
-        |    (epoch_ms(l_shipdate) - ((epoch_ms(l_shipdate) % 86400000 + 86400000) % 86400000)) // 86400000 AS day
-        |  FROM lineitem),
-        |lay AS (SELECT 'insert_order' AS layout, l_orderkey // 200 AS fid, ms FROM base
-        |        UNION ALL
-        |        SELECT 'date_partitioned' AS layout, day // 7 AS fid, ms FROM base),
-        |pf AS (SELECT layout, fid, min(ms) AS mn, max(ms) AS mx, count(*) AS n,
-        |         CAST(sum(CASE WHEN ms >= 883612800000 AND ms < 899251200000 THEN 1 ELSE 0 END) AS BIGINT) AS nm
-        |       FROM lay GROUP BY 1, 2)
-        |SELECT layout, count(*) AS n_files,
-        |  CAST(sum(CASE WHEN mx < 883612800000 OR mn >= 899251200000 THEN 1 ELSE 0 END) AS BIGINT) AS n_pruned,
-        |  CAST(sum(CASE WHEN mx >= 883612800000 AND mn < 899251200000 THEN n ELSE 0 END) AS BIGINT) AS rows_scanned,
-        |  CAST(sum(nm) AS BIGINT) AS rows_matched
-        |FROM pf GROUP BY 1 ORDER BY 1""".stripMargin,
-    "src_zorder" -> {
-      // the same 4-step Morton bit spread, in SQL long arithmetic
-      def spread(v: String): String = {
-        val a = s"($v & 4095)"
-        val b = s"(($a | ($a << 8)) & 16711935)"
-        val d = s"(($b | ($b << 4)) & 252645135)"
-        val e = s"(($d | ($d << 2)) & 858993459)"
-        s"(($e | ($e << 1)) & 1431655765)"
-      }
-      s"""WITH pts AS (
-        |  SELECT (l_partkey * 2654435761) % 4096 AS x,
-        |    (l_suppkey * 2246822519) % 4096 AS y FROM lineitem),
-        |z AS (SELECT x, y,
-        |  (${spread("x")} | (${spread("y")} << 1)) AS zc FROM pts),
-        |lay AS (
-        |  SELECT 'zorder' AS layout, zc >> 16 AS bucket, x, y FROM z
-        |  UNION ALL
-        |  SELECT 'linear' AS layout, x >> 4 AS bucket, x, y FROM z)
-        |SELECT layout, bucket, count(*) AS n,
-        |  min(x) AS x_min, max(x) AS x_max, min(y) AS y_min, max(y) AS y_max
-        |FROM lay GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    },
-    "src_ivm" ->
-      """WITH chg AS (
-        |  SELECT CASE WHEN l_linenumber % 3 = 2 THEN l_orderkey + 600000000
-        |              ELSE l_orderkey END AS key,
-        |    ((CAST(l_linenumber AS BIGINT) * 34359738368
-        |        + CAST(floor(l_extendedprice*100+0.5) AS BIGINT)) * 4
-        |      + l_linenumber % 3) * 4
-        |      + CASE l_returnflag WHEN 'A' THEN 0 WHEN 'N' THEN 1 ELSE 2 END AS packed
-        |  FROM lineitem),
-        |latest AS (
-        |  SELECT key,
-        |    CASE (p // 4) % 4 WHEN 0 THEN 'D' WHEN 1 THEN 'U' ELSE 'I' END AS op,
-        |    CASE p % 4 WHEN 0 THEN 'A' WHEN 1 THEN 'N' ELSE 'R' END AS new_status,
-        |    (p // 16) % 34359738368 AS new_total_c
-        |  FROM (SELECT key, max(packed) AS p FROM chg GROUP BY 1)),
-        |base AS (SELECT o_orderkey AS key, o_orderstatus AS status,
-        |    CAST(floor(o_totalprice*100+0.5) AS BIGINT) AS total_c FROM orders),
-        |merged AS (
-        |  SELECT CASE WHEN l.key IS NULL THEN b.status ELSE l.new_status END AS status,
-        |    CASE WHEN l.key IS NULL THEN b.total_c ELSE l.new_total_c END AS tc
-        |  FROM base b FULL JOIN latest l ON l.key = b.key
-        |  WHERE l.op IS NULL OR l.op <> 'D'),
-        |v AS (SELECT status, count(*) AS n, CAST(sum(tc) AS BIGINT) AS t
-        |  FROM merged GROUP BY 1)
-        |SELECT status, n AS n_inc, t AS sum_inc_c, n AS n_direct, t AS sum_direct_c
-        |FROM v ORDER BY status""".stripMargin,
-    "src_scd2" ->
-      """WITH chg AS (
-        |  SELECT DISTINCT
-        |    CASE WHEN l_linenumber % 3 = 2 THEN l_orderkey + 600000000
-        |         ELSE l_orderkey END AS key,
-        |    ((CAST(l_linenumber AS BIGINT) * 34359738368
-        |        + CAST(floor(l_extendedprice*100+0.5) AS BIGINT)) * 4
-        |      + l_linenumber % 3) * 4
-        |      + CASE l_returnflag WHEN 'A' THEN 0 WHEN 'N' THEN 1 ELSE 2 END AS packed
-        |  FROM lineitem),
-        |led AS (
-        |  SELECT key, packed,
-        |    lead(packed) OVER (PARTITION BY key ORDER BY packed) AS nxt
-        |  FROM chg),
-        |iu AS (SELECT * FROM led WHERE (packed // 4) % 4 <> 0)
-        |SELECT key,
-        |  CAST(row_number() OVER (PARTITION BY key ORDER BY packed) AS INT) AS ver,
-        |  CASE packed % 4 WHEN 0 THEN 'A' WHEN 1 THEN 'N' ELSE 'R' END AS status,
-        |  (packed // 16) % 34359738368 AS total_c,
-        |  CAST(nxt IS NULL AS BIGINT) AS is_current
-        |FROM iu ORDER BY key, ver""".stripMargin,
-    "smp_balance" -> {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('bal:' || CAST(vec_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
-      s"""WITH e AS (SELECT vec_id, label,
-        |    CAST($u32 AS DOUBLE) / 4294967296.0 AS u FROM embeddings),
-        |k AS (SELECT min(cn) AS k FROM (
-        |  SELECT label, count(*) AS cn FROM e GROUP BY 1)),
-        |r AS (SELECT label, vec_id, u,
-        |    row_number() OVER (PARTITION BY label ORDER BY u, vec_id) AS r
-        |  FROM e)
-        |SELECT label, count(*) AS n_kept,
-        |  CAST(sum(vec_id) AS BIGINT) AS id_sum,
-        |  ${sqlFp("max(u)", 6)} AS max_u_fp6
-        |FROM r, k WHERE r.r <= k.k GROUP BY label ORDER BY label""".stripMargin
-    },
-    "emb_class_sep" ->
-      """WITH q AS (
-        |  SELECT label, CAST(i - 1 AS INT) AS dim,
-        |    CAST(floor(CAST(embedding[i] AS DOUBLE)*1e6+0.5) AS BIGINT) AS v
-        |  FROM embeddings CROSS JOIN range(1, 65) t(i)),
-        |sums AS (SELECT label, dim, CAST(sum(v) AS BIGINT) AS sv, count(*) AS n
-        |  FROM q GROUP BY 1, 2),
-        |cent AS (SELECT label, dim,
-        |    CAST(floor(CAST(sv AS DOUBLE)/CAST(n AS DOUBLE)+0.5) AS BIGINT) AS c
-        |  FROM sums),
-        |gcent AS (SELECT dim,
-        |    CAST(floor(CAST(sum(sv) AS DOUBLE)/CAST(sum(n) AS DOUBLE)+0.5) AS BIGINT) AS g
-        |  FROM sums GROUP BY 1),
-        |w AS (SELECT q.label,
-        |    sum(CAST((q.v - c.c)*(q.v - c.c) AS HUGEINT)) AS wss,
-        |    count(*) // 64 AS n
-        |  FROM q JOIN cent c ON c.label = q.label AND c.dim = q.dim GROUP BY 1),
-        |b AS (SELECT c.label, CAST(sum((c.c - g.g)*(c.c - g.g)) AS BIGINT) AS bss
-        |  FROM cent c JOIN gcent g USING (dim) GROUP BY 1)
-        |SELECT w.label, CAST(w.n AS BIGINT) AS n,
-        |  CAST(floor(CAST(w.wss AS DOUBLE) / CAST(w.n AS DOUBLE) / 64.0 / 1e12
-        |    * 1e4 + 0.5) AS BIGINT) AS msd_within_fp4,
-        |  b.bss AS bss_sq
-        |FROM w JOIN b USING (label) ORDER BY label""".stripMargin,
-    "emb_kmeans" -> {
-      // one Lloyd step: assign (argmin dist, ties to smallest cid) →
-      // per-(cid,dim) sums → centroid update with empty-cluster
-      // carry-forward. Long-format twin of the Spark array-HOF path:
-      // same fp6 ints, same exact integer distances, same single
-      // rounded divide.
-      def step(i: Int): String = {
-        val p = s"c${i - 1}"
-        s"""d$i AS (SELECT q.vec_id, c.cid, sum((q.v - c.c)*(q.v - c.c)) AS dist
-           |  FROM q JOIN $p c ON c.dim = q.dim GROUP BY 1, 2),
-           |a$i AS (SELECT vec_id, cid FROM (
-           |    SELECT vec_id, cid,
-           |      row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-           |    FROM d$i) WHERE rn = 1),
-           |s$i AS (SELECT a.cid, q.dim, CAST(sum(q.v) AS BIGINT) AS sv, count(*) AS n
-           |  FROM a$i a JOIN q ON q.vec_id = a.vec_id GROUP BY 1, 2),
-           |c$i AS (SELECT $p.cid, $p.dim,
-           |    coalesce(CAST(floor(CAST(s$i.sv AS DOUBLE)/CAST(s$i.n AS DOUBLE)+0.5) AS BIGINT), $p.c) AS c,
-           |    CAST(coalesce(s$i.n, 0) AS BIGINT) AS n
-           |  FROM $p LEFT JOIN s$i ON s$i.cid = $p.cid AND s$i.dim = $p.dim)""".stripMargin
-      }
-      s"""WITH q AS (
-        |  SELECT vec_id, CAST(i - 1 AS INT) AS dim,
-        |    CAST(floor(CAST(embedding[i] AS DOUBLE)*1e6+0.5) AS BIGINT) AS v
-        |  FROM embeddings CROSS JOIN range(1, 65) t(i)),
-        |seeds AS (
-        |  SELECT vec_id, CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid
-        |  FROM (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 8)),
-        |c0 AS (SELECT s.cid, q.dim, q.v AS c FROM seeds s JOIN q ON q.vec_id = s.vec_id),
-        |${step(1)},
-        |${step(2)}
-        |SELECT cid, dim, n AS n_assigned, c AS c_fp6 FROM c2 ORDER BY cid, dim""".stripMargin
-    }
-  )
+  /** the ivfpq oracle with kCand=20 retrieval, then exact cosine
+    * over ONLY the retrieved ids, re-ranked to k=5 */
+  private val annRerankSql: String =
+    s"""WITH $pqCtes,
+      |enc AS (SELECT id, sub, code FROM best WHERE rn = 1),
+      |icents AS (SELECT vec_id AS centroid_id, embedding AS icvec
+      |           FROM embeddings, cnt WHERE vec_id % greatest(1, (c + 15) // 16) = 0),
+      |ac AS (SELECT e.vec_id, c.centroid_id, ${cosSql("e.embedding", "c.icvec")} AS cosv
+      |       FROM embeddings e CROSS JOIN icents c),
+      |asg AS (SELECT vec_id AS id, centroid_id AS cell FROM (
+      |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn2
+      |         FROM ac) WHERE rn2 = 1),
+      |pc AS (SELECT q.vec_id AS query_id, c.centroid_id AS cell,
+      |         ${cosSql("q.embedding", "c.icvec")} AS cosv
+      |       FROM embeddings q CROSS JOIN icents c WHERE q.vec_id % 50 = 0),
+      |probes AS (SELECT query_id, cell FROM (
+      |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosv DESC, cell) AS rn3
+      |         FROM pc) WHERE rn3 <= 2),
+      |qsl AS (SELECT q.vec_id AS query_id, s.sub,
+      |          list_slice(q.embedding, s.sub*16 + 1, s.sub*16 + 16) AS qx
+      |        FROM embeddings q, subs s WHERE q.vec_id % 50 = 0),
+      |lut AS (SELECT q.query_id, q.sub, cb.code,
+      |          ${sqlFp(s"${dot16("qx", "qx")} - 2.0*${dot16("qx", "cvec")} + ${dot16("cvec", "cvec")}", 6)} AS pd6
+      |        FROM qsl q JOIN cb ON cb.sub = q.sub),
+      |cand AS (SELECT p.query_id, a.id FROM probes p JOIN asg a ON a.cell = p.cell
+      |         WHERE a.id <> p.query_id),
+      |sc AS (SELECT c.query_id, c.id, CAST(sum(l.pd6) AS BIGINT) AS approx_d2_fp6
+      |       FROM cand c JOIN enc e ON e.id = c.id
+      |       JOIN lut l ON l.query_id = c.query_id AND l.sub = e.sub AND l.code = e.code
+      |       GROUP BY 1, 2),
+      |topk AS (SELECT *, row_number() OVER (PARTITION BY query_id
+      |           ORDER BY approx_d2_fp6, id) AS rk FROM sc),
+      |rr AS (SELECT t.query_id, t.id,
+      |         ${sqlFp(cosSql("qv.embedding", "dv.embedding"), 6)} AS cos_fp6
+      |       FROM topk t JOIN embeddings dv ON dv.vec_id = t.id
+      |       JOIN embeddings qv ON qv.vec_id = t.query_id
+      |       WHERE t.rk <= 20)
+      |SELECT query_id, id, cos_fp6, CAST(rk AS BIGINT) AS rk FROM (
+      |  SELECT *, row_number() OVER (PARTITION BY query_id
+      |    ORDER BY cos_fp6 DESC, id) AS rk FROM rr) WHERE rk <= 5
+      |ORDER BY query_id, rk""".stripMargin
 }

@@ -2,12 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Shared helpers for the verified query set. Conventions that make
   * Spark results hash-identical to the DuckDB oracle:
-  *   - money/quantity aggregates in DECIMAL(18,2) (never float sums),
-  *   - float-derived metrics quantized via fp() to bigints,
+  *   - money/quantity and other float-derived metrics quantized
+  *     per-row via fp() to bigints (never float sums),
   *   - timestamps surfaced as epoch millis or DATE (never raw ns),
   *   - md5 as the only cross-engine hash,
   *   - every ranking has a deterministic tiebreak.
@@ -17,9 +16,6 @@ object QueryUtil {
 
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
-
-  val D2: DecimalType = DecimalType(18, 2)
-  def dec2(c: Column): Column = c.cast(D2)
 
   /** floor(x*10^scale + 0.5) as long — engine-exact fixed point. */
   def fp(x: Column, scale: Int): Column = graft.text.TextAnalysis.fp(x, scale)

@@ -39,17 +39,6 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Brute-force top-k by cosine against a single query vector
-    * (broadcast as a literal array — no join, one scan, TakeOrdered).
-    * Output: id, cos_fp6, ordered desc with id tiebreak.
-    */
-  def topK(df: DataFrame, idCol: String, vecCol: String, query: Seq[Float], k: Int): DataFrame = {
-    val q = typedLit(query)
-    df.select(col(idCol), TextAnalysis.fp(cosine(col(vecCol), q), 6).as("cos_fp6"))
-      .orderBy(col("cos_fp6").desc, col(idCol))
-      .limit(k)
-  }
-
   /** Deterministic pseudo-random hyperplane component for (plane p, dim
     * d): md5-derived value in [-0.5, 0.5). Portable to any engine with
     * md5 — used so LSH bucketing is reproducible and oracle-checkable.

@@ -112,13 +112,6 @@ object Snapshots {
       d.withColumn(c, graft.operators.TagOps.hstoreToMap(col(c))))
   }
 
-  /** Write a snapshot partitioned by a low-cardinality column (e.g.
-    * element type or region): partition pruning makes per-type scans
-    * O(selected partitions).
-    */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(path)
-
   /** Write a snapshot bucketed on the join key: co-located,
     * shuffle-free equi-joins between tables bucketed the same way
     * (the layout for repeated diff/join workloads at 100 TB).

@@ -25,6 +25,14 @@ class OperatorsSpec extends AnyFunSuite {
     assert(down == Map(10L -> -5L, 20L -> -6L, 30L -> -7L))
   }
 
+  test("SequentialIds keeps a caller column named like its helper column") {
+    val df = Seq((30L, "c"), (10L, "a"), (20L, "b")).toDF("k", "_mono")
+    val out = SequentialIds.assign(df, "k", "id", 100L)
+    assert(out.columns.toSeq == Seq("k", "_mono", "id"))
+    val got = out.select("k", "_mono", "id").as[(Long, String, Long)].collect().toSet
+    assert(got == Set((10L, "a", 100L), (20L, "b", 101L), (30L, "c", 102L)))
+  }
+
   test("TagOps hstore parse + column precedence merge") {
     val df = Seq(("""  "a"=>"1", "b"=>"2"  """, "colA")).toDF("hs", "a")
     val out = df.select(

@@ -88,9 +88,9 @@ class PipelineE2eSpec extends AnyFunSuite {
     assert(doomed.nonEmpty)
     doomed.toDF("osm_id").write.parquet(s"$tmp/custom_deletions.parquet")
 
-    val found = ChangegenPipeline.discoverDeletionTables(tmp, "_deletions")
+    val found = ChangegenPipeline.discoverTables(tmp, "_deletions")
     assert(found.map(new java.io.File(_).getName) == Seq("custom_deletions.parquet"))
-    assert(ChangegenPipeline.discoverDeletionTables(tmp, "_nope").isEmpty)
+    assert(ChangegenPipeline.discoverTables(tmp, "_nope").isEmpty)
 
     val f = ChangegenPipeline.build(spark, tmp, maxNodes = 7,
       idOffset = Some(1000000L), deletionTables = found)
@@ -363,7 +363,7 @@ class PipelineE2eSpec extends AnyFunSuite {
     // SCHEMA-QUALIFIED (Derby's default schema is APP), so the
     // read-back targets the discovered table rather than resolving
     // the bare name through search_path on a multi-schema database
-    assert(ChangegenPipeline.discoverDeletionTables(url, "_deletions")
+    assert(ChangegenPipeline.discoverTables(url, "_deletions")
       == Seq("app.custom_deletions"))
 
     // the FULL CLI path (run() is main() minus session lifecycle),

@@ -48,4 +48,12 @@ class VerifyContractSpec extends AnyFunSuite {
       s"queries vs oracles — oracle-less: ${SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet}; " +
         s"orphan oracles: ${SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet}")
   }
+
+  test("the query index refuses a name registered twice, naming it") {
+    val q = graft.queries.Query("dup_name", (s, dir) => s.range(1).toDF(), "SELECT 1")
+    val e = intercept[IllegalArgumentException] {
+      graft.queries.Query.index(Seq(q, q.copy(oracle = "SELECT 2")))
+    }
+    assert(e.getMessage.contains("dup_name"), e.getMessage)
+  }
 }
