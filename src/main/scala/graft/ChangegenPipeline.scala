@@ -141,6 +141,22 @@ object ChangegenPipeline {
     wkbClass(sample(0).get(0))
   }
 
+  /** Feature tags (reference `_generate_tags_from_feature`,
+    * generator.py:169-205): every table column except the geometry and
+    * the hstore column itself, merged with the `hstoreCol` map, columns
+    * winning on key conflicts. `osm_id` is a tag on create and left out
+    * on modify, as the reference's modify branch filters it. */
+  private def featureTags(df: DataFrame, hstoreCol: Option[String],
+                          withOsmId: Boolean): org.apache.spark.sql.Column = {
+    val excluded = Set("wkb_geometry") ++ hstoreCol.map(_.toLowerCase) ++
+      (if (withOsmId) None else Some("osm_id"))
+    val tagCols = df.columns.map(_.toLowerCase).filterNot(excluded.contains).toSeq.sorted
+    val colTags = graft.operators.TagOps.tagsFromColumns(df, tagCols)
+    hstoreCol
+      .map(h => graft.operators.TagOps.mergeTags(colTags, graft.operators.TagOps.hstoreToMap(col(h))))
+      .getOrElse(colTags)
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.get()
     try run(args, spark) finally spark.stop()
@@ -239,11 +255,7 @@ object ChangegenPipeline {
     // wkb_geometry through OGR): first column = feature id, a
     // wkb_geometry column = the WKB/hex payload
     def geomFrame(name: String, groupCol: String): DataFrame = {
-      val raw =
-        if (sfDir.startsWith("jdbc:"))
-          graft.sources.Snapshots.postgisTable(spark, sfDir, name,
-            decodeGeom = false, hstoreCols = Nil)
-        else spark.read.parquet(s"$sfDir/$name.parquet")
+      val raw = featureTable(spark, sfDir, name)
       raw.select(col(raw.columns.head).cast("long").as(groupCol),
         col("wkb_geometry").as("wkb"))
     }
@@ -305,33 +317,21 @@ object ChangegenPipeline {
       (n, df, tableGeomClass(df, n))
     }
 
-    // per-feature id of a discovered table: resolved BY NAME (osm_id —
-    // the reference's id field), falling back to the first column only
-    // when no osm_id exists. Non-numeric or null id values RAISE at
-    // execution instead of casting to null — a null group id would
-    // silently collapse every such feature into one way (imposm
-    // column order over JDBC/parquet is not user-visible, so "first
-    // column" alone is not a safe id heuristic).
-    def featId(df: DataFrame, name: String): org.apache.spark.sql.Column = {
+    // injective feature key of the i-th discovered table: the table
+    // ordinal in the high bits over the per-feature id, resolved BY
+    // NAME (osm_id — the reference's id field), falling back to the
+    // first column only when no osm_id exists. Non-numeric or null id
+    // values RAISE at execution instead of casting to null — a null
+    // group id would silently collapse every such feature into one way
+    // (imposm column order over JDBC/parquet is not user-visible, so
+    // "first column" alone is not a safe id heuristic).
+    def featKey(df: DataFrame, name: String, i: Int): org.apache.spark.sql.Column = {
       val idc = df.columns.find(_.equalsIgnoreCase("osm_id")).getOrElse(df.columns.head)
       val c = col(idc)
-      when(c.isNull || c.cast("long").isNull,
+      lit((i + 1).toLong << 40) + when(c.isNull || c.cast("long").isNull,
         raise_error(concat(lit(s"feature table $name: id column '$idc' has a null/non-numeric value: "),
           coalesce(c.cast("string"), lit("NULL")))))
         .otherwise(c.cast("long"))
-    }
-    // create-mode tags (reference _generate_tags_from_feature,
-    // generator.py:169-205): every table column EXCEPT the geometry
-    // and the hstore column itself — osm_id INCLUDED (only the modify
-    // branch filters it out) — merged with the hstore map, columns
-    // winning on key conflicts
-    def featureTags(df: DataFrame): org.apache.spark.sql.Column = {
-      val excluded = Set("wkb_geometry") ++ hstoreCol.map(_.toLowerCase)
-      val tagCols = df.columns.map(_.toLowerCase).filterNot(excluded.contains).toSeq.sorted
-      val colTags = graft.operators.TagOps.tagsFromColumns(df, tagCols)
-      hstoreCol
-        .map(h => graft.operators.TagOps.mergeTags(colTags, graft.operators.TagOps.hstoreToMap(col(h))))
-        .getOrElse(colTags)
     }
     val f =
       if (modifyMeta) buildModifyOnly(spark, sfDir, osmSrc, discoveredFrames, hstoreCol)
@@ -345,7 +345,7 @@ object ChangegenPipeline {
           val fromSuffix = discoveredFrames.filter(_._3 == cls)
           val all = explicitTbl.map(geomFrame(_, groupCol)).toSeq ++
             fromSuffix.zipWithIndex.map { case ((name, df, _), i) =>
-              df.select((lit((i + 1).toLong << 40) + featId(df, name)).as(groupCol),
+              df.select(featKey(df, name, i).as(groupCol),
                 col("wkb_geometry").as("wkb"))
             }
           all.reduceOption(_ unionByName _)
@@ -357,8 +357,8 @@ object ChangegenPipeline {
         val pointWkb =
           if (pointFrames.isEmpty) None
           else Some(pointFrames.zipWithIndex.map { case ((name, df, _), i) =>
-            df.select((lit((i + 1).toLong << 40) + featId(df, name)).as("pgrp"),
-              featureTags(df).as("ptags"),
+            df.select(featKey(df, name, i).as("pgrp"),
+              featureTags(df, hstoreCol, withOsmId = true).as("ptags"),
               col("wkb_geometry").as("wkb"))
           }.reduce(_ unionByName _))
         val existingWkb =
@@ -445,12 +445,7 @@ object ChangegenPipeline {
               lit("ref"), concat(lit("W"), col("eway").cast("string")))).as("xml")))
       } else {
         val perTable = features.map { case (name, df, cls) =>
-          val excluded = Set("osm_id", "wkb_geometry") ++ hstoreCol.map(_.toLowerCase)
-          val tagCols = df.columns.map(_.toLowerCase).filterNot(excluded.contains).toSeq.sorted
-          val colTags = graft.operators.TagOps.tagsFromColumns(df, tagCols)
-          val tags = hstoreCol
-            .map(h => graft.operators.TagOps.mergeTags(colTags, graft.operators.TagOps.hstoreToMap(col(h))))
-            .getOrElse(colTags)
+          val tags = featureTags(df, hstoreCol, withOsmId = false)
           if (cls == 1) {
             // point feature: v2 node at the feature's own coordinates
             val xml = df

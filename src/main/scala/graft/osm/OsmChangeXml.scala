@@ -189,83 +189,6 @@ object OsmChangeXml {
     graft.sources.ExportManifest.verify(spark, dir)
       .map(e => new java.io.File(dir, e.file).getAbsolutePath)
 
-  /** Object-store-safe sharded export: the committer path.
-    * [[writeSharded]] needs a POSIX filesystem visible to executors
-    * (it renames temp files itself); THIS variant goes through
-    * Spark's FileFormatWriter + output committer, which is the
-    * correct mechanism on S3/GCS/ABFS — task attempts write to
-    * attempt paths and commit atomically, so speculative retries
-    * can't tear a document.
-    *
-    * Every structural line (XML declaration, osmChange open/close,
-    * section open/close) is emitted as a ROW with a sort rank, so one
-    * `df.write.partitionBy("shard").text(...)` produces a complete,
-    * well-formed OsmChange document per shard directory
-    * (`<outDir>/shard=<i>/part-*.txt[.gz]`). Rows are repartitioned
-    * by shard and sorted within partitions by (shard, rank) — the
-    * writer's required ordering (partition columns) is already
-    * satisfied by that sort's prefix, so no re-sort happens and the
-    * in-file line order is the sort order.
-    *
-    * A `manifest.json` is written last (through the same Hadoop
-    * FileSystem) listing each shard's files and byte sizes —
-    * consumers read the manifest, not a directory listing, so a
-    * half-written output is never mistaken for complete.
-    *
-    * `df` must have (shard int, section string in create/modify/
-    * delete, xml string).
-    */
-  def writeShardedText(
-      spark: org.apache.spark.sql.SparkSession,
-      outDir: String,
-      df: DataFrame,
-      shards: Int,
-      gzip: Boolean = false): Unit = {
-    val sectionRank = when(col("section") === "create", 0)
-      .when(col("section") === "modify", 1).otherwise(2)
-    val typeRank = when(col("xml").startsWith("<node"), 0)
-      .when(col("xml").startsWith("<way"), 1).otherwise(2)
-    def row(shard: Column, sr: Column, pos: Int, tr: Column, value: Column) =
-      Seq(shard.as("shard"), sr.as("_sr"), lit(pos).as("_pos"), tr.as("_tr"), value.as("value"))
-    val elems = df.select(row(col("shard"), sectionRank, 1, typeRank, col("xml")): _*)
-    val sections = df.select("shard", "section").distinct()
-    val opens = sections.select(row(col("shard"), sectionRank, 0, lit(-1),
-      concat(lit("<"), col("section"), lit(">"))): _*)
-    val closes = sections.select(row(col("shard"), sectionRank, 2, lit(-1),
-      concat(lit("</"), col("section"), lit(">"))): _*)
-    val shardIds = df.select("shard").distinct()
-    val header = shardIds.select(row(col("shard"), lit(-1), 0, lit(-1),
-        lit("<?xml version='1.0' encoding='UTF-8'?>")): _*)
-      .unionByName(shardIds.select(row(col("shard"), lit(-1), 1, lit(-1),
-        lit("<osmChange version=\"0.6\" generator=\"graft\">")): _*))
-    val footer = shardIds.select(row(col("shard"), lit(99), 0, lit(-1), lit("</osmChange>")): _*)
-    val writer = header.unionByName(opens).unionByName(elems)
-      .unionByName(closes).unionByName(footer)
-      .repartition(shards, col("shard"))
-      .sortWithinPartitions("shard", "_sr", "_pos", "_tr", "value")
-      .select("shard", "value")
-      .write.mode("overwrite").partitionBy("shard")
-    (if (gzip) writer.option("compression", "gzip") else writer).text(outDir)
-
-    // manifest written AFTER the committed data, via the same FS
-    // abstraction (works on object stores) — presence of the manifest
-    // marks the export complete
-    val hPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = fs.listStatus(hPath).filter(_.getPath.getName.startsWith("shard="))
-      .sortBy(_.getPath.getName).flatMap { d =>
-        fs.listStatus(d.getPath).filter(_.getPath.getName.startsWith("part-")).map { f =>
-          val shard = d.getPath.getName.stripPrefix("shard=")
-          s"""{"shard":$shard,"file":"${d.getPath.getName}/${f.getPath.getName}","bytes":${f.getLen}}"""
-        }
-      }
-    val os = fs.create(new org.apache.hadoop.fs.Path(hPath, "manifest.json"), true)
-    try os.write(
-      s"""{"generator":"graft","format":"osmChange/0.6","gzip":$gzip,"shards":[${entries.mkString(",")}]}"""
-        .getBytes(StandardCharsets.UTF_8))
-    finally os.close()
-  }
-
   /** Write a complete OsmChange document: each section DataFrame must
     * have a single string column of rendered element XML. Renders
     * distributed to text parts, then stream-concatenates into one

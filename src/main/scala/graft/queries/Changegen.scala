@@ -35,6 +35,10 @@ object Changegen {
     conv(substring(md5(concat(lit(tag), k.cast("string"))), 1, 6), 16, 10)
       .cast("double") / lit(16777216.0) * lit(100.0)
 
+  /** SQL twin of [[rnd]] over the SQL key expression `k`. */
+  private def rndSql(tag: String, k: String): String =
+    s"(${md5Fold(s"'$tag' || CAST($k AS VARCHAR)", 6)} / 16777216.0 * 100.0)"
+
   /** Ways derived from lineitem: way id = l_orderkey, ordered node list
     * = l_partkey by l_linenumber (via the wayNodeMap operator). */
   private def ways(s: SparkSession, dir: String): DataFrame =
@@ -53,9 +57,28 @@ object Changegen {
       .filter(size(col("line")) >= 2)
       .select("nk", "line")
 
+  /** Customer (c_custkey, cx, cy) and supplier (s_suppkey, sx, sy)
+    * lattice points. */
+  private def latticePts(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    (t(s, dir, "customer").select(col("c_custkey"), px(col("c_custkey")).as("cx"), py(col("c_custkey")).as("cy")),
+      t(s, dir, "supplier").select(col("s_suppkey"), px(col("s_suppkey")).as("sx"), py(col("s_suppkey")).as("sy")))
+
   private def custPoints(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "customer")
       .select(col("c_custkey"), (col("c_nationkey") % 5).as("nk"), px(col("c_custkey")).as("cpx"), py(col("c_custkey")).as("cpy"))
+
+  /** Per-customer geometry payloads for the WKB decoder queries:
+    * `enc(c_custkey)` gives (binary WKB, WKB whose bytes ship as
+    * uppercase hex text), synthesized map-side. */
+  private def custWkb(s: SparkSession, dir: String)(
+      enc: Long => (Array[Byte], Array[Byte])): DataFrame = {
+    import s.implicits._
+    t(s, dir, "customer").select(col("c_custkey")).as[Long]
+      .mapPartitions(_.map { k =>
+        val (wkb, hex) = enc(k)
+        (k, wkb, hex.map("%02X".format(_)).mkString)
+      }).toDF("c_custkey", "wkb", "hex")
+  }
 
   /** Compact "blob" linestrings for the line-line DWithin: each group
     * gets an md5-scattered base point and vertices jittered within a
@@ -197,17 +220,10 @@ object Changegen {
         |FROM nds ORDER BY rel_id, member_role, member_ref""".stripMargin),
     // 21 — ST_DWithin as a grid-bucketed distance join (no cross join)
     Query("cg_dwithin_join", (s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_custkey"), px(col("c_custkey")).as("cx"), py(col("c_custkey")).as("cy"))
-      val sup = t(s, dir, "supplier").select(col("s_suppkey"), px(col("s_suppkey")).as("sx"), py(col("s_suppkey")).as("sy"))
+      val (c, sup) = latticePts(s, dir)
       DWithinJoin.pointPoint(c, "c_custkey", "cx", "cy", sup, "s_suppkey", "sx", "sy", 1.5)
         .select(col("c_custkey"), col("s_suppkey"), fp(col("dist"), 6).as("dist_fp6"))
-    }, oracle =
-      s"""SELECT c_custkey, s_suppkey,
-        |  ${sqlFp("sqrt((cx-sx)*(cx-sx)+(cy-sy)*(cy-sy))", 6)} AS dist_fp6
-        |FROM (SELECT c_custkey, (c_custkey*13 % 1000)/10.0 AS cx, (c_custkey*29 % 1000)/10.0 AS cy FROM customer),
-        |     (SELECT s_suppkey, (s_suppkey*13 % 1000)/10.0 AS sx, (s_suppkey*29 % 1000)/10.0 AS sy FROM supplier)
-        |WHERE sqrt((cx-sx)*(cx-sx)+(cy-sy)*(cy-sy)) <= 1.5
-        |ORDER BY c_custkey, s_suppkey""".stripMargin),
+    }, oracle = latticeDWithinSql),
     // 21e — the SAME ST_DWithin join written NAIVELY as a declarative
     // θ-join on graft_dwithin: without GridDWithinJoinRule this plans
     // a BroadcastNestedLoopJoin; the injected optimizer rule rewrites
@@ -215,20 +231,11 @@ object Changegen {
     // planner behavior for ST_DWithin, re-created in Catalyst). Same
     // oracle as cg_dwithin_join — the rewrite must be value-invisible.
     Query("cg_dwithin_rule", (s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_custkey"), px(col("c_custkey")).as("cx"), py(col("c_custkey")).as("cy"))
-      val sup = t(s, dir, "supplier").select(col("s_suppkey"), px(col("s_suppkey")).as("sx"), py(col("s_suppkey")).as("sy"))
+      val (c, sup) = latticePts(s, dir)
       c.join(sup, expr("graft_dwithin(cx, cy, sx, sy, 1.5D)"))
         .select(col("c_custkey"), col("s_suppkey"),
           fp(graft.spatial.Geo.dist(col("cx"), col("cy"), col("sx"), col("sy")), 6).as("dist_fp6"))
-    }, oracle =
-      // identical semantics to cg_dwithin_join: the rule rewrite must be
-      // value-invisible, so the oracle is the same SQL
-      s"""SELECT c_custkey, s_suppkey,
-        |  ${sqlFp("sqrt((cx-sx)*(cx-sx)+(cy-sy)*(cy-sy))", 6)} AS dist_fp6
-        |FROM (SELECT c_custkey, (c_custkey*13 % 1000)/10.0 AS cx, (c_custkey*29 % 1000)/10.0 AS cy FROM customer),
-        |     (SELECT s_suppkey, (s_suppkey*13 % 1000)/10.0 AS sx, (s_suppkey*29 % 1000)/10.0 AS sy FROM supplier)
-        |WHERE sqrt((cx-sx)*(cx-sx)+(cy-sy)*(cy-sy)) <= 1.5
-        |ORDER BY c_custkey, s_suppkey""".stripMargin),
+    }, oracle = latticeDWithinSql),
     // 21g — the ADAPTIVE-SALTING path under oracle: a "city" skew
     // (every 3rd key collapses into a 2×2 box at (50,50)) drives
     // per-cell occupancy past the target at EVERY gate SF, so the
@@ -293,18 +300,13 @@ object Changegen {
         .filter(col("c_custkey") < col("other"))
         .select(col("c_custkey"), col("other"), fp(col("dist"), 6).as("dist_fp6"))
     }, oracle = {
-      def rndSql(tag: String): String =
-        s"""(list_reduce(list_prepend(CAST(0 AS BIGINT),
-           | list_transform(range(1, 7),
-           |  i -> CAST(strpos('0123456789abcdef', substr(md5('$tag' || CAST(c_custkey AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-           | (a, v) -> a*16 + v) / 16777216.0 * 100.0)""".stripMargin.replace("\n", " ")
       // candidate generation is 2-D banded (cell width = the 4.0
       // radius; any pair within radius differs by <=1 cell per axis,
       // width-4 cells make a 2-cell gap imply distance > 4), then the
       // EXACT distance filter decides — same arithmetic as the raw
       // all-pairs form, linear candidate mass instead of |pts|^2 (the
       // all-pairs scan went quadratic in DuckDB at the 10x sweep)
-      s"""WITH pts AS (SELECT c_custkey, ${rndSql("sx")} AS x, ${rndSql("sy")} AS y FROM customer),
+      s"""WITH pts AS (SELECT c_custkey, ${rndSql("sx", "c_custkey")} AS x, ${rndSql("sy", "c_custkey")} AS y FROM customer),
         |pts2 AS (SELECT c_custkey, x, y FROM pts
         |         UNION ALL SELECT c_custkey + 10000000, x, y FROM pts WHERE c_custkey % 50 = 0),
         |cells AS (SELECT *, CAST(floor(x/4.0) AS INT) AS cbx, CAST(floor(y/4.0) AS INT) AS cby FROM pts2),
@@ -360,11 +362,6 @@ object Changegen {
         .groupBy("jx6", "jy6")
         .agg(count(lit(1)).as("n_feats"))
     }, oracle = {
-      def rndE(tag: String, expr: String): String =
-        s"""(list_reduce(list_prepend(CAST(0 AS BIGINT),
-           | list_transform(range(1, 7),
-           |  i -> CAST(strpos('0123456789abcdef', substr(md5('$tag' || CAST($expr AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-           | (a, v) -> a*16 + v) / 16777216.0 * 100.0)""".stripMargin.replace("\n", " ")
       // the graft_line_closest walk in SQL: per ordered pair, every
       // segment-pair candidate (crossing point with d2=0, else the
       // four endpoint/projection candidates realized ON the left
@@ -380,8 +377,8 @@ object Changegen {
         |    sqrt(greatest(8, count(*) // 2000) / 8.0) AS s FROM customer),
         |lsp0 AS (SELECT c_custkey % mm.m AS lid,
         |    row_number() OVER (PARTITION BY c_custkey % mm.m ORDER BY c_custkey) AS seq,
-        |    ${rndE("lbx", "c_custkey % mm.m")} * 0.3 * mm.s + (c_custkey*7 % 40)/10.0 AS x,
-        |    ${rndE("lby", "c_custkey % mm.m")} * 0.3 * mm.s + (c_custkey*23 % 40)/10.0 AS y
+        |    ${rndSql("lbx", "c_custkey % mm.m")} * 0.3 * mm.s + (c_custkey*7 % 40)/10.0 AS x,
+        |    ${rndSql("lby", "c_custkey % mm.m")} * 0.3 * mm.s + (c_custkey*23 % 40)/10.0 AS y
         |  FROM customer CROSS JOIN mm),
         |lln AS (SELECT lid FROM lsp0 GROUP BY lid HAVING count(*) >= 2),
         |sp AS (SELECT lid, seq, x, y FROM lsp0 JOIN lln USING (lid)
@@ -482,11 +479,6 @@ object Changegen {
         .select(col("c_custkey"), col("line_id"),
           fp(col("dist"), 6).as("dist_fp6"), fp(col("cp_x"), 6).as("cpx_fp6"), fp(col("cp_y"), 6).as("cpy_fp6"))
     }, oracle = {
-      def rndE(tag: String, expr: String): String =
-        s"""(list_reduce(list_prepend(CAST(0 AS BIGINT),
-           | list_transform(range(1, 7),
-           |  i -> CAST(strpos('0123456789abcdef', substr(md5('$tag' || CAST($expr AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-           | (a, v) -> a*16 + v) / 16777216.0 * 100.0)""".stripMargin.replace("\n", " ")
       // mm mirrors the Spark side's adaptive modulus + center stretch;
       // the bbox join replaces the cust × seg cross join EXACTLY (a
       // point farther than 1.0 from a line's padded bbox can never
@@ -495,8 +487,8 @@ object Changegen {
         |    3.0 * sqrt(greatest(5, count(*) // 2000) / 5.0) AS s FROM supplier),
         |sp AS (SELECT s_suppkey % mm.m AS lid,
         |  row_number() OVER (PARTITION BY s_suppkey % mm.m ORDER BY s_suppkey) AS seq,
-        |  ${rndE("dlx", "s_suppkey % mm.m")} * 0.3 * mm.s + (s_suppkey*7 % 40)/10.0 AS x,
-        |  ${rndE("dly", "s_suppkey % mm.m")} * 0.3 * mm.s + (s_suppkey*23 % 40)/10.0 AS y
+        |  ${rndSql("dlx", "s_suppkey % mm.m")} * 0.3 * mm.s + (s_suppkey*7 % 40)/10.0 AS x,
+        |  ${rndSql("dly", "s_suppkey % mm.m")} * 0.3 * mm.s + (s_suppkey*23 % 40)/10.0 AS y
         |  FROM supplier CROSS JOIN mm),
         |ln AS (SELECT lid FROM sp GROUP BY lid HAVING count(*) >= 2),
         |seg AS (SELECT a.lid, CAST(a.seq - 1 AS INT) AS seg0, a.x AS ax, a.y AS ay, b.x AS bx, b.y AS by2
@@ -549,27 +541,22 @@ object Changegen {
         .unionByName(l.filter(col("lid") === 0).select(lit(-1L).as("rid"), col("line")))
       DWithinJoin.lineLine(l, "lid", "line", r, "rid", "line", 3.0, excludeEqual = true)
         .select(col("lid"), col("rid"), fp(col("dist"), 6).as("dist_fp6"))
-    }, oracle = {
-      def rndE(tag: String, expr: String): String =
-        s"""(list_reduce(list_prepend(CAST(0 AS BIGINT),
-           | list_transform(range(1, 7),
-           |  i -> CAST(strpos('0123456789abcdef', substr(md5('$tag' || CAST($expr AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-           | (a, v) -> a*16 + v) / 16777216.0 * 100.0)""".stripMargin.replace("\n", " ")
+    }, oracle =
       s"""WITH ml AS (SELECT greatest(4, count(*) // 2000) AS m FROM supplier),
         |mr AS (SELECT greatest(15, count(*) // 2000) AS m FROM customer),
         |sc AS (SELECT sqrt((ml.m + mr.m) / 19.0) AS s FROM ml CROSS JOIN mr),
         |lsp AS (SELECT s_suppkey % ml.m AS lid,
         |    row_number() OVER (PARTITION BY s_suppkey % ml.m ORDER BY s_suppkey) AS seq,
-        |    ${rndE("lbx", "s_suppkey % ml.m")} * 0.3 * sc.s + (s_suppkey*7 % 40)/10.0 AS x,
-        |    ${rndE("lby", "s_suppkey % ml.m")} * 0.3 * sc.s + (s_suppkey*23 % 40)/10.0 AS y
+        |    ${rndSql("lbx", "s_suppkey % ml.m")} * 0.3 * sc.s + (s_suppkey*7 % 40)/10.0 AS x,
+        |    ${rndSql("lby", "s_suppkey % ml.m")} * 0.3 * sc.s + (s_suppkey*23 % 40)/10.0 AS y
         |  FROM supplier CROSS JOIN ml CROSS JOIN sc),
         |lln AS (SELECT lid FROM lsp GROUP BY lid HAVING count(*) >= 2),
         |aseg AS (SELECT a.lid, a.x AS p1x, a.y AS p1y, b.x AS p2x, b.y AS p2y
         |         FROM lsp a JOIN lsp b ON a.lid = b.lid AND b.seq = a.seq + 1 JOIN lln ON lln.lid = a.lid),
         |rsp AS (SELECT c_custkey % mr.m AS rid,
         |    row_number() OVER (PARTITION BY c_custkey % mr.m ORDER BY c_custkey) AS seq,
-        |    ${rndE("rbx", "c_custkey % mr.m")} * 0.3 * sc.s + (c_custkey*11 % 40)/10.0 AS x,
-        |    ${rndE("rby", "c_custkey % mr.m")} * 0.3 * sc.s + (c_custkey*31 % 40)/10.0 AS y
+        |    ${rndSql("rbx", "c_custkey % mr.m")} * 0.3 * sc.s + (c_custkey*11 % 40)/10.0 AS x,
+        |    ${rndSql("rby", "c_custkey % mr.m")} * 0.3 * sc.s + (c_custkey*31 % 40)/10.0 AS y
         |  FROM customer CROSS JOIN mr CROSS JOIN sc),
         |rln AS (SELECT rid FROM rsp GROUP BY rid HAVING count(*) >= 2),
         |bseg AS (SELECT a.rid, a.x AS q1x, a.y AS q1y, b.x AS q2x, b.y AS q2y
@@ -619,8 +606,7 @@ object Changegen {
         |md AS (SELECT lid, rid, min(d2) AS d2 FROM pd GROUP BY lid, rid)
         |SELECT CAST(md.lid AS BIGINT) AS lid, CAST(md.rid AS BIGINT) AS rid, ${sqlFp("sqrt(d2)", 6)} AS dist_fp6
         |FROM md LEFT JOIN eqpairs e ON e.lid = md.lid AND e.rid = md.rid
-        |WHERE e.lid IS NULL AND sqrt(d2) <= 3.0 ORDER BY md.lid, md.rid""".stripMargin
-    }),
+        |WHERE e.lid IS NULL AND sqrt(d2) <= 3.0 ORDER BY md.lid, md.rid""".stripMargin),
     // 22 — ST_ClosestPoint: segment-wise projection over coord arrays
     Query("cg_closest_point", (s, dir) => {
       custPoints(s, dir)
@@ -854,17 +840,13 @@ object Changegen {
     // the encode→decode roundtrip exact across byte orders and both
     // input kinds (binary, hex string).
     Query("cg_wkb_decode", (s, dir) => {
-      import s.implicits._
-      val payloads = t(s, dir, "customer").select(col("c_custkey")).as[Long]
-        .mapPartitions(_.map { k =>
+      val payloads = custWkb(s, dir) { k =>
           val line = Array.tabulate(3)(i =>
             ((k * 7919 % 100000 + i).toDouble, (k * 104729 % 100000 - i).toDouble))
           val pt = Array(((k * 13 % 7777).toDouble, (k * 17 % 8888).toDouble))
-          val wkb = graft.functions.WkbGeomExpr.encode(2, line, srid = 4326)
-          val hex = graft.functions.WkbGeomExpr.encode(1, pt, bigEndian = true)
-            .map("%02X".format(_)).mkString
-          (k, wkb, hex)
-        }).toDF("c_custkey", "wkb", "hex")
+          (graft.functions.WkbGeomExpr.encode(2, line, srid = 4326),
+            graft.functions.WkbGeomExpr.encode(1, pt, bigEndian = true))
+        }
       payloads.select(col("c_custkey"),
           posexplode(call_function("graft_geom_from_wkb", col("wkb"))).as(Seq("pos", "v")),
           call_function("graft_geom_from_wkb", col("hex"))(0).as("p"))
@@ -895,18 +877,14 @@ object Changegen {
     // at the first interior vertex — and the oracle recomputes all of
     // it closed-form from c_custkey.
     Query("cg_wkb_rings", (s, dir) => {
-      import s.implicits._
-      val payloads = t(s, dir, "customer").select(col("c_custkey")).as[Long]
-        .mapPartitions(_.map { k =>
+      val payloads = custWkb(s, dir) { k =>
           val a = (k * 7919 % 100000).toDouble
           val b = (k * 104729 % 100000).toDouble
           val outer = Array((a, b), (a + 10, b), (a + 10, b + 10), (a, b + 10), (a, b))
           val inner = Array((a + 2, b + 2), (a + 4, b + 2), (a + 2, b + 4), (a + 2, b + 2))
-          val wkb = graft.functions.WkbGeomExpr.encodePolygon(Array(outer, inner), srid = 4326)
-          val hex = graft.functions.WkbGeomExpr.encodePolygon(Array(outer, inner), bigEndian = true)
-            .map("%02X".format(_)).mkString
-          (k, wkb, hex)
-        }).toDF("c_custkey", "wkb", "hex")
+          (graft.functions.WkbGeomExpr.encodePolygon(Array(outer, inner), srid = 4326),
+            graft.functions.WkbGeomExpr.encodePolygon(Array(outer, inner), bigEndian = true))
+        }
       payloads.select(col("c_custkey"),
           posexplode(call_function("graft_geom_rings", col("wkb"))).as(Seq("pos", "v")),
           call_function("graft_geom_rings", col("hex"))(5).as("h"))
@@ -946,23 +924,19 @@ object Changegen {
     // in storage order, the hex decode is probed at part 1's second
     // vertex — and the oracle recomputes all of it closed-form.
     Query("cg_wkb_multi", (s, dir) => {
-      import s.implicits._
-      val payloads = t(s, dir, "customer").select(col("c_custkey")).as[Long]
-        .mapPartitions(_.map { k =>
+      val payloads = custWkb(s, dir) { k =>
           val a = (k * 7919 % 100000).toDouble
           val b = (k * 104729 % 100000).toDouble
           val outer = Array((a, b), (a + 10, b), (a + 10, b + 10), (a, b + 10), (a, b))
           val hole = Array((a + 2, b + 2), (a + 4, b + 2), (a + 2, b + 4), (a + 2, b + 2))
           val tri = Array((a + 20, b), (a + 24, b), (a + 20, b + 4), (a + 20, b))
-          val wkb = graft.functions.WkbGeomExpr.encodeMulti(6,
-            Array(Array(outer, hole), Array(tri)), srid = 4326)
           val line0 = Array((a, b + 1), (a + 1, b + 2), (a + 2, b + 3))
           val line1 = Array((a + 5, b), (a + 6, b + 1))
-          val hex = graft.functions.WkbGeomExpr.encodeMulti(5,
-            Array(Array(line0), Array(line1)), bigEndian = true)
-            .map("%02X".format(_)).mkString
-          (k, wkb, hex)
-        }).toDF("c_custkey", "wkb", "hex")
+          (graft.functions.WkbGeomExpr.encodeMulti(6,
+            Array(Array(outer, hole), Array(tri)), srid = 4326),
+            graft.functions.WkbGeomExpr.encodeMulti(5,
+              Array(Array(line0), Array(line1)), bigEndian = true))
+        }
       payloads.select(col("c_custkey"),
           posexplode(call_function("graft_geom_parts", col("wkb"))).as(Seq("pos", "v")),
           call_function("graft_geom_parts", col("hex"))(4).as("h"))
@@ -1107,6 +1081,15 @@ object Changegen {
 
   // ---- oracle SQL ----------------------------------------------------
 
+  /** [[latticePts]] pairs within 1.5, with fp6 distance. */
+  private def latticeDWithinSql: String =
+    s"""SELECT c_custkey, s_suppkey,
+      |  ${sqlFp("sqrt((cx-sx)*(cx-sx)+(cy-sy)*(cy-sy))", 6)} AS dist_fp6
+      |FROM (SELECT c_custkey, (c_custkey*13 % 1000)/10.0 AS cx, (c_custkey*29 % 1000)/10.0 AS cy FROM customer),
+      |     (SELECT s_suppkey, (s_suppkey*13 % 1000)/10.0 AS sx, (s_suppkey*29 % 1000)/10.0 AS sy FROM supplier)
+      |WHERE sqrt((cx-sx)*(cx-sx)+(cy-sy)*(cy-sy)) <= 1.5
+      |ORDER BY c_custkey, s_suppkey""".stripMargin
+
   /** Shared CTE fragments (DuckDB): derived ways / lines / points. */
   private val ndsCte =
     """nds AS (SELECT l_orderkey AS way,
@@ -1136,8 +1119,4 @@ object Changegen {
       |    px2, py2
       |  FROM proj),
       |best AS (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY c_custkey ORDER BY d2, seg0) AS rn FROM cp) WHERE rn = 1)""".stripMargin
-
-  /** floor(x*10^s+0.5)::BIGINT — matches QueryUtil.fp. */
-  private def sqlFp(e: String, scale: Int): String =
-    s"CAST(floor(($e)*1e$scale+0.5) AS BIGINT)"
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.dedup.Dedup
+import graft.multimodal.Multimodal
 import graft.similarity.Similarity
 import graft.text.TextAnalysis
 import QueryUtil._
@@ -37,6 +38,58 @@ object Pipeline {
       tsMs(e).as("ms"), fp(col("value"), 4).as("v4"))
   }
 
+  /** Events with 6h-gap sessions: `new_sess` flags a session's first
+    * event, `session_idx` counts them per user in (ms, event_id)
+    * order. */
+  private def sessionized(e: DataFrame): DataFrame = {
+    val byUser = Window.partitionBy("user_id").orderBy("ms", "event_id")
+    e.withColumn("new_sess",
+        when(lag("ms", 1).over(byUser).isNull || col("ms") - lag("ms", 1).over(byUser) > SessionGapMs, 1L)
+          .otherwise(0L))
+      .withColumn("session_idx", sum("new_sess").over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
+  /** SQL twin of [[sessionized]] over a CTE `e(event_id, user_id, ms,
+    * …)`: `flagged`, then `name` with `session_idx`. */
+  private def sessionCtes(name: String): String =
+    s"""flagged AS (SELECT *, CASE WHEN lag(ms) OVER w IS NULL OR ms - lag(ms) OVER w > $SessionGapMs
+       |    THEN 1 ELSE 0 END AS new_sess
+       |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
+       |$name AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ms, event_id
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM flagged)""".stripMargin
+
+  /** One synthetic binary `payload` per document, `synth(doc_id)`
+    * built map-side: the in-query test data the multimodal decoders
+    * parse back. */
+  private def docPayloads(s: SparkSession, dir: String)(synth: Long => Array[Byte]): DataFrame = {
+    import s.implicits._
+    t(s, dir, "documents").select(col("doc_id")).as[Long]
+      .mapPartitions(_.map(id => (id, synth(id))))
+      .toDF("doc_id", "payload")
+  }
+
+  /** Sample i of document `id`'s synthetic audio clip. */
+  private def pcmSample(id: Long, i: Int): Int =
+    (((id * 31 + i.toLong * i * 7) % 65536) - 32768).toInt
+
+  /** Mono 16 kHz PCM16 WAV of `n` samples, sample i = `sample(i)`. */
+  private def pcmClip(n: Int)(sample: Int => Int): Array[Byte] = {
+    val data = Array.tabulate(n)(sample).flatMap { v =>
+      val u = v & 0xffff
+      Array((u & 0xff).toByte, ((u >> 8) & 0xff).toByte)
+    }
+    Multimodal.synthWavHeader(1, 16000, 16, n * 2) ++ data
+  }
+
+  /** Whole 256-sample frames plus a tail, where every third frame
+    * (offset by `id`) is masked quiet (0..63): the clips the frame-
+    * energy queries segment and fingerprint. */
+  private def gatedClip(id: Long): Array[Byte] =
+    pcmClip(((id % 10 + 4) * 256 + id % 100).toInt) { i =>
+      val v = pcmSample(id, i)
+      if (((i >> 8) + id) % 3 == 0) v & 63 else v
+    }
+
   /** Cache path for the persisted ANN index queries (37b2/37d2):
     * keyed on the embeddings table's absolute path + newest file
     * mtime, so the index is built at most once per testdata snapshot
@@ -50,6 +103,54 @@ object Pipeline {
       .map("%02x".format(_)).mkString
     new java.io.File(
       new java.io.File(sys.props("java.io.tmpdir"), "graft_ivf_index"), key).toString
+  }
+
+  /** The persisted 16-cell IVF index of `e` (plus its PQ layer when
+    * `pq`) at [[ivfDiskPath]], built only if absent; returns the path. */
+  private def ivfDiskIndex(s: SparkSession, dir: String, e: DataFrame, pq: Boolean): String = {
+    import graft.similarity.IvfIndex
+    val path = ivfDiskPath(dir)
+    if (!IvfIndex.isComplete(s, path))
+      IvfIndex.build(e, "vec_id", "embedding", kCells = 16, path)
+    if (pq && !IvfIndex.isComplete(s, path, pq = true))
+      IvfIndex.buildPq(e, "vec_id", "embedding", dim = 64, m = 4, kCodes = 16, path = path)
+    path
+  }
+
+  /** IVF scaffold over `e`: ONE corpus count `nE` serves the cell count
+    * `kCells(nE)`, the centroid stride and (for PQ) the codebook
+    * stride. Returns (nE, centroids, assigned). */
+  private def ivfScaffold(e: DataFrame, kCells: Long => Int): (Long, DataFrame, DataFrame) = {
+    val nE = e.count()
+    val cents = Similarity.ivfCentroids(e, "vec_id", "embedding", kCells(nE), nE)
+    (nE, cents, Similarity.ivfAssign(e, "vec_id", "embedding", cents))
+  }
+
+  /** In-memory IVF-PQ index over `e`: the 16-cell [[ivfScaffold]],
+    * the codebook (collected ONCE for encode and LUT) and codes encoded
+    * from the ASSIGNED frame, so they leave the encode already
+    * cell-keyed. Returns (codebook, codes, assigned, centroids). */
+  private def ivfpqBuild(e: DataFrame) = {
+    val (nE, cents, assigned) = ivfScaffold(e, _ => 16)
+    val cb = Similarity.collectCodebook(
+      Similarity.pqCodebook(e, "vec_id", "embedding", dim = 64, m = 4, k = 16, n = nE))
+    val enc = Similarity.pqEncode(
+      assigned.select(col("id").as("vec_id"), col("vec").as("embedding"), col("cell")),
+      "vec_id", "embedding", cb, carry = Seq("cell"))
+    (cb, enc, assigned, cents)
+  }
+
+  /** documents with `aug`: every doc_id ≡ 1 (mod 4) gets its
+    * predecessor's full text appended, so (id−1, id) pairs sit at
+    * containment 1.0 at every SF. */
+  private def containmentAug(s: SparkSession, dir: String): DataFrame = {
+    val d = t(s, dir, "documents")
+    val base = d.select((col("doc_id") + 1).as("doc_id"), col("text").as("_base_text"))
+    d.join(base, Seq("doc_id"), "left")
+      .withColumn("aug",
+        when(col("doc_id") % 4 === 1 && col("_base_text").isNotNull,
+          concat(col("text"), lit(" "), col("_base_text")))
+          .otherwise(col("text")))
   }
 
   /** The IVF scale lever, applied: the cell-scaffold queries
@@ -95,12 +196,7 @@ object Pipeline {
       // transitive min-label closure via a recursive CTE over the same
       // candidate edges; UNION dedup terminates the recursion
       s"""WITH RECURSIVE ${minhashCtes()},
-         |sym AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-         |        UNION ALL SELECT doc_b, doc_a FROM cand),
-         |lbl(node, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT s.dst, l.label FROM lbl l JOIN sym s ON s.src = l.node)
+         |${labelPropCtes("cand", "doc_a", "doc_b", "SELECT doc_id, doc_id FROM documents")}
          |SELECT node AS doc_id, min(label) AS component
          |FROM lbl GROUP BY node ORDER BY doc_id""".stripMargin),
     // 32e — dedup-cluster RESOLUTION: per near-dup cluster keep the
@@ -116,12 +212,7 @@ object Pipeline {
       // same recursive closure as dd_components, then a deterministic
       // per-cluster argmax (n_chars DESC, doc_id ASC) + cluster size
       s"""WITH RECURSIVE ${minhashCtes()},
-         |sym AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-         |        UNION ALL SELECT doc_b, doc_a FROM cand),
-         |lbl(node, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT s.dst, l.label FROM lbl l JOIN sym s ON s.src = l.node),
+         |${labelPropCtes("cand", "doc_a", "doc_b", "SELECT doc_id, doc_id FROM documents")},
          |comp AS (SELECT node, min(label) AS component FROM lbl GROUP BY node),
          |ranked AS (
          |  SELECT c.component AS cluster, d.doc_id, d.n_chars,
@@ -150,12 +241,7 @@ object Pipeline {
       // same recursive closure as dd_components, then cluster sizes →
       // per-doc 1/n loss weight
       s"""WITH RECURSIVE ${minhashCtes()},
-         |sym AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-         |        UNION ALL SELECT doc_b, doc_a FROM cand),
-         |lbl(node, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT s.dst, l.label FROM lbl l JOIN sym s ON s.src = l.node),
+         |${labelPropCtes("cand", "doc_a", "doc_b", "SELECT doc_id, doc_id FROM documents")},
          |comp AS (SELECT node AS doc_id, min(label) AS component FROM lbl GROUP BY node),
          |sz AS (SELECT component, count(*) AS cluster_n FROM comp GROUP BY 1)
          |SELECT comp.doc_id, comp.component, sz.cluster_n,
@@ -379,21 +465,12 @@ object Pipeline {
     // predecessor's full text appended, so (id−1, id) pairs provably
     // sit at containment 1.0 at every SF while Jaccard stays low
     Query("dd_containment", (s, dir) => {
-      val d = t(s, dir, "documents")
-      val base = d.select((col("doc_id") + 1).as("doc_id"), col("text").as("_base_text"))
-      val aug = d.join(base, Seq("doc_id"), "left")
-        .withColumn("aug",
-          when(col("doc_id") % 4 === 1 && col("_base_text").isNotNull,
-            concat(col("text"), lit(" "), col("_base_text")))
-            .otherwise(col("text")))
+      val aug = containmentAug(s, dir)
       Dedup.containmentPairs(aug, "doc_id", "aug", n = 3, threshold = 0.5, maxShingleDf = 1000)
     }, oracle =
       // aug corpus + rare-shingle guard mirror the Spark side; the
       // containment formulas divide by each side's own set size
-      s"""WITH aug0 AS (SELECT d.doc_id,
-        |    CASE WHEN d.doc_id % 4 = 1 AND b.text IS NOT NULL
-        |      THEN d.text || ' ' || b.text ELSE d.text END AS text
-        |  FROM documents d LEFT JOIN documents b ON b.doc_id = d.doc_id - 1),
+      s"""WITH ${containmentAugCte("aug0")},
         |shx0 AS (SELECT doc, len(shs) AS sz, unnest(shs) AS sh0
         |  FROM (SELECT doc_id AS doc, ${shinglesSql(3)} AS shs FROM aug0)),
         |shx AS (SELECT doc, sz, ${shingleKeySql("sh0")} AS sh FROM shx0),
@@ -467,21 +544,11 @@ object Pipeline {
       s"""WITH RECURSIVE cnt AS (SELECT count(*) AS c FROM embeddings),
         |icents AS (SELECT vec_id AS centroid_id, embedding AS icvec
         |           FROM embeddings, cnt WHERE vec_id % greatest(1, (c + 15) // 16) = 0),
-        |ac AS (SELECT e.vec_id, e.embedding, c.centroid_id,
-        |         ${cosSql("e.embedding", "c.icvec")} AS cosv
-        |       FROM embeddings e CROSS JOIN icents c),
-        |asg AS (SELECT vec_id, embedding, centroid_id AS cell FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
-        |         FROM ac) WHERE rn = 1),
+        |${ivfAssignCtes(Seq("embedding"), "icents", "icvec")},
         |prs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
         |        FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id
         |        WHERE ${sqlFp(cosSql("a.embedding", "b.embedding"), 6)} >= 300000),
-        |sym AS (SELECT id_a AS src, id_b AS dst FROM prs
-        |        UNION ALL SELECT id_b, id_a FROM prs),
-        |lbl(node, label) AS (
-        |  SELECT vec_id, vec_id FROM embeddings
-        |  UNION
-        |  SELECT s.dst, l.label FROM lbl l JOIN sym s ON s.src = l.node),
+        |${labelPropCtes("prs", "id_a", "id_b", "SELECT vec_id, vec_id FROM embeddings")},
         |comp AS (SELECT node, min(label) AS component FROM lbl GROUP BY node)
         |SELECT component AS keep_id, CAST(count(*) AS BIGINT) AS n_members
         |FROM comp GROUP BY 1 ORDER BY 1""".stripMargin),
@@ -567,9 +634,7 @@ object Pipeline {
     // index yields identical candidates and arithmetic.
     Query("sim_ann_ivf_disk", (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val path = ivfDiskPath(dir)
-      if (!graft.similarity.IvfIndex.isComplete(s, path))
-        graft.similarity.IvfIndex.build(e, "vec_id", "embedding", kCells = 16, path)
+      val path = ivfDiskIndex(s, dir, e, pq = false)
       graft.similarity.IvfIndex.search(s, path,
         e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", nprobe = 2, k = 5)
     }, oracle =
@@ -587,12 +652,7 @@ annIvfSql),
     // pqIvfSearch composition, so it shares sim_ann_ivfpq's oracle.
     Query("sim_ann_ivfpq_disk", (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val path = ivfDiskPath(dir)
-      if (!graft.similarity.IvfIndex.isComplete(s, path))
-        graft.similarity.IvfIndex.build(e, "vec_id", "embedding", kCells = 16, path)
-      if (!graft.similarity.IvfIndex.isComplete(s, path, pq = true))
-        graft.similarity.IvfIndex.buildPq(e, "vec_id", "embedding",
-          dim = 64, m = 4, kCodes = 16, path = path)
+      val path = ivfDiskIndex(s, dir, e, pq = true)
       graft.similarity.IvfIndex.searchPq(s, path,
         e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", nprobe = 2, k = 5)
     }, oracle = annIvfpqSql),
@@ -607,12 +667,7 @@ annIvfSql),
     // pqIvfRerank composition, so it shares sim_ann_rerank's oracle.
     Query("sim_ann_rerank_disk", (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val path = ivfDiskPath(dir)
-      if (!graft.similarity.IvfIndex.isComplete(s, path))
-        graft.similarity.IvfIndex.build(e, "vec_id", "embedding", kCells = 16, path)
-      if (!graft.similarity.IvfIndex.isComplete(s, path, pq = true))
-        graft.similarity.IvfIndex.buildPq(e, "vec_id", "embedding",
-          dim = 64, m = 4, kCodes = 16, path = path)
+      val path = ivfDiskIndex(s, dir, e, pq = true)
       graft.similarity.IvfIndex.searchRerank(s, path,
         e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
         nprobe = 2, kCand = 20, k = 5)
@@ -625,17 +680,7 @@ annIvfSql),
     // the gram array projects once — the inline form was 8× slower)
     Query("txt_langid_ngram", (s, dir) => {
       TextAnalysis.langIdNgramDf(t(s, dir, "documents"), "doc_id", "text")
-    }, oracle = {
-      val scores = TextAnalysis.DefaultTrigramProfiles.map { case (lang, grams) =>
-        val inList = grams.map(g => s"'${g.replace("'", "''")}'").mkString(", ")
-        lang -> (s"len(list_filter(CASE WHEN length(lower(text)) < 3 THEN [] " +
-          s"ELSE list_transform(range(1, length(lower(text)) - 1), i -> substr(lower(text), CAST(i AS INT), 3)) END, " +
-          s"g -> g IN ($inList)))")
-      }
-      val best = s"greatest(${scores.map(_._2).mkString(", ")})"
-      val cases = scores.map { case (lang, e) => s"WHEN $e = $best THEN '$lang'" }.mkString(" ")
-      s"SELECT doc_id, CASE $cases END AS lang_pred FROM documents ORDER BY doc_id"
-    }),
+    }, oracle = s"SELECT doc_id, $langIdNgramSql AS lang_pred FROM documents ORDER BY doc_id"),
     // 38l — classifier EVALUATION report (the eval harness every
     // pipeline classifier ships with): both language-ID
     // implementations scored against the truth label per language —
@@ -659,16 +704,8 @@ annIvfSql),
           fp(col("n_stop_ok").cast("double") / col("n_docs").cast("double"), 4).as("acc_stop_fp4"),
           fp(col("n_gram_ok").cast("double") / col("n_docs").cast("double"), 4).as("acc_gram_fp4"),
           fp(col("n_agree").cast("double") / col("n_docs").cast("double"), 4).as("agree_fp4"))
-    }, oracle = {
-      val scores = TextAnalysis.DefaultTrigramProfiles.map { case (lang, grams) =>
-        val inList = grams.map(g => s"'${g.replace("'", "''")}'").mkString(", ")
-        lang -> (s"len(list_filter(CASE WHEN length(lower(text)) < 3 THEN [] " +
-          s"ELSE list_transform(range(1, length(lower(text)) - 1), i -> substr(lower(text), CAST(i AS INT), 3)) END, " +
-          s"g -> g IN ($inList)))")
-      }
-      val best = s"greatest(${scores.map(_._2).mkString(", ")})"
-      val cases = scores.map { case (lang, e) => s"WHEN $e = $best THEN '$lang'" }.mkString(" ")
-      s"""WITH p AS (SELECT lang, $langIdSql AS ps, CASE $cases END AS pg FROM documents),
+    }, oracle =
+      s"""WITH p AS (SELECT lang, $langIdSql AS ps, $langIdNgramSql AS pg FROM documents),
         |a AS (SELECT lang, count(*) AS n_docs,
         |  CAST(sum(CASE WHEN ps = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_stop_ok,
         |  CAST(sum(CASE WHEN pg = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_gram_ok,
@@ -678,8 +715,7 @@ annIvfSql),
         |  ${sqlFp("CAST(n_stop_ok AS DOUBLE) / CAST(n_docs AS DOUBLE)", 4)} AS acc_stop_fp4,
         |  ${sqlFp("CAST(n_gram_ok AS DOUBLE) / CAST(n_docs AS DOUBLE)", 4)} AS acc_gram_fp4,
         |  ${sqlFp("CAST(n_agree AS DOUBLE) / CAST(n_docs AS DOUBLE)", 4)} AS agree_fp4
-        |FROM a ORDER BY 1""".stripMargin
-    }),
+        |FROM a ORDER BY 1""".stripMargin),
     // 39 — quality scoring (length/punct/stopword ratios; staged tokens)
     Query("txt_quality", (s, dir) => {
       TextAnalysis.qualityDf(t(s, dir, "documents"), "doc_id", "text")
@@ -810,23 +846,14 @@ annIvfSql),
     // Same planted aug as dd_containment (doc_id % 4 == 1 appends its
     // predecessor's text) so matching pairs exist at every SF
     Query("dd_winnow_pairs", (s, dir) => {
-      val d = t(s, dir, "documents")
-      val base = d.select((col("doc_id") + 1).as("doc_id"), col("text").as("_base_text"))
-      val aug = d.join(base, Seq("doc_id"), "left")
-        .withColumn("aug",
-          when(col("doc_id") % 4 === 1 && col("_base_text").isNotNull,
-            concat(col("text"), lit(" "), col("_base_text")))
-            .otherwise(col("text")))
+      val aug = containmentAug(s, dir)
       Dedup.winnowPairs(aug, "doc_id", "aug", n = 3, w = 4, minShared = 2)
     }, oracle =
       // winnow-pair matching (the MOSS step): distinct doc fingerprints,
       // boilerplate-fp guard, self-join, >= minShared threshold — the
       // aug corpus mirrors dd_containment's planted embeddings so pairs
       // provably exist at every SF (shared run >= n+w-1 tokens)
-      s"""WITH aug1 AS (SELECT d.doc_id,
-        |    CASE WHEN d.doc_id % 4 = 1 AND b.text IS NOT NULL
-        |      THEN d.text || ' ' || b.text ELSE d.text END AS text
-        |  FROM documents d LEFT JOIN documents b ON b.doc_id = d.doc_id - 1),
+      s"""WITH ${containmentAugCte("aug1")},
         |${winnowCoreSql("aug1")},
         |fps AS (SELECT DISTINCT doc_id AS doc, fp FROM wsel),
         |rare AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) <= 1000),
@@ -1478,12 +1505,7 @@ annIvfSql),
       // subspace, integer sum, windowed top-k ascending
       s"""WITH $pqCtes,
         |enc AS (SELECT id, sub, code FROM best WHERE rn = 1),
-        |qsl AS (SELECT q.vec_id AS query_id, s.sub,
-        |          list_slice(q.embedding, s.sub*16 + 1, s.sub*16 + 16) AS qx
-        |        FROM embeddings q, subs s WHERE q.vec_id % 50 = 0),
-        |lut AS (SELECT q.query_id, q.sub, cb.code,
-        |          ${sqlFp(s"${dot16("qx", "qx")} - 2.0*${dot16("qx", "cvec")} + ${dot16("cvec", "cvec")}", 6)} AS pd6
-        |        FROM qsl q JOIN cb ON cb.sub = q.sub),
+        |$pqLutCtes,
         |sc AS (SELECT l.query_id, e.id, CAST(sum(l.pd6) AS BIGINT) AS approx_d2_fp6
         |       FROM enc e JOIN lut l ON l.sub = e.sub AND l.code = e.code
         |       WHERE e.id <> l.query_id GROUP BY 1, 2),
@@ -1504,14 +1526,7 @@ annIvfSql),
     // fully oracle-checked
     Query("sim_ann_ivfpq", (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val nE = e.count() // ONE corpus count serves centroid + codebook strides
-      val cents = Similarity.ivfCentroids(e, "vec_id", "embedding", 16, nE)
-      val assigned = Similarity.ivfAssign(e, "vec_id", "embedding", cents)
-      val cb = Similarity.collectCodebook( // collected ONCE for encode + LUT
-        Similarity.pqCodebook(e, "vec_id", "embedding", dim = 64, m = 4, k = 16, n = nE))
-      val enc = Similarity.pqEncode(
-        assigned.select(col("id").as("vec_id"), col("vec").as("embedding"), col("cell")),
-        "vec_id", "embedding", cb, carry = Seq("cell"))
+      val (cb, enc, assigned, cents) = ivfpqBuild(e)
       Similarity.pqIvfSearch(enc, cb, assigned, cents,
         e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", nprobe = 2, k = 5,
         maxLutBroadcastBytes = 64L << 20)
@@ -1524,14 +1539,7 @@ annIvfSql),
     // size, and the returned order is exact
     Query("sim_ann_rerank", (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val nE = e.count() // ONE corpus count serves centroid + codebook strides
-      val cents = Similarity.ivfCentroids(e, "vec_id", "embedding", 16, nE)
-      val assigned = Similarity.ivfAssign(e, "vec_id", "embedding", cents)
-      val cb = Similarity.collectCodebook( // collected ONCE for encode + LUT
-        Similarity.pqCodebook(e, "vec_id", "embedding", dim = 64, m = 4, k = 16, n = nE))
-      val enc = Similarity.pqEncode(
-        assigned.select(col("id").as("vec_id"), col("vec").as("embedding"), col("cell")),
-        "vec_id", "embedding", cb, carry = Seq("cell"))
+      val (cb, enc, assigned, cents) = ivfpqBuild(e)
       Similarity.pqIvfRerank(enc, cb, assigned, cents,
         e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", e,
         nprobe = 2, kCand = 20, k = 5)
@@ -1565,15 +1573,8 @@ annIvfSql),
         .withColumn("skew_fp4",
           expr("(max_sz * n_cells * 20000 + total) DIV (2 * total)"))
     }, oracle =
-      s"""WITH cnt AS (SELECT count(*) AS c FROM embeddings),
-        |cents AS (SELECT vec_id AS centroid_id, embedding AS cvec
-        |          FROM embeddings, cnt WHERE vec_id % greatest(1, (c + 15) // 16) = 0),
-        |ac AS (SELECT e.vec_id, c.centroid_id,
-        |         ${cosSql("e.embedding", "c.cvec")} AS cosv
-        |       FROM embeddings e CROSS JOIN cents c),
-        |asg AS (SELECT vec_id, centroid_id AS cell FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
-        |         FROM ac) WHERE rn = 1),
+      s"""WITH ${ivfCentsCtes(adaptive = false)},
+        |${ivfAssignCtes(Nil)},
         |cs AS (SELECT cell, count(*) AS sz FROM asg GROUP BY 1),
         |r AS (SELECT count(*) AS n_cells, min(sz) AS min_sz, max(sz) AS max_sz,
         |        CAST(sum(sz) AS BIGINT) AS total FROM cs)
@@ -1589,9 +1590,7 @@ annIvfSql),
     // value-domain-bounded (≤ 91 buckets).
     Query("dd_threshold_sweep", (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val nE = e.count() // one corpus count serves kCells AND the stride pick
-      val cents = Similarity.ivfCentroids(e, "vec_id", "embedding", adaptiveCells(nE), nE)
-      val assigned = Similarity.ivfAssign(e, "vec_id", "embedding", cents)
+      val (_, _, assigned) = ivfScaffold(e, adaptiveCells)
       val a = assigned.select(col("id").as("id_a"), col("vec").as("_va"), col("cell"))
       val b = assigned.select(col("id").as("id_b"), col("vec").as("_vb"), col("cell"))
       a.join(b, "cell")
@@ -1601,24 +1600,15 @@ annIvfSql),
         .select(expr("cos_fp6 DIV 10000").as("bucket"))
         .groupBy("bucket").agg(count(lit(1)).as("n_pairs"))
     }, oracle =
-      s"""WITH cnt AS (SELECT count(*) AS c, greatest(16, count(*) // 125) AS kc FROM embeddings),
-        |cents AS (SELECT vec_id AS centroid_id, embedding AS cvec
-        |          FROM embeddings, cnt WHERE vec_id % greatest(1, (c + kc - 1) // kc) = 0),
-        |ac AS (SELECT e.vec_id, e.embedding, c.centroid_id,
-        |         ${cosSql("e.embedding", "c.cvec")} AS cosv
-        |       FROM embeddings e CROSS JOIN cents c),
-        |asg AS (SELECT vec_id, embedding, centroid_id AS cell FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
-        |         FROM ac) WHERE rn = 1),
+      s"""WITH ${ivfCentsCtes(adaptive = true)},
+        |${ivfAssignCtes(Seq("embedding"))},
         |sc AS (SELECT ${sqlFp(cosSql("a.embedding", "b.embedding"), 6)} AS cos_fp6
         |       FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id)
         |SELECT cos_fp6 // 10000 AS bucket, count(*) AS n_pairs
         |FROM sc WHERE cos_fp6 >= 100000 GROUP BY 1 ORDER BY 1""".stripMargin),
     Query("sim_knn_graph", (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val nE = e.count() // one corpus count serves kCells AND the stride pick
-      val cents = Similarity.ivfCentroids(e, "vec_id", "embedding", adaptiveCells(nE), nE)
-      val assigned = Similarity.ivfAssign(e, "vec_id", "embedding", cents)
+      val (_, _, assigned) = ivfScaffold(e, adaptiveCells)
       val a = assigned.select(col("id").as("id_a"), col("vec").as("_va"), col("cell"))
       val b = assigned.select(col("id").as("id_b"), col("vec").as("_vb"), col("cell"))
       val scored = a.join(b, "cell")
@@ -1637,15 +1627,8 @@ annIvfSql),
         .filter(col("id_a") < col("id_b"))
         .select(col("id_a"), col("id_b"), col("cos_fp6"))
     }, oracle =
-      s"""WITH cnt AS (SELECT count(*) AS c, greatest(16, count(*) // 125) AS kc FROM embeddings),
-        |cents AS (SELECT vec_id AS centroid_id, embedding AS cvec
-        |          FROM embeddings, cnt WHERE vec_id % greatest(1, (c + kc - 1) // kc) = 0),
-        |ac AS (SELECT e.vec_id, e.embedding, c.centroid_id,
-        |         ${cosSql("e.embedding", "c.cvec")} AS cosv
-        |       FROM embeddings e CROSS JOIN cents c),
-        |asg AS (SELECT vec_id, embedding, centroid_id AS cell FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
-        |         FROM ac) WHERE rn = 1),
+      s"""WITH ${ivfCentsCtes(adaptive = true)},
+        |${ivfAssignCtes(Seq("embedding"))},
         |sc AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
         |         ${sqlFp(cosSql("a.embedding", "b.embedding"), 6)} AS cos_fp6
         |       FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id != b.vec_id),
@@ -1672,9 +1655,7 @@ annIvfSql),
     Query("emb_hard_negatives", (s, dir) => {
       val P = 1L << 40
       val e = t(s, dir, "embeddings")
-      val nE = e.count() // one corpus count serves kCells AND the stride pick
-      val cents = Similarity.ivfCentroids(e, "vec_id", "embedding", adaptiveCells(nE), nE)
-      val assigned = Similarity.ivfAssign(e, "vec_id", "embedding", cents)
+      val (_, _, assigned) = ivfScaffold(e, adaptiveCells)
       val lbl = e.select(col("vec_id"), col("label"))
       val withLab = assigned.join(lbl, col("id") === col("vec_id")).drop("vec_id")
       val a = withLab.select(col("id").as("id_a"), col("vec").as("_va"),
@@ -1696,15 +1677,8 @@ annIvfSql),
     }, oracle =
       // same IVF assignment CTEs, labels carried; both argmaxes via the
       // identical packed-long max ((cos_fp6+1e6)·2^40 + (2^40−1−id))
-      s"""WITH cnt AS (SELECT count(*) AS c, greatest(16, count(*) // 125) AS kc FROM embeddings),
-        |cents AS (SELECT vec_id AS centroid_id, embedding AS cvec
-        |          FROM embeddings, cnt WHERE vec_id % greatest(1, (c + kc - 1) // kc) = 0),
-        |ac AS (SELECT e.vec_id, e.embedding, e.label, c.centroid_id,
-        |         ${cosSql("e.embedding", "c.cvec")} AS cosv
-        |       FROM embeddings e CROSS JOIN cents c),
-        |asg AS (SELECT vec_id, embedding, label, centroid_id AS cell FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
-        |         FROM ac) WHERE rn = 1),
+      s"""WITH ${ivfCentsCtes(adaptive = true)},
+        |${ivfAssignCtes(Seq("embedding", "label"))},
         |sc AS (SELECT a.vec_id AS id_a, a.label AS lab_a, b.vec_id AS id_b, b.label AS lab_b,
         |         ${sqlFp(cosSql("a.embedding", "b.embedding"), 6)} AS cos_fp6
         |       FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id != b.vec_id),
@@ -2217,11 +2191,7 @@ annIvfSql),
         t(s, dir, "events").select("event_type", "user_id"),
         Seq("event_type"), "user_id", k = 64)
     }, oracle = {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('kmv:' || CAST(user_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      val u32 = md5Fold("'kmv:' || CAST(user_id AS VARCHAR)", 8)
       s"""WITH h AS (SELECT DISTINCT event_type, CAST($u32 AS DOUBLE) / 4294967296.0 AS u FROM events),
         |r AS (SELECT event_type, u, row_number() OVER (PARTITION BY event_type ORDER BY u) AS rk FROM h)
         |SELECT event_type, count(*) AS n_kept,
@@ -2245,11 +2215,7 @@ annIvfSql),
         .join(ex, "event_type")
         .select("event_type", "exact_nd", "v_zero", "reg_sum", "hll_est_fp2")
     }, oracle = {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('hll:' || CAST(user_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      val u32 = md5Fold("'hll:' || CAST(user_id AS VARCHAR)", 8)
       // the SAME α_m·m²·2^ρmax double literal the Spark plan folds in
       // (m=256, ρmax=25): 17 sig digits round-trips the IEEE double
       val numerator = (0.7213 / (1.0 + 1.079 / 256)) * 256.0 * 256.0 * math.pow(2.0, 25)
@@ -2314,12 +2280,7 @@ annIvfSql),
       // bit set computed ONCE (OR-merge = direct by set-union
       // associativity); emitted under both column pairs so either
       // Spark path diverging hash-mismatches
-      def u32(j: Int): String =
-        s"""(list_reduce(list_prepend(CAST(0 AS BIGINT),
-          | list_transform(range(1, 9),
-          |   i -> CAST(strpos('0123456789abcdef',
-          |          substr(md5('bf$j:' || md5(text)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-          | (a, v) -> a*16 + v) % 1024)""".stripMargin.replace("\n", " ")
+      def u32(j: Int): String = s"(${md5Fold(s"'bf$j:' || md5(text)", 8)} % 1024)"
       val arms = (0 until 4).map(j =>
         s"SELECT source, ${u32(j)} AS bit FROM documents").mkString("\n  UNION ALL\n  ")
       s"""WITH b AS (SELECT DISTINCT source, bit FROM (
@@ -2362,11 +2323,7 @@ annIvfSql),
       // registers computed ONCE (merge = direct by max-associativity);
       // emitted under both column pairs so either Spark path diverging
       // hash-mismatches
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('hll:' || CAST(user_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      val u32 = md5Fold("'hll:' || CAST(user_id AS VARCHAR)", 8)
       val numerator = (0.7213 / (1.0 + 1.079 / 256)) * 256.0 * 256.0 * math.pow(2.0, 25)
       val numLit = "%.17e".formatLocal(java.util.Locale.ROOT, numerator)
       s"""WITH h AS (SELECT event_type, $u32 AS u FROM events),
@@ -2399,12 +2356,7 @@ annIvfSql),
       graft.sketch.Sketches.cmsFreq(
         t(s, dir, "events").select("event_type"), "event_type", d = 4, w = 64)
     }, oracle = {
-      def bucket(j: Int): String =
-        s"""(list_reduce(list_prepend(CAST(0 AS BIGINT),
-          | list_transform(range(1, 9),
-          |   i -> CAST(strpos('0123456789abcdef',
-          |          substr(md5('cms$j:' || event_type), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-          | (a, v) -> a*16 + v) % 64)""".stripMargin.replace("\n", " ")
+      def bucket(j: Int): String = s"(${md5Fold(s"'cms$j:' || event_type", 8)} % 64)"
       val cells = (0 until 4).map(j =>
         s"c$j AS (SELECT ${bucket(j)} AS b, count(*) AS cnt FROM events GROUP BY 1)").mkString(",\n")
       s"""WITH $cells,
@@ -2681,11 +2633,7 @@ annIvfSql),
           fp(when(col("n_kept_merged") < 64, col("n_kept_merged").cast("double"))
             .otherwise(lit(63.0) / col("_hkm")), 2).as("est_merged_fp2"))
     }, oracle = {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('kmv:' || CAST(user_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      val u32 = md5Fold("'kmv:' || CAST(user_id AS VARCHAR)", 8)
       s"""WITH h AS (SELECT DISTINCT event_type, CAST($u32 AS DOUBLE) / 4294967296.0 AS u FROM events),
         |r AS (SELECT event_type, u, row_number() OVER (PARTITION BY event_type ORDER BY u) AS rk FROM h),
         |d AS (SELECT event_type, count(*) AS n_kept,
@@ -2911,12 +2859,7 @@ annIvfSql),
     // probabilities — the txt_collocations statistic on a different
     // universe, same log-free exact-integer convention.
     Query("ev_covisit", (s, dir) => {
-      val byUser = Window.partitionBy("user_id").orderBy("ms", "event_id")
-      val st = ev(s, dir)
-        .withColumn("new_sess",
-          when(lag("ms", 1).over(byUser).isNull || col("ms") - lag("ms", 1).over(byUser) > SessionGapMs, 1L)
-            .otherwise(0L))
-        .withColumn("session_idx", sum("new_sess").over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      val st = sessionized(ev(s, dir))
         .select("user_id", "session_idx", "event_type").distinct()
         .localCheckpoint()
       val pairs = st.select(col("user_id"), col("session_idx"), col("event_type").as("type_a"))
@@ -2938,11 +2881,7 @@ annIvfSql),
       // the ev_sessionize window CTEs reduced to DISTINCT (session,
       // type), then the collocation lift over session probabilities
       s"""WITH e AS (SELECT event_id, user_id, event_type, epoch_ms(ts) AS ms FROM events),
-        |flagged AS (SELECT *, CASE WHEN lag(ms) OVER w IS NULL OR ms - lag(ms) OVER w > $SessionGapMs
-        |    THEN 1 ELSE 0 END AS new_sess
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
-        |sess AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM flagged),
+        |${sessionCtes("sess")},
         |st AS (SELECT DISTINCT user_id, session_idx, event_type FROM sess),
         |pairs AS (SELECT a.event_type AS type_a, b.event_type AS type_b
         |  FROM st a JOIN st b ON a.user_id = b.user_id AND a.session_idx = b.session_idx
@@ -3007,12 +2946,7 @@ annIvfSql),
     // One readout row: session count, p50/p90 duration, p50/max
     // events per session.
     Query("ev_session_stats", (s, dir) => {
-      val byUser = Window.partitionBy("user_id").orderBy("ms", "event_id")
-      val sess = ev(s, dir)
-        .withColumn("new_sess",
-          when(lag("ms", 1).over(byUser).isNull || col("ms") - lag("ms", 1).over(byUser) > SessionGapMs, 1L)
-            .otherwise(0L))
-        .withColumn("session_idx", sum("new_sess").over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      val sess = sessionized(ev(s, dir))
         .groupBy("user_id", "session_idx")
         .agg(count(lit(1)).as("n_events"), expr("(max(ms) - min(ms)) DIV 1000").as("dur_s"))
       def rankScan(v: String) = {
@@ -3033,11 +2967,7 @@ annIvfSql),
       // the sessionize CTEs reduced to per-session (n_events, dur_s),
       // then two histogram rank-scans (the ev_percentile discipline)
       s"""WITH e AS (SELECT event_id, user_id, event_type, epoch_ms(ts) AS ms FROM events),
-        |flagged AS (SELECT *, CASE WHEN lag(ms) OVER w IS NULL OR ms - lag(ms) OVER w > $SessionGapMs
-        |    THEN 1 ELSE 0 END AS new_sess
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
-        |sess0 AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM flagged),
+        |${sessionCtes("sess0")},
         |sess AS (SELECT user_id, session_idx, count(*) AS n_events,
         |    (max(ms) - min(ms)) // 1000 AS dur_s
         |  FROM sess0 GROUP BY 1, 2),
@@ -3418,21 +3348,12 @@ annIvfSql),
         |) ORDER BY section""".stripMargin),
     // 42 — gap-based sessionization (batch twin of the streaming op)
     Query("ev_sessionize", (s, dir) => {
-      val byUser = Window.partitionBy("user_id").orderBy("ms", "event_id")
-      ev(s, dir)
-        .withColumn("new_sess",
-          when(lag("ms", 1).over(byUser).isNull || col("ms") - lag("ms", 1).over(byUser) > SessionGapMs, 1L)
-            .otherwise(0L))
-        .withColumn("session_idx", sum("new_sess").over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      sessionized(ev(s, dir))
         .groupBy("user_id", "session_idx")
         .agg(count(lit(1)).as("n_events"), min("ms").as("start_ms"), max("ms").as("end_ms"), sum("v4").as("sum_v4"))
     }, oracle =
       s"""WITH e AS (SELECT event_id, user_id, epoch_ms(ts) AS ms, ${sqlFp("\"value\"", 4)} AS v4 FROM events),
-        |flagged AS (SELECT *, CASE WHEN lag(ms) OVER w IS NULL OR ms - lag(ms) OVER w > $SessionGapMs
-        |    THEN 1 ELSE 0 END AS new_sess
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
-        |sess AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM flagged)
+        |${sessionCtes("sess")}
         |SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx, count(*) AS n_events,
         |  min(ms) AS start_ms, max(ms) AS end_ms, CAST(sum(v4) AS BIGINT) AS sum_v4
         |FROM sess GROUP BY user_id, session_idx ORDER BY user_id, session_idx""".stripMargin),
@@ -3449,12 +3370,7 @@ annIvfSql),
     // their block.
     Query("ev_concurrency", (s, dir) => {
       val dayMs = 86400000L
-      val byUser = Window.partitionBy("user_id").orderBy("ms", "event_id")
-      val sess = ev(s, dir)
-        .withColumn("new_sess",
-          when(lag("ms", 1).over(byUser).isNull || col("ms") - lag("ms", 1).over(byUser) > SessionGapMs, 1L)
-            .otherwise(0L))
-        .withColumn("session_idx", sum("new_sess").over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      val sess = sessionized(ev(s, dir))
         .groupBy("user_id", "session_idx")
         .agg(min("ms").as("st"), max("ms").as("en"))
         .withColumn("sd", expr(s"(st - pmod(st, $dayMs)) DIV $dayMs"))
@@ -3486,11 +3402,7 @@ annIvfSql),
           coalesce(col("n_starts"), lit(0L)).as("n_starts"))
     }, oracle =
       s"""WITH e AS (SELECT event_id, user_id, epoch_ms(ts) AS ms FROM events),
-        |flagged AS (SELECT *, CASE WHEN lag(ms) OVER w IS NULL OR ms - lag(ms) OVER w > $SessionGapMs
-        |    THEN 1 ELSE 0 END AS new_sess
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
-        |sess AS (SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM flagged),
+        |${sessionCtes("sess")},
         |si AS (SELECT user_id, session_idx, min(ms) AS st, max(ms) AS en FROM sess GROUP BY 1, 2),
         |sd AS (SELECT st, en,
         |    (st - ((st % 86400000 + 86400000) % 86400000)) // 86400000 AS sd,
@@ -3835,13 +3747,9 @@ annIvfSql),
     // (mapPartitions), parse dimensions back COLUMNAR from the binary
     // header — the oracle checks the synth→parse roundtrip
     Query("mm_image_meta", (s, dir) => {
-      import s.implicits._
-      import graft.multimodal.Multimodal
-      val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          (id, Multimodal.synthPngHeader((id % 1000 + 1).toInt, (id % 700 + 1).toInt))
-        })
-        .toDF("doc_id", "payload")
+      val payloads = docPayloads(s, dir) { id =>
+        Multimodal.synthPngHeader((id % 1000 + 1).toInt, (id % 700 + 1).toInt)
+      }
       payloads.select(
         col("doc_id"),
         Multimodal.magic(col("payload")).as("fmt"),
@@ -3861,20 +3769,15 @@ annIvfSql),
     // walk is exercised on every row), GIF little-endian logical
     // screen. The oracle checks the synth→parse roundtrip closed-form.
     Query("mm_binary_meta", (s, dir) => {
-      import s.implicits._
-      import graft.multimodal.Multimodal
-      val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          val w = (id % 500 + 1).toInt
-          val h = (id % 300 + 1).toInt
-          val bytes = (id % 3) match {
-            case 0 => Multimodal.synthPngHeader(w, h)
-            case 1 => Multimodal.synthJpegHeader(w, h, pad = (id % 7).toInt, comment = id % 2 == 0)
-            case _ => Multimodal.synthGifHeader(w, h)
-          }
-          (id, bytes)
-        })
-        .toDF("doc_id", "payload")
+      val payloads = docPayloads(s, dir) { id =>
+        val w = (id % 500 + 1).toInt
+        val h = (id % 300 + 1).toInt
+        (id % 3) match {
+          case 0 => Multimodal.synthPngHeader(w, h)
+          case 1 => Multimodal.synthJpegHeader(w, h, pad = (id % 7).toInt, comment = id % 2 == 0)
+          case _ => Multimodal.synthGifHeader(w, h)
+        }
+      }
       payloads.select(
         col("doc_id"),
         Multimodal.magic(col("payload")).as("fmt"),
@@ -3887,17 +3790,13 @@ annIvfSql),
     // codegen'd) + integer-exact duration; synth→parse roundtrip
     // oracle closed-form in doc_id like mm_binary_meta
     Query("mm_audio_meta", (s, dir) => {
-      import s.implicits._
-      import graft.multimodal.Multimodal
-      val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          val rate = Seq(8000, 16000, 22050, 44100)((id % 4).toInt)
-          (id, Multimodal.synthWavHeader(
-            channels = (id % 2 + 1).toInt, sampleRate = rate,
-            bitsPerSample = if (id % 3 == 0) 8 else 16,
-            dataBytes = (id % 5000 + 100).toInt))
-        })
-        .toDF("doc_id", "payload")
+      val payloads = docPayloads(s, dir) { id =>
+        val rate = Seq(8000, 16000, 22050, 44100)((id % 4).toInt)
+        Multimodal.synthWavHeader(
+          channels = (id % 2 + 1).toInt, sampleRate = rate,
+          bitsPerSample = if (id % 3 == 0) 8 else 16,
+          dataBytes = (id % 5000 + 100).toInt)
+      }
       payloads.select(
         col("doc_id"),
         Multimodal.wavChannels(col("payload")).cast("long").as("channels"),
@@ -3928,20 +3827,7 @@ annIvfSql),
     // the expected samples closed-form from doc_id — any byte-offset
     // or sign-extension drift in the decoder breaks the hash
     Query("mm_audio_rms", (s, dir) => {
-      import s.implicits._
-      import graft.multimodal.Multimodal
-      val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          val n = (id % 200 + 50).toInt
-          val samples = Array.tabulate(n)(i =>
-            (((id * 31 + i.toLong * i * 7) % 65536) - 32768).toInt)
-          val data = samples.flatMap { v =>
-            val u = v & 0xffff
-            Array((u & 0xff).toByte, ((u >> 8) & 0xff).toByte)
-          }
-          (id, Multimodal.synthWavHeader(1, 16000, 16, n * 2) ++ data)
-        })
-        .toDF("doc_id", "payload")
+      val payloads = docPayloads(s, dir)(id => pcmClip((id % 200 + 50).toInt)(pcmSample(id, _)))
       payloads
         .select(col("doc_id"), call_function("graft_pcm_stats",
           Multimodal.wavPcm16(col("payload"))).as("st"))
@@ -3976,20 +3862,7 @@ annIvfSql),
     // shuffles; the derived array binds once per row (staged
     // projection — Catalyst does no CSE inside HOF lambdas).
     Query("mm_audio_resample", (s, dir) => {
-      import s.implicits._
-      import graft.multimodal.Multimodal
-      val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          val n = (id % 200 + 50).toInt
-          val samples = Array.tabulate(n)(i =>
-            (((id * 31 + i.toLong * i * 7) % 65536) - 32768).toInt)
-          val data = samples.flatMap { v =>
-            val u = v & 0xffff
-            Array((u & 0xff).toByte, ((u >> 8) & 0xff).toByte)
-          }
-          (id, Multimodal.synthWavHeader(1, 16000, 16, n * 2) ++ data)
-        })
-        .toDF("doc_id", "payload")
+      val payloads = docPayloads(s, dir)(id => pcmClip((id % 200 + 50).toInt)(pcmSample(id, _)))
       payloads
         .select(col("doc_id"), Multimodal.wavPcm16(col("payload")).as("_pcm"))
         .select(col("doc_id"), transform(
@@ -4034,22 +3907,7 @@ annIvfSql),
     // image aHash grouping. Decode + energies are the native
     // codegen'd byte walks; the fold is frame-count-bounded.
     Query("mm_audio_fingerprint", (s, dir) => {
-      import s.implicits._
-      import graft.multimodal.Multimodal
-      val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          val n = ((id % 10 + 4) * 256 + id % 100).toInt
-          val samples = Array.tabulate(n) { i =>
-            val v = (((id * 31 + i.toLong * i * 7) % 65536) - 32768).toInt
-            if (((i >> 8) + id) % 3 == 0) v & 63 else v
-          }
-          val data = samples.flatMap { v =>
-            val u = v & 0xffff
-            Array((u & 0xff).toByte, ((u >> 8) & 0xff).toByte)
-          }
-          (id, Multimodal.synthWavHeader(1, 16000, 16, n * 2) ++ data)
-        })
-        .toDF("doc_id", "payload")
+      val payloads = docPayloads(s, dir)(gatedClip)
       val fps = payloads
         .select(col("doc_id"),
           Multimodal.pcmFrameEnergies(
@@ -4070,20 +3928,10 @@ annIvfSql),
       fps.join(groups, Seq("afp", "n_frames"))
         .select("doc_id", "n_frames", "afp", "rep_id", "group_size")
     }, oracle =
-      // the generator's quiet-frame mask re-derived closed-form:
-      // (v & 63) is the nonneg mod-64 of the two's-complement sample,
-      // i.e. ((v % 64) + 64) % 64; complete frames only (i < frames·256)
       // delta-sign bits folded MSB-first over the first 62 deltas
       // (mirrors the Spark-side slice cap): b_f carries 2^(cap-f)
       // with cap = least(frames-1, 62)
-      """WITH s AS (SELECT doc_id, doc_id % 10 + 4 AS frames FROM documents),
-        |v AS (SELECT doc_id, frames, unnest(range(0, frames * 256)) AS i FROM s),
-        |x AS (SELECT doc_id, frames, i // 256 AS f,
-        |    CASE WHEN ((i // 256) + doc_id) % 3 = 0
-        |      THEN (((((doc_id * 31 + i * i * 7) % 65536) - 32768) % 64) + 64) % 64
-        |      ELSE ((doc_id * 31 + i * i * 7) % 65536) - 32768 END AS val
-        |  FROM v),
-        |e AS (SELECT doc_id, frames, f, sum(val * val) AS energy FROM x GROUP BY 1, 2, 3),
+      s"""WITH $gatedEnergyCtes,
         |d AS (SELECT doc_id, frames, f,
         |    CASE WHEN energy > lag(energy) OVER (PARTITION BY doc_id ORDER BY f)
         |      THEN 1 ELSE 0 END AS b FROM e),
@@ -4096,22 +3944,7 @@ annIvfSql),
         |SELECT fp.doc_id, fp.n_frames, fp.afp, g.rep_id, g.group_size
         |FROM fp JOIN g USING (afp, n_frames) ORDER BY doc_id""".stripMargin),
     Query("mm_audio_seg", (s, dir) => {
-      import s.implicits._
-      import graft.multimodal.Multimodal
-      val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          val n = ((id % 10 + 4) * 256 + id % 100).toInt
-          val samples = Array.tabulate(n) { i =>
-            val v = (((id * 31 + i.toLong * i * 7) % 65536) - 32768).toInt
-            if (((i >> 8) + id) % 3 == 0) v & 63 else v
-          }
-          val data = samples.flatMap { v =>
-            val u = v & 0xffff
-            Array((u & 0xff).toByte, ((u >> 8) & 0xff).toByte)
-          }
-          (id, Multimodal.synthWavHeader(1, 16000, 16, n * 2) ++ data)
-        })
-        .toDF("doc_id", "payload")
+      val payloads = docPayloads(s, dir)(gatedClip)
       payloads
         .select(col("doc_id"),
           Multimodal.pcmFrameEnergies(
@@ -4128,14 +3961,7 @@ annIvfSql),
           fp(size(col("ai")).cast("double") / col("n_frames").cast("double"), 4)
             .as("active_fp4"))
     }, oracle =
-      s"""WITH s AS (SELECT doc_id, doc_id % 10 + 4 AS frames FROM documents),
-        |v AS (SELECT doc_id, frames, unnest(range(0, frames * 256)) AS i FROM s),
-        |x AS (SELECT doc_id, frames, i // 256 AS f,
-        |    CASE WHEN ((i // 256) + doc_id) % 3 = 0
-        |      THEN (((((doc_id * 31 + i * i * 7) % 65536) - 32768) % 64) + 64) % 64
-        |      ELSE ((doc_id * 31 + i * i * 7) % 65536) - 32768 END AS val
-        |  FROM v),
-        |e AS (SELECT doc_id, frames, f, sum(val * val) AS energy FROM x GROUP BY 1, 2, 3),
+      s"""WITH $gatedEnergyCtes,
         |a AS (SELECT doc_id, frames,
         |    sum(CASE WHEN energy > 1048576 THEN 1 ELSE 0 END) AS n_active,
         |    min(CASE WHEN energy > 1048576 THEN f END) AS first_a,
@@ -4155,17 +3981,13 @@ annIvfSql),
     // substr(payload, off, size) at deploy time); the plumbing —
     // schema, explode shape, zero-shuffle narrowness — is real
     Query("mm_frame_sample", (s, dir) => {
-      import s.implicits._
-      import graft.multimodal.Multimodal
-      val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          (id, Multimodal.synthVideo(
-            width = (id % 8 + 1).toInt, height = (id % 4 + 1).toInt,
-            fps = Seq(1, 2, 5, 10)((id % 4).toInt),
-            frames = (id % 24 + 2).toInt,
-            fill = i => ((id * 31 + i * 7) % 251).toInt))
-        })
-        .toDF("doc_id", "payload")
+      val payloads = docPayloads(s, dir) { id =>
+        Multimodal.synthVideo(
+          width = (id % 8 + 1).toInt, height = (id % 4 + 1).toInt,
+          fps = Seq(1, 2, 5, 10)((id % 4).toInt),
+          frames = (id % 24 + 2).toInt,
+          fill = i => ((id * 31 + i * 7) % 251).toInt)
+      }
       Multimodal.frameSample(payloads, "doc_id", "payload")
     }, oracle =
       // the synthesized container's parameters re-derived from doc_id;
@@ -4195,21 +4017,17 @@ annIvfSql),
     // b) whose runs the codec must reproduce EXACTLY for the sum and
     // the 64 threshold bits to land.
     Query("mm_frame_decode", (s, dir) => {
-      import s.implicits._
-      import graft.multimodal.Multimodal
-      val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          (id, Multimodal.synthVideoRle(
-            width = 8, height = 8,
-            fps = Seq(1, 2, 5, 10)((id % 4).toInt),
-            frames = (id % 24 + 2).toInt,
-            fill = (f, pix) => {
-              val q = (id % 63 + 1).toInt
-              if (pix < q) ((id * 31 + f * 7) % 251).toInt
-              else ((id * 17 + f * 11) % 251).toInt
-            }))
-        })
-        .toDF("doc_id", "payload")
+      val payloads = docPayloads(s, dir) { id =>
+        Multimodal.synthVideoRle(
+          width = 8, height = 8,
+          fps = Seq(1, 2, 5, 10)((id % 4).toInt),
+          frames = (id % 24 + 2).toInt,
+          fill = (f, pix) => {
+            val q = (id % 63 + 1).toInt
+            if (pix < q) ((id * 31 + f * 7) % 251).toInt
+            else ((id * 17 + f * 11) % 251).toInt
+          })
+      }
       Multimodal.frameDecodeRle(payloads, "doc_id", "payload")
         .select(col("doc_id"), col("frame_idx"), col("ts_ms"),
           Multimodal.rasterSum(col("raster"), 64).as("sum_pix"),
@@ -4220,7 +4038,7 @@ annIvfSql),
       // rest b); Spark DECOMPRESSES the actual run pairs out of the
       // container — a codec bug (run order, count off-by-one, frame
       // offset drift) changes the pixel sum or flips threshold bits
-      """WITH v AS (SELECT doc_id,
+      s"""WITH v AS (SELECT doc_id,
         |    CASE doc_id % 4 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 5 ELSE 10 END AS fps,
         |    doc_id % 24 + 2 AS n
         |  FROM documents),
@@ -4234,10 +4052,8 @@ annIvfSql),
         |SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
         |  CAST(i * 1000 // fps AS BIGINT) AS ts_ms,
         |  CAST(s AS BIGINT) AS sum_pix,
-        |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[33:64])),
-        |    (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS BIGINT) AS phash_hi,
-        |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[1:32])),
-        |    (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS BIGINT) AS phash_lo
+        |  CAST(${aHashHalfSql(33, 64)} AS BIGINT) AS phash_hi,
+        |  CAST(${aHashHalfSql(1, 32)} AS BIGINT) AS phash_lo
         |FROM px2 ORDER BY doc_id, frame_idx""".stripMargin),
     // 45i — scene-cut detection over decoded frames: every frame
     // decoded (stride 1 through the same GVRL index/RLE codec as
@@ -4249,19 +4065,15 @@ annIvfSql),
     // scene, so threshold 64 separates exactly; the oracle recomputes
     // every pixel closed-form from (doc_id, frame_idx)
     Query("mm_scene_cut", (s, dir) => {
-      import s.implicits._
-      import graft.multimodal.Multimodal
-      val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          (id, Multimodal.synthVideoRle(
-            width = 8, height = 8,
-            fps = Seq(1, 2, 5, 10)((id % 4).toInt),
-            frames = (id % 24 + 2).toInt,
-            fill = (f, pix) =>
-              (((id * 31 + (f / 5) * 97 + pix * 7) % 251) +
-                (if (pix == 0) f % 3 else 0)).toInt))
-        })
-        .toDF("doc_id", "payload")
+      val payloads = docPayloads(s, dir) { id =>
+        Multimodal.synthVideoRle(
+          width = 8, height = 8,
+          fps = Seq(1, 2, 5, 10)((id % 4).toInt),
+          frames = (id % 24 + 2).toInt,
+          fill = (f, pix) =>
+            (((id * 31 + (f / 5) * 97 + pix * 7) % 251) +
+              (if (pix == 0) f % 3 else 0)).toInt)
+      }
       Multimodal.sceneCuts(payloads, "doc_id", "payload", rasterLen = 64, threshold = 64L)
     }, oracle =
       // every pixel of every frame recomputed closed-form; SAD over
@@ -4295,11 +4107,7 @@ annIvfSql),
     // Brightness-shifted copies land in one group — that's the
     // "perceptual": byte-level dedup would keep all three variants
     Query("mm_image_phash", (s, dir) => {
-      import s.implicits._
-      import graft.multimodal.Multimodal
-      val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .mapPartitions(_.map(id => (id, Multimodal.synthGray8x8(id))))
-        .toDF("doc_id", "payload")
+      val payloads = docPayloads(s, dir)(Multimodal.synthGray8x8)
       val hashed = payloads.select(col("doc_id"),
         Multimodal.aHashHalf(col("payload"), 32).as("phash_hi"),
         Multimodal.aHashHalf(col("payload"), 0).as("phash_lo"))
@@ -4312,17 +4120,7 @@ annIvfSql),
       // payload bytes — a 1-byte drift in the binary path flips a bit.
       // Bits compare pixel·64 vs the pixel sum (strict, integer), MSB
       // first fold per uint32 half
-      """WITH px AS (SELECT doc_id,
-        |    list_transform(range(0, 64),
-        |      i -> ((doc_id % 16) * 31 + i * 7) % 240 + doc_id % 3) AS ps
-        |  FROM documents),
-        |px2 AS (SELECT doc_id, ps, list_sum(ps) AS s FROM px),
-        |h AS (SELECT doc_id,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[33:64])),
-        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_hi,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[1:32])),
-        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_lo
-        |  FROM px2),
+      s"""WITH $phashCtes,
         |g AS (SELECT phash_hi, phash_lo, min(doc_id) AS rep_id, count(*) AS group_size
         |  FROM h GROUP BY 1, 2)
         |SELECT h.doc_id, CAST(h.phash_hi AS BIGINT) AS phash_hi,
@@ -4339,11 +4137,7 @@ annIvfSql),
     // with hamming as the sum of the two half XOR popcounts (the
     // 64-bit recompose overflows SQL BIGINT multiply).
     Query("dd_phash_neardup", (s, dir) => {
-      import s.implicits._
-      import graft.multimodal.Multimodal
-      val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .mapPartitions(_.map(id => (id, Multimodal.synthGray8x8(id))))
-        .toDF("doc_id", "payload")
+      val payloads = docPayloads(s, dir)(Multimodal.synthGray8x8)
       val hashed = payloads.select(col("doc_id"),
         shiftleft(Multimodal.aHashHalf(col("payload"), 32), 32)
           .bitwiseOR(Multimodal.aHashHalf(col("payload"), 0)).as("sig"))
@@ -4365,17 +4159,7 @@ annIvfSql),
       // would overflow BIGINT multiply); brute all-pairs over the
       // ≤ signature-domain distinct groups — the banded join is
       // lossless at hamming ≤ 7 by pigeonhole
-      """WITH px AS (SELECT doc_id,
-        |    list_transform(range(0, 64),
-        |      i -> ((doc_id % 16) * 31 + i * 7) % 240 + doc_id % 3) AS ps
-        |  FROM documents),
-        |px2 AS (SELECT doc_id, ps, list_sum(ps) AS s FROM px),
-        |h AS (SELECT doc_id,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[33:64])),
-        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_hi,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[1:32])),
-        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_lo
-        |  FROM px2),
+      s"""WITH $phashCtes,
         |g AS (SELECT phash_hi, phash_lo, min(doc_id) AS rep, count(*) AS n
         |  FROM h GROUP BY 1, 2)
         |SELECT a.rep AS doc_a, b.rep AS doc_b,
@@ -4394,11 +4178,7 @@ annIvfSql),
     // iteration runs on the REP graph (signature-domain-sized, ≪
     // corpus); image mass joins back from the group table.
     Query("mm_image_dedup_cluster", (s, dir) => {
-      import s.implicits._
-      import graft.multimodal.Multimodal
-      val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .mapPartitions(_.map(id => (id, Multimodal.synthGray8x8(id))))
-        .toDF("doc_id", "payload")
+      val payloads = docPayloads(s, dir)(Multimodal.synthGray8x8)
       val groups = payloads.select(col("doc_id"),
           shiftleft(Multimodal.aHashHalf(col("payload"), 32), 32)
             .bitwiseOR(Multimodal.aHashHalf(col("payload"), 0)).as("sig"))
@@ -4415,17 +4195,7 @@ annIvfSql),
         .agg(count(lit(1)).as("n_sigs"), sum("n").as("n_images"))
     }, oracle =
       // the dd_components recursive closure over the phash rep graph
-      """WITH RECURSIVE px AS (SELECT doc_id,
-        |    list_transform(range(0, 64),
-        |      i -> ((doc_id % 16) * 31 + i * 7) % 240 + doc_id % 3) AS ps
-        |  FROM documents),
-        |px2 AS (SELECT doc_id, ps, list_sum(ps) AS s FROM px),
-        |h AS (SELECT doc_id,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[33:64])),
-        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_hi,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[1:32])),
-        |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END) AS phash_lo
-        |  FROM px2),
+      s"""WITH RECURSIVE $phashCtes,
         |g AS (SELECT phash_hi, phash_lo, min(doc_id) AS rep, count(*) AS n
         |  FROM h GROUP BY 1, 2),
         |cand AS (SELECT a.rep AS doc_a, b.rep AS doc_b
@@ -4433,12 +4203,7 @@ annIvfSql),
         |  WHERE a.rep < b.rep
         |    AND bit_count(xor(a.phash_hi, b.phash_hi))
         |      + bit_count(xor(a.phash_lo, b.phash_lo)) <= 7),
-        |sym AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-        |        UNION ALL SELECT doc_b, doc_a FROM cand),
-        |lbl(node, label) AS (
-        |  SELECT rep, rep FROM g
-        |  UNION
-        |  SELECT s.dst, l.label FROM lbl l JOIN sym s ON s.src = l.node),
+        |${labelPropCtes("cand", "doc_a", "doc_b", "SELECT rep, rep FROM g")},
         |comp AS (SELECT node, min(label) AS component FROM lbl GROUP BY 1)
         |SELECT component, count(*) AS n_sigs, CAST(sum(n) AS BIGINT) AS n_images
         |FROM comp JOIN g ON g.rep = comp.node GROUP BY 1 ORDER BY 1""".stripMargin),
@@ -4452,12 +4217,8 @@ annIvfSql),
     // overflow), ONE double divide at the end. Narrow columnar map →
     // a 3-key rollup: zero joins, the shuffle is 3×tasks partial rows.
     Query("mm_channel_stats", (s, dir) => {
-      import s.implicits._
-      import graft.multimodal.Multimodal
       val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
-      val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .mapPartitions(_.map(id => (id, Multimodal.synthRgb8x8(id))))
-        .toDF("doc_id", "payload")
+      val payloads = docPayloads(s, dir)(Multimodal.synthRgb8x8)
       val slice = (c: Column) => col("payload").substr(c.cast("int") * lit(64) + lit(1), lit(64))
       val perChan = payloads
         .select(explode(array(lit(0L), lit(1L), lit(2L))).as("channel"), col("payload"))
@@ -4496,11 +4257,7 @@ annIvfSql),
     // mean hash-mismatches. Pure narrow map + posexplode — zero data
     // shuffles, resize at 100 TB is a projection.
     Query("mm_image_resize", (s, dir) => {
-      import s.implicits._
-      import graft.multimodal.Multimodal
-      val payloads = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .mapPartitions(_.map(id => (id, Multimodal.synthGray8x8(id))))
-        .toDF("doc_id", "payload")
+      val payloads = docPayloads(s, dir)(Multimodal.synthGray8x8)
       payloads
         .select(col("doc_id"), posexplode(Multimodal.boxDownsample8(col("payload"))))
         .toDF("doc_id", "pos", "px")
@@ -4575,11 +4332,7 @@ annIvfSql),
       // u = uint32(first 8 md5 hex chars of 'smp:doc_id') / 2^32 —
       // exact in double on both engines; rates are dyadic so the
       // comparison and 1/rate are float-exact too
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('smp:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      val u32 = md5Fold("'smp:' || CAST(doc_id AS VARCHAR)", 8)
       s"""SELECT doc_id, source, ${sqlFp("1.0 / rate", 4)} AS weight_fp4
         |FROM (SELECT doc_id, source,
         |    CASE WHEN source IN ('src0','src1') THEN 1.0
@@ -4607,11 +4360,7 @@ annIvfSql),
       // dyadic add, one exact dyadic division, one IEEE division:
       // both engines produce the identical double, so the top-100
       // SET matches bit-for-bit (doc_id tiebreak)
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('wsmp:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      val u32 = md5Fold("'wsmp:' || CAST(doc_id AS VARCHAR)", 8)
       s"""SELECT doc_id, source, n_chars, prio_fp4 FROM (
         |  SELECT doc_id, source, n_chars,
         |    ${sqlFp("CAST(n_chars AS DOUBLE) / ((CAST(" + u32 + " AS DOUBLE) + 0.5) / 4294967296.0)", 4)} AS prio_fp4,
@@ -4628,11 +4377,7 @@ annIvfSql),
         t(s, dir, "documents").select("doc_id", "source"), "doc_id",
         Seq("train" -> 0.75, "val" -> 0.125, "test" -> 0.125))
     }, oracle = {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('spl:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      val u32 = md5Fold("'spl:' || CAST(doc_id AS VARCHAR)", 8)
       s"""SELECT doc_id, source,
         |  CASE WHEN u < 0.75 THEN 'train' WHEN u < 0.875 THEN 'val' ELSE 'test' END AS split
         |FROM (SELECT doc_id, source,
@@ -4648,11 +4393,7 @@ annIvfSql),
       graft.sample.Sampling.kfold(
         t(s, dir, "documents").select("doc_id", "source"), "doc_id", k = 5)
     }, oracle = {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('kf:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      val u32 = md5Fold("'kf:' || CAST(doc_id AS VARCHAR)", 8)
       s"""SELECT doc_id, source, CAST(least(floor(u * 5), 4) AS BIGINT) AS fold
         |FROM (SELECT doc_id, source,
         |    CAST($u32 AS DOUBLE) / 4294967296.0 AS u FROM documents)
@@ -4750,11 +4491,7 @@ annIvfSql),
         t(s, dir, "documents").select("doc_id", "source"), "doc_id", "source",
         targetTotal = 200L)
     }, oracle = {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('tmp:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      val u32 = md5Fold("'tmp:' || CAST(doc_id AS VARCHAR)", 8)
       s"""WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
         |s AS (SELECT source, n, CAST(floor(sqrt(CAST(n AS DOUBLE))*1e6+0.5) AS BIGINT) AS s6 FROM c),
         |tot AS (SELECT CAST(sum(s6) AS BIGINT) AS stot FROM s),
@@ -4773,11 +4510,7 @@ annIvfSql),
       graft.sample.Sampling.reservoirPerStratum(
         t(s, dir, "documents").select("doc_id", "source"), "doc_id", "source", k = 5)
     }, oracle = {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('rsv:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      val u32 = md5Fold("'rsv:' || CAST(doc_id AS VARCHAR)", 8)
       s"""SELECT doc_id, source, rank_in_stratum FROM (
         |  SELECT doc_id, source,
         |    row_number() OVER (PARTITION BY source
@@ -4846,10 +4579,7 @@ annIvfSql),
     }, oracle = {
       // CDC mirror: per-position window-hash probes, cut list, bounds,
       // substring chunks — the u32(md5) is the shared cross-engine hash
-      val u32OfH = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef', substr(h, CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      val u32OfH = hexFold("h", 8)
       s"""WITH d AS (SELECT doc_id, text, length(text) AS n FROM documents),
         |probes AS (SELECT doc_id, i, md5(substr(text, CAST(i AS BIGINT) - 7, 8)) AS h
         |           FROM (SELECT *, unnest(CASE WHEN n >= 9 THEN range(8, n) ELSE [] END) AS i FROM d)),
@@ -4897,11 +4627,7 @@ annIvfSql),
       // shard = uint32(first 8 md5 hex chars of 'shf:doc_id') % 8;
       // pos ranks by the FULL md5 hex — hex strings are fixed-length
       // lowercase in both engines, so string order == numeric order
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('shf:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      val u32 = md5Fold("'shf:' || CAST(doc_id AS VARCHAR)", 8)
       s"""SELECT doc_id, shard, CAST(row_number() OVER (PARTITION BY shard
         |    ORDER BY md5('shf:' || CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) AS pos
         |FROM (SELECT doc_id, $u32 % 8 AS shard FROM documents)
@@ -5231,11 +4957,7 @@ annIvfSql),
           min(when(col("cums") >= expr("(ns + 1) DIV 2"), col("v4"))).as("s50_c4"),
           min(when(col("cums") >= expr("(9 * ns + 9) DIV 10"), col("v4"))).as("s90_c4"))
     }, oracle = {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('qs:' || CAST(event_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      val u32 = md5Fold("'qs:' || CAST(event_id AS VARCHAR)", 8)
       s"""WITH e AS (SELECT event_type, ${sqlFp("\"value\"", 4)} AS v4,
         |    CASE WHEN $u32 < 536870912 THEN 1 ELSE 0 END AS in_s FROM events),
         |h AS (SELECT event_type, v4, count(*) AS k, sum(in_s) AS ks FROM e GROUP BY 1, 2),
@@ -5317,22 +5039,7 @@ annIvfSql),
     Query("src_cdc_apply", (s, dir) => {
       val base = t(s, dir, "orders").select(col("o_orderkey").as("key"),
         col("o_orderstatus").as("status"), fp(col("o_totalprice"), 2).as("total_c"))
-      val li = t(s, dir, "lineitem")
-      val chg = li.select(
-        when(pmod(col("l_linenumber"), lit(3)) === 2, col("l_orderkey") + 600000000L)
-          .otherwise(col("l_orderkey")).as("key"),
-        (((col("l_linenumber").cast("long") * 34359738368L +
-            fp(col("l_extendedprice"), 2)) * 4 +
-          pmod(col("l_linenumber"), lit(3)).cast("long")) * 4 +
-          when(col("l_returnflag") === "A", 0L)
-            .when(col("l_returnflag") === "N", 1L).otherwise(2L)).as("packed"))
-      val latest = chg.groupBy("key").agg(max("packed").as("p"))
-        .select(col("key"),
-          when(pmod(expr("p DIV 4"), lit(4)) === 0, "D")
-            .when(pmod(expr("p DIV 4"), lit(4)) === 1, "U").otherwise("I").as("op"),
-          when(pmod(col("p"), lit(4)) === 0, "A")
-            .when(pmod(col("p"), lit(4)) === 1, "N").otherwise("R").as("new_status"),
-          pmod(expr("p DIV 16"), lit(34359738368L)).as("new_total_c"))
+      val latest = cdcLatest(cdcChanges(s, dir))
       base.join(latest, Seq("key"), "full_outer")
         .where(col("op").isNull || col("op") =!= "D")
         .select(col("key"),
@@ -5341,24 +5048,11 @@ annIvfSql),
           when(col("op").isNull, col("total_c")).otherwise(col("new_total_c"))
             .as("total_c"))
     }, oracle =
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT o_orderkey AS key, o_orderstatus AS status,
         |    CAST(floor(o_totalprice*100+0.5) AS BIGINT) AS total_c
         |  FROM orders),
-        |chg AS (
-        |  SELECT CASE WHEN l_linenumber % 3 = 2 THEN l_orderkey + 600000000
-        |              ELSE l_orderkey END AS key,
-        |    ((CAST(l_linenumber AS BIGINT) * 34359738368
-        |        + CAST(floor(l_extendedprice*100+0.5) AS BIGINT)) * 4
-        |      + l_linenumber % 3) * 4
-        |      + CASE l_returnflag WHEN 'A' THEN 0 WHEN 'N' THEN 1 ELSE 2 END AS packed
-        |  FROM lineitem),
-        |latest AS (
-        |  SELECT key,
-        |    CASE (p // 4) % 4 WHEN 0 THEN 'D' WHEN 1 THEN 'U' ELSE 'I' END AS op,
-        |    CASE p % 4 WHEN 0 THEN 'A' WHEN 1 THEN 'N' ELSE 'R' END AS new_status,
-        |    (p // 16) % 34359738368 AS new_total_c
-        |  FROM (SELECT key, max(packed) AS p FROM chg GROUP BY 1))
+        |$cdcLatestCtes
         |SELECT coalesce(b.key, l.key) AS key,
         |  CASE WHEN l.key IS NULL THEN b.status ELSE l.new_status END AS status,
         |  CASE WHEN l.key IS NULL THEN b.total_c ELSE l.new_total_c END AS total_c
@@ -5483,17 +5177,9 @@ annIvfSql),
     // min/max/counts collapse map-side; the file-stats table is
     // inventory-sized, the final rollup 2 rows.
     Query("src_stats_pruning", (s, dir) => {
-      val l0 = t(s, dir, "lineitem")
-      val dayMs = 86400000L
       val lo = 883612800000L // 1998-01-01
       val hi = 899251200000L // 1998-07-01
-      val base = l0.select(col("l_orderkey"), tsMs(l0, "l_shipdate").as("ms"))
-        .withColumn("day", expr(s"(ms - pmod(ms, $dayMs)) DIV $dayMs"))
-      val layouts = base.select(explode(array(
-          struct(lit("insert_order").as("layout"), expr("l_orderkey DIV 200").as("fid")),
-          struct(lit("date_partitioned").as("layout"), expr("day DIV 7").as("fid")))).as("lf"),
-        col("ms"))
-      layouts.groupBy(col("lf.layout").as("layout"), col("lf.fid").as("fid"))
+      fileLayouts(s, dir).groupBy(col("lf.layout").as("layout"), col("lf.fid").as("fid"))
         .agg(min("ms").as("mn"), max("ms").as("mx"), count(lit(1)).as("n"),
           sum(when(col("ms") >= lo && col("ms") < hi, 1L).otherwise(0L)).as("nm"))
         .groupBy("layout")
@@ -5502,12 +5188,7 @@ annIvfSql),
           sum(when(col("mx") >= lo && col("mn") < hi, col("n")).otherwise(0L)).as("rows_scanned"),
           sum("nm").as("rows_matched"))
     }, oracle =
-      """WITH base AS (SELECT l_orderkey, epoch_ms(l_shipdate) AS ms,
-        |    (epoch_ms(l_shipdate) - ((epoch_ms(l_shipdate) % 86400000 + 86400000) % 86400000)) // 86400000 AS day
-        |  FROM lineitem),
-        |lay AS (SELECT 'insert_order' AS layout, l_orderkey // 200 AS fid, ms FROM base
-        |        UNION ALL
-        |        SELECT 'date_partitioned' AS layout, day // 7 AS fid, ms FROM base),
+      s"""WITH $fileLayoutCtes,
         |pf AS (SELECT layout, fid, min(ms) AS mn, max(ms) AS mx, count(*) AS n,
         |         CAST(sum(CASE WHEN ms >= 883612800000 AND ms < 899251200000 THEN 1 ELSE 0 END) AS BIGINT) AS nm
         |       FROM lay GROUP BY 1, 2)
@@ -5525,16 +5206,8 @@ annIvfSql),
     // the pruning audit; the quantified case for date-partitioning
     // a table that carries a retention policy.
     Query("src_ttl_retention", (s, dir) => {
-      val l0 = t(s, dir, "lineitem")
-      val dayMs = 86400000L
       val cut = 852076800000L // 1997-01-01
-      val base = l0.select(col("l_orderkey"), tsMs(l0, "l_shipdate").as("ms"))
-        .withColumn("day", expr(s"(ms - pmod(ms, $dayMs)) DIV $dayMs"))
-      val layouts = base.select(explode(array(
-          struct(lit("insert_order").as("layout"), expr("l_orderkey DIV 200").as("fid")),
-          struct(lit("date_partitioned").as("layout"), expr("day DIV 7").as("fid")))).as("lf"),
-        col("ms"))
-      layouts.groupBy(col("lf.layout").as("layout"), col("lf.fid").as("fid"))
+      fileLayouts(s, dir).groupBy(col("lf.layout").as("layout"), col("lf.fid").as("fid"))
         .agg(count(lit(1)).as("n"),
           sum(when(col("ms") < cut, 1L).otherwise(0L)).as("nexp"))
         .groupBy("layout")
@@ -5545,12 +5218,7 @@ annIvfSql),
           sum("nexp").as("rows_deleted"),
           sum(when(col("nexp") > 0, col("n") - col("nexp")).otherwise(0L)).as("rows_rewritten"))
     }, oracle =
-      """WITH base AS (SELECT l_orderkey, epoch_ms(l_shipdate) AS ms,
-        |    (epoch_ms(l_shipdate) - ((epoch_ms(l_shipdate) % 86400000 + 86400000) % 86400000)) // 86400000 AS day
-        |  FROM lineitem),
-        |lay AS (SELECT 'insert_order' AS layout, l_orderkey // 200 AS fid, ms FROM base
-        |        UNION ALL
-        |        SELECT 'date_partitioned' AS layout, day // 7 AS fid, ms FROM base),
+      s"""WITH $fileLayoutCtes,
         |pf AS (SELECT layout, fid, count(*) AS n,
         |         CAST(sum(CASE WHEN ms < 852076800000 THEN 1 ELSE 0 END) AS BIGINT) AS nexp
         |       FROM lay GROUP BY 1, 2)
@@ -5579,22 +5247,7 @@ annIvfSql),
     Query("src_ivm", (s, dir) => {
       val base = t(s, dir, "orders").select(col("o_orderkey").as("key"),
         col("o_orderstatus").as("status"), fp(col("o_totalprice"), 2).as("total_c"))
-      val li = t(s, dir, "lineitem")
-      val chg = li.select(
-        when(pmod(col("l_linenumber"), lit(3)) === 2, col("l_orderkey") + 600000000L)
-          .otherwise(col("l_orderkey")).as("key"),
-        (((col("l_linenumber").cast("long") * 34359738368L +
-            fp(col("l_extendedprice"), 2)) * 4 +
-          pmod(col("l_linenumber"), lit(3)).cast("long")) * 4 +
-          when(col("l_returnflag") === "A", 0L)
-            .when(col("l_returnflag") === "N", 1L).otherwise(2L)).as("packed"))
-      val latest = chg.groupBy("key").agg(max("packed").as("p"))
-        .select(col("key"),
-          when(pmod(expr("p DIV 4"), lit(4)) === 0, "D")
-            .when(pmod(expr("p DIV 4"), lit(4)) === 1, "U").otherwise("I").as("op"),
-          when(pmod(col("p"), lit(4)) === 0, "A")
-            .when(pmod(col("p"), lit(4)) === 1, "N").otherwise("R").as("new_status"),
-          pmod(expr("p DIV 16"), lit(34359738368L)).as("new_total_c"))
+      val latest = cdcLatest(cdcChanges(s, dir))
         .localCheckpoint() // feeds deltas AND the recompute merge
       // maintenance path: retractions + additions, changelog-sized
       val deltas = latest.join(base, Seq("key"), "left")
@@ -5626,20 +5279,7 @@ annIvfSql),
         .agg(count(lit(1)).as("n_direct"), sum("tc").as("sum_direct_c"))
       maintained.join(direct, Seq("status"), "full_outer")
     }, oracle =
-      """WITH chg AS (
-        |  SELECT CASE WHEN l_linenumber % 3 = 2 THEN l_orderkey + 600000000
-        |              ELSE l_orderkey END AS key,
-        |    ((CAST(l_linenumber AS BIGINT) * 34359738368
-        |        + CAST(floor(l_extendedprice*100+0.5) AS BIGINT)) * 4
-        |      + l_linenumber % 3) * 4
-        |      + CASE l_returnflag WHEN 'A' THEN 0 WHEN 'N' THEN 1 ELSE 2 END AS packed
-        |  FROM lineitem),
-        |latest AS (
-        |  SELECT key,
-        |    CASE (p // 4) % 4 WHEN 0 THEN 'D' WHEN 1 THEN 'U' ELSE 'I' END AS op,
-        |    CASE p % 4 WHEN 0 THEN 'A' WHEN 1 THEN 'N' ELSE 'R' END AS new_status,
-        |    (p // 16) % 34359738368 AS new_total_c
-        |  FROM (SELECT key, max(packed) AS p FROM chg GROUP BY 1)),
+      s"""WITH $cdcLatestCtes,
         |base AS (SELECT o_orderkey AS key, o_orderstatus AS status,
         |    CAST(floor(o_totalprice*100+0.5) AS BIGINT) AS total_c FROM orders),
         |merged AS (
@@ -5663,15 +5303,7 @@ annIvfSql),
     // exchange). Changelog-sized work only; the 100 TB base is never
     // touched — SCD2 is a pure function of the change stream.
     Query("src_scd2", (s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val chg = li.select(
-        when(pmod(col("l_linenumber"), lit(3)) === 2, col("l_orderkey") + 600000000L)
-          .otherwise(col("l_orderkey")).as("key"),
-        (((col("l_linenumber").cast("long") * 34359738368L +
-            fp(col("l_extendedprice"), 2)) * 4 +
-          pmod(col("l_linenumber"), lit(3)).cast("long")) * 4 +
-          when(col("l_returnflag") === "A", 0L)
-            .when(col("l_returnflag") === "N", 1L).otherwise(2L)).as("packed"))
+      val chg = cdcChanges(s, dir)
         .distinct()
       val wAll = Window.partitionBy("key").orderBy("packed")
       val versions = chg
@@ -5686,14 +5318,8 @@ annIvfSql),
           col("nxt").isNull.cast("long").as("is_current"))
       versions
     }, oracle =
-      """WITH chg AS (
-        |  SELECT DISTINCT
-        |    CASE WHEN l_linenumber % 3 = 2 THEN l_orderkey + 600000000
-        |         ELSE l_orderkey END AS key,
-        |    ((CAST(l_linenumber AS BIGINT) * 34359738368
-        |        + CAST(floor(l_extendedprice*100+0.5) AS BIGINT)) * 4
-        |      + l_linenumber % 3) * 4
-        |      + CASE l_returnflag WHEN 'A' THEN 0 WHEN 'N' THEN 1 ELSE 2 END AS packed
+      s"""WITH chg AS (
+        |  SELECT DISTINCT $cdcChangeCols
         |  FROM lineitem),
         |led AS (
         |  SELECT key, packed,
@@ -5729,11 +5355,7 @@ annIvfSql),
         .agg(count(lit(1)).as("n_kept"), sum("vec_id").as("id_sum"),
           fp(max("u"), 6).as("max_u_fp6"))
     }, oracle = {
-      val u32 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-        | list_transform(range(1, 9),
-        |   i -> CAST(strpos('0123456789abcdef',
-        |          substr(md5('bal:' || CAST(vec_id AS VARCHAR)), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-        | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+      val u32 = md5Fold("'bal:' || CAST(vec_id AS VARCHAR)", 8)
       s"""WITH e AS (SELECT vec_id, label,
         |    CAST($u32 AS DOUBLE) / 4294967296.0 AS u FROM embeddings),
         |k AS (SELECT min(cn) AS k FROM (
@@ -5910,6 +5532,45 @@ annIvfSql),
     })
   )
 
+  /** lineitem ship times under two file layouts of the same rows: a
+    * struct `lf(layout, fid)` per row — insert-ordered files
+    * (l_orderkey DIV 200) and weekly date-partitioned files — and
+    * `ms`. */
+  private def fileLayouts(s: SparkSession, dir: String): DataFrame = {
+    val l0 = t(s, dir, "lineitem")
+    val dayMs = 86400000L
+    val base = l0.select(col("l_orderkey"), tsMs(l0, "l_shipdate").as("ms"))
+      .withColumn("day", expr(s"(ms - pmod(ms, $dayMs)) DIV $dayMs"))
+    base.select(explode(array(
+        struct(lit("insert_order").as("layout"), expr("l_orderkey DIV 200").as("fid")),
+        struct(lit("date_partitioned").as("layout"), expr("day DIV 7").as("fid")))).as("lf"),
+      col("ms"))
+  }
+
+  /** The CDC changelog derived from lineitem (see src_cdc_apply):
+    * `key` and `packed` = ((seq·2³⁵ + cents)·4 + op rank)·4 + flag
+    * rank, which totally orders one key's changes. */
+  private def cdcChanges(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "lineitem").select(
+      when(pmod(col("l_linenumber"), lit(3)) === 2, col("l_orderkey") + 600000000L)
+        .otherwise(col("l_orderkey")).as("key"),
+      (((col("l_linenumber").cast("long") * 34359738368L +
+          fp(col("l_extendedprice"), 2)) * 4 +
+        pmod(col("l_linenumber"), lit(3)).cast("long")) * 4 +
+        when(col("l_returnflag") === "A", 0L)
+          .when(col("l_returnflag") === "N", 1L).otherwise(2L)).as("packed"))
+
+  /** Latest change per key, decoded: `op`, `new_status`,
+    * `new_total_c`. */
+  private def cdcLatest(chg: DataFrame): DataFrame =
+    chg.groupBy("key").agg(max("packed").as("p"))
+      .select(col("key"),
+        when(pmod(expr("p DIV 4"), lit(4)) === 0, "D")
+          .when(pmod(expr("p DIV 4"), lit(4)) === 1, "U").otherwise("I").as("op"),
+        when(pmod(col("p"), lit(4)) === 0, "A")
+          .when(pmod(col("p"), lit(4)) === 1, "N").otherwise("R").as("new_status"),
+        pmod(expr("p DIV 16"), lit(34359738368L)).as("new_total_c"))
+
   /** Deterministic synthetic URL from a doc id — spellings vary by id
     * residues (case, www, :443, trailing slash, utm param, fragment)
     * so normalization has real work on every row and distinct ids can
@@ -5925,9 +5586,6 @@ annIvfSql),
 
   // ---- oracle SQL ----------------------------------------------------
 
-  private def sqlFp(e: String, scale: Int): String =
-    s"CAST(floor(($e)*1e$scale+0.5) AS BIGINT)"
-
   /** SQL twin of the adaptive band-join bucket cap (max(64, ⌊√N⌋), N =
     * corpus rows — Dedup.lshCandidatePairs / hammingBandPairs with
     * maxBucket <= 0). Ends without WITH so callers splice it as the
@@ -5942,6 +5600,40 @@ annIvfSql),
        | list_transform(range(1, 17),
        |   i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))),
        | (acc, v) -> acc + v)""".stripMargin.replace("\n", " ")
+
+  /** [[gatedClip]] re-derived closed-form: `s`, `v`, `x(doc_id,
+    * frames, f, val)` per complete-frame sample (the quiet mask
+    * (v & 63) as the nonneg mod-64 of the two's-complement sample),
+    * and the per-frame energy `e(doc_id, frames, f, energy)`. */
+  private def gatedEnergyCtes: String =
+    """s AS (SELECT doc_id, doc_id % 10 + 4 AS frames FROM documents),
+      |v AS (SELECT doc_id, frames, unnest(range(0, frames * 256)) AS i FROM s),
+      |x AS (SELECT doc_id, frames, i // 256 AS f,
+      |    CASE WHEN ((i // 256) + doc_id) % 3 = 0
+      |      THEN (((((doc_id * 31 + i * i * 7) % 65536) - 32768) % 64) + 64) % 64
+      |      ELSE ((doc_id * 31 + i * i * 7) % 65536) - 32768 END AS val
+      |  FROM v),
+      |e AS (SELECT doc_id, frames, f, sum(val * val) AS energy FROM x GROUP BY 1, 2, 3)""".stripMargin
+
+  /** aHash half over the raster list `ps` with pixel sum `s`: bits
+    * ps[lo..hi] (pixel·64 > sum, strict integer), MSB-first fold —
+    * matches Multimodal.aHashHalf. */
+  private def aHashHalfSql(lo: Int, hi: Int): String =
+    s"""list_reduce(list_prepend(CAST(0 AS BIGINT), list_reverse(ps[$lo:$hi])),
+       |      (a, p) -> a * 2 + CASE WHEN p * 64 > s THEN 1 ELSE 0 END)""".stripMargin
+
+  /** Closed-form synthGray8x8 rasters `px`, their sums `px2` and the
+    * two aHash halves `h(doc_id, phash_hi, phash_lo)`. */
+  private def phashCtes: String =
+    s"""px AS (SELECT doc_id,
+       |    list_transform(range(0, 64),
+       |      i -> ((doc_id % 16) * 31 + i * 7) % 240 + doc_id % 3) AS ps
+       |  FROM documents),
+       |px2 AS (SELECT doc_id, ps, list_sum(ps) AS s FROM px),
+       |h AS (SELECT doc_id,
+       |    ${aHashHalfSql(33, 64)} AS phash_hi,
+       |    ${aHashHalfSql(1, 32)} AS phash_lo
+       |  FROM px2)""".stripMargin
 
   /** Shared PQ CTE chain: stride codebook `cb(sub, code, cvec)`,
     * subvector slices, and `best` = per-(id, sub) distances ranked so
@@ -5961,6 +5653,54 @@ annIvfSql),
       |      FROM sl JOIN cb ON cb.sub = sl.sub),
       |best AS (SELECT id, sub, code, d2,
       |           row_number() OVER (PARTITION BY id, sub ORDER BY d2, code) AS rn FROM d)""".stripMargin
+
+  /** PQ-ADC lookup after [[pqCtes]]: `qsl` slices every query vector
+    * (vec_id % 50 = 0) into subvectors, `lut(query_id, sub, code,
+    * pd6)` is its fp6 distance to each codebook entry. */
+  private def pqLutCtes: String =
+    s"""qsl AS (SELECT q.vec_id AS query_id, s.sub,
+      |          list_slice(q.embedding, s.sub*16 + 1, s.sub*16 + 16) AS qx
+      |        FROM embeddings q, subs s WHERE q.vec_id % 50 = 0),
+      |lut AS (SELECT q.query_id, q.sub, cb.code,
+      |          ${sqlFp(s"${dot16("qx", "qx")} - 2.0*${dot16("qx", "cvec")} + ${dot16("cvec", "cvec")}", 6)} AS pd6
+      |        FROM qsl q JOIN cb ON cb.sub = q.sub)""".stripMargin
+
+  /** SQL twin of [[containmentAug]] as CTE `name(doc_id, text)`. */
+  private def containmentAugCte(name: String): String =
+    s"""$name AS (SELECT d.doc_id,
+      |    CASE WHEN d.doc_id % 4 = 1 AND b.text IS NOT NULL
+      |      THEN d.text || ' ' || b.text ELSE d.text END AS text
+      |  FROM documents d LEFT JOIN documents b ON b.doc_id = d.doc_id - 1)""".stripMargin
+
+  /** SQL twin of [[fileLayouts]]: `base`, `lay(layout, fid, ms)`. */
+  private def fileLayoutCtes: String =
+    """base AS (SELECT l_orderkey, epoch_ms(l_shipdate) AS ms,
+      |    (epoch_ms(l_shipdate) - ((epoch_ms(l_shipdate) % 86400000 + 86400000) % 86400000)) // 86400000 AS day
+      |  FROM lineitem),
+      |lay AS (SELECT 'insert_order' AS layout, l_orderkey // 200 AS fid, ms FROM base
+      |        UNION ALL
+      |        SELECT 'date_partitioned' AS layout, day // 7 AS fid, ms FROM base)""".stripMargin
+
+  /** SQL twin of [[cdcChanges]]'s select list. */
+  private def cdcChangeCols: String =
+    """CASE WHEN l_linenumber % 3 = 2 THEN l_orderkey + 600000000
+      |         ELSE l_orderkey END AS key,
+      |    ((CAST(l_linenumber AS BIGINT) * 34359738368
+      |        + CAST(floor(l_extendedprice*100+0.5) AS BIGINT)) * 4
+      |      + l_linenumber % 3) * 4
+      |      + CASE l_returnflag WHEN 'A' THEN 0 WHEN 'N' THEN 1 ELSE 2 END AS packed""".stripMargin
+
+  /** SQL twin of [[cdcLatest]] over [[cdcChanges]]: `chg`, `latest`. */
+  private def cdcLatestCtes: String =
+    s"""chg AS (
+      |  SELECT $cdcChangeCols
+      |  FROM lineitem),
+      |latest AS (
+      |  SELECT key,
+      |    CASE (p // 4) % 4 WHEN 0 THEN 'D' WHEN 1 THEN 'U' ELSE 'I' END AS op,
+      |    CASE p % 4 WHEN 0 THEN 'A' WHEN 1 THEN 'N' ELSE 'R' END AS new_status,
+      |    (p // 16) % 34359738368 AS new_total_c
+      |  FROM (SELECT key, max(packed) AS p FROM chg GROUP BY 1))""".stripMargin
 
   /** SQL twin of [[synthUrl]]. */
   private val synthUrlSql: String =
@@ -6054,11 +5794,7 @@ annIvfSql),
     * the transform lambda, so a plain `i` here would capture-shadow
     * an outer column named i referenced by the caller's expression
     * (it did — dd_dup_ngrams' gram position). */
-  private def shingleKeySql(e: String): String =
-    s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
-      | list_transform(range(1, 16),
-      |   _ki -> CAST(strpos('0123456789abcdef', substr(md5($e), CAST(_ki AS INT), 1)) - 1 AS BIGINT))),
-      | (_ka, _kv) -> _ka*16 + _kv)""".stripMargin.replace("\n", " ")
+  private def shingleKeySql(e: String): String = md5Fold(e, 15, "_ki", "_ka", "_kv")
 
   /** Winnow core CTE chain over `src` (needs doc_id, text): word
     * 3-gram 60-bit hashes, w=4 sliding min with rightmost tie-break —
@@ -6079,11 +5815,7 @@ annIvfSql),
       |  FROM wpick)""".stripMargin
 
   /** First 8 md5 hex chars of `s` as a BIGINT (uint32 range). */
-  private val hexHashSql =
-    """list_reduce(list_prepend(CAST(0 AS BIGINT),
-      | list_transform(range(1, 9),
-      |   i -> CAST(strpos('0123456789abcdef', substr(md5(s), CAST(i AS INT), 1)) - 1 AS BIGINT))),
-      | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
+  private def hexHashSql = md5Fold("s", 8)
 
   /** langId oracle: per-language stopword-hit counts, first-wins argmax. */
   private val langIdSql: String = {
@@ -6096,12 +5828,26 @@ annIvfSql),
     s"CASE $cases END"
   }
 
+  /** char-trigram langId oracle: per-language profile-hit counts over
+    * the lowercased text's trigrams, first-wins argmax. */
+  private def langIdNgramSql: String = {
+    val scores = TextAnalysis.DefaultTrigramProfiles.map { case (lang, grams) =>
+      val inList = grams.map(g => s"'${g.replace("'", "''")}'").mkString(", ")
+      lang -> (s"len(list_filter(CASE WHEN length(lower(text)) < 3 THEN [] " +
+        s"ELSE list_transform(range(1, length(lower(text)) - 1), i -> substr(lower(text), CAST(i AS INT), 3)) END, " +
+        s"g -> g IN ($inList)))")
+    }
+    val best = s"greatest(${scores.map(_._2).mkString(", ")})"
+    val cases = scores.map { case (lang, e) => s"WHEN $e = $best THEN '$lang'" }.mkString(" ")
+    s"CASE $cases END"
+  }
+
   /** simhash core CTEs: per-doc 32-bit signature from 32 per-bit
     * signed sums over distinct tokens. Ends with `sigs(doc_id,
     * simhash)` for reuse by the pair join oracle. */
   private val simhashCoreCte: String = {
     val bitSums = (0 until 32).map { b =>
-      val nib = s"(strpos('0123456789abcdef', substr(md5(t), ${b / 4 + 1}, 1)) - 1)"
+      val nib = s"(${hexDigit("md5(t)", s"${b / 4 + 1}")})"
       s"sum(CASE WHEN (($nib >> ${b % 4}) & 1) = 1 THEN 1 ELSE -1 END) AS s$b"
     }.mkString(",\n    ")
     val combine = (0 until 32).map(b => s"(CASE WHEN s$b > 0 THEN ${1L << b} ELSE 0 END)").mkString(" + ")
@@ -6148,7 +5894,7 @@ annIvfSql),
     * overflows DuckDB's left shift). */
   private val simhash64CoreCte: String = {
     val bitSums = (0 until 64).map { b =>
-      val nib = s"(strpos('0123456789abcdef', substr(md5(t), ${b / 4 + 1}, 1)) - 1)"
+      val nib = s"(${hexDigit("md5(t)", s"${b / 4 + 1}")})"
       s"sum(CASE WHEN (($nib >> ${b % 4}) & 1) = 1 THEN 1 ELSE -1 END) AS s$b"
     }.mkString(",\n    ")
     val combine = (0 until 64).map { b =>
@@ -6205,18 +5951,14 @@ annIvfSql),
       |   ELSE 13 END AS BIGINT) AS byte_len
       |FROM documents ORDER BY doc_id""".stripMargin
 
-  /** sim_ann_lsh_exact oracle: recompute the md5-derived hyperplanes
+  /** LSH bucketing CTEs, ending in `projs(vec_id, p, s)` and
+    * `b(vec_id, bucket)`: the md5-derived hyperplanes
     * (Similarity.planeComponentValue: uint24 of first-6 md5 hex of
-    * "p_d" / 2^24 - 0.5), sign-pattern buckets via the SAME left-fold
-    * dot, bucket self-join, fold-order cosine, windowed top-k. */
-  private val annLshExactSql: String = {
-    val hex6 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-      | list_transform(range(1, 7),
-      |  j -> CAST(strpos('0123456789abcdef',
-      |         substr(md5(CAST(p AS VARCHAR) || '_' || CAST(d AS VARCHAR)), CAST(j AS INT), 1)) - 1 AS BIGINT))),
-      | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
-    s"""WITH planes AS (
-      |  SELECT p, d, (CAST($hex6 AS DOUBLE) / 16777216.0 - 0.5) AS pc
+    * "p_d" / 2^24 - 0.5) and sign-pattern buckets via the SAME
+    * left-fold dot. */
+  private def lshBucketCtes: String =
+    s"""planes AS (
+      |  SELECT p, d, (CAST(${md5Fold("CAST(p AS VARCHAR) || '_' || CAST(d AS VARCHAR)", 6, "j")} AS DOUBLE) / 16777216.0 - 0.5) AS pc
       |  FROM range(0, 8) t1(p) CROSS JOIN range(0, 64) t2(d)),
       |plane_lists AS (SELECT p, list(pc ORDER BY d) AS plane FROM planes GROUP BY p),
       |projs AS (SELECT e.vec_id, pl.p,
@@ -6225,7 +5967,12 @@ annIvfSql),
       |      (a, v) -> a + v) AS s
       |  FROM embeddings e CROSS JOIN plane_lists pl),
       |b AS (SELECT vec_id, array_to_string(list(CASE WHEN s > 0 THEN '1' ELSE '0' END ORDER BY p), '') AS bucket
-      |      FROM projs GROUP BY vec_id),
+      |      FROM projs GROUP BY vec_id)""".stripMargin
+
+  /** sim_ann_lsh_exact oracle: [[lshBucketCtes]], bucket self-join,
+    * fold-order cosine, windowed top-k. */
+  private val annLshExactSql: String =
+    s"""WITH $lshBucketCtes,
       |scored AS (SELECT q.vec_id AS query_id, d.vec_id AS id,
       |    ${sqlFp(cosSql("qe.embedding", "de.embedding"), 6)} AS cos_fp6
       |  FROM b q JOIN b d ON q.bucket = d.bucket AND q.vec_id != d.vec_id
@@ -6234,7 +5981,6 @@ annIvfSql),
       |  WHERE q.vec_id % 50 = 0),
       |topk AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_fp6 DESC, id) AS rk FROM scored)
       |SELECT query_id, id, cos_fp6 FROM topk WHERE rk <= 5 ORDER BY query_id, cos_fp6, id""".stripMargin
-  }
 
   /** sim_ann_lsh oracle (guards ON): the bucket-size cap is a HAVING
     * filter, and query-directed multi-probe flips the nprobe=2 sign
@@ -6242,23 +5988,8 @@ annIvfSql),
     * plane projections are deterministic md5 folds, the flip order is
     * (abs(s), plane) ascending, and a probe set is the distinct home
     * bucket plus its flips. */
-  private val annLshGuardedSql: String = {
-    val hex6 = """list_reduce(list_prepend(CAST(0 AS BIGINT),
-      | list_transform(range(1, 7),
-      |  j -> CAST(strpos('0123456789abcdef',
-      |         substr(md5(CAST(p AS VARCHAR) || '_' || CAST(d AS VARCHAR)), CAST(j AS INT), 1)) - 1 AS BIGINT))),
-      | (a, v) -> a*16 + v)""".stripMargin.replace("\n", " ")
-    s"""WITH planes AS (
-      |  SELECT p, d, (CAST($hex6 AS DOUBLE) / 16777216.0 - 0.5) AS pc
-      |  FROM range(0, 8) t1(p) CROSS JOIN range(0, 64) t2(d)),
-      |plane_lists AS (SELECT p, list(pc ORDER BY d) AS plane FROM planes GROUP BY p),
-      |projs AS (SELECT e.vec_id, pl.p,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * pl.plane[i])),
-      |      (a, v) -> a + v) AS s
-      |  FROM embeddings e CROSS JOIN plane_lists pl),
-      |b AS (SELECT vec_id, array_to_string(list(CASE WHEN s > 0 THEN '1' ELSE '0' END ORDER BY p), '') AS bucket
-      |      FROM projs GROUP BY vec_id),
+  private val annLshGuardedSql: String =
+    s"""WITH $lshBucketCtes,
       |okb AS (SELECT bucket FROM b GROUP BY bucket HAVING count(*) <= 1000),
       |d2 AS (SELECT b.* FROM b JOIN okb USING (bucket)),
       |home AS (SELECT vec_id, bucket FROM b WHERE vec_id % 50 = 0),
@@ -6280,7 +6011,30 @@ annIvfSql),
       |  JOIN embeddings de ON de.vec_id = d.vec_id),
       |topk AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_fp6 DESC, id) AS rk FROM scored)
       |SELECT query_id, id, cos_fp6 FROM topk WHERE rk <= 5 ORDER BY query_id, cos_fp6, id""".stripMargin
+
+  /** SQL twin of the stride centroid pick (Similarity.ivfCentroids):
+    * `cnt` and `cents(centroid_id, cvec)`, every ⌈n/k⌉-th vec_id, with
+    * k = 16 or, when `adaptive`, [[adaptiveCells]]. */
+  private def ivfCentsCtes(adaptive: Boolean): String = {
+    val (cnt, stride) =
+      if (adaptive) ("count(*) AS c, greatest(16, count(*) // 125) AS kc", "(c + kc - 1) // kc")
+      else ("count(*) AS c", "(c + 15) // 16")
+    s"""cnt AS (SELECT $cnt FROM embeddings),
+       |cents AS (SELECT vec_id AS centroid_id, embedding AS cvec
+       |          FROM embeddings, cnt WHERE vec_id % greatest(1, $stride) = 0)""".stripMargin
   }
+
+  /** SQL twin of Similarity.ivfAssign against `cents(centroid_id,
+    * cvec)`: `ac` scores every vector against every centroid, `asg(
+    * vec_id, carry…, cell)` keeps the argmax by (cosine desc,
+    * centroid id). */
+  private def ivfAssignCtes(carry: Seq[String], cents: String = "cents", cvec: String = "cvec"): String =
+    s"""ac AS (SELECT ${("e.vec_id" +: carry.map("e." + _) :+ "c.centroid_id").mkString(", ")},
+       |         ${cosSql("e.embedding", s"c.$cvec")} AS cosv
+       |       FROM embeddings e CROSS JOIN $cents c),
+       |asg AS (SELECT ${("vec_id" +: carry :+ "centroid_id AS cell").mkString(", ")} FROM (
+       |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
+       |         FROM ac) WHERE rn = 1)""".stripMargin
 
   /** sim_ann_ivf oracle: the registered query uses the DETERMINISTIC
     * id-modulo centroid pick (not the float-mean k-means refinement),
@@ -6289,15 +6043,8 @@ annIvfSql),
     * first by cos desc, centroid id) → top-nprobe probes → windowed
     * top-k within probed cells. */
   private val annIvfSql: String =
-    s"""WITH cnt AS (SELECT count(*) AS c FROM embeddings),
-      |cents AS (SELECT vec_id AS centroid_id, embedding AS cvec
-      |          FROM embeddings, cnt WHERE vec_id % greatest(1, (c + 15) // 16) = 0),
-      |ac AS (SELECT e.vec_id, e.embedding, c.centroid_id,
-      |         ${cosSql("e.embedding", "c.cvec")} AS cosv
-      |       FROM embeddings e CROSS JOIN cents c),
-      |asg AS (SELECT vec_id, embedding, centroid_id AS cell FROM (
-      |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn
-      |         FROM ac) WHERE rn = 1),
+    s"""WITH ${ivfCentsCtes(adaptive = false)},
+      |${ivfAssignCtes(Seq("embedding"))},
       |pc AS (SELECT q.vec_id AS query_id, q.embedding AS qvec, c.centroid_id AS cell,
       |         ${cosSql("q.embedding", "c.cvec")} AS cosv
       |       FROM embeddings q CROSS JOIN cents c WHERE q.vec_id % 50 = 0),
@@ -6309,6 +6056,19 @@ annIvfSql),
       |       FROM probes p JOIN asg a ON a.cell = p.cell WHERE a.vec_id != p.query_id),
       |topk AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_fp6 DESC, id) AS rk FROM scored)
       |SELECT query_id, id, cos_fp6 FROM topk WHERE rk <= 5 ORDER BY query_id, cos_fp6, id""".stripMargin
+
+  /** Connected components as a recursive min-label closure (needs
+    * WITH RECURSIVE): `sym` is the edge table `edges(a, b)` made
+    * undirected, and `lbl(node, label)` starts from `seed` (a
+    * `SELECT id, id` over every node) and follows it; UNION dedup
+    * ends the recursion. Components are min(label) per node. */
+  private def labelPropCtes(edges: String, a: String, b: String, seed: String): String =
+    s"""sym AS (SELECT $a AS src, $b AS dst FROM $edges
+       |        UNION ALL SELECT $b, $a FROM $edges),
+       |lbl(node, label) AS (
+       |  $seed
+       |  UNION
+       |  SELECT s.dst, l.label FROM lbl l JOIN sym s ON s.src = l.node)""".stripMargin
 
   /** Shared minhash CTE chain ending in `cand(doc_a, doc_b)` — the
     * distinct LSH candidate pairs, plus `sigs`. Mirrors
@@ -6353,12 +6113,12 @@ annIvfSql),
        |FROM cand JOIN sigs sa ON sa.doc = doc_a JOIN sigs sb ON sb.doc = doc_b
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  /** IVF-PQ mirror: the same codebook/LUT chain, with the scored set
-    * first pruned to the nprobe nearest IVF cells per query (stride
-    * centroids + argmax-cosine assignment, as in the sim_ann_ivf
-    * oracle) */
-  private val annIvfpqSql: String =
-    s"""WITH $pqCtes,
+  /** IVF-PQ mirror up to `topk`: the same codebook/LUT chain, with
+    * the scored set first pruned to the nprobe nearest IVF cells per
+    * query (stride centroids + argmax-cosine assignment, as in the
+    * sim_ann_ivf oracle) */
+  private def ivfpqTopkCtes: String =
+    s"""$pqCtes,
       |enc AS (SELECT id, sub, code FROM best WHERE rn = 1),
       |icents AS (SELECT vec_id AS centroid_id, embedding AS icvec
       |           FROM embeddings, cnt WHERE vec_id % greatest(1, (c + 15) // 16) = 0),
@@ -6373,12 +6133,7 @@ annIvfSql),
       |probes AS (SELECT query_id, cell FROM (
       |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosv DESC, cell) AS rn3
       |         FROM pc) WHERE rn3 <= 2),
-      |qsl AS (SELECT q.vec_id AS query_id, s.sub,
-      |          list_slice(q.embedding, s.sub*16 + 1, s.sub*16 + 16) AS qx
-      |        FROM embeddings q, subs s WHERE q.vec_id % 50 = 0),
-      |lut AS (SELECT q.query_id, q.sub, cb.code,
-      |          ${sqlFp(s"${dot16("qx", "qx")} - 2.0*${dot16("qx", "cvec")} + ${dot16("cvec", "cvec")}", 6)} AS pd6
-      |        FROM qsl q JOIN cb ON cb.sub = q.sub),
+      |$pqLutCtes,
       |cand AS (SELECT p.query_id, a.id FROM probes p JOIN asg a ON a.cell = p.cell
       |         WHERE a.id <> p.query_id),
       |sc AS (SELECT c.query_id, c.id, CAST(sum(l.pd6) AS BIGINT) AS approx_d2_fp6
@@ -6386,42 +6141,17 @@ annIvfSql),
       |       JOIN lut l ON l.query_id = c.query_id AND l.sub = e.sub AND l.code = e.code
       |       GROUP BY 1, 2),
       |topk AS (SELECT *, row_number() OVER (PARTITION BY query_id
-      |           ORDER BY approx_d2_fp6, id) AS rk FROM sc)
+      |           ORDER BY approx_d2_fp6, id) AS rk FROM sc)""".stripMargin
+
+  private val annIvfpqSql: String =
+    s"""WITH $ivfpqTopkCtes
       |SELECT query_id, id, approx_d2_fp6 FROM topk WHERE rk <= 5
       |ORDER BY query_id, approx_d2_fp6, id""".stripMargin
 
   /** the ivfpq oracle with kCand=20 retrieval, then exact cosine
     * over ONLY the retrieved ids, re-ranked to k=5 */
   private val annRerankSql: String =
-    s"""WITH $pqCtes,
-      |enc AS (SELECT id, sub, code FROM best WHERE rn = 1),
-      |icents AS (SELECT vec_id AS centroid_id, embedding AS icvec
-      |           FROM embeddings, cnt WHERE vec_id % greatest(1, (c + 15) // 16) = 0),
-      |ac AS (SELECT e.vec_id, c.centroid_id, ${cosSql("e.embedding", "c.icvec")} AS cosv
-      |       FROM embeddings e CROSS JOIN icents c),
-      |asg AS (SELECT vec_id AS id, centroid_id AS cell FROM (
-      |         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosv DESC, centroid_id) AS rn2
-      |         FROM ac) WHERE rn2 = 1),
-      |pc AS (SELECT q.vec_id AS query_id, c.centroid_id AS cell,
-      |         ${cosSql("q.embedding", "c.icvec")} AS cosv
-      |       FROM embeddings q CROSS JOIN icents c WHERE q.vec_id % 50 = 0),
-      |probes AS (SELECT query_id, cell FROM (
-      |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosv DESC, cell) AS rn3
-      |         FROM pc) WHERE rn3 <= 2),
-      |qsl AS (SELECT q.vec_id AS query_id, s.sub,
-      |          list_slice(q.embedding, s.sub*16 + 1, s.sub*16 + 16) AS qx
-      |        FROM embeddings q, subs s WHERE q.vec_id % 50 = 0),
-      |lut AS (SELECT q.query_id, q.sub, cb.code,
-      |          ${sqlFp(s"${dot16("qx", "qx")} - 2.0*${dot16("qx", "cvec")} + ${dot16("cvec", "cvec")}", 6)} AS pd6
-      |        FROM qsl q JOIN cb ON cb.sub = q.sub),
-      |cand AS (SELECT p.query_id, a.id FROM probes p JOIN asg a ON a.cell = p.cell
-      |         WHERE a.id <> p.query_id),
-      |sc AS (SELECT c.query_id, c.id, CAST(sum(l.pd6) AS BIGINT) AS approx_d2_fp6
-      |       FROM cand c JOIN enc e ON e.id = c.id
-      |       JOIN lut l ON l.query_id = c.query_id AND l.sub = e.sub AND l.code = e.code
-      |       GROUP BY 1, 2),
-      |topk AS (SELECT *, row_number() OVER (PARTITION BY query_id
-      |           ORDER BY approx_d2_fp6, id) AS rk FROM sc),
+    s"""WITH $ivfpqTopkCtes,
       |rr AS (SELECT t.query_id, t.id,
       |         ${sqlFp(cosSql("qv.embedding", "dv.embedding"), 6)} AS cos_fp6
       |       FROM topk t JOIN embeddings dv ON dv.vec_id = t.id

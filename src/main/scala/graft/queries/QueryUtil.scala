@@ -20,6 +20,30 @@ object QueryUtil {
   /** floor(x*10^scale + 0.5) as long — engine-exact fixed point. */
   def fp(x: Column, scale: Int): Column = graft.text.TextAnalysis.fp(x, scale)
 
+  // ---- oracle SQL (DuckDB text only: never derived from the Spark side)
+
+  /** floor(x*10^s+0.5)::BIGINT — matches [[fp]]. */
+  def sqlFp(e: String, scale: Int): String =
+    s"CAST(floor(($e)*1e$scale+0.5) AS BIGINT)"
+
+  /** Value 0..15 of the hex digit at 1-based position `pos` of `hex`. */
+  def hexDigit(hex: String, pos: String): String =
+    s"strpos('0123456789abcdef', substr($hex, $pos, 1)) - 1"
+
+  /** First `nibbles` digits of the hex string `hex` as a BIGINT, folded
+    * most significant first — matches conv(substring(hex, 1, n), 16, 10).
+    * `i`/`a`/`v` name the lambda variables: `hex` is evaluated inside
+    * the lambda, so a caller whose `hex` reads a column of one of
+    * those names passes others. */
+  def hexFold(hex: String, nibbles: Int, i: String = "i", a: String = "a", v: String = "v"): String =
+    s"list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(1, ${nibbles + 1}), " +
+      s"$i -> CAST(${hexDigit(hex, s"CAST($i AS INT)")} AS BIGINT))), ($a, $v) -> $a*16 + $v)"
+
+  /** [[hexFold]] over md5(`e`): the portable md5-prefix integer every
+    * md5-derived sample, sketch and coordinate is built from. */
+  def md5Fold(e: String, nibbles: Int, i: String = "i", a: String = "a", v: String = "v"): String =
+    hexFold(s"md5($e)", nibbles, i, a, v)
+
   /** Epoch milliseconds from a (ntz) timestamp, UTC session. */
   def epochMs(ts: Column): Column = unix_millis(ts.cast("timestamp"))
 

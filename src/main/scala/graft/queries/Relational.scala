@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import QueryUtil._
@@ -18,6 +19,47 @@ import QueryUtil._
   * this property (ulp-edge rounding differs per engine).
   */
 object Relational {
+
+  /** Orders keyed for the as-of rows: (o_orderkey, k = custkey mod
+    * 100, oms = order epoch ms). */
+  private def asofOrders(s: SparkSession, dir: String): DataFrame = {
+    val o0 = t(s, dir, "orders")
+    o0.select(
+      col("o_orderkey"), pmod(col("o_custkey"), lit(100L)).as("k"),
+      tsMs(o0, "o_orderdate").as("oms"))
+  }
+
+  /** Events as (k = user_id mod 100, ms, event_id). Events postdate
+    * every order by decades; `fold` remaps their times into the
+    * order-date span (deterministic pmod) so backward and forward
+    * matches both occur. */
+  private def asofEvents(s: SparkSession, dir: String, fold: Boolean): DataFrame = {
+    val e0 = t(s, dir, "events")
+    val ms = if (fold) lit(788918400000L) + pmod(tsMs(e0), lit(207705600000L)) else tsMs(e0)
+    e0.select(pmod(col("user_id"), lit(100L)).as("k"), ms.as("ms"), col("event_id"))
+  }
+
+  /** SQL twins of [[asofOrders]] and [[asofEvents]]: CTEs `o`, `e`. */
+  private def asofCtes(fold: Boolean): String = {
+    val ms =
+      if (fold) "788918400000 + ((epoch_ms(ts) % 207705600000 + 207705600000) % 207705600000)"
+      else "epoch_ms(ts)"
+    s"""o AS (SELECT o_orderkey, o_custkey % 100 AS k, epoch_ms(o_orderdate) AS oms FROM orders),
+       |e AS (SELECT user_id % 100 AS k, $ms AS ms, event_id FROM events)""".stripMargin
+  }
+
+  /** As-of oracle: best time b = `agg`(e.ms `cmp` oms) per order, then
+    * the max event_id at that time (graft's struct-max picks the same
+    * pair). */
+  private def asofSql(fold: Boolean, agg: String, cmp: String): String =
+    s"""WITH ${asofCtes(fold)},
+       |b AS (SELECT o.o_orderkey, $agg(e.ms) AS ev_ms
+       |      FROM o LEFT JOIN e ON e.k = o.k AND e.ms $cmp o.oms GROUP BY 1),
+       |p AS (SELECT o.o_orderkey, o.k, o.oms, b.ev_ms, max(e.event_id) AS ev_event_id
+       |      FROM o JOIN b ON b.o_orderkey = o.o_orderkey
+       |      LEFT JOIN e ON e.k = o.k AND e.ms = b.ev_ms
+       |      GROUP BY 1, 2, 3, 4)
+       |SELECT o_orderkey, k, oms, ev_ms, ev_event_id FROM p ORDER BY o_orderkey""".stripMargin
 
   lazy val queries: Seq[Query] = Seq(
     Query("q1_agg", (s, dir) => {
@@ -235,31 +277,12 @@ object Relational {
     // driver-side regeneration to timestamp[ns]-as-long (or back)
     // cannot strand the query again.
     Query("q17_asof_join", (s, dir) => {
-      val o0 = t(s, dir, "orders")
-      val o = o0.select(
-        col("o_orderkey"), pmod(col("o_custkey"), lit(100L)).as("k"),
-        tsMs(o0, "o_orderdate").as("oms"))
-      val e0 = t(s, dir, "events")
-      val e = e0.select(
-        pmod(col("user_id"), lit(100L)).as("k"),
-        tsMs(e0).as("ms"),
-        col("event_id"))
+      val (o, e) = (asofOrders(s, dir), asofEvents(s, dir, fold = false))
       graft.operators.AsofJoin.asofBackward(o, "k", "oms", e, "k", "ms", Seq("event_id"))
         .select(col("o_orderkey"), col("k"), col("oms"),
           col("asof_time").as("ev_ms"), col("asof_event_id").as("ev_event_id"))
     }, // row-per-order output — no presentation sort (checker row-sorts)
-    oracle =
-      // as-of tie-break mirror: best time = max(ms <= oms), then max
-      // event_id at that time (graft's struct-max picks the same pair)
-      """WITH o AS (SELECT o_orderkey, o_custkey % 100 AS k, epoch_ms(o_orderdate) AS oms FROM orders),
-        |e AS (SELECT user_id % 100 AS k, epoch_ms(ts) AS ms, event_id FROM events),
-        |b AS (SELECT o.o_orderkey, max(e.ms) AS ev_ms
-        |      FROM o LEFT JOIN e ON e.k = o.k AND e.ms <= o.oms GROUP BY 1),
-        |p AS (SELECT o.o_orderkey, o.k, o.oms, b.ev_ms, max(e.event_id) AS ev_event_id
-        |      FROM o JOIN b ON b.o_orderkey = o.o_orderkey
-        |      LEFT JOIN e ON e.k = o.k AND e.ms = b.ev_ms
-        |      GROUP BY 1, 2, 3, 4)
-        |SELECT o_orderkey, k, oms, ev_ms, ev_event_id FROM p ORDER BY o_orderkey""".stripMargin),
+    oracle = asofSql(fold = false, "max", "<=")),
     // 11h — interval (range) join: customer points against supplier
     // intervals, p ∈ [lo, hi]. 1-D grid bucketing — the interval
     // replicates over its covered buckets, the point sits in ONE, so
@@ -644,29 +667,12 @@ object Relational {
     // negated time (operators/AsofJoin.asofForward) — no range
     // θ-join, no per-row probe.
     Query("q30_asof_fwd", (s, dir) => {
-      val o0 = t(s, dir, "orders")
-      val o = o0.select(
-        col("o_orderkey"), pmod(col("o_custkey"), lit(100L)).as("k"),
-        tsMs(o0, "o_orderdate").as("oms"))
-      val e0 = t(s, dir, "events")
-      val e = e0.select(
-        pmod(col("user_id"), lit(100L)).as("k"),
-        tsMs(e0).as("ms"),
-        col("event_id"))
+      val (o, e) = (asofOrders(s, dir), asofEvents(s, dir, fold = false))
       graft.operators.AsofJoin.asofForward(o, "k", "oms", e, "k", "ms", Seq("event_id"))
         .select(col("o_orderkey"), col("k"), col("oms"),
           col("asof_time").as("ev_ms"), col("asof_event_id").as("ev_event_id"))
     }, // row-per-order output — no presentation sort (checker row-sorts)
-    oracle =
-      """WITH o AS (SELECT o_orderkey, o_custkey % 100 AS k, epoch_ms(o_orderdate) AS oms FROM orders),
-        |e AS (SELECT user_id % 100 AS k, epoch_ms(ts) AS ms, event_id FROM events),
-        |b AS (SELECT o.o_orderkey, min(e.ms) AS ev_ms
-        |      FROM o LEFT JOIN e ON e.k = o.k AND e.ms >= o.oms GROUP BY 1),
-        |p AS (SELECT o.o_orderkey, o.k, o.oms, b.ev_ms, max(e.event_id) AS ev_event_id
-        |      FROM o JOIN b ON b.o_orderkey = o.o_orderkey
-        |      LEFT JOIN e ON e.k = o.k AND e.ms = b.ev_ms
-        |      GROUP BY 1, 2, 3, 4)
-        |SELECT o_orderkey, k, oms, ev_ms, ev_event_id FROM p ORDER BY o_orderkey""".stripMargin),
+    oracle = asofSql(fold = false, "min", ">=")),
     // 11v — the SKEW-PROOF as-of path under the oracle gate: q17's
     // exact semantics through AsofJoin.asofBackwardEpoch (sort
     // partitioned on (key, week-epoch) with carrier seeding instead
@@ -675,15 +681,7 @@ object Relational {
     // independent DuckDB oracle too, so BOTH physical strategies are
     // externally verified equal.
     Query("q32_asof_skew", (s, dir) => {
-      val o0 = t(s, dir, "orders")
-      val o = o0.select(
-        col("o_orderkey"), pmod(col("o_custkey"), lit(100L)).as("k"),
-        tsMs(o0, "o_orderdate").as("oms"))
-      val e0 = t(s, dir, "events")
-      val e = e0.select(
-        pmod(col("user_id"), lit(100L)).as("k"),
-        (lit(788918400000L) + pmod(tsMs(e0), lit(207705600000L))).as("ms"),
-        col("event_id"))
+      val (o, e) = (asofOrders(s, dir), asofEvents(s, dir, fold = true))
       graft.operators.AsofJoin.asofBackwardEpoch(o, "k", "oms", e, "k", "ms",
           Seq("event_id"), epochMs = 604800000L)
         .select(col("o_orderkey"), col("k"), col("oms"),
@@ -693,17 +691,7 @@ object Relational {
       // q17's semantics over the span-folded event times (so backward
       // matches exist) — the epoch-split physical path must reproduce
       // them exactly
-      """WITH o AS (SELECT o_orderkey, o_custkey % 100 AS k, epoch_ms(o_orderdate) AS oms FROM orders),
-        |e AS (SELECT user_id % 100 AS k,
-        |        788918400000 + ((epoch_ms(ts) % 207705600000 + 207705600000) % 207705600000) AS ms,
-        |        event_id FROM events),
-        |b AS (SELECT o.o_orderkey, max(e.ms) AS ev_ms
-        |      FROM o LEFT JOIN e ON e.k = o.k AND e.ms <= o.oms GROUP BY 1),
-        |p AS (SELECT o.o_orderkey, o.k, o.oms, b.ev_ms, max(e.event_id) AS ev_event_id
-        |      FROM o JOIN b ON b.o_orderkey = o.o_orderkey
-        |      LEFT JOIN e ON e.k = o.k AND e.ms = b.ev_ms
-        |      GROUP BY 1, 2, 3, 4)
-        |SELECT o_orderkey, k, oms, ev_ms, ev_event_id FROM p ORDER BY o_orderkey""".stripMargin),
+      asofSql(fold = true, "max", "<=")),
     // 11u — NEAREST as-of (either direction): each order picks
     // whichever of {latest event ≤ t, earliest event ≥ t} is closer
     // in time, ties to the backward side — the gap-tolerant
@@ -713,18 +701,7 @@ object Relational {
     // side (both are left-preserving), so the pick is a narrow map —
     // two sort-merge passes total, no extra join to reconcile them.
     Query("q31_asof_nearest", (s, dir) => {
-      val o0 = t(s, dir, "orders")
-      val o = o0.select(
-        col("o_orderkey"), pmod(col("o_custkey"), lit(100L)).as("k"),
-        tsMs(o0, "o_orderdate").as("oms"))
-      val e0 = t(s, dir, "events")
-      // events postdate every order by decades — fold their times
-      // into the order-date span (deterministic pmod remap) so BOTH
-      // directions genuinely occur
-      val e = e0.select(
-        pmod(col("user_id"), lit(100L)).as("k"),
-        (lit(788918400000L) + pmod(tsMs(e0), lit(207705600000L))).as("ms"),
-        col("event_id"))
+      val (o, e) = (asofOrders(s, dir), asofEvents(s, dir, fold = true))
       val b = graft.operators.AsofJoin.asofBackward(o, "k", "oms", e, "k", "ms",
         Seq("event_id"), prefix = "b_")
       val bf = graft.operators.AsofJoin.asofForward(b, "k", "oms", e, "k", "ms",
@@ -739,10 +716,7 @@ object Relational {
           .when(useB, lit("b")).otherwise(lit("f")).as("dir"))
     }, // row-per-order output — no presentation sort (checker row-sorts)
     oracle =
-      """WITH o AS (SELECT o_orderkey, o_custkey % 100 AS k, epoch_ms(o_orderdate) AS oms FROM orders),
-        |e AS (SELECT user_id % 100 AS k,
-        |        788918400000 + ((epoch_ms(ts) % 207705600000 + 207705600000) % 207705600000) AS ms,
-        |        event_id FROM events),
+      s"""WITH ${asofCtes(fold = true)},
         |bb AS (SELECT o.o_orderkey, max(e.ms) AS bt
         |       FROM o LEFT JOIN e ON e.k = o.k AND e.ms <= o.oms GROUP BY 1),
         |bp AS (SELECT o.o_orderkey, bb.bt, max(e.event_id) AS bid

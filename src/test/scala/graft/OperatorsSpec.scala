@@ -33,6 +33,21 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got == Set((10L, "a", 100L), (20L, "b", 101L), (30L, "c", 102L)))
   }
 
+  test("SequentialIds ranks an input spread over partitions, some empty") {
+    // 8 input partitions; ids 10..29 filtered out leave some empty, and
+    // the keys are scrambled against partition order
+    val df = spark.range(0, 40, 1, 8).filter(col("id") < 10 || col("id") >= 30)
+      .select(((col("id") * 7919) % 1000).as("k"))
+    val sizes = df.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.length >= 4 && sizes.contains(0))
+    val keys = df.as[Long].collect().sorted
+    val up = SequentialIds.assign(df, "k", "id", 100L).select("k", "id").as[(Long, Long)].collect().toMap
+    assert(up == keys.zipWithIndex.map { case (k, r) => k -> (100L + r) }.toMap)
+    val down = SequentialIds.assign(df, "k", "id", -5L, negative = true)
+      .select("k", "id").as[(Long, Long)].collect().toMap
+    assert(down == keys.zipWithIndex.map { case (k, r) => k -> (-5L - r) }.toMap)
+  }
+
   test("TagOps hstore parse + column precedence merge") {
     val df = Seq(("""  "a"=>"1", "b"=>"2"  """, "colA")).toDF("hs", "a")
     val out = df.select(

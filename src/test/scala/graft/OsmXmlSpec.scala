@@ -123,43 +123,6 @@ class OsmXmlSpec extends AnyFunSuite {
     assert(applied2.toSeq == Seq(1L, 2L), "delete wins over the re-create of 4")
   }
 
-  test("writeShardedText commits one well-formed document per shard dir + manifest") {
-    import java.nio.file.{Files => JFiles}
-    val dir = JFiles.createTempDirectory("graft_shards_txt").toString
-    val df = (1 to 40).map { i =>
-      (i % 3, if (i % 3 == 0) "delete" else "create",
-        s"""<node id="$i" version="1" lat="0.000000" lon="0.000000"/>""")
-    }.toDF("shard", "section", "xml")
-    OsmChangeXml.writeShardedText(spark, dir, df, shards = 3)
-    val shardDirs = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("shard=")).sorted
-    assert(shardDirs.toSeq == Seq("shard=0", "shard=1", "shard=2"))
-    val dbf = javax.xml.parsers.DocumentBuilderFactory.newInstance()
-    val ids = shardDirs.flatMap { sd =>
-      val parts = new java.io.File(s"$dir/$sd").listFiles().filter(_.getName.startsWith("part-"))
-      assert(parts.length == 1, s"$sd should hold exactly one committed part file")
-      val content = new String(JFiles.readAllBytes(parts.head.toPath))
-      assert(content.startsWith("<?xml") && content.trim.endsWith("</osmChange>"))
-      // must be PARSEABLE xml, not just well-prefixed
-      val doc = dbf.newDocumentBuilder()
-        .parse(new java.io.ByteArrayInputStream(content.getBytes("UTF-8")))
-      assert(doc.getDocumentElement.getNodeName == "osmChange")
-      "id=\"(\\d+)\"".r.findAllMatchIn(content).map(_.group(1).toInt).toSeq
-    }
-    assert(ids.sorted.toSeq == (1 to 40), "every element lands in exactly one shard")
-    // manifest reconciles the shard files
-    val manifest = new String(JFiles.readAllBytes(Paths.get(s"$dir/manifest.json")))
-    assert(manifest.contains("\"format\":\"osmChange/0.6\""))
-    assert(Seq(0, 1, 2).forall(s => manifest.contains(s"\"shard\":$s")))
-    // gzip variant stays committer-written and readable
-    val gzDir = JFiles.createTempDirectory("graft_shards_gz").toString
-    OsmChangeXml.writeShardedText(spark, gzDir, df.filter(col("shard") === 0), shards = 1, gzip = true)
-    val gzPart = new java.io.File(s"$gzDir/shard=0").listFiles()
-      .filter(_.getName.endsWith(".gz")).head
-    val gz = new String(
-      new GZIPInputStream(JFiles.newInputStream(gzPart.toPath)).readAllBytes())
-    assert(gz.startsWith("<?xml") && gz.contains("<delete>"))
-  }
-
   test("OsmXmlSource round-trips OsmChangeXml output to identical datasets") {
     val nodesIn = Seq(
       OsmModel.Node(1L, 2, 1.5, -2.5, Map("name" -> """q"z <&>""", "amenity" -> "pub")),

@@ -49,6 +49,13 @@ class VerifyContractSpec extends AnyFunSuite {
         s"orphan oracles: ${SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet}")
   }
 
+  test("no oracle SQL interpolates an uninitialized helper (the word null)") {
+    // a helper val read before its object's initializer reaches it
+    // interpolates as "null"; the SQL keyword is always upper case
+    val bad = SparkEntry.oracleSql.filter { case (_, sql) => "\\bnull\\b".r.findFirstIn(sql).isDefined }
+    assert(bad.isEmpty, s"oracle SQL with an uninitialized helper: ${bad.keys.toSeq.sorted.mkString(", ")}")
+  }
+
   test("the query index refuses a name registered twice, naming it") {
     val q = graft.queries.Query("dup_name", (s, dir) => s.range(1).toDF(), "SELECT 1")
     val e = intercept[IllegalArgumentException] {
