@@ -21,9 +21,8 @@ import graft.spatial.DWithinJoin
   *   5. `<create>/<modify>/<delete>` OsmChange XML, single gzip file
   *
   * Usage: runMain graft.ChangegenPipeline <sfDir|jdbcUrl> <out.osc[.gz]>
-  *        [maxNodesPerWay=500] [idOffset=1000000] [negIds=false]
-  *        [shards=0] — or `--key=value` flags (see [[run]]), including
-  *        `--poly-table` / `--line-table` / `--poly-epsg` for
+  *        [--key=value ...] — every option is a flag (see [[run]]),
+  *        including `--poly-table` / `--line-table` / `--poly-epsg` for
   *        real-geometry (wkb_geometry) feature tables.
   * A `jdbc:` URL as the first argument runs the SAME dataflow off a
   * live database (the reference CLI's PostGIS input,
@@ -32,9 +31,9 @@ import graft.spatial.DWithinJoin
   * metadata instead of a directory listing, and `--poly-table` /
   * `--line-table` reading WKB feature tables straight into the
   * polygon/linestring seams (MULTI* parts included).
-  * shards > 0 writes `out` as a DIRECTORY of self-contained shard
-  * documents in parallel on the executors (OsmChangeXml.writeSharded)
-  * instead of one driver-assembled file.
+  * `--shards=N` (N > 0) writes `out` as a DIRECTORY of
+  * self-contained shard documents in parallel on the executors
+  * (OsmChangeXml.writeSharded) instead of one driver-assembled file.
   */
 object ChangegenPipeline {
 
@@ -162,23 +161,6 @@ object ChangegenPipeline {
     try run(args, spark) finally spark.stop()
   }
 
-  /** The full CLI dataflow on a caller-owned session — main() wraps
-    * this with session lifecycle; the e2e spec drives it directly so
-    * the database mode is proven through the exact argv path users
-    * run. `args(0)` is a parquet directory OR a `jdbc:` URL (the
-    * reference CLI points at live PostGIS, __main__.py:164-169).
-    *
-    * Arguments are positional (back-compatible) or `--key=value`
-    * flags; flags win. Keys: max-nodes-per-way, id-offset, neg-ids,
-    * shards, osmsrc, deletion-suffix, no-collisions, suffix
-    * (new-feature table discovery, comma-separated), existing
-    * (junction-target tables), modify-meta, hstore-tags — plus the
-    * REAL-GEOMETRY inputs the reference's main() actually consumes
-    * (its feature tables carry `wkb_geometry`): `--poly-table` /
-    * `--line-table` name a table (jdbc mode) or a parquet file
-    * (directory mode) of (id, wkb_geometry) rows feeding the
-    * `polyWkb` / `lineWkb` seams — MULTI* parts included — and
-    * `--poly-epsg` sets the polygon layer's source CRS. */
   /** `--debug` per-stage progress lines (reference __main__.py:72 —
     * its --debug flips the logger to DEBUG and the stages narrate).
     * The message is by-name, so disabled runs pay nothing. */
@@ -203,6 +185,25 @@ object ChangegenPipeline {
       .otherwise(id)
   }
 
+  /** The full CLI dataflow on a caller-owned session — main() wraps
+    * this with session lifecycle; the e2e spec drives it directly so
+    * the database mode is proven through the exact argv path users
+    * run. `args` = `<sfDir|jdbcUrl> <out>` then `--key=value` flags
+    * (a bare `--key` means `true`); a further positional argument, an
+    * unknown key or a repeated scalar key is an error. `sfDir` is a
+    * parquet directory OR a `jdbc:` URL (the reference CLI points at
+    * live PostGIS, __main__.py:164-169).
+    *
+    * Keys: max-nodes-per-way, id-offset, neg-ids, shards, osmsrc,
+    * deletion-suffix, deletions, no-collisions, suffix (new-feature
+    * table discovery, comma-separated), existing (junction-target
+    * tables), modify-meta, hstore-tags, self, compress, debug — plus
+    * the REAL-GEOMETRY inputs the reference's main() actually consumes
+    * (its feature tables carry `wkb_geometry`): `--poly-table` /
+    * `--line-table` name a table (jdbc mode) or a parquet file
+    * (directory mode) of (id, wkb_geometry) rows feeding the
+    * `polyWkb` / `lineWkb` seams — MULTI* parts included — and
+    * `--poly-epsg` sets the polygon layer's source CRS. */
   def run(args: Array[String], spark: SparkSession): Unit = {
     val (flagArgs, pos) = args.partition(_.startsWith("--"))
     val parsedFlags = flagArgs.map { f =>
@@ -236,21 +237,23 @@ object ChangegenPipeline {
     require(unknownFlags.isEmpty,
       s"unknown flag(s): ${unknownFlags.toSeq.sorted.map("--" + _).mkString(", ")}" +
         s" — known flags: ${knownFlags.toSeq.sorted.map("--" + _).mkString(", ")}")
-    def arg(i: Int, key: String): Option[String] =
-      flags.get(key).orElse(pos.lift(i)).filter(_.nonEmpty)
+    require(pos.length <= 2,
+      s"unexpected positional argument(s): ${pos.drop(2).mkString(" ")} — only " +
+        "<sfDir|jdbcUrl> <out> are positional; every option is a --key=value flag")
+    def arg(key: String): Option[String] = flags.get(key).filter(_.nonEmpty)
     val sfDir = pos.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (pos.length > 1) pos(1) else "/tmp/graft_demo.osc.gz"
     // "none" = no way splitting (the reference's `--max_nodes_per_way
     // none`, __main__.py:141-148) — modeled as an unreachable cap
-    val maxNodes = arg(2, "max-nodes-per-way")
+    val maxNodes = arg("max-nodes-per-way")
       .map(v => if (v.equalsIgnoreCase("none")) Int.MaxValue else v.toInt)
       .getOrElse(500)
-    val idOffset = arg(3, "id-offset").map(_.toLong)
-    val negIds = arg(4, "neg-ids").exists(_.toBoolean)
-    val shards = arg(5, "shards").map(_.toInt).getOrElse(0)
-    val osmSrc = arg(6, "osmsrc")
-    val deletionSuffix = arg(7, "deletion-suffix")
-    val noCollisions = arg(8, "no-collisions").exists(_.toBoolean)
+    val idOffset = arg("id-offset").map(_.toLong)
+    val negIds = arg("neg-ids").exists(_.toBoolean)
+    val shards = arg("shards").map(_.toInt).getOrElse(0)
+    val osmSrc = arg("osmsrc")
+    val deletionSuffix = arg("deletion-suffix")
+    val noCollisions = arg("no-collisions").exists(_.toBoolean)
     // real-geometry feature tables (reference db.py:28-101 reads
     // wkb_geometry through OGR): first column = feature id, a
     // wkb_geometry column = the WKB/hex payload
@@ -491,8 +494,9 @@ object ChangegenPipeline {
     * extract (the reference CLI's `osmsrc` argument: way node lists
     * and max-id collision checks come from the extract,
     * generator.py:35-53 / __main__.py:26-53); without it, existing
-    * ways derive synthetically from lineitem. */
-  /** `polyWkb`: optional REAL-geometry polygon source — a DataFrame
+    * ways derive synthetically from lineitem.
+    *
+    * `polyWkb`: optional REAL-geometry polygon source — a DataFrame
     * with columns `(pgroup: long, wkb: binary | hex string)`, the
     * shape a partitioned JDBC read of a PostGIS snapshot delivers
     * (db.py:28-101 reads `wkb_geometry` columns; over JDBC they
@@ -502,15 +506,17 @@ object ChangegenPipeline {
     * inner-role member in the feature's multipolygon relation
     * (reference generator.py:683,719-753) — instead of synthesizing
     * rings from the part table. When absent, the synthetic
-    * part-table derivation is unchanged. */
-  /** `lineWkb`: optional REAL-geometry linear source — `(lgroup:
+    * part-table derivation is unchanged.
+    *
+    * `lineWkb`: optional REAL-geometry linear source — `(lgroup:
     * long, wkb: binary | hex string)` rows, LineString OR
     * MultiLineString (the reference crashes on the latter,
     * generator.py:603-606). Each MULTI* part becomes its own feature
     * and flows through the same node-assignment / way-split /
     * junction dataflow as the synthetic derivation (WGS84 input —
-    * reproject upstream via [[graft.spatial.Geo]] for other CRS). */
-  /** `existingWkb`: optional `(eway: long, wkb: binary | hex string)`
+    * reproject upstream via [[graft.spatial.Geo]] for other CRS).
+    *
+    * `existingWkb`: optional `(eway: long, wkb: binary | hex string)`
     * rows naming the EXISTING geometries eligible for junction
     * modification — the reference's `--existing` tables
     * (__main__.py:95-103: "Table of geometries to use when
@@ -520,8 +526,9 @@ object ChangegenPipeline {
     * node ids resolved positionally against the extract's way node
     * lists — so `osmSrc` is required), and only these ways are
     * spliced. Deletions still expand against the FULL extract: the
-    * reference's deletion pass is independent of `--existing`. */
-  /** `pointWkb`: optional POINT feature source — `(pgrp: long
+    * reference's deletion pass is independent of `--existing`.
+    *
+    * `pointWkb`: optional POINT feature source — `(pgrp: long
     * injective feature key, ptags: map<string,string>, wkb)` rows.
     * Each feature becomes ONE v1 `<create>` node at its (WGS84)
     * coordinates carrying its table-derived tags — the reference's
@@ -530,8 +537,9 @@ object ChangegenPipeline {
     * junction pass, no relations — exactly the reference's seam.
     * MULTIPOINT rows contribute their FIRST point (the reference's
     * isinstance ladder silently drops MultiPoint features entirely —
-    * handled here as one-node-per-feature instead of silent loss). */
-  /** `selfIntersect`: the reference's `--self` / `-si` flag
+    * handled here as one-node-per-feature instead of silent loss).
+    *
+    * `selfIntersect`: the reference's `--self` / `-si` flag
     * (__main__.py:131-140): junctions AMONG the new features
     * themselves. Closest points of feature pairs within [[SelfRadius]]
     * (`db.intersections(table, table)`, `not st_equals` excluded)

@@ -321,52 +321,43 @@ object Dedup {
 
   /** Connected components over a near-dup pair graph — the step that
     * turns candidate PAIRS into dedup CLUSTERS (keep one doc per
-    * component). Iterative min-label propagation: every node starts
-    * as its own label; each round takes the min over neighbors;
-    * converges in O(graph diameter) rounds (near-dup graphs are
-    * clique-ish, diameter 1-2; production giants would swap in
-    * large-star/small-star for O(log n) — the contract is the same).
-    * Each round is one shuffle of the edge list; lineage is truncated
-    * per round with localCheckpoint so plans stay bounded.
-    * Output: (idCol, component) — component = min id in the
-    * component; singletons map to themselves.
-    *
-    * Scale shape (optimization round 18): the iteration runs over
-    * EDGE-TOUCHED nodes only — a node with no incident edge is a
-    * fixpoint from round 0, so carrying the full node set through
-    * every per-round shuffle (the previous form) paid corpus-sized
-    * exchanges to propagate labels that could never change. Touched
-    * nodes are `distinct(src of the symmetric edge list)` (every
-    * endpoint appears as a src there); the untouched remainder
-    * re-attaches once at the end via a left join + coalesce — at a
-    * near-dup rate of a few %, per-round volume drops from |corpus|
-    * to |touched| ≈ 2·|pairs|. Convergence is detected by carrying
-    * the previous label THROUGH the per-round checkpoint (`_old`) and
-    * filtering the materialized frame — the previous form re-joined
-    * next-to-previous labels, a second full shuffle join per round
-    * that existed only to answer "did anything change".
+    * component). Output: (idCol, component) — component = min id in
+    * the component, in the nodes' id type; singletons map to
+    * themselves.
     *
     * CONTRACT: every edge endpoint must be an id present in `nodes`
     * (true of every caller — pairs are generated FROM the node set).
-    * A phantom endpoint would now participate in label propagation,
-    * where the previous form silently ignored it.
+    * A phantom endpoint still joins its neighbors' component and can
+    * be its minimum label.
     *
     * DRIVER FAST PATH (optimization round 18): when the materialized
     * edge list fits `maxDriverEdges` (probed with a LIMIT collect off
     * the checkpoint — one cheap job, never a full-count pass) and the
     * id type is integral, the transitive closure runs as an in-memory
     * union-find and the component table re-attaches by one broadcast
-    * join — the same labels (min id per component, exactly) without
-    * O(diameter) rounds of shuffle jobs. Near-dup edge sets are small
+    * join — no rounds of shuffle jobs. Near-dup edge sets are small
     * relative to their corpus by construction (they are the output of
-    * banded/celled candidate generation); corpora whose pair graph
-    * exceeds the cap fall back to the iterative path unchanged.
-    * `maxDriverEdges = 0` disables the fast path (the spec uses that
-    * to pin the iterative semantics).
+    * banded/celled candidate generation). `maxDriverEdges = 0`
+    * disables the fast path.
+    *
+    * DISTRIBUTED PATH (edge lists over the cap, non-integral ids):
+    * alternating large-star / small-star (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC 2014), which converges
+    * in O(log n) rounds on ANY graph shape — a transitive near-dup
+    * chain included, where min-label propagation needs O(diameter).
+    * large-star hangs every strictly-larger neighbor of a node off
+    * the minimum of its closed neighborhood (halves tall trees);
+    * small-star re-parents the rest. Both are one groupBy shuffle
+    * over the edge list of EDGE-TOUCHED nodes only (an untouched node
+    * is its own component and re-attaches once at the end); rounds
+    * alternate until the edge set is a fixpoint (a star forest around
+    * each component's minimum), with lineage truncated per round by
+    * localCheckpoint. Not converging within `maxIter` rounds throws:
+    * the labels would be wrong.
     */
   def connectedComponents(nodes: DataFrame, idCol: String,
                           edges: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 20, strict: Boolean = true,
+                          maxIter: Int = 30,
                           maxDriverEdges: Long = 1L << 20): DataFrame = {
     // id type follows the NODES side (as it did when labels seeded
     // from `nodes`): an edge list with narrower endpoint columns must
@@ -375,6 +366,13 @@ object Dedup {
     val sym = edges.select(col(aCol).cast(idType).as("src"), col(bCol).cast(idType).as("dst"))
       .union(edges.select(col(bCol).cast(idType).as("src"), col(aCol).cast(idType).as("dst")))
       .localCheckpoint()
+    // (node, label) rows re-attach to every node; untouched nodes keep
+    // their own id
+    def labelNodes(labels: DataFrame): DataFrame =
+      nodes.select(col(idCol).as("_cc_n")).distinct()
+        .join(labels, col("_cc_n") === col("node"), "left")
+        .select(col("_cc_n").as(idCol),
+          coalesce(col("label"), col("_cc_n")).as("component"))
     val integral = idType == org.apache.spark.sql.types.LongType ||
       idType == org.apache.spark.sql.types.IntegerType
     if (maxDriverEdges > 0 && integral && maxDriverEdges <= (Int.MaxValue / 2 - 1)) {
@@ -410,69 +408,11 @@ object Dedup {
         lab.forEach((k, v) => { labRows.add(org.apache.spark.sql.Row(k, v)); () })
         val labDf = spark.createDataFrame(labRows, labSchema)
           .select(col("node").cast(idType).as("node"), col("label").cast(idType).as("label"))
-        return nodes.select(col(idCol).as("_cc_n")).distinct()
-          .join(broadcast(labDf), col("_cc_n") === col("node"), "left")
-          .select(col("_cc_n").as(idCol),
-            coalesce(col("label"), col("_cc_n")).as("component"))
+        return labelNodes(broadcast(labDf))
       }
-      // over the cap: fall through to the iterative path (sym is
+      // over the cap: fall through to the distributed path (sym is
       // checkpointed, so the probe cost is one bounded re-read)
     }
-    var labels = sym.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint()
-    // an empty edge set is converged by construction (every node is a
-    // singleton); entering the loop would just burn one no-op round
-    var converged = labels.isEmpty
-    var i = 0
-    while (!converged && i < maxIter) {
-      val nbrMin = sym.join(labels.withColumnRenamed("node", "dst"), "dst")
-        .groupBy(col("src").as("node")).agg(min("label").as("_nl"))
-      val next = labels.join(nbrMin, Seq("node"), "left")
-        .select(col("node"), least(col("label"), coalesce(col("_nl"), col("label"))).as("label"),
-          col("label").as("_old"))
-        .localCheckpoint()
-      converged = next.filter(col("label") =!= col("_old")).isEmpty
-      labels = next.select("node", "label")
-      i += 1
-    }
-    // exiting via maxIter without convergence would silently return
-    // WRONG labels (e.g. a chain with diameter > maxIter) — never
-    // let that pass as an answer
-    if (!converged) {
-      val msg = s"connectedComponents did not converge in $maxIter rounds " +
-        "(graph diameter exceeds maxIter); labels would be wrong — " +
-        "raise maxIter or use connectedComponentsStar (O(log n) rounds)"
-      if (strict) throw new IllegalStateException(msg)
-      else System.err.println(s"[graft] WARNING: $msg")
-    }
-    nodes.select(col(idCol).as("_cc_n")).distinct()
-      .join(labels, col("_cc_n") === col("node"), "left")
-      .select(col("_cc_n").as(idCol),
-        coalesce(col("label"), col("_cc_n")).as("component"))
-  }
-
-  /** Connected components via alternating large-star / small-star
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond")
-    * — converges in O(log n) rounds on ANY graph shape, vs the
-    * O(diameter) of [[connectedComponents]]'s min-label propagation:
-    * the production choice when the near-dup graph may contain long
-    * chains (transitive near-dup runs), while min-label stays fine
-    * for clique-ish duplicate clusters.
-    *
-    * large-star hangs every strictly-larger neighbor of a node off
-    * the minimum of its closed neighborhood (halves tall trees);
-    * small-star re-parents the rest. Both are one groupBy shuffle
-    * over the edge list; rounds alternate until the edge set is a
-    * fixpoint (a star forest), checked with an anti-join. Lineage is
-    * truncated per round with localCheckpoint.
-    *
-    * Same contract as [[connectedComponents]]: output (idCol,
-    * component), component = min id in the component, singletons map
-    * to themselves.
-    */
-  def connectedComponentsStar(nodes: DataFrame, idCol: String,
-                              edges: DataFrame, aCol: String, bCol: String,
-                              maxIter: Int = 30): DataFrame = {
     def dedup(e: DataFrame) = e.filter(col("u") =!= col("v")).distinct()
     // large-star: for each node n (symmetric neighborhood), attach
     // every neighbor v > n to m = min(closed neighborhood of n)
@@ -492,16 +432,17 @@ object Dedup {
         .select(col("v").as("u"), col("m").as("v"))
         .union(m.select(col("u"), col("m").as("v"))))
     }
-    var e = dedup(edges.select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v")))
-      .localCheckpoint()
+    var e = sym.filter(col("src") < col("dst")).select(col("src").as("u"), col("dst").as("v"))
+      .distinct().localCheckpoint()
+    // an empty edge set is converged by construction (every node is a
+    // singleton); entering the loop would just burn one no-op round
     var converged = e.isEmpty
     var i = 0
     while (!converged && i < maxIter) {
       val next = smallStar(largeStar(e)).localCheckpoint()
       // fixpoint = same edge SET (both frames are distinct'd), checked
       // in ONE action: signed-count the union — an edge in exactly one
-      // of the two sets keeps a nonzero sum (the count+count+exceptAll
-      // form scheduled three jobs per round)
+      // of the two sets keeps a nonzero sum
       converged = next.select(col("u"), col("v"), lit(1).as("_w"))
         .unionAll(e.select(col("u"), col("v"), lit(-1).as("_w")))
         .groupBy("u", "v").agg(sum("_w").as("_w"))
@@ -512,15 +453,11 @@ object Dedup {
     }
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxIter rounds")
-    // star forest → label every node by its root; isolated nodes keep
-    // their own id
-    val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-    val roots = sym.groupBy("u").agg(min("v").as("_mn"))
-      .select(col("u").as("node"), least(col("u"), col("_mn")).as("label"))
-    nodes.select(col(idCol).cast("long").as("node")).distinct()
-      .join(roots, Seq("node"), "left")
-      .select(col("node").as(idCol), coalesce(col("label"), col("node")).as("component"))
+        s"connectedComponents did not converge in $maxIter rounds; labels would be wrong")
+    // star forest → every touched node's label is its component's root
+    val forest = e.union(e.select(col("v").as("u"), col("u").as("v")))
+    labelNodes(forest.groupBy("u").agg(min("v").as("_mn"))
+      .select(col("u").as("node"), least(col("u"), col("_mn")).as("label")))
   }
 
   /** MinHash Jaccard ESTIMATES for the LSH candidate pairs: the

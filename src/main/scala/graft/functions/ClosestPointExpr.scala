@@ -8,23 +8,10 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
-/** Native closest-point-on-linestring: the codegen'd form of
-  * graft.spatial.Geo.closestOnLineHof (segment-wise projection, min
-  * candidate by (d2, seg)) — bit-identical IEEE op sequence per
-  * segment, first-minimum-wins like the lexicographic `array_min`.
-  *
-  * Input: (line array<struct<x:double,y:double>>, px double, py
-  * double); output struct<d2,seg,t,x,y>; null when the line has
-  * fewer than 2 vertices.
-  *
-  * Reference semantics: changegen/db.py:129 (ST_ClosestPoint) and
-  * generator.py:208-255 (projection parameterization).
-  */
-case class ClosestPointExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-
-  private val pointType = StructType(Seq(StructField("x", DoubleType), StructField("y", DoubleType)))
-
+/** Input check of the (line array<struct<x:double,y:double>>, px
+  * double, py double) expressions: [[ClosestPointExpr]] and
+  * [[InsertionIndexExpr]]. */
+trait LinePointInputs { self: TernaryExpression =>
   override def checkInputDataTypes(): TypeCheckResult = first.dataType match {
     case ArrayType(StructType(fields), _)
         if fields.length == 2 && fields.forall(_.dataType == DoubleType) &&
@@ -32,9 +19,25 @@ case class ClosestPointExpr(first: Expression, second: Expression, third: Expres
       TypeCheckResult.TypeCheckSuccess
     case _ =>
       TypeCheckResult.TypeCheckFailure(
-        s"graft_closest_point expects (array<struct<x:double,y:double>>, double, double), " +
+        s"$prettyName expects (array<struct<x:double,y:double>>, double, double), " +
           s"got (${first.dataType}, ${second.dataType}, ${third.dataType})")
   }
+}
+
+/** Native closest-point-on-linestring: the codegen'd form of
+  * graft.spatial.Geo.closestOnLineHof (segment-wise projection, min
+  * candidate by (d2, seg)) — bit-identical IEEE op sequence per
+  * segment, first-minimum-wins like the lexicographic `array_min`.
+  *
+  * Input: (line array<struct<x:double,y:double>>, px double, py
+  * double); output struct<d2,seg,t,x,y>; null when the line has
+  * fewer than 2 vertices or a null vertex.
+  *
+  * Reference semantics: changegen/db.py:129 (ST_ClosestPoint) and
+  * generator.py:208-255 (projection parameterization).
+  */
+case class ClosestPointExpr(first: Expression, second: Expression, third: Expression)
+    extends TernaryExpression with LinePointInputs {
 
   override def dataType: DataType = StructType(Seq(
     StructField("d2", DoubleType), StructField("seg", IntegerType),
@@ -43,25 +46,42 @@ case class ClosestPointExpr(first: Expression, second: Expression, third: Expres
   override def nullable: Boolean = true
   override def prettyName: String = "graft_closest_point"
 
-  override protected def nullSafeEval(lineAny: Any, pxAny: Any, pyAny: Any): Any = {
-    val line = lineAny.asInstanceOf[ArrayData]
-    val px = pxAny.asInstanceOf[Double]
-    val py = pyAny.asInstanceOf[Double]
-    val n = line.numElements()
-    if (n < 2) return null
+  override protected def nullSafeEval(line: Any, px: Any, py: Any): Any =
+    ClosestPointExpr.compute(line.asInstanceOf[ArrayData], px.asInstanceOf[Double], py.asInstanceOf[Double])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (line, px, py) => {
+      val r = ctx.freshName("r")
+      s"""
+         |InternalRow $r = graft.functions.ClosestPointExpr.compute($line, $px, $py);
+         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
+    copy(first = f, second = s, third = t)
+}
+
+object ClosestPointExpr {
+
+  /** Projection of a point onto its closest segment: squared distance,
+    * 0-based segment index, clamped parameter on that segment, and the
+    * projected point. `seg` is -1 when no segment compares below
+    * Double.MaxValue (NaN coordinates). */
+  private[functions] final class Closest(val d2: Double, val seg: Int, val t: Double, val x: Double, val y: Double)
+
+  /** The closest-segment walk over a flattened line (see
+    * [[LineDistExpr.flatten]]); first strictly-smaller d2 wins. */
+  private[functions] def closest(xs: Array[Double], ys: Array[Double], px: Double, py: Double): Closest = {
     var bestD2 = Double.MaxValue
     var bestSeg = -1
     var bestT = 0.0
     var bestX = 0.0
     var bestY = 0.0
     var i = 0
-    while (i < n - 1) {
-      if (line.isNullAt(i) || line.isNullAt(i + 1)) return null
-      val a = line.getStruct(i, 2)
-      val b = line.getStruct(i + 1, 2)
-      val ax = a.getDouble(0); val ay = a.getDouble(1)
-      val bx = b.getDouble(0); val by = b.getDouble(1)
-      val dx = bx - ax; val dy = by - ay
+    while (i < xs.length - 1) {
+      val ax = xs(i); val ay = ys(i)
+      val dx = xs(i + 1) - ax; val dy = ys(i + 1) - ay
       val len2 = dx * dx + dy * dy
       val tRaw = if (len2 == 0.0) 0.0 else ((px - ax) * dx + (py - ay) * dy) / len2
       val t = math.min(math.max(tRaw, 0.0), 1.0)
@@ -70,48 +90,16 @@ case class ClosestPointExpr(first: Expression, second: Expression, third: Expres
       if (d2 < bestD2) { bestD2 = d2; bestSeg = i; bestT = t; bestX = cx; bestY = cy }
       i += 1
     }
-    new GenericInternalRow(Array[Any](bestD2, bestSeg, bestT, bestX, bestY))
+    new Closest(bestD2, bestSeg, bestT, bestX, bestY)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (line, px, py) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val row = ctx.freshName("row")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = $line.numElements();
-         |if ($n < 2) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double ${v}BestD2 = Double.MAX_VALUE;
-         |  int ${v}BestSeg = -1;
-         |  double ${v}BestT = 0.0, ${v}BestX = 0.0, ${v}BestY = 0.0;
-         |  for (int $i = 0; $i < $n - 1; $i++) {
-         |    if ($line.isNullAt($i) || $line.isNullAt($i + 1)) { ${ev.isNull} = true; break; }
-         |    InternalRow ${v}A = $line.getStruct($i, 2);
-         |    InternalRow ${v}B = $line.getStruct($i + 1, 2);
-         |    double ${v}Ax = ${v}A.getDouble(0); double ${v}Ay = ${v}A.getDouble(1);
-         |    double ${v}Bx = ${v}B.getDouble(0); double ${v}By = ${v}B.getDouble(1);
-         |    double ${v}Dx = ${v}Bx - ${v}Ax; double ${v}Dy = ${v}By - ${v}Ay;
-         |    double ${v}Len2 = ${v}Dx * ${v}Dx + ${v}Dy * ${v}Dy;
-         |    double ${v}TRaw = (${v}Len2 == 0.0) ? 0.0
-         |      : ((${v}Dx * ($px - ${v}Ax)) + (${v}Dy * ($py - ${v}Ay))) / ${v}Len2;
-         |    double ${v}T = java.lang.Math.min(java.lang.Math.max(${v}TRaw, 0.0), 1.0);
-         |    double ${v}Cx = ${v}Ax + ${v}T * ${v}Dx; double ${v}Cy = ${v}Ay + ${v}T * ${v}Dy;
-         |    double ${v}D2 = (${v}Cx - $px) * (${v}Cx - $px) + (${v}Cy - $py) * (${v}Cy - $py);
-         |    if (${v}D2 < ${v}BestD2) {
-         |      ${v}BestD2 = ${v}D2; ${v}BestSeg = $i; ${v}BestT = ${v}T;
-         |      ${v}BestX = ${v}Cx; ${v}BestY = ${v}Cy;
-         |    }
-         |  }
-         |  InternalRow $row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |    new Object[]{${v}BestD2, ${v}BestSeg, ${v}BestT, ${v}BestX, ${v}BestY});
-         |  ${ev.value} = $row;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
+  /** struct(d2, seg, t, x, y) of the closest point; null when the line
+    * has fewer than 2 vertices or a null vertex. Called from generated
+    * code. */
+  def compute(line: ArrayData, px: Double, py: Double): InternalRow = {
+    if (line.numElements() < 2) return null
+    val f = LineDistExpr.flatten(line); if (f == null) return null
+    val c = closest(f._1, f._2, px, py)
+    new GenericInternalRow(Array[Any](c.d2, c.seg, c.t, c.x, c.y))
+  }
 }

@@ -3,78 +3,73 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.types._
 
 /** Native fractional-projection insertion index — the codegen'd form
   * of graft.spatial.Geo.insertionIndex (reference:
-  * changegen/generator.py:208-255): project p onto the line (same
-  * loop as ClosestPointExpr), build cumulative length fractions with
-  * a sequential left fold, and return the smallest 0-based vertex
-  * index whose fraction exceeds the projected location (else n-1).
+  * changegen/generator.py:208-255): project p onto the line (the
+  * closest-segment walk of ClosestPointExpr), build cumulative length
+  * fractions with a sequential left fold, and return the smallest
+  * 0-based vertex index whose fraction exceeds the projected location
+  * (else n-1).
   *
   * Bit-identical to the HOF composition (closestOnLine +
   * cumulativeFractions + array_position) — every add/div happens in
   * the same order; spec-checked against the HOF form.
   */
 case class InsertionIndexExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = first.dataType match {
-    case ArrayType(StructType(fields), _)
-        if fields.length == 2 && fields.forall(_.dataType == DoubleType) &&
-          second.dataType == DoubleType && third.dataType == DoubleType =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_insertion_index expects (array<struct<x:double,y:double>>, double, double), " +
-          s"got (${first.dataType}, ${second.dataType}, ${third.dataType})")
-  }
+    extends TernaryExpression with LinePointInputs {
 
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
   override def prettyName: String = "graft_insertion_index"
 
-  override protected def nullSafeEval(lineAny: Any, pxAny: Any, pyAny: Any): Any = {
-    val line = lineAny.asInstanceOf[ArrayData]
-    val px = pxAny.asInstanceOf[Double]
-    val py = pyAny.asInstanceOf[Double]
+  override protected def nullSafeEval(line: Any, px: Any, py: Any): Any =
+    InsertionIndexExpr.compute(line.asInstanceOf[ArrayData], px.asInstanceOf[Double],
+      py.asInstanceOf[Double]) match {
+      case -1 => null // sentinel from compute: short line / null vertex / NaN
+      case j => j
+    }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (line, px, py) => {
+      val j = ctx.freshName("j")
+      s"""
+         |int $j = graft.functions.InsertionIndexExpr.compute($line, $px, $py);
+         |if ($j < 0) { ${ev.isNull} = true; } else { ${ev.value} = $j; }
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
+    copy(first = f, second = s, third = t)
+}
+
+object InsertionIndexExpr {
+
+  /** 0-based insertion index of (px, py) into `line`; -1 (SQL null)
+    * when the line has fewer than 2 vertices, a null vertex, or no
+    * closest segment (NaN coordinates). Called from generated code. */
+  def compute(line: ArrayData, px: Double, py: Double): Int = {
     val n = line.numElements()
-    if (n < 2) return null
-    // pass 1: closest segment (identical to ClosestPointExpr)
-    var bestD2 = Double.MaxValue
-    var bestSeg = -1
-    var bestT = 0.0
-    // pass 2 inputs: cumulative lengths, same sequential fold order as
-    // aggregate(concat(acc, last+len))
+    if (n < 2) return -1
+    val f = LineDistExpr.flatten(line); if (f == null) return -1
+    val (xs, ys) = f
+    val c = ClosestPointExpr.closest(xs, ys, px, py)
+    if (c.seg < 0) return -1
+    // cumulative lengths, same sequential fold order as
+    // aggregate(concat(acc, last+len)); Geo.dist operand order
     val cums = new Array[Double](n)
     var i = 0
     while (i < n - 1) {
-      if (line.isNullAt(i) || line.isNullAt(i + 1)) return null
-      val a = line.getStruct(i, 2)
-      val b = line.getStruct(i + 1, 2)
-      val ax = a.getDouble(0); val ay = a.getDouble(1)
-      val bx = b.getDouble(0); val by = b.getDouble(1)
-      val dx = bx - ax; val dy = by - ay
-      val len2 = dx * dx + dy * dy
-      val tRaw = if (len2 == 0.0) 0.0 else ((px - ax) * dx + (py - ay) * dy) / len2
-      val t = math.min(math.max(tRaw, 0.0), 1.0)
-      val cx = ax + t * dx; val cy = ay + t * dy
-      val d2 = (cx - px) * (cx - px) + (cy - py) * (cy - py)
-      if (d2 < bestD2) { bestD2 = d2; bestSeg = i; bestT = t }
-      // Geo.dist: sqrt((ax-bx)^2 + (ay-by)^2) — note operand order
-      val segLen = math.sqrt((ax - bx) * (ax - bx) + (ay - by) * (ay - by))
-      cums(i + 1) = cums(i) + segLen
+      val dx = xs(i) - xs(i + 1); val dy = ys(i) - ys(i + 1)
+      cums(i + 1) = cums(i) + math.sqrt(dx * dx + dy * dy)
       i += 1
     }
-    // all segments NaN (NaN coordinates) → no `d2 < bestD2` ever fires;
-    // bestSeg stays -1 and frac(-1) would throw — return null instead
-    if (bestSeg < 0) return null
     val total = cums(n - 1)
     def frac(j: Int): Double = if (total == 0.0) 0.0 else cums(j) / total
-    val segStart = frac(bestSeg)
-    val segEnd = frac(bestSeg + 1)
-    val loc = segStart + bestT * (segEnd - segStart)
+    val segStart = frac(c.seg)
+    val segEnd = frac(c.seg + 1)
+    val loc = segStart + c.t * (segEnd - segStart)
     // fp9-quantized comparison: when the projection lands exactly ON a
     // vertex, `segStart + t*(segEnd-segStart)` is mathematically equal
     // to that vertex's fraction but can round one ulp under it — and
@@ -93,65 +88,4 @@ case class InsertionIndexExpr(first: Expression, second: Expression, third: Expr
     }
     n - 1
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (line, px, py) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("jj")
-      val v = ctx.freshName("v")
-      val done = ctx.freshName("done")
-      s"""
-         |int $n = $line.numElements();
-         |if ($n < 2) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double ${v}BestD2 = Double.MAX_VALUE;
-         |  int ${v}BestSeg = -1;
-         |  double ${v}BestT = 0.0;
-         |  double[] ${v}Cums = new double[$n];
-         |  for (int $i = 0; $i < $n - 1 && !${ev.isNull}; $i++) {
-         |    if ($line.isNullAt($i) || $line.isNullAt($i + 1)) { ${ev.isNull} = true; break; }
-         |    InternalRow ${v}A = $line.getStruct($i, 2);
-         |    InternalRow ${v}B = $line.getStruct($i + 1, 2);
-         |    double ${v}Ax = ${v}A.getDouble(0); double ${v}Ay = ${v}A.getDouble(1);
-         |    double ${v}Bx = ${v}B.getDouble(0); double ${v}By = ${v}B.getDouble(1);
-         |    double ${v}Dx = ${v}Bx - ${v}Ax; double ${v}Dy = ${v}By - ${v}Ay;
-         |    double ${v}Len2 = ${v}Dx * ${v}Dx + ${v}Dy * ${v}Dy;
-         |    double ${v}TRaw = (${v}Len2 == 0.0) ? 0.0
-         |      : ((($px - ${v}Ax) * ${v}Dx) + (($py - ${v}Ay) * ${v}Dy)) / ${v}Len2;
-         |    double ${v}T = java.lang.Math.min(java.lang.Math.max(${v}TRaw, 0.0), 1.0);
-         |    double ${v}Cx = ${v}Ax + ${v}T * ${v}Dx; double ${v}Cy = ${v}Ay + ${v}T * ${v}Dy;
-         |    double ${v}D2 = (${v}Cx - $px) * (${v}Cx - $px) + (${v}Cy - $py) * (${v}Cy - $py);
-         |    if (${v}D2 < ${v}BestD2) { ${v}BestD2 = ${v}D2; ${v}BestSeg = $i; ${v}BestT = ${v}T; }
-         |    double ${v}SegLen = java.lang.Math.sqrt(
-         |      (${v}Ax - ${v}Bx) * (${v}Ax - ${v}Bx) + (${v}Ay - ${v}By) * (${v}Ay - ${v}By));
-         |    ${v}Cums[$i + 1] = ${v}Cums[$i] + ${v}SegLen;
-         |  }
-         |  // all-NaN segments leave BestSeg at -1 (no d2 < bestD2 fires);
-         |  // indexing Cums[-1] would throw, so return null like eval
-         |  if (${v}BestSeg < 0) { ${ev.isNull} = true; }
-         |  if (!${ev.isNull}) {
-         |    double ${v}Total = ${v}Cums[$n - 1];
-         |    double ${v}FS = (${v}Total == 0.0) ? 0.0 : ${v}Cums[${v}BestSeg] / ${v}Total;
-         |    double ${v}FE = (${v}Total == 0.0) ? 0.0 : ${v}Cums[${v}BestSeg + 1] / ${v}Total;
-         |    double ${v}Loc = ${v}FS + ${v}BestT * (${v}FE - ${v}FS);
-         |    // fp9-quantized compare — see nullSafeEval: vertex hits
-         |    // must land on "not less" regardless of which tied
-         |    // segment won and of last-ulp rounding
-         |    long ${v}LocQ = (long) java.lang.Math.floor(${v}Loc * 1e9 + 0.5);
-         |    boolean $done = false;
-         |    for (int $j = 0; $j < $n && !$done; $j++) {
-         |      double ${v}F = (${v}Total == 0.0) ? 0.0 : ${v}Cums[$j] / ${v}Total;
-         |      long ${v}FQ = (long) java.lang.Math.floor(${v}F * 1e9 + 0.5);
-         |      if (${v}LocQ < ${v}FQ) { ${ev.value} = $j; $done = true; }
-         |    }
-         |    if (!$done) { ${ev.value} = $n - 1; }
-         |  }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
 }

@@ -84,9 +84,6 @@ object LineDistExpr {
                     px: Double, py: Double): Double =
     (ax - ox) * (py - oy) - (ay - oy) * (px - ox)
 
-  /** Min squared distance between polylines; NaN sentinel when either
-    * side is degenerate (caller maps it to SQL null). Called from
-    * generated code. */
   /** Flatten one polyline to (xs, ys) double arrays — null on a null
     * element. One O(n) staging pass makes the O(n·m) segment walk
     * allocation-free: `getStruct` wraps an UnsafeRow PER CALL, and at
@@ -127,6 +124,9 @@ object LineDistExpr {
     (minx, maxx, miny, maxy)
   }
 
+  /** Min squared distance between polylines; NaN sentinel when either
+    * side is degenerate (caller maps it to SQL null). Called from
+    * generated code. */
   def compute(a: ArrayData, b: ArrayData): Double = {
     val na = a.numElements(); val nb = b.numElements()
     if (na < 2 || nb < 2) return Double.NaN

@@ -256,7 +256,7 @@ object Changegen {
       val sup = t(s, dir, "supplier").select(col("s_suppkey"),
         skewX(col("s_suppkey")).as("sx"), skewY(col("s_suppkey")).as("sy"))
       DWithinJoin.pointPoint(sup, "s_suppkey", "sx", "sy", c, "c_custkey", "cx", "cy", 0.5,
-          occupancyTarget = 16, maxSubdiv = 8)
+          occupancyTarget = 16)
         .select(col("c_custkey"), col("s_suppkey"), fp(col("dist"), 6).as("dist_fp6"))
     }, oracle =
       // the salting must be value-invisible: the oracle is a plain

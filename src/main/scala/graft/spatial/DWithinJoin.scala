@@ -24,30 +24,31 @@ import org.apache.spark.sql.functions._
   */
 object DWithinJoin {
 
+  /** Finest per-axis subdivision of one dense cell. */
+  private val MaxSubdiv = 8
+
+  /** Dense cells salted at most: the heaviest ones by occupancy, so the
+    * dense-cell table always broadcasts. */
+  private val MaxDenseCells = 100000
+
   /** Point-point within-radius join.
     * left: (leftId, lx, ly), right: (rightId, rx, ry) column names.
     * Output: leftId, rightId, dist (double).
     *
-    * `cellsPerRadius` is the manual base-grid lever: cell side =
-    * radius/k, so a dense region spreads over k² more shuffle keys at
-    * the cost of a (2k+1)²/9× larger (but constant) left replication.
-    *
-    * ADAPTIVE SALTING (on by default): on top of the base grid, cells
-    * whose RIGHT-side occupancy exceeds `occupancyTarget` are
+    * ADAPTIVE SALTING: on top of the base grid (cell side = radius),
+    * cells whose RIGHT-side occupancy exceeds `occupancyTarget` are
     * subdivided f× per axis (f = ceil(sqrt(occ/target)), capped at
-    * `maxSubdiv`), so per-join-key candidate work is bounded ~target
+    * [[MaxSubdiv]]), so per-join-key candidate work is bounded ~target
     * everywhere — a city cell no longer pays occ_L × occ_R against a
     * uniform grid. The dense-cell table is derived from the data (one
-    * aggregation over the right side, top-`maxDenseCells` heaviest
+    * aggregation over the right side, top-[[MaxDenseCells]] heaviest
     * cells → always broadcastable), joined broadcast onto both sides,
     * and every non-dense cell keeps f = 1 — with NO dense cells the
     * join degenerates to the plain base grid, candidate-for-candidate.
     * Exactness is grid-algebra, not sampling: a right point lives in
     * exactly one (coarse, fine) key; the left side enumerates every
     * fine key its radius box intersects inside each coarse replica, so
-    * a within-radius pair meets exactly once at ANY subdivision.
-    * `occupancyTarget <= 0` disables the adaptive layer entirely
-    * (plan-identical to the plain grid). */
+    * a within-radius pair meets exactly once at ANY subdivision. */
   def pointPoint(
       left: DataFrame,
       leftId: String,
@@ -58,113 +59,83 @@ object DWithinJoin {
       rx: String,
       ry: String,
       radius: Double,
-      cellsPerRadius: Int = 1,
       excludeEqual: Boolean = false,
-      occupancyTarget: Int = 2048,
-      maxSubdiv: Int = 8,
-      maxDenseCells: Int = 100000
+      occupancyTarget: Int = 2048
   ): DataFrame = {
-    require(cellsPerRadius >= 1, "cellsPerRadius must be >= 1")
-    val k = cellsPerRadius
-    val cs = radius / k
-    val cell = lit(cs)
-    val offsets = -k to k
-    val joined =
-      if (occupancyTarget <= 0) {
-        val lCells = left.select(
-          col(leftId),
-          col(lx).as("_lx"),
-          col(ly).as("_ly"),
-          explode(
-            array(
-              (for (dx <- offsets; dy <- offsets)
-                yield struct(
-                  (floor(col(lx) / cell) + dx).cast("long").as("cx"),
-                  (floor(col(ly) / cell) + dy).cast("long").as("cy")
-                )): _*
-            )
-          ).as("_cell")
-        )
-        val rCells = right.select(
-          col(rightId),
-          col(rx).as("_rx"),
-          col(ry).as("_ry"),
-          struct(floor(col(rx) / cell).cast("long").as("cx"), floor(col(ry) / cell).cast("long").as("cy")).as("_cell")
-        )
-        lCells.join(rCells, "_cell")
-      } else {
-        // dense-cell table: (coarse cell) -> subdivision factor f.
-        // Top-N by occupancy keeps it broadcastable no matter how
-        // pathological the distribution; cells past the cap simply
-        // stay coarse (correct, just unsalted).
-        val dense = right
-          .groupBy(floor(col(rx) / cell).cast("long").as("_dcx"),
-            floor(col(ry) / cell).cast("long").as("_dcy"))
-          .agg(count(lit(1)).as("_n"))
-          .filter(col("_n") > occupancyTarget)
-          .orderBy(col("_n").desc)
-          .limit(maxDenseCells)
-          .select(col("_dcx"), col("_dcy"),
-            least(lit(maxSubdiv),
-              ceil(sqrt(col("_n") / lit(occupancyTarget.toDouble)))).cast("int").as("_f"))
-        // right: exactly one (coarse, fine) key; f = 1 -> fine == coarse.
-        // The fine index derives from the WITHIN-CELL offset, clamped
-        // to [0, f), so float rounding at a cell boundary can never
-        // place a point's fine key outside its coarse cell's range
-        def fineIdx(v: Column, dc: Column, f: Column): Column =
-          dc * f + least(f - 1, greatest(lit(0L),
-            floor((v - dc * cell) * f / cell).cast("long")))
-        val rKeyed = right
-          .select(col(rightId), col(rx).as("_rx"), col(ry).as("_ry"),
-            floor(col(rx) / cell).cast("long").as("_dcx"),
-            floor(col(ry) / cell).cast("long").as("_dcy"))
-          .join(broadcast(dense), Seq("_dcx", "_dcy"), "left")
-          .withColumn("_f", coalesce(col("_f"), lit(1)))
-          .select(col(rightId), col("_rx"), col("_ry"),
-            struct(col("_dcx").as("cx"), col("_dcy").as("cy"),
-              fineIdx(col("_rx"), col("_dcx"), col("_f")).as("fx"),
-              fineIdx(col("_ry"), col("_dcy"), col("_f")).as("fy")).as("_cell"))
-        // left: coarse replicas as before, then every fine key the
-        // radius box intersects INSIDE each replica (clamped to the
-        // replica's fine range; an empty clamp means the box only
-        // grazes the replica boundary in float — no pair possible
-        // there, so it drops)
-        val r = lit(radius)
-        val lKeyed = left
-          .select(col(leftId), col(lx).as("_lx"), col(ly).as("_ly"),
-            explode(array(
-              (for (dx <- offsets; dy <- offsets)
-                yield struct(
-                  (floor(col(lx) / cell) + dx).cast("long").as("ccx"),
-                  (floor(col(ly) / cell) + dy).cast("long").as("ccy")
-                )): _*
-            )).as("_cc"))
-          .select(col(leftId), col("_lx"), col("_ly"),
-            col("_cc.ccx").as("_dcx"), col("_cc.ccy").as("_dcy"))
-          .join(broadcast(dense), Seq("_dcx", "_dcy"), "left")
-          .withColumn("_f", coalesce(col("_f"), lit(1)))
-          // box range padded ±1 fine cell: absorbs any single-ulp
-          // disagreement with the right side's clamped fine index (the
-          // exact dist filter below discards the extra candidates)
-          .withColumn("_fxlo", greatest(col("_dcx") * col("_f"),
-            floor((col("_lx") - r) * col("_f") / cell).cast("long") - 1))
-          .withColumn("_fxhi", least(col("_dcx") * col("_f") + col("_f") - 1,
-            floor((col("_lx") + r) * col("_f") / cell).cast("long") + 1))
-          .withColumn("_fylo", greatest(col("_dcy") * col("_f"),
-            floor((col("_ly") - r) * col("_f") / cell).cast("long") - 1))
-          .withColumn("_fyhi", least(col("_dcy") * col("_f") + col("_f") - 1,
-            floor((col("_ly") + r) * col("_f") / cell).cast("long") + 1))
-          .withColumn("_cell", explode(flatten(transform(
-            when(col("_fxlo") <= col("_fxhi"), sequence(col("_fxlo"), col("_fxhi")))
-              .otherwise(array().cast("array<bigint>")),
-            fx => transform(
-              when(col("_fylo") <= col("_fyhi"), sequence(col("_fylo"), col("_fyhi")))
-                .otherwise(array().cast("array<bigint>")),
-              fy => struct(col("_dcx").as("cx"), col("_dcy").as("cy"),
-                fx.as("fx"), fy.as("fy")))))))
-          .select(col(leftId), col("_lx"), col("_ly"), col("_cell"))
-        lKeyed.join(rKeyed, "_cell")
-      }
+    require(occupancyTarget > 0, s"pointPoint occupancyTarget must be > 0, got $occupancyTarget")
+    val cell = lit(radius)
+    val offsets = -1 to 1
+    // dense-cell table: (coarse cell) -> subdivision factor f.
+    // Top-N by occupancy keeps it broadcastable no matter how
+    // pathological the distribution; cells past the cap simply
+    // stay coarse (correct, just unsalted).
+    val dense = right
+      .groupBy(floor(col(rx) / cell).cast("long").as("_dcx"),
+        floor(col(ry) / cell).cast("long").as("_dcy"))
+      .agg(count(lit(1)).as("_n"))
+      .filter(col("_n") > occupancyTarget)
+      .orderBy(col("_n").desc)
+      .limit(MaxDenseCells)
+      .select(col("_dcx"), col("_dcy"),
+        least(lit(MaxSubdiv),
+          ceil(sqrt(col("_n") / lit(occupancyTarget.toDouble)))).cast("int").as("_f"))
+    // right: exactly one (coarse, fine) key; f = 1 -> fine == coarse.
+    // The fine index derives from the WITHIN-CELL offset, clamped
+    // to [0, f), so float rounding at a cell boundary can never
+    // place a point's fine key outside its coarse cell's range
+    def fineIdx(v: Column, dc: Column, f: Column): Column =
+      dc * f + least(f - 1, greatest(lit(0L),
+        floor((v - dc * cell) * f / cell).cast("long")))
+    val rKeyed = right
+      .select(col(rightId), col(rx).as("_rx"), col(ry).as("_ry"),
+        floor(col(rx) / cell).cast("long").as("_dcx"),
+        floor(col(ry) / cell).cast("long").as("_dcy"))
+      .join(broadcast(dense), Seq("_dcx", "_dcy"), "left")
+      .withColumn("_f", coalesce(col("_f"), lit(1)))
+      .select(col(rightId), col("_rx"), col("_ry"),
+        struct(col("_dcx").as("cx"), col("_dcy").as("cy"),
+          fineIdx(col("_rx"), col("_dcx"), col("_f")).as("fx"),
+          fineIdx(col("_ry"), col("_dcy"), col("_f")).as("fy")).as("_cell"))
+    // left: its cell + 8 neighbor replicas, then every fine key the
+    // radius box intersects INSIDE each replica (clamped to the
+    // replica's fine range; an empty clamp means the box only
+    // grazes the replica boundary in float — no pair possible
+    // there, so it drops)
+    val r = lit(radius)
+    val lKeyed = left
+      .select(col(leftId), col(lx).as("_lx"), col(ly).as("_ly"),
+        explode(array(
+          (for (dx <- offsets; dy <- offsets)
+            yield struct(
+              (floor(col(lx) / cell) + dx).cast("long").as("ccx"),
+              (floor(col(ly) / cell) + dy).cast("long").as("ccy")
+            )): _*
+        )).as("_cc"))
+      .select(col(leftId), col("_lx"), col("_ly"),
+        col("_cc.ccx").as("_dcx"), col("_cc.ccy").as("_dcy"))
+      .join(broadcast(dense), Seq("_dcx", "_dcy"), "left")
+      .withColumn("_f", coalesce(col("_f"), lit(1)))
+      // box range padded ±1 fine cell: absorbs any single-ulp
+      // disagreement with the right side's clamped fine index (the
+      // exact dist filter below discards the extra candidates)
+      .withColumn("_fxlo", greatest(col("_dcx") * col("_f"),
+        floor((col("_lx") - r) * col("_f") / cell).cast("long") - 1))
+      .withColumn("_fxhi", least(col("_dcx") * col("_f") + col("_f") - 1,
+        floor((col("_lx") + r) * col("_f") / cell).cast("long") + 1))
+      .withColumn("_fylo", greatest(col("_dcy") * col("_f"),
+        floor((col("_ly") - r) * col("_f") / cell).cast("long") - 1))
+      .withColumn("_fyhi", least(col("_dcy") * col("_f") + col("_f") - 1,
+        floor((col("_ly") + r) * col("_f") / cell).cast("long") + 1))
+      .withColumn("_cell", explode(flatten(transform(
+        when(col("_fxlo") <= col("_fxhi"), sequence(col("_fxlo"), col("_fxhi")))
+          .otherwise(array().cast("array<bigint>")),
+        fx => transform(
+          when(col("_fylo") <= col("_fyhi"), sequence(col("_fylo"), col("_fyhi")))
+            .otherwise(array().cast("array<bigint>")),
+          fy => struct(col("_dcx").as("cx"), col("_dcy").as("cy"),
+            fx.as("fx"), fy.as("fy")))))))
+      .select(col(leftId), col("_lx"), col("_ly"), col("_cell"))
+    val joined = lKeyed.join(rKeyed, "_cell")
     val withDist = joined
       .withColumn("dist", Geo.dist(col("_lx"), col("_ly"), col("_rx"), col("_ry")))
       .filter(col("dist") <= radius)

@@ -740,41 +740,36 @@ class DedupSimSpec extends AnyFunSuite {
     cents.unpersist()
   }
 
-  test("large-star/small-star CC handles a 200-node chain in O(log n) rounds; min-label throws at truncation") {
-    // worst case for min-label propagation: one long chain (diameter
-    // 199); near-dup graphs only look like this when duplicates form
+  test("connectedComponents star fallback labels a 200-node chain") {
+    // worst case for label propagation: one long chain (diameter 199);
+    // near-dup graphs only look like this when duplicates form
     // transitive runs, but correctness must not depend on shape
     val n = 200
     val nodes = (1 to n).map(_.toLong).toDF("id")
     val chain = (1 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("a", "b")
-    // star-contraction: 12 rounds >> log2(200), far < diameter
-    val star = Dedup.connectedComponentsStar(nodes, "id", chain, "a", "b", maxIter = 12)
-      .as[(Long, Long)].collect().toMap
-    assert(star.size == n && star.values.forall(_ == 1L), "chain must collapse to component 1")
-    // identical labels to the min-label operator when that one is
-    // allowed enough rounds (maxDriverEdges = 0 pins the ITERATIVE
-    // path — the default would satisfy this via driver union-find)
-    val plain = Dedup.connectedComponents(nodes, "id", chain, "a", "b", maxIter = 250,
-        maxDriverEdges = 0)
-      .as[(Long, Long)].collect().toMap
-    assert(star == plain)
-    // ... and to the round-18 driver union-find fast path (the default
-    // for small edge sets), which computes the exact closure directly
+    // the driver union-find fast path (the default at this size)
     val fast = Dedup.connectedComponents(nodes, "id", chain, "a", "b")
       .as[(Long, Long)].collect().toMap
-    assert(fast == plain)
-    // min-label at 12 rounds CANNOT finish a diameter-199 chain: the
-    // strict default must throw, never return silently-wrong labels
-    val ex = intercept[IllegalStateException] {
-      Dedup.connectedComponents(nodes, "id", chain, "a", "b", maxIter = 12,
-        maxDriverEdges = 0)
-    }
-    assert(ex.getMessage.contains("did not converge"))
-    // isolated node: own component under star contraction
-    val iso = Dedup.connectedComponentsStar(
-      Seq(1L, 2L, 99L).toDF("id"), "id", Seq((1L, 2L)).toDF("a", "b"), "a", "b")
+    assert(fast.size == n && fast.values.forall(_ == 1L), "chain must collapse to component 1")
+    // maxDriverEdges = 0 forces the distributed large-star/small-star
+    // path, at the default maxIter
+    val star = Dedup.connectedComponents(nodes, "id", chain, "a", "b", maxDriverEdges = 0)
       .as[(Long, Long)].collect().toMap
-    assert(iso == Map(1L -> 1L, 2L -> 1L, 99L -> 99L))
+    assert(star == fast)
+    // Int ids keep an IntegerType component column on that path
+    val intStar = Dedup.connectedComponents((1 to n).toDF("id"), "id",
+        (1 until n).map(i => (i, i + 1)).toDF("a", "b"), "a", "b", maxDriverEdges = 0)
+    assert(intStar.schema("component").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(intStar.as[(Int, Int)].collect().toMap == fast.map { case (k, v) => k.toInt -> v.toInt })
+    // a second component, an isolated node, and non-integral ids
+    val iso = Dedup.connectedComponents(Seq(1L, 2L, 5L, 7L, 99L).toDF("id"), "id",
+        Seq((1L, 2L), (7L, 5L)).toDF("a", "b"), "a", "b", maxDriverEdges = 0)
+      .as[(Long, Long)].collect().toMap
+    assert(iso == Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 7L -> 5L, 99L -> 99L))
+    val str = Dedup.connectedComponents(Seq("b", "a", "c").toDF("id"), "id",
+        Seq(("b", "a")).toDF("a", "b"), "a", "b")
+      .as[(String, String)].collect().toMap
+    assert(str == Map("a" -> "a", "b" -> "a", "c" -> "c"))
   }
 
   test("cosine of identical vectors is 1") {

@@ -94,6 +94,63 @@ class GeoSpec extends AnyFunSuite {
     hofIdx.collect()
   }
 
+  test("closest-point and insertion-index kernels agree in interpreted and generated code on edge inputs") {
+    val nan = Double.NaN
+    def pts(p: (Double, Double)*): Option[Seq[Option[(Double, Double)]]] = Some(p.map(Some(_)))
+    val cases: Seq[(Int, Option[Seq[Option[(Double, Double)]]], Option[Double], Double)] = Seq(
+      (1, Some(Nil), Some(1.0), 1.0),                                  // n = 0
+      (2, pts((1, 1)), Some(1.0), 1.0),                                // n = 1
+      (3, None, Some(1.0), 1.0),                                       // null line
+      (4, Some(Seq(Some((0.0, 0.0)), None, Some((2.0, 0.0)))), Some(1.0), 1.0), // null vertex
+      (5, pts((nan, nan), (nan, nan)), Some(1.0), 1.0),                // all NaN
+      (6, pts((0, 0), (10, 0), (nan, 5)), Some(4.0), 1.0),             // one NaN vertex
+      (7, pts((0, 0), (10, 0)), Some(nan), 1.0),                       // NaN point
+      (8, pts((1, 1), (1, 1), (5, 1)), Some(3.0), 2.0),                // zero-length segment
+      (9, pts((2, 2), (2, 2)), Some(0.0), 0.0),                        // zero-length line
+      (10, pts((0, 0), (10, 0), (20, 0)), Some(10.0), 0.0),            // projection on a vertex
+      (11, pts((0, 0), (1, 1), (3, 2), (4, 0)), Some(1.0), 1.0),       // on a vertex, irrational lengths
+      (12, pts((0, 0), (10, 0), (10, 10)), Some(9.0), 4.0),            // plain case
+      (13, pts((0, 0), (10, 0)), None, 1.0))                           // null point
+    // parquet-backed, NOT a local relation: ConvertToLocalRelation
+    // would evaluate a local frame's projection in the optimizer, and
+    // no generated code would run
+    val dir = java.nio.file.Files.createTempDirectory("graft_kernels").toString
+    cases.toDF("id", "pts", "px", "py")
+      .select(col("id"), col("px"), col("py"),
+        transform(col("pts"), p => when(p.isNotNull, struct(p("_1").as("x"), p("_2").as("y")))).as("line"))
+      .write.mode("overwrite").parquet(dir)
+    def run(codegen: Boolean): (Seq[String], Seq[String]) = {
+      val conf = Seq(
+        "spark.sql.codegen.wholeStage" -> codegen.toString,
+        "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"))
+      val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val df = spark.read.parquet(dir).select(col("id"),
+          Geo.closestOnLine(col("line"), col("px"), col("py")).as("cp"),
+          Geo.insertionIndex(col("line"), col("px"), col("py")).as("ix"))
+        val rows = df.collect().sortBy(_.getInt(0)).map(_.toString).toSeq
+        val code = org.apache.spark.sql.execution.debug.codegenStringSeq(df.queryExecution.executedPlan)
+          .map(_._2)
+        (rows, code)
+      } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    val (interpreted, noCode) = run(codegen = false)
+    val (generated, code) = run(codegen = true)
+    assert(noCode.isEmpty, "interpreted mode still generated a whole-stage subtree")
+    assert(code.exists(c => c.contains("ClosestPointExpr.compute") && c.contains("InsertionIndexExpr.compute")),
+      "generated code does not call the kernels")
+    assert(interpreted == generated)
+    assert(interpreted.length == cases.length)
+    // the edge results themselves
+    val byId = interpreted.map(r => r.stripPrefix("[").takeWhile(_ != ',').toInt -> r).toMap
+    (1 to 4).foreach(i => assert(byId(i) == s"[$i,null,null]", byId(i)))
+    assert(byId(5) == "[5,[1.7976931348623157E308,-1,0.0,0.0,0.0],null]", byId(5))
+    assert(byId(10).endsWith(",2]") && byId(11).endsWith(",2]"), (byId(10), byId(11)))
+    assert(byId(12) == "[12,[1.0,1,0.4,10.0,4.0],2]", byId(12))
+    assert(byId(13) == "[13,null,null]", byId(13))
+  }
+
   test("graft_dot nulls the fold when an element is null (HOF parity)") {
     val df = Seq(1).toDF("i").select(
       array(lit(1.0f), lit(null).cast("float"), lit(3.0f)).as("a"),
@@ -265,10 +322,6 @@ class GeoSpec extends AnyFunSuite {
       .filter(Geo.dist(col("lx"), col("ly"), col("rx"), col("ry")) <= 3.0)
       .select("lid", "rid").as[(Long, Long)].collect().toSet
     assert(grid == brute && grid.nonEmpty)
-    // subdivided cells (skew salting) must not change the result set
-    val salted = DWithinJoin.pointPoint(left, "lid", "lx", "ly", right, "rid", "rx", "ry", 3.0, cellsPerRadius = 3)
-      .select("lid", "rid").as[(Long, Long)].collect().toSet
-    assert(salted == brute)
   }
 
   test("adaptive salting: dense-cell subdivision is exactly-once and equals brute force (skew, boundary straddle, negatives)") {
@@ -286,20 +339,15 @@ class GeoSpec extends AnyFunSuite {
       .select("lid", "rid").as[(Long, Long)].collect().toSet
     // low target forces real subdivision (500 in one cell, target 8)
     val salted = DWithinJoin.pointPoint(left, "lid", "lx", "ly", right, "rid", "rx", "ry", 2.0,
-        occupancyTarget = 8, maxSubdiv = 4)
+        occupancyTarget = 8)
       .select("lid", "rid").as[(Long, Long)].collect()
     assert(salted.length == salted.toSet.size, "a pair met in more than one fine cell")
     assert(salted.toSet == brute)
-    // adaptive layer disabled -> the plain grid agrees
-    val plain = DWithinJoin.pointPoint(left, "lid", "lx", "ly", right, "rid", "rx", "ry", 2.0,
-        occupancyTarget = 0)
-      .select("lid", "rid").as[(Long, Long)].collect().toSet
-    assert(plain == brute)
-    // composes with the manual base grid
-    val both = DWithinJoin.pointPoint(left, "lid", "lx", "ly", right, "rid", "rx", "ry", 2.0,
-        cellsPerRadius = 2, occupancyTarget = 8, maxSubdiv = 3)
-      .select("lid", "rid").as[(Long, Long)].collect().toSet
-    assert(both == brute)
+    // a non-positive target has no meaning: refused, by name
+    val bad = intercept[IllegalArgumentException] {
+      DWithinJoin.pointPoint(left, "lid", "lx", "ly", right, "rid", "rx", "ry", 2.0, occupancyTarget = 0)
+    }
+    assert(bad.getMessage.contains("occupancyTarget"), bad.getMessage)
   }
 
   test("excludeEqual drops duplicate-geometry pairs but keeps co-located distinct geometries") {

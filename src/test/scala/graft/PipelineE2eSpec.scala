@@ -370,8 +370,10 @@ class PipelineE2eSpec extends AnyFunSuite {
     // identical argv except the first argument: directory vs jdbc URL
     val outP = s"$tmp/parquet_mode.osc"
     val outJ = s"$tmp/jdbc_mode.osc"
-    ChangegenPipeline.run(Array(tmp, outP, "7", "1000000", "false", "0", "", "_deletions"), spark)
-    ChangegenPipeline.run(Array(url, outJ, "7", "1000000", "false", "0", "", "_deletions"), spark)
+    val flags = Array("--max-nodes-per-way=7", "--id-offset=1000000", "--neg-ids=false",
+      "--shards=0", "--deletion-suffix=_deletions")
+    ChangegenPipeline.run(Array(tmp, outP) ++ flags, spark)
+    ChangegenPipeline.run(Array(url, outJ) ++ flags, spark)
 
     // same changefile CONTENT: within-section row order is partition
     // order (layout-dependent by design — 8 JDBC ranges vs one parquet
@@ -796,6 +798,11 @@ class PipelineE2eSpec extends AnyFunSuite {
         "--id-offset=2000000"), spark)
     }
     assert(dup.getMessage.contains("--id-offset"), dup.getMessage)
+    // options are flags only: a third positional argument is an error
+    val extra = intercept[IllegalArgumentException] {
+      ChangegenPipeline.run(Array(url, out, "7"), spark)
+    }
+    assert(extra.getMessage.contains("unexpected positional argument(s): 7"), extra.getMessage)
   }
 
   test("modify-meta with an osm_id missing from the extract fails loudly (reference KeyError, generator.py:634-650)") {
