@@ -50,12 +50,6 @@ object Bench {
   private def fmt(v: Double, decimals: Int): String =
     if (v < 0) "-1" else BigDecimal(v).setScale(decimals, BigDecimal.RoundingMode.HALF_UP).underlying.stripTrailingZeros.toPlainString
 
-  /** Resolve the pinned-baseline file. A relative path is tried
-    * against the cwd AND every ancestor containing `build.sbt` —
-    * the round-9 run proved the driver's sbt cwd is not always the
-    * repo root, which silently starved re-adjudication of every
-    * threshold (bench_detail.json showed readjudicated:[] while
-    * dd_containment sat at 2.1× its pin). */
   /** Nearest ancestor of user.dir containing build.sbt — the project
     * root both the baseline read and the detail-JSON write anchor to
     * (ONE walk shared by both, so a future fix can't re-split them). */
@@ -68,6 +62,12 @@ object Bench {
     None
   }
 
+  /** Resolve the pinned-baseline file. A relative path is tried
+    * against the cwd AND every ancestor containing `build.sbt` —
+    * the round-9 run proved the driver's sbt cwd is not always the
+    * repo root, which silently starved re-adjudication of every
+    * threshold (bench_detail.json showed readjudicated:[] while
+    * dd_containment sat at 2.1× its pin). */
   private def resolveBaseline(path: String): Option[java.io.File] = {
     val f = new java.io.File(path)
     if (f.isAbsolute) return Some(f).filter(_.isFile)

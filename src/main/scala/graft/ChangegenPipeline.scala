@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.WkbGeomExpr
 import graft.operators.{SequentialIds, SnapshotDiff, WayOps}
 import graft.osm.OsmChangeXml
 import graft.spatial.DWithinJoin
@@ -101,29 +102,26 @@ object ChangegenPipeline {
     else spark.read.parquet(s"$dir/$name.parquet")
 
   /** Geometry class of one WKB/hex-EWKB value: 1 = point, 2 = line,
-    * 3 = polygon (MULTI* fold onto their base type; ISO Z/M offsets
-    * and EWKB flag bits stripped). Driver-side constant work — used
+    * 3 = polygon (MULTI* fold onto their base type), read through the
+    * codec's [[WkbGeomExpr.readHeader]]; an unreadable header fails
+    * naming it. Driver-side constant work — used
     * to route each DISCOVERED feature table to the point/line/polygon
     * seam from a single sampled row, the way the reference's OGR
     * layer loop branches on the feature's geometry type
     * (generator.py:604-686). imposm-style tables are homogeneous per
     * table, so one sample classifies the table. */
   def wkbClass(v: Any): Int = {
-    val bytes: Array[Byte] = v match {
-      case b: Array[Byte] => b
-      case s: String =>
-        s.take(10).grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+    val (head, bytes) = v match {
+      case b: Array[Byte] => (b.take(9).map("%02x".format(_)).mkString, b)
+      // the header is at most 9 bytes: byte order, type, EWKB SRID
+      case s: String => (s.take(18), WkbGeomExpr.hexDecode(s.take(18)))
       case other => throw new IllegalArgumentException(
         s"unsupported wkb_geometry value type: ${other.getClass.getName}")
     }
-    require(bytes.length >= 5, "truncated WKB header")
-    val le = bytes(0) == 1
-    val raw =
-      if (le) (bytes(1) & 0xff) | ((bytes(2) & 0xff) << 8) |
-        ((bytes(3) & 0xff) << 16) | ((bytes(4) & 0xff) << 24)
-      else ((bytes(1) & 0xff) << 24) | ((bytes(2) & 0xff) << 16) |
-        ((bytes(3) & 0xff) << 8) | (bytes(4) & 0xff)
-    ((raw & 0x0FFFFFFF) % 1000) match {
+    val h = if (bytes == null) null else WkbGeomExpr.readHeader(bytes, 0)
+    require(h != null, s"unreadable WKB header '$head': needs hex digits (string values), " +
+      "a 0/1 byte-order mark, a type code with ISO dimension 0-3, and the SRID when flagged")
+    h.baseType match {
       case 1 | 4 => 1
       case 2 | 5 => 2
       case 3 | 6 => 3

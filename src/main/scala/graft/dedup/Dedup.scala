@@ -363,9 +363,15 @@ object Dedup {
     // from `nodes`): an edge list with narrower endpoint columns must
     // not narrow the output `component` column
     val idType = nodes.schema(nodes.columns.indexOf(idCol)).dataType
-    val sym = edges.select(col(aCol).cast(idType).as("src"), col(bCol).cast(idType).as("dst"))
+    val integral = idType == org.apache.spark.sql.types.LongType ||
+      idType == org.apache.spark.sql.types.IntegerType
+    val probes = maxDriverEdges > 0 && integral && maxDriverEdges <= (Int.MaxValue / 2 - 1)
+    val sym0 = edges.select(col(aCol).cast(idType).as("src"), col(bCol).cast(idType).as("dst"))
       .union(edges.select(col(bCol).cast(idType).as("src"), col(aCol).cast(idType).as("dst")))
-      .localCheckpoint()
+    // only the driver probe reads `sym` twice (its LIMIT collect, then
+    // the star path on overflow); the star path checkpoints its own
+    // edge set, so without the probe a checkpoint here is a wasted job
+    val sym = if (probes) sym0.localCheckpoint() else sym0
     // (node, label) rows re-attach to every node; untouched nodes keep
     // their own id
     def labelNodes(labels: DataFrame): DataFrame =
@@ -373,9 +379,7 @@ object Dedup {
         .join(labels, col("_cc_n") === col("node"), "left")
         .select(col("_cc_n").as(idCol),
           coalesce(col("label"), col("_cc_n")).as("component"))
-    val integral = idType == org.apache.spark.sql.types.LongType ||
-      idType == org.apache.spark.sql.types.IntegerType
-    if (maxDriverEdges > 0 && integral && maxDriverEdges <= (Int.MaxValue / 2 - 1)) {
+    if (probes) {
       val cap = (2 * maxDriverEdges + 1).toInt // sym carries each edge twice
       val probe = sym.limit(cap).collect()
       if (probe.length < cap) {
@@ -684,11 +688,6 @@ object Dedup {
   private[graft] def shingleKeyHof(sh: Column): Column =
     conv(substring(md5(sh), 1, 15), 16, 10).cast("long")
 
-  /** Jaccard similarity of shingle sets for candidate pairs, computed by
-    * explode → co-group (never n²: only ids sharing ≥1 shingle meet).
-    * Returns (doc_a, doc_b, inter, union_, jaccard_fp4) for pairs with
-    * jaccard ≥ threshold.
-    */
   /** PREFIX-FILTERED set-similarity join (Bayardo et al. AllPairs /
     * Xiao et al. PPJoin candidate generation — the OTHER classic
     * strategy next to [[ngramJaccardPairs]]'s shingle co-group):
@@ -773,6 +772,11 @@ object Dedup {
       .select("doc_a", "doc_b", "inter", "union_", "jaccard_fp4")
   }
 
+  /** Jaccard similarity of shingle sets for candidate pairs, computed by
+    * explode → co-group (never n²: only ids sharing ≥1 shingle meet).
+    * Returns (doc_a, doc_b, inter, union_, jaccard_fp4) for pairs with
+    * jaccard ≥ threshold.
+    */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String, n: Int, threshold: Double, maxShingleDf: Int = 1000): DataFrame = {
     // carry the per-doc set size on every exploded row (it is constant
     // per doc) — no separate `sizes` branch, no join-back, so the
@@ -967,22 +971,6 @@ object Dedup {
         sum(when(col("_common").isNotNull, 1L).otherwise(0L)).as("n_dropped"))
   }
 
-  /** Containment near-dup pairs: C(A→B) = |A∩B| / |A| over distinct
-    * n-gram shingles — the ASYMMETRIC cousin of [[ngramJaccardPairs]].
-    * A short document embedded verbatim in a much longer one has
-    * containment ≈ 1 while Jaccard dilutes toward |A|/|B| (below any
-    * usable bar) — the quote/aggregator/boilerplate-wrapper case
-    * Jaccard structurally misses. Pairs survive when EITHER direction
-    * reaches `threshold`; both directions are emitted so the caller
-    * keeps the longer doc (or the shorter, for quote mining).
-    *
-    * Same scale machinery as the Jaccard op: per-doc set size carried
-    * on the exploded rows (no sizes join-back), frequent-shingle
-    * guard via a COUNT window over the shuffle the self-join needs
-    * anyway. The guard prunes shingles from both docs symmetrically,
-    * so measured containment can only UNDER-count — a pair at 1.0
-    * stays a pair unless its evidence was itself boilerplate.
-    */
   /** Near-dup candidate pairs from shared winnowing fingerprints —
     * the MOSS match step over [[graft.text.TextAnalysis.winnow]]:
     * documents sharing ≥ `minShared` distinct fingerprint hashes
@@ -1016,6 +1004,22 @@ object Dedup {
       .filter(col("n_shared") >= minShared)
   }
 
+  /** Containment near-dup pairs: C(A→B) = |A∩B| / |A| over distinct
+    * n-gram shingles — the ASYMMETRIC cousin of [[ngramJaccardPairs]].
+    * A short document embedded verbatim in a much longer one has
+    * containment ≈ 1 while Jaccard dilutes toward |A|/|B| (below any
+    * usable bar) — the quote/aggregator/boilerplate-wrapper case
+    * Jaccard structurally misses. Pairs survive when EITHER direction
+    * reaches `threshold`; both directions are emitted so the caller
+    * keeps the longer doc (or the shorter, for quote mining).
+    *
+    * Same scale machinery as the Jaccard op: per-doc set size carried
+    * on the exploded rows (no sizes join-back), frequent-shingle
+    * guard via a COUNT window over the shuffle the self-join needs
+    * anyway. The guard prunes shingles from both docs symmetrically,
+    * so measured containment can only UNDER-count — a pair at 1.0
+    * stays a pair unless its evidence was itself boilerplate.
+    */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        n: Int, threshold: Double,
                        maxShingleDf: Int = 1000): DataFrame = {

@@ -120,18 +120,12 @@ object GraftFunctions {
       FunctionIdentifier("graft_trigram_score"),
       new ExpressionInfo(classOf[TrigramScoreExpr].getName, "graft_trigram_score"),
       (children: Seq[Expression]) => TrigramScoreExpr(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_geom_from_wkb"),
-      new ExpressionInfo(classOf[WkbGeomExpr].getName, "graft_geom_from_wkb"),
-      (children: Seq[Expression]) => WkbGeomExpr(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_geom_rings"),
-      new ExpressionInfo(classOf[WkbRingsExpr].getName, "graft_geom_rings"),
-      (children: Seq[Expression]) => WkbRingsExpr(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_geom_parts"),
-      new ExpressionInfo(classOf[WkbPartsExpr].getName, "graft_geom_parts"),
-      (children: Seq[Expression]) => WkbPartsExpr(children(0))))
+    WkbGeomExpr.sqlNames.zipWithIndex.foreach { case (name, depth) =>
+      ext.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(classOf[WkbGeomExpr].getName, name),
+        (children: Seq[Expression]) => WkbGeomExpr(children(0), depth)))
+    }
     ext.injectFunction((
       FunctionIdentifier("graft_bpe_encode"),
       new ExpressionInfo(classOf[BpeEncodeExpr].getName, "graft_bpe_encode"),

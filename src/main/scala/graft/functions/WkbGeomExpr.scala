@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.nio.{ByteBuffer, ByteOrder}
+import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -11,47 +13,56 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Columnar WKB / EWKB geometry decode — the reference's ACTUAL input
   * format: its snapshot tables are PostGIS geometries read through OGR
   * (changegen/db.py:28-101), and a real PostGIS deployment delivers
-  * them over JDBC as WKB bytes or hex-EWKB text. This expression
-  * closes that seam: `graft_geom_from_wkb(col)` turns either form into
-  * the `array<struct<x:double,y:double>>` vertex layout every
-  * downstream graft operator (grid joins, closest-point, reproject,
-  * insertion-index) already speaks.
+  * them over JDBC as WKB bytes or hex-EWKB text. One expression serves
+  * three SQL functions, which differ only in how many index fields
+  * precede each vertex's x/y (`depth`):
   *
-  * Accepted input: BINARY (raw WKB/EWKB) or STRING (hex-encoded
-  * EWKB, PostGIS's text wire form). Supported shapes:
-  *   - both byte orders (XDR big-endian / NDR little-endian);
-  *   - EWKB flag bits: SRID present (0x20000000 — the 4-byte SRID is
-  *     skipped; reprojection is [[graft.spatial.Geo]]'s job), Z
-  *     (0x80000000) and M (0x40000000) — extra ordinates are read and
-  *     discarded, x/y kept;
-  *   - ISO WKB dimension codes (type + 1000·{1=Z, 2=M, 3=ZM});
-  *   - geometry types: Point (1 vertex), LineString (n vertices),
-  *     Polygon (EXTERIOR ring only — the dwithin/intersection rules
-  *     the reference runs test boundary proximity; interior holes are
-  *     out of scope and documented so).
+  *   - 0, `graft_geom_from_wkb(col)` → `array<struct<x,y>>`, the vertex
+  *     layout every downstream graft operator (grid joins,
+  *     closest-point, reproject, insertion-index) speaks. A Polygon
+  *     keeps its EXTERIOR ring only (the dwithin/intersection rules
+  *     test boundary proximity), and its later rings are never read.
+  *   - 1, `graft_geom_rings(col)` → `array<struct<ring,x,y>>`: every
+  *     polygon ring in storage order (0 = exterior, then the holes the
+  *     reference's multipolygon branch turns into inner-role members,
+  *     changegen/generator.py:683, 719-753).
+  *   - 2, `graft_geom_parts(col)` → `array<struct<part,ring,x,y>>`:
+  *     MultiPoint/MultiLineString/MultiPolygon too, where the
+  *     reference raises `NotImplementedError` (generator.py:603-606),
+  *     each member part 0..n-1 in storage order under its own header.
   *
-  * Anything else — unknown type, truncated buffer, bad byte-order
-  * mark, odd-length hex — decodes to NULL, the same drop-malformed
-  * contract as the multimodal header parsers: one corrupt row must
-  * not fail a 100 TB scan. The byte walk is a single allocation-free
-  * pass per row (no Geometry object graph), so the decode rides
+  * Point and LineString decode as ring 0 and simple geometries as
+  * part 0, so each layout is a superset of the one before. Ring
+  * vertices come back exactly as stored (PostGIS rings are closed).
+  *
+  * Accepted input: BINARY (raw WKB/EWKB) or STRING (hex-encoded EWKB,
+  * PostGIS's text wire form), either byte order, EWKB SRID/Z/M flag
+  * bits (SRID skipped — reprojection is [[graft.spatial.Geo]]'s job;
+  * extra ordinates read past) and ISO dimension codes (type +
+  * 1000·{1=Z, 2=M, 3=ZM}). Anything else — unknown type, MULTI* below
+  * depth 2, GeometryCollection, truncated buffer, bad byte-order mark,
+  * odd-length or non-hex text — decodes to NULL, the drop-malformed
+  * contract of the multimodal header parsers: one corrupt row must not
+  * fail a 100 TB scan. Trailing bytes are ignored. The walk is one
+  * pass per row with no Geometry object graph, so the decode rides
   * whole-stage codegen like any other projection.
   */
-case class WkbGeomExpr(child: Expression) extends UnaryExpression {
+case class WkbGeomExpr(child: Expression, depth: Int) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case BinaryType | StringType => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_geom_from_wkb expects binary (WKB) or string (hex EWKB), got $t")
+      s"$prettyName expects binary (WKB) or string (hex EWKB), got $t")
   }
 
-  override def dataType: DataType =
-    ArrayType(StructType(Seq(
-      StructField("x", DoubleType, nullable = false),
-      StructField("y", DoubleType, nullable = false))), containsNull = false)
+  override def dataType: DataType = ArrayType(StructType(
+    Seq("part", "ring").takeRight(depth).map(StructField(_, IntegerType, nullable = false)) ++
+      Seq("x", "y").map(StructField(_, DoubleType, nullable = false))), containsNull = false)
 
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_geom_from_wkb"
+  override def prettyName: String = WkbGeomExpr.sqlNames(depth)
+  // the name implies the depth, so plans print only the child
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
 
   private def isHex = child.dataType == StringType
 
@@ -59,7 +70,7 @@ case class WkbGeomExpr(child: Expression) extends UnaryExpression {
     val bytes =
       if (isHex) WkbGeomExpr.hexDecode(input.asInstanceOf[UTF8String].toString)
       else input.asInstanceOf[Array[Byte]]
-    if (bytes == null) null else WkbGeomExpr.decode(bytes)
+    if (bytes == null) null else WkbGeomExpr.decode(bytes, depth)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -72,7 +83,7 @@ case class WkbGeomExpr(child: Expression) extends UnaryExpression {
       s"""
          |byte[] $bytes = $toBytes;
          |org.apache.spark.sql.catalyst.util.ArrayData $out =
-         |  $bytes == null ? null : graft.functions.WkbGeomExpr.decode($bytes);
+         |  $bytes == null ? null : graft.functions.WkbGeomExpr.decode($bytes, $depth);
          |if ($out == null) { ${ev.isNull} = true; } else { ${ev.value} = $out; }
        """.stripMargin
     })
@@ -81,135 +92,13 @@ case class WkbGeomExpr(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Ring-INDEXED WKB / EWKB decode — `graft_geom_rings(col)` →
-  * `array<struct<ring:int,x:double,y:double>>`. Where
-  * [[WkbGeomExpr]] keeps a polygon's exterior ring only (enough for
-  * the dwithin/intersection rules), this variant preserves EVERY
-  * ring: ring 0 is the exterior, 1..n-1 are the interior holes, in
-  * storage order — the information the reference's multipolygon
-  * branch consumes (`len(wgs84_geom.interiors) == 0`,
-  * changegen/generator.py:683; holes → inner-role relation members,
-  * generator.py:719-753). A holed PostGIS polygon fed through the
-  * exterior-only decode silently loses its holes before relation
-  * assembly; this expression closes that gap.
-  *
-  * Point and LineString decode as a single ring 0 (their vertex run),
-  * so the output is a strict superset of [[WkbGeomExpr]]'s: dropping
-  * the ring field on ring-0 rows reproduces it exactly for those
-  * types. Ring vertices are returned EXACTLY as stored — PostGIS
-  * rings are closed (first vertex repeated last) and this decoder
-  * does not unclose them; consumers that re-key vertices to node ids
-  * (ChangegenPipeline's polygon assembly) drop the closing duplicate
-  * themselves. Accepted input, flag handling, and the
-  * malformed→NULL contract are identical to [[WkbGeomExpr]].
-  */
-case class WkbRingsExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType | StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_geom_rings expects binary (WKB) or string (hex EWKB), got $t")
-  }
-
-  override def dataType: DataType =
-    ArrayType(StructType(Seq(
-      StructField("ring", IntegerType, nullable = false),
-      StructField("x", DoubleType, nullable = false),
-      StructField("y", DoubleType, nullable = false))), containsNull = false)
-
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_geom_rings"
-
-  private def isHex = child.dataType == StringType
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val bytes =
-      if (isHex) WkbGeomExpr.hexDecode(input.asInstanceOf[UTF8String].toString)
-      else input.asInstanceOf[Array[Byte]]
-    if (bytes == null) null else WkbGeomExpr.decodeRings(bytes)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("wkb")
-      val out = ctx.freshName("rings")
-      val toBytes =
-        if (isHex) s"graft.functions.WkbGeomExpr.hexDecode($c.toString())"
-        else c
-      s"""
-         |byte[] $bytes = $toBytes;
-         |org.apache.spark.sql.catalyst.util.ArrayData $out =
-         |  $bytes == null ? null : graft.functions.WkbGeomExpr.decodeRings($bytes);
-         |if ($out == null) { ${ev.isNull} = true; } else { ${ev.value} = $out; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Part-INDEXED WKB / EWKB decode — `graft_geom_parts(col)` →
-  * `array<struct<part:int,ring:int,x:double,y:double>>`. The MULTI*
-  * superset of [[WkbRingsExpr]]: where the reference CRASHES on
-  * MultiLineString/MultiPolygon input (`NotImplementedError`,
-  * changegen/generator.py:603-606) — exactly where a real imposm3
-  * PostGIS schema routinely delivers them — this decoder preserves
-  * every sub-geometry: part 0..n-1 in storage order, each part's
-  * rings indexed as in [[WkbRingsExpr]] (0 = exterior, 1.. = holes).
-  * Simple geometries decode as part 0, so the output is a strict
-  * superset of the rings layout and consumers can feed either.
-  * Each MULTI* member's own WKB header (byte order + type) is
-  * honored; GeometryCollection stays out of scope. Accepted input,
-  * flag handling, and the malformed→NULL contract are identical to
-  * [[WkbGeomExpr]].
-  */
-case class WkbPartsExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType | StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_geom_parts expects binary (WKB) or string (hex EWKB), got $t")
-  }
-
-  override def dataType: DataType =
-    ArrayType(StructType(Seq(
-      StructField("part", IntegerType, nullable = false),
-      StructField("ring", IntegerType, nullable = false),
-      StructField("x", DoubleType, nullable = false),
-      StructField("y", DoubleType, nullable = false))), containsNull = false)
-
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_geom_parts"
-
-  private def isHex = child.dataType == StringType
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val bytes =
-      if (isHex) WkbGeomExpr.hexDecode(input.asInstanceOf[UTF8String].toString)
-      else input.asInstanceOf[Array[Byte]]
-    if (bytes == null) null else WkbGeomExpr.decodeParts(bytes)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("wkb")
-      val out = ctx.freshName("parts")
-      val toBytes =
-        if (isHex) s"graft.functions.WkbGeomExpr.hexDecode($c.toString())"
-        else c
-      s"""
-         |byte[] $bytes = $toBytes;
-         |org.apache.spark.sql.catalyst.util.ArrayData $out =
-         |  $bytes == null ? null : graft.functions.WkbGeomExpr.decodeParts($bytes);
-         |if ($out == null) { ${ev.isNull} = true; } else { ${ev.value} = $out; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+/** The one WKB codec: [[hexDecode]], [[readHeader]] and [[decode]] read
+  * the format; [[encode]], [[encodePolygon]] and [[encodeMulti]] write
+  * it. */
 object WkbGeomExpr {
+
+  /** SQL name per depth, registered by [[GraftFunctions.register]]. */
+  private[functions] val sqlNames = Seq("graft_geom_from_wkb", "graft_geom_rings", "graft_geom_parts")
 
   /** Hex string → bytes; null on odd length or a non-hex char (the
     * malformed-input contract, not an exception). */
@@ -245,15 +134,17 @@ object WkbGeomExpr {
     java.lang.Double.longBitsToDouble(bits)
   }
 
-  /** Parsed WKB/EWKB envelope: byte order, base geometry type, first
-    * payload offset (past any EWKB SRID), and per-vertex byte stride.
-    * Null on a malformed header. Shared by [[decode]] (exterior-only),
-    * [[decodeRings]] (all rings), and [[decodeParts]] (all parts —
-    * MULTI* sub-geometries carry their OWN header, read via `at`). */
-  private final class Header(val le: Boolean, val baseType: Int,
-                             val off: Int, val stride: Int)
+  /** A parsed WKB/EWKB header: byte order, base geometry type (ISO
+    * dimension and EWKB flags stripped), first payload offset (past
+    * any EWKB SRID), and per-vertex byte stride. */
+  private[graft] final class Header(val le: Boolean, val baseType: Int,
+                                    val off: Int, val stride: Int)
 
-  private def readHeader(b: Array[Byte], at: Int = 0): Header = {
+  /** The header at byte `at` of `b` — a whole geometry's, or a MULTI*
+    * member's (each member carries its own) — or null when malformed:
+    * short buffer, byte-order mark not 0/1, ISO dimension code > 3, or
+    * an SRID flag without the SRID. */
+  private[graft] def readHeader(b: Array[Byte], at: Int): Header = {
     if (b.length < at + 5) return null
     val le = b(at) match {
       case 1 => true
@@ -261,7 +152,6 @@ object WkbGeomExpr {
       case _ => return null
     }
     val rawType = readU32(b, at + 1, le)
-    var off = at + 5
     // EWKB flag bits (PostGIS)
     val hasSrid = (rawType & 0x20000000L) != 0
     val ewkbZ = (rawType & 0x80000000L) != 0
@@ -270,183 +160,58 @@ object WkbGeomExpr {
     // ISO dimension coding: base + 1000·{1=Z, 2=M, 3=ZM}
     val isoDim = (masked / 1000L).toInt
     if (isoDim > 3) return null
-    val baseType = (masked % 1000L).toInt
     val dims = 2 +
       (if (ewkbZ || isoDim == 1 || isoDim == 3) 1 else 0) +
       (if (ewkbM || isoDim == 2 || isoDim == 3) 1 else 0)
-    if (hasSrid) {
-      if (b.length < off + 4) return null
-      off += 4 // SRID skipped: reprojection is Geo's job
-    }
-    new Header(le, baseType, off, dims * 8)
+    val off = at + 5 + (if (hasSrid) 4 else 0)
+    if (b.length < off) return null
+    new Header(le, (masked % 1000L).toInt, off, dims * 8)
   }
 
-  /** One-pass WKB/EWKB walk → vertex ArrayData, or null on any
-    * malformation. See the class doc for the supported envelope. */
-  def decode(b: Array[Byte]): ArrayData = {
-    val h = readHeader(b)
+  /** One bounds-checked walk → `depth` index fields + x/y per vertex
+    * (see [[WkbGeomExpr]] for the three layouts), or null on any
+    * malformation. Every count is checked against the buffer before a
+    * row is made, so a corrupt count can't drive allocation. */
+  def decode(b: Array[Byte], depth: Int): ArrayData = {
+    val h = readHeader(b, 0)
     if (h == null) return null
-    val le = h.le
-    val baseType = h.baseType
-    val off = h.off
-    val stride = h.stride
+    val rows = new ArrayBuffer[Any]()
 
-    def points(n: Int, start: Int): ArrayData = {
-      if (n < 0 || b.length < start + n.toLong * stride) return null
-      val rows = new Array[Any](n)
-      var i = 0
-      while (i < n) {
-        val p = start + i * stride
-        rows(i) = InternalRow(readDouble(b, p, le), readDouble(b, p + 8, le))
-        i += 1
-      }
-      new GenericArrayData(rows)
-    }
-
-    baseType match {
-      case 1 => // Point: exactly one coordinate tuple
-        if (b.length < off + stride) null else points(1, off)
-      case 2 => // LineString: u32 count + vertices
-        if (b.length < off + 4) return null
-        val n = readU32(b, off, le)
-        if (n > Int.MaxValue) null else points(n.toInt, off + 4)
-      case 3 => // Polygon: u32 ring count, first (exterior) ring only
-        if (b.length < off + 8) return null
-        val nRings = readU32(b, off, le)
-        if (nRings < 1) return null
-        val n = readU32(b, off + 4, le)
-        if (n > Int.MaxValue) null else points(n.toInt, off + 8)
-      case _ => null
-    }
-  }
-
-  /** One-pass ring-preserving walk → `(ring, x, y)` ArrayData, or
-    * null on any malformation. Polygon: every ring in storage order
-    * (0 = exterior, then holes), vertices exactly as stored (closed).
-    * Point/LineString: all vertices as ring 0. See [[WkbRingsExpr]]. */
-  def decodeRings(b: Array[Byte]): ArrayData = {
-    val h = readHeader(b)
-    if (h == null) return null
-    val le = h.le
-    val stride = h.stride
-
-    // flat (ring, x, y) rows for `n` vertices starting at `start`;
-    // appends into `acc` from `at`, or returns -1 on truncation
-    def emit(acc: Array[Any], at: Int, ring: Int, n: Int, start: Int): Int = {
-      if (n < 0 || b.length < start + n.toLong * stride) return -1
-      var i = 0
-      while (i < n) {
-        val p = start + i * stride
-        acc(at + i) = InternalRow(ring, readDouble(b, p, le), readDouble(b, p + 8, le))
-        i += 1
-      }
-      at + n
-    }
-
-    h.baseType match {
-      case 1 => // Point → one ring-0 vertex
-        if (b.length < h.off + stride) return null
-        val acc = new Array[Any](1)
-        if (emit(acc, 0, 0, 1, h.off) < 0) null else new GenericArrayData(acc)
-      case 2 => // LineString → its vertex run as ring 0
-        if (b.length < h.off + 4) return null
-        val n = readU32(b, h.off, le)
-        // bounds-check BEFORE allocating: a corrupt 4-byte count must
-        // decode to NULL, not attempt a multi-GB array
-        if (n > Int.MaxValue || b.length < h.off + 4 + n * stride) return null
-        val acc = new Array[Any](n.toInt)
-        if (emit(acc, 0, 0, n.toInt, h.off + 4) < 0) null else new GenericArrayData(acc)
-      case 3 => // Polygon → every ring, two passes (size, then fill)
-        // no artificial ring cap: each ring header needs 4 bytes, so
-        // the per-ring length checks in pass 1 bound the walk by the
-        // actual buffer — acceptance stays identical to [[decode]]
-        if (b.length < h.off + 4) return null
-        val nRings = readU32(b, h.off, le)
-        if (nRings < 1) return null
-        // pass 1: walk ring headers to total the vertex count
-        var total = 0L
-        var off = h.off + 4
-        var r = 0
-        while (r < nRings) {
-          if (b.length < off + 4) return null
-          val n = readU32(b, off, le)
-          if (b.length < off + 4 + n * stride) return null
-          total += n
-          off += 4 + (n * stride).toInt
-          r += 1
+    // one simple geometry under header `g` as `part`: its end offset,
+    // or -1 when malformed
+    def simple(g: Header, part: Int): Int = {
+      def vertices(at: Int, n: Long, ring: Int): Int = {
+        if (b.length < at + n * g.stride) return -1
+        var i = 0
+        while (i < n) {
+          val p = at + i * g.stride
+          val x = readDouble(b, p, g.le)
+          val y = readDouble(b, p + 8, g.le)
+          rows += (depth match {
+            case 0 => InternalRow(x, y)
+            case 1 => InternalRow(ring, x, y)
+            case _ => InternalRow(part, ring, x, y)
+          })
+          i += 1
         }
-        if (total > Int.MaxValue) return null
-        // pass 2: fill
-        val acc = new Array[Any](total.toInt)
-        var at = 0
-        off = h.off + 4
-        r = 0
-        while (r < nRings) {
-          val n = readU32(b, off, le).toInt
-          at = emit(acc, at, r, n, off + 4)
-          if (at < 0) return null
-          off += 4 + n * stride
-          r += 1
-        }
-        new GenericArrayData(acc)
-      case _ => null
-    }
-  }
+        at + (n * g.stride).toInt
+      }
+      // a u32 vertex count at `at`, then the run
+      def counted(at: Int, ring: Int): Int =
+        if (at < 0 || b.length < at + 4) -1 else vertices(at + 4, readU32(b, at, g.le), ring)
 
-  /** One-pass part-preserving walk → `(part, ring, x, y)` ArrayData,
-    * or null on any malformation. Simple geometries (Point /
-    * LineString / Polygon) decode as part 0 with [[decodeRings]]'s
-    * ring layout; MULTI* containers (MultiPoint 4 / MultiLineString 5
-    * / MultiPolygon 6) decode every sub-geometry in storage order as
-    * part 0..n-1, each sub-geometry's own header (byte order + type,
-    * per the WKB spec) honored independently. GeometryCollection (7)
-    * is out of scope → NULL. Every count is bounds-checked against
-    * the actual buffer BEFORE any vertex is materialized, so a
-    * corrupt count can't drive allocation. */
-  def decodeParts(b: Array[Byte]): ArrayData = {
-    val h = readHeader(b)
-    if (h == null) return null
-    val acc = new scala.collection.mutable.ArrayBuffer[Any]()
-
-    // decode one simple geometry under header `sh` as `part`,
-    // appending (part, ring, x, y) rows; returns the sub-geometry's
-    // end offset, or -1 on malformation
-    def simple(sh: Header, part: Int): Int = {
-      val le = sh.le
-      val stride = sh.stride
-      sh.baseType match {
-        case 1 =>
-          if (b.length < sh.off + stride) return -1
-          acc += InternalRow(part, 0, readDouble(b, sh.off, le), readDouble(b, sh.off + 8, le))
-          sh.off + stride
-        case 2 =>
-          if (b.length < sh.off + 4) return -1
-          val n = readU32(b, sh.off, le)
-          if (n > Int.MaxValue || b.length < sh.off + 4 + n * stride) return -1
-          var i = 0
-          while (i < n) {
-            val p = sh.off + 4 + i * stride
-            acc += InternalRow(part, 0, readDouble(b, p, le), readDouble(b, p + 8, le))
-            i += 1
-          }
-          sh.off + 4 + (n * stride).toInt
-        case 3 =>
-          if (b.length < sh.off + 4) return -1
-          val nRings = readU32(b, sh.off, le)
+      g.baseType match {
+        case 1 => vertices(g.off, 1, 0)
+        case 2 => counted(g.off, 0)
+        case 3 => // u32 ring count, then one counted run per ring
+          if (b.length < g.off + 4) return -1
+          val nRings = readU32(b, g.off, g.le)
           if (nRings < 1) return -1
-          var off = sh.off + 4
+          val read = if (depth == 0) 1L else nRings
+          var off = g.off + 4
           var r = 0
-          while (r < nRings) {
-            if (b.length < off + 4) return -1
-            val n = readU32(b, off, le)
-            if (n > Int.MaxValue || b.length < off + 4 + n * stride) return -1
-            var i = 0
-            while (i < n) {
-              val p = off + 4 + i * stride
-              acc += InternalRow(part, r, readDouble(b, p, le), readDouble(b, p + 8, le))
-              i += 1
-            }
-            off += 4 + (n * stride).toInt
+          while (r < read && off >= 0) {
+            off = counted(off, r)
             r += 1
           }
           off
@@ -454,26 +219,55 @@ object WkbGeomExpr {
       }
     }
 
-    h.baseType match {
-      case 1 | 2 | 3 =>
-        if (simple(h, 0) < 0) null else new GenericArrayData(acc.toArray)
-      case 4 | 5 | 6 =>
-        if (b.length < h.off + 4) return null
+    val end = h.baseType match {
+      case 1 | 2 | 3 => simple(h, 0)
+      case 4 | 5 | 6 if depth == 2 && b.length >= h.off + 4 =>
         val nParts = readU32(b, h.off, h.le)
         var off = h.off + 4
-        var p = 0L
-        while (p < nParts) {
-          val sh = readHeader(b, off)
-          // a container's members must be the matching simple type
-          // (MultiPolygon → Polygons etc., per the WKB spec)
-          if (sh == null || sh.baseType != h.baseType - 3) return null
-          val end = simple(sh, p.toInt)
-          if (end < 0) return null
-          off = end
+        var p = 0
+        while (p < nParts && off >= 0) {
+          // members must be the container's simple type (WKB spec)
+          val g = readHeader(b, off)
+          off = if (g == null || g.baseType != h.baseType - 3) -1 else simple(g, p)
           p += 1
         }
-        new GenericArrayData(acc.toArray)
-      case _ => null
+        off
+      case _ => -1
+    }
+    if (end < 0) null else new GenericArrayData(rows.toArray)
+  }
+
+  /** A little- or big-endian buffer of `size` bytes, filled by `fill`. */
+  private def written(size: Int, bigEndian: Boolean)(fill: ByteBuffer => Unit): Array[Byte] = {
+    val buf = ByteBuffer.allocate(size)
+      .order(if (bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
+    fill(buf)
+    buf.array()
+  }
+
+  private def headerSize(srid: Int): Int = 5 + (if (srid >= 0) 4 else 0)
+
+  /** Byte-order mark, type (+ EWKB SRID flag and SRID when `srid` ≥ 0). */
+  private def putHeader(buf: ByteBuffer, geomType: Int, srid: Int): Unit = {
+    buf.put(if (buf.order == ByteOrder.LITTLE_ENDIAN) 1.toByte else 0.toByte)
+    buf.putInt(if (srid >= 0) geomType | 0x20000000 else geomType)
+    if (srid >= 0) buf.putInt(srid)
+  }
+
+  private def simpleSize(geomType: Int, rings: Array[Array[(Double, Double)]], srid: Int): Int =
+    headerSize(srid) + (if (geomType == 3) 4 else 0) +
+      rings.map(r => (if (geomType >= 2) 4 else 0) + 16 * r.length).sum
+
+  /** The one geometry writer: header, then a Polygon's ring count and
+    * per ring (a LineString's one run) a vertex count and vertices; a
+    * Point is its vertices alone. */
+  private def putSimple(buf: ByteBuffer, geomType: Int,
+                        rings: Array[Array[(Double, Double)]], srid: Int): Unit = {
+    putHeader(buf, geomType, srid)
+    if (geomType == 3) buf.putInt(rings.length)
+    rings.foreach { ring =>
+      if (geomType >= 2) buf.putInt(ring.length)
+      ring.foreach { case (x, y) => buf.putDouble(x); buf.putDouble(y) }
     }
   }
 
@@ -487,49 +281,17 @@ object WkbGeomExpr {
   def encodeMulti(baseType: Int, parts: Array[Array[Array[(Double, Double)]]],
                   srid: Int = -1, bigEndian: Boolean = false): Array[Byte] = {
     require(baseType >= 4 && baseType <= 6, s"encodeMulti: baseType $baseType")
-    val le = !bigEndian
     val subType = baseType - 3
-    // shape guard: the buffer is sized from EVERY ring/point, but
-    // MultiPoint writes only part(0)(0) and MultiLineString only
-    // part(0) — an over-shaped part would silently drop data and pad
-    // the WKB with trailing zero bytes instead of failing here
+    // shape guard: an over-shaped part would not be valid WKB
     if (subType == 1) require(parts.forall(p => p.length == 1 && p(0).length == 1),
       "encodeMulti: MultiPoint parts must carry exactly one point")
     if (subType == 2) require(parts.forall(_.length == 1),
       "encodeMulti: MultiLineString parts must carry exactly one vertex run")
-    val nPts = parts.map(_.map(_.length).sum).sum
-    val perPartOverhead = subType match {
-      case 1 => 5            // header only
-      case 2 => 5 + 4        // header + count
-      case 3 => 5 + 4        // header + ring count (+4 per ring below)
+    written(headerSize(srid) + 4 + parts.map(simpleSize(subType, _, -1)).sum, bigEndian) { buf =>
+      putHeader(buf, baseType, srid)
+      buf.putInt(parts.length)
+      parts.foreach(putSimple(buf, subType, _, -1))
     }
-    val ringHeaders = if (subType == 3) 4 * parts.map(_.length).sum else 0
-    val buf = java.nio.ByteBuffer.allocate(
-      9 + (if (srid >= 0) 4 else 0) + parts.length * perPartOverhead + ringHeaders + nPts * 16)
-    buf.order(if (le) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
-    buf.put(if (le) 1.toByte else 0.toByte)
-    buf.putInt(if (srid >= 0) (baseType | 0x20000000) else baseType)
-    if (srid >= 0) buf.putInt(srid)
-    buf.putInt(parts.length)
-    parts.foreach { part =>
-      buf.put(if (le) 1.toByte else 0.toByte)
-      buf.putInt(subType)
-      subType match {
-        case 1 =>
-          val (x, y) = part(0)(0)
-          buf.putDouble(x); buf.putDouble(y)
-        case 2 =>
-          buf.putInt(part(0).length)
-          part(0).foreach { case (x, y) => buf.putDouble(x); buf.putDouble(y) }
-        case 3 =>
-          buf.putInt(part.length)
-          part.foreach { ring =>
-            buf.putInt(ring.length)
-            ring.foreach { case (x, y) => buf.putDouble(x); buf.putDouble(y) }
-          }
-      }
-    }
-    buf.array()
   }
 
   /** JVM-side multi-ring Polygon encoder — tests and in-query
@@ -537,41 +299,16 @@ object WkbGeomExpr {
     * is the exterior, the rest are holes, each stored exactly as
     * given (pass closed rings for PostGIS fidelity). */
   def encodePolygon(rings: Array[Array[(Double, Double)]], srid: Int = -1,
-                    bigEndian: Boolean = false): Array[Byte] = {
-    val le = !bigEndian
-    val nPts = rings.map(_.length).sum
-    val buf = java.nio.ByteBuffer.allocate(
-      9 + (if (srid >= 0) 4 else 0) + 4 * rings.length + nPts * 16)
-    buf.order(if (le) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
-    buf.put(if (le) 1.toByte else 0.toByte)
-    buf.putInt(if (srid >= 0) (3 | 0x20000000) else 3)
-    if (srid >= 0) buf.putInt(srid)
-    buf.putInt(rings.length)
-    rings.foreach { ring =>
-      buf.putInt(ring.length)
-      ring.foreach { case (x, y) => buf.putDouble(x); buf.putDouble(y) }
-    }
-    buf.array()
-  }
+                    bigEndian: Boolean = false): Array[Byte] =
+    written(simpleSize(3, rings, srid), bigEndian)(putSimple(_, 3, rings, srid))
 
   /** JVM-side WKB ENCODER — tests and in-query synthesis only (the
-    * production input arrives already encoded from PostGIS). Emits
-    * little-endian; `srid` ≥ 0 adds the EWKB SRID header. `geomType`
-    * 1 = Point (pts must have 1 element), 2 = LineString, 3 = Polygon
-    * (single exterior ring). */
+    * production input arrives already encoded from PostGIS). `srid`
+    * ≥ 0 adds the EWKB SRID header. `geomType` 1 = Point (pts must
+    * have 1 element), 2 = LineString, 3 = Polygon (single exterior
+    * ring). The geometry is followed by 4 zero bytes, which every
+    * decoder ignores as trailing bytes. */
   def encode(geomType: Int, pts: Array[(Double, Double)], srid: Int = -1,
-             bigEndian: Boolean = false): Array[Byte] = {
-    val le = !bigEndian
-    val buf = java.nio.ByteBuffer.allocate(
-      9 + (if (srid >= 0) 4 else 0) + (if (geomType >= 2) 4 else 0) +
-        (if (geomType == 3) 4 else 0) + pts.length * 16)
-    buf.order(if (le) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
-    buf.put(if (le) 1.toByte else 0.toByte)
-    buf.putInt(if (srid >= 0) (geomType | 0x20000000) else geomType)
-    if (srid >= 0) buf.putInt(srid)
-    if (geomType == 3) buf.putInt(1) // one ring
-    if (geomType >= 2) buf.putInt(pts.length)
-    pts.foreach { case (x, y) => buf.putDouble(x); buf.putDouble(y) }
-    buf.array()
-  }
+             bigEndian: Boolean = false): Array[Byte] =
+    written(simpleSize(geomType, Array(pts), srid) + 4, bigEndian)(putSimple(_, geomType, Array(pts), srid))
 }

@@ -798,18 +798,6 @@ object Similarity {
       .select("query_id", "id", "cos_fp6", "rk")
   }
 
-  /** Near-duplicate pairs by cosine ≥ threshold, candidates restricted
-    * to an existing partition/bucket column (label, LSH bucket, IVF
-    * cell, …) so the join is equi- not cross-.
-    *
-    * `maxBucket` (default off, preserving the exact same-bucket
-    * contract) drops buckets larger than the cap before the self-join
-    * — the same degenerate-bucket guard as [[annLsh]]: pair count is
-    * Σ|bucket|², so ONE oversized bucket (a skewed label, an IVF cell
-    * left too coarse for the corpus) would otherwise go quadratic.
-    * At scale, size the bucketing so buckets stay ~10³ rows (e.g.
-    * IVF kCells ≈ N/1000) and keep the cap as the safety net.
-    */
   /** Matryoshka-truncation recall harness (Kusupati et al. 2022,
     * arXiv:2205.13147): for each truncation dimension d, brute-force
     * cosine top-k over the FIRST d embedding components vs the
@@ -858,6 +846,18 @@ object Similarity {
     }.reduce(_ unionByName _)
   }
 
+  /** Near-duplicate pairs by cosine ≥ threshold, candidates restricted
+    * to an existing partition/bucket column (label, LSH bucket, IVF
+    * cell, …) so the join is equi- not cross-.
+    *
+    * `maxBucket` (default off, preserving the exact same-bucket
+    * contract) drops buckets larger than the cap before the self-join
+    * — the same degenerate-bucket guard as [[annLsh]]: pair count is
+    * Σ|bucket|², so ONE oversized bucket (a skewed label, an IVF cell
+    * left too coarse for the corpus) would otherwise go quadratic.
+    * At scale, size the bucketing so buckets stay ~10³ rows (e.g.
+    * IVF kCells ≈ N/1000) and keep the cap as the safety net.
+    */
   def nearDupPairs(df: DataFrame, idCol: String, vecCol: String, bucketCol: String,
                    thresholdFp6: Long, maxBucket: Long = Long.MaxValue): DataFrame = {
     // norms precomputed per row (identical bits to computing them per

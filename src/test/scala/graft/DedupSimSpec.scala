@@ -772,6 +772,42 @@ class DedupSimSpec extends AnyFunSuite {
     assert(str == Map("a" -> "a", "b" -> "a", "c" -> "c"))
   }
 
+  test("connectedComponents on string ids checkpoints no edge list for a driver probe it skips") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val ids = (1 to 12).map(i => f"n$i%02d")
+    val group = "graft_cc_string_chain"
+    val inGroup = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) inGroup.add(e.jobId)
+        seen.add(e.jobId)
+      }
+    }
+    sc.addSparkListener(listener)
+    val labels = try {
+      sc.setJobGroup(group, "connectedComponents over a string-id chain")
+      try Dedup.connectedComponents(ids.toDF("id"), "id", ids.zip(ids.tail).toDF("a", "b"), "a", "b")
+        .as[(String, String)].collect().toMap
+      finally sc.clearJobGroup()
+    } finally {
+      // listener events arrive in job order: once a later marker job
+      // is seen, every job of the run has been counted
+      val marker = sc.parallelize(Seq(1), 1).countAsync()
+      marker.get()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(marker.jobIds.head) && System.nanoTime() < deadline) Thread.sleep(10)
+      sc.removeSparkListener(listener)
+    }
+    assert(labels == ids.map(_ -> "n01").toMap)
+    // string ids never take the driver probe, so the only materialized
+    // edge sets are the star path's own checkpoints: 52 jobs at local[4]
+    // with 4 shuffle partitions, one more if the symmetric edge list
+    // were checkpointed for the skipped probe
+    assert(inGroup.size == 52, s"jobs: ${inGroup.size}")
+  }
+
   test("cosine of identical vectors is 1") {
     val df = Seq((1L, Seq(1.0f, 2.0f, 3.0f))).toDF("id", "v")
     val c = df.select(Similarity.cosine(col("v"), col("v"))).as[Double].head()

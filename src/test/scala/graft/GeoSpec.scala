@@ -94,6 +94,23 @@ class GeoSpec extends AnyFunSuite {
     hofIdx.collect()
   }
 
+  /** Rows of `df` (sorted by its leading int column, as strings) and its
+    * generated whole-stage code, with whole-stage codegen and the
+    * expression factory both on (`CODEGEN_ONLY`) or both off
+    * (`NO_CODEGEN`). */
+  private def rowsAndCode(codegen: Boolean)(df: => org.apache.spark.sql.DataFrame): (Seq[String], Seq[String]) = {
+    val conf = Seq(
+      "spark.sql.codegen.wholeStage" -> codegen.toString,
+      "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"))
+    val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val d = df
+      (d.collect().sortBy(_.getInt(0)).map(_.toString).toSeq,
+        org.apache.spark.sql.execution.debug.codegenStringSeq(d.queryExecution.executedPlan).map(_._2))
+    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("closest-point and insertion-index kernels agree in interpreted and generated code on edge inputs") {
     val nan = Double.NaN
     def pts(p: (Double, Double)*): Option[Seq[Option[(Double, Double)]]] = Some(p.map(Some(_)))
@@ -119,21 +136,10 @@ class GeoSpec extends AnyFunSuite {
       .select(col("id"), col("px"), col("py"),
         transform(col("pts"), p => when(p.isNotNull, struct(p("_1").as("x"), p("_2").as("y")))).as("line"))
       .write.mode("overwrite").parquet(dir)
-    def run(codegen: Boolean): (Seq[String], Seq[String]) = {
-      val conf = Seq(
-        "spark.sql.codegen.wholeStage" -> codegen.toString,
-        "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"))
-      val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        val df = spark.read.parquet(dir).select(col("id"),
-          Geo.closestOnLine(col("line"), col("px"), col("py")).as("cp"),
-          Geo.insertionIndex(col("line"), col("px"), col("py")).as("ix"))
-        val rows = df.collect().sortBy(_.getInt(0)).map(_.toString).toSeq
-        val code = org.apache.spark.sql.execution.debug.codegenStringSeq(df.queryExecution.executedPlan)
-          .map(_._2)
-        (rows, code)
-      } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    def run(codegen: Boolean) = rowsAndCode(codegen) {
+      spark.read.parquet(dir).select(col("id"),
+        Geo.closestOnLine(col("line"), col("px"), col("py")).as("cp"),
+        Geo.insertionIndex(col("line"), col("px"), col("py")).as("ix"))
     }
     val (interpreted, noCode) = run(codegen = false)
     val (generated, code) = run(codegen = true)
@@ -535,5 +541,63 @@ class GeoSpec extends AnyFunSuite {
     val hugeParts = Array[Byte](1, 6, 0, 0, 0, -1, -1, -1, 0x7f)
     val bad = dec(Seq(full.dropRight(17), mismatch, collection, hugeParts))
     assert(bad.forall(_.isEmpty), bad.toString)
+  }
+
+  test("WKB decoders share one edge contract in interpreted and generated code") {
+    import graft.functions.WkbGeomExpr
+    def leI(v: Long) =
+      java.nio.ByteBuffer.allocate(4).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(v.toInt).array()
+    def hex(b: Array[Byte]) = b.map("%02x".format(_)).mkString
+    val outer = Array((0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0), (0.0, 0.0))
+    val hole = Array((2.0, 2.0), (4.0, 2.0), (2.0, 4.0), (2.0, 2.0))
+    val holed = WkbGeomExpr.encodePolygon(Array(outer, hole)) // 9-byte header, then ring 0's count
+    val line = WkbGeomExpr.encode(2, Array((1.0, 2.0), (3.0, 4.0), (5.0, 6.0)))
+    val hostile = leI(0x7fffffffL)
+    def bin(b: Array[Byte]): Either[Array[Byte], String] = Left(b)
+    def text(s: String): Either[Array[Byte], String] = Right(s)
+    // (input, vertex count from graft_geom_from_wkb / graft_geom_rings /
+    // graft_geom_parts; -1 = NULL)
+    val cases: Seq[(String, Either[Array[Byte], String], (Int, Int, Int))] = Seq(
+      ("empty", bin(Array()), (-1, -1, -1)),
+      ("bad byte-order mark", bin(9.toByte +: line.drop(1)), (-1, -1, -1)),
+      ("unknown type", bin(Array[Byte](1) ++ leI(99) ++ line.drop(5)), (-1, -1, -1)),
+      ("ISO dimension code 4", bin(Array[Byte](1) ++ leI(4001) ++ line.drop(9)), (-1, -1, -1)),
+      ("SRID flag without the SRID", bin(Array[Byte](1) ++ leI(0x20000002L)), (-1, -1, -1)),
+      ("truncated vertex run", bin(line.take(9 + 2 * 16 + 8)), (-1, -1, -1)),
+      ("zero rings", bin(Array[Byte](1) ++ leI(3) ++ leI(0)), (-1, -1, -1)),
+      ("hostile vertex count", bin(Array[Byte](1) ++ leI(2) ++ hostile), (-1, -1, -1)),
+      ("hostile ring count", bin(Array[Byte](1) ++ leI(3) ++ hostile ++ holed.drop(9)), (5, -1, -1)),
+      ("hostile exterior count", bin(Array[Byte](1) ++ leI(3) ++ leI(1) ++ hostile), (-1, -1, -1)),
+      ("hostile part count", bin(Array[Byte](1) ++ leI(6) ++ hostile ++ holed), (-1, -1, -1)),
+      ("holed polygon, hole truncated", bin(holed.dropRight(8)), (5, -1, -1)),
+      ("trailing bytes", bin(holed ++ Array.fill[Byte](7)(-1)), (5, 9, 9)),
+      ("empty MultiPolygon", bin(Array[Byte](1) ++ leI(6) ++ leI(0)), (-1, -1, 0)),
+      ("MultiPoint", bin(WkbGeomExpr.encodeMulti(4, Array(Array(outer.take(1)), Array(hole.take(1))))), (-1, -1, 2)),
+      ("MultiLineString", bin(WkbGeomExpr.encodeMulti(5, Array(Array(outer), Array(hole)))), (-1, -1, 9)),
+      ("MultiPolygon", bin(WkbGeomExpr.encodeMulti(6, Array(Array(outer, hole), Array(outer)))), (-1, -1, 14)),
+      ("GeometryCollection", bin(Array[Byte](1) ++ leI(7) ++ leI(0)), (-1, -1, -1)),
+      ("hex EWKB point", text(hex(WkbGeomExpr.encode(1, Array((42.5, -7.0)), srid = 4326))), (1, 1, 1)),
+      ("empty text", text(""), (-1, -1, -1)),
+      ("odd-length hex", text(hex(line).dropRight(1)), (-1, -1, -1)),
+      ("non-hex text", text("zz" + hex(line).drop(2)), (-1, -1, -1)))
+    // parquet-backed so that generated code runs (see the kernels spec)
+    val dir = java.nio.file.Files.createTempDirectory("graft_wkb_contract").toString
+    cases.zipWithIndex.map { case ((_, in, _), i) => (i, in.left.toOption, in.toOption) }
+      .toDF("i", "bin", "hex").write.mode("overwrite").parquet(dir)
+    def decoded(f: String) = coalesce(call_function(f, col("bin")), call_function(f, col("hex")))
+    def count(f: String) = when(decoded(f).isNull, -1).otherwise(size(decoded(f)))
+    def run(codegen: Boolean) = rowsAndCode(codegen) {
+      spark.read.parquet(dir).select(col("i"), count("graft_geom_from_wkb"),
+        count("graft_geom_rings"), count("graft_geom_parts"), decoded("graft_geom_from_wkb"))
+    }
+    val (interpreted, _) = run(codegen = false)
+    val (generated, code) = run(codegen = true)
+    assert(code.exists(_.contains("WkbGeomExpr.decode")), "generated code does not call the decoder")
+    assert(interpreted == generated)
+    val exterior = outer.map { case (x, y) => s"[$x,$y]" }.mkString("ArraySeq(", ", ", ")")
+    cases.zip(interpreted).zipWithIndex.foreach { case (((name, _, (g, r, p)), row), i) =>
+      assert(row.startsWith(s"[$i,$g,$r,$p,"), s"$name: $row")
+      if (g == 5) assert(row.endsWith(s",$exterior]"), s"$name keeps the exterior: $row")
+    }
   }
 }

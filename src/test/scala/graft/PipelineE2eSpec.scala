@@ -819,4 +819,29 @@ class PipelineE2eSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("999999999"), e.getMessage)
   }
+
+  test("the table classifier reads the codec's WKB header and names an unreadable one") {
+    import graft.functions.WkbGeomExpr
+    def hex(b: Array[Byte]) = b.map("%02x".format(_)).mkString
+    val line = Array((1.0, 2.0), (3.0, 4.0))
+    val ring = Array((0.0, 0.0), (1.0, 0.0), (0.0, 1.0), (0.0, 0.0))
+    assert(ChangegenPipeline.wkbClass(WkbGeomExpr.encode(1, line.take(1))) == 1)
+    assert(ChangegenPipeline.wkbClass(hex(WkbGeomExpr.encode(2, line, srid = 4326))) == 2)
+    assert(ChangegenPipeline.wkbClass(WkbGeomExpr.encodePolygon(Array(ring), bigEndian = true)) == 3)
+    assert(ChangegenPipeline.wkbClass(hex(WkbGeomExpr.encodeMulti(5, Array(Array(line))))) == 2)
+    assert(ChangegenPipeline.wkbClass(WkbGeomExpr.encodeMulti(6, Array(Array(ring)), srid = 3857)) == 3)
+    // ISO Z polygon (1003) is a polygon
+    assert(ChangegenPipeline.wkbClass("01eb030000") == 3)
+    // a non-hex header, and ISO dimension code 4 (type 4001), are not
+    // geometries: both fail naming the header instead of a parse error
+    // or a point class
+    val nonHex = "zz01000000" + hex(WkbGeomExpr.encode(1, line.take(1))).drop(10)
+    val iso4 = "01a10f0000" + hex(WkbGeomExpr.encode(1, line.take(1))).drop(10)
+    Seq(nonHex -> "zz0100000000000000", iso4 -> "01a10f000000000000").foreach { case (v, head) =>
+      val e = intercept[IllegalArgumentException](ChangegenPipeline.wkbClass(v))
+      assert(e.getMessage.contains(s"unreadable WKB header '$head'"), e.getMessage)
+    }
+    val bytes = intercept[IllegalArgumentException](ChangegenPipeline.wkbClass(Array[Byte](2, 1, 0, 0, 0)))
+    assert(bytes.getMessage.contains("unreadable WKB header '0201000000'"), bytes.getMessage)
+  }
 }

@@ -63,4 +63,16 @@ class VerifyContractSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("dup_name"), e.getMessage)
   }
+
+  test("no Scaladoc block is stacked directly on another (only the second would attach)") {
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(java.nio.file.Paths.get("src/main"))
+    val hits = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString).flatMap { f =>
+      val lines = Files.readAllLines(f).asScala.map(_.trim)
+      lines.indices.drop(1).collect {
+        case i if lines(i - 1).endsWith("*/") && lines(i).startsWith("/**") => s"$f:${i + 1}"
+      }
+    } finally walk.close()
+    assert(hits.isEmpty, s"orphaned Scaladoc (a doc block directly above another): ${hits.mkString(", ")}")
+  }
 }
